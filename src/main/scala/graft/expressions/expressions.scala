@@ -2,7 +2,8 @@ package graft.expressions
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, CodeGenerator, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -298,6 +299,73 @@ case class CodeDistance(left: Expression, right: Expression, metric: Metric, sig
          |$body
        """.stripMargin
     })
+  }
+
+  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+/** A per-query value (arithmetic over a scalar-subquery result, say)
+  * that generated code reads from a reference object. Spark writes a
+  * primitive literal or a scalar subquery's result into the generated
+  * Java, so each new value is a new class to compile; here the child is
+  * evaluated once, when its stage is generated (subquery results are
+  * ready by then). Never foldable, so it never becomes a literal again.
+  */
+case class ReferenceValue(child: Expression) extends UnaryExpression {
+
+  override def dataType: DataType = child.dataType
+  override def foldable: Boolean = false
+  override def prettyName: String = "reference_value"
+
+  @transient private lazy val value: Any = child.eval(null)
+
+  override def eval(input: InternalRow): Any = value
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("refValue", value, CodeGenerator.boxedType(dataType))
+    ev.copy(code = code"""
+      |boolean ${ev.isNull} = $ref == null;
+      |${CodeGenerator.javaType(dataType)} ${ev.value} = ${CodeGenerator.defaultValue(dataType)};
+      |if (!${ev.isNull}) { ${ev.value} = $ref; }
+     """.stripMargin)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+/** `left ∈ right` for a per-query id list (a scalar subquery's array),
+  * probed through one hash set built when the stage is generated and
+  * read by generated code as a reference object. A NULL list — an
+  * overflowed [[BoundedIdList]] — admits every row.
+  */
+case class IdSetMember(left: Expression, right: Expression) extends BinaryExpression {
+
+  override def dataType: DataType = BooleanType
+  override def nullable: Boolean = false
+  override def prettyName: String = "id_set_member"
+
+  @transient private lazy val set: java.util.HashSet[Any] = {
+    val ids = right.eval(null).asInstanceOf[ArrayData]
+    if (ids == null) null
+    else {
+      val s = new java.util.HashSet[Any](math.max(16, ids.numElements() * 2))
+      ids.foreach(right.dataType.asInstanceOf[ArrayType].elementType, (_, v) => s.add(v))
+      s
+    }
+  }
+
+  override def eval(input: InternalRow): Any =
+    set == null || { val v = left.eval(input); v != null && set.contains(v) }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val setRef = ctx.addReferenceObj("idSet", set, "java.util.HashSet")
+    val c = left.genCode(ctx)
+    ev.copy(code = code"""
+      |${c.code}
+      |boolean ${ev.value} = $setRef == null || (!${c.isNull} && $setRef.contains(${c.value}));
+     """.stripMargin, isNull = FalseLiteral)
   }
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =

@@ -196,11 +196,11 @@ object Pipeline {
     */
   private def spread(df: DataFrame): DataFrame = TextAnalysis.spreadInput(df)
 
-  /** Explicit broadcast at or under `maxRows`, planner's choice above —
-    * the certifiedTopK count-guard pattern (Quantizer.scala): a small
-    * decision frame joined to the corpus must never pull the corpus into
-    * a sort-merge exchange, and an unbounded decision frame must never
-    * be forced into a driver-built broadcast.
+  /** Explicit broadcast at or under `maxRows`, planner's choice above,
+    * decided by one count of the decision frame: a small decision frame
+    * joined to the corpus must never pull the corpus into a sort-merge
+    * exchange, and an unbounded decision frame must never be forced into
+    * a driver-built broadcast.
     */
   private def guardedBroadcast(df: DataFrame, maxRows: Long): DataFrame =
     if (df.count() <= maxRows) broadcast(df) else df

@@ -4,8 +4,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.{QType, QuantParams}
-import graft.functions.{code_distance, quantize_codes, vectorLit}
+import graft.{Metric, QType, QuantParams}
+import graft.functions.{bounded_id_list, code_distance, id_set_member, quantize_codes, reference_value, vectorLit, vector_distance}
 import graft.catalog.VectorCatalog
 import graft.kernels.Quantize
 
@@ -271,7 +271,8 @@ object Quantizer {
     * scans only the 1-byte codes like [[quantScan]], yet returns EXACTLY
     * the full-precision top-k — the approximate index with an exactness
     * proof, where the reference's quantized scan (and every standard ANN
-    * stack) accepts silent recall loss.
+    * stack) accepts silent recall loss. SQL `vector_scan` returns this
+    * same plan, so the two surfaces cannot drift.
     *
     * Derivation (L2, code units): in-envelope quantization places every
     * stored lane within 0.5 code of `scale·(x − offset)` (half-away
@@ -281,30 +282,34 @@ object Quantizer {
     * computed exactly on the driver (so an out-of-envelope, even saturated
     * probe just widens the bound — certification survives). If T is the
     * k-th smallest code distance² then every true top-k row has code
-    * distance ≤ (√T + 2B)²: stage 1 takes the code top-k (one
-    * TakeOrderedAndProject over the codes), stage 2 rescans the codes for
-    * rows under the certified threshold and reranks ONLY those against
-    * the full-precision vectors (equi-join on id, AQE broadcasts the
-    * candidate side when small). Two scans of the 4×-smaller code store +
-    * a candidate-sized exact pass replace one full f32 scan; no shuffle
-    * of `base` beyond the join.
+    * distance² ≤ (√T + 2B)².
+    *
+    * One declarative plan, no driver action while it is built: T is a
+    * scalar subquery over [[Knn.topK]] of the code distances; the
+    * threshold ⌈(√T + 2B)²·(1 + 1e-12)⌉ (float slack: the certificate can
+    * only widen) filters a second code scan into a scalar-subquery id
+    * list; the rerank filters the f32 store by that list's hash set —
+    * never a join, so the f32 side is never shuffled. The threshold and
+    * the set reach generated code as reference objects, so a fresh probe
+    * compiles no new class. The list holds at most `maxBroadcastCand`
+    * ids; a certificate that admits more (collapsed codes) makes the
+    * rerank an exact pass over every vector, in bounded memory.
     *
     * Preconditions: every stored code in-envelope — guaranteed by the
     * full rebuild and ENFORCED on appends ([[quantizeAppend]]'s default
     * onDrift="fail"; only an explicit onDrift="allow" can introduce
-    * saturated codes that void the proof) — and NaN-free vectors
-    * (documented, not checked). Metrics: l2 / sq_l2
-    * (the bound is an L2 triangle inequality; other metrics fall back to
-    * [[graft.ops.Knn.fullScan]]).
+    * saturated codes that void the proof) — and NaN-free vectors. The
+    * probe is checked on the driver: a NaN or infinite lane would make
+    * the bound NaN, so such a probe goes to [[Knn.fullScan]], as do k ≤ 0
+    * and any metric but l2 / sq_l2 (the bound is an L2 triangle inequality).
     */
   def certifiedTopK(base: DataFrame, idCol: String, vecCol: String,
                     quantDF: DataFrame, probe: Array[Float], p: QuantParams,
                     k: Int, metric: String,
                     maxBroadcastCand: Long = 1000000L): DataFrame = {
-    if (metric != "l2" && metric != "sq_l2")
+    val m = Metric.parse(metric)
+    if (k <= 0 || (m != Metric.L2 && m != Metric.SquaredL2) || probe.exists(x => x.isNaN || x.isInfinite))
       return Knn.fullScan(base, idCol, vecCol, probe, k, metric)
-    if (k <= 0)
-      return base.select(col(idCol), lit(0.0).as("distance")).limit(0)
     val qprobe = quantizeProbe(probe, p)
     val ep = math.sqrt(probe.indices.map { i =>
       val scaled = (probe(i).toDouble - p.offset) * p.scale
@@ -314,33 +319,16 @@ object Quantizer {
     val bound = 0.5 * math.sqrt(probe.length.toDouble) + ep
     val codeD = quantDF.select(col("id"),
       code_distance(col("code"), lit(qprobe), "sq_l2", p.qType).as("cd"))
-    // stage 1: k-th smallest code distance² — a k-row driver merge
-    val kthRow = Knn.topK(codeD, col("cd"), col("id"), k)
-      .agg(max(col("cd"))).head()
-    if (kthRow.isNullAt(0))
-      return base.select(col(idCol), lit(0.0).as("distance")).limit(0)
-    val s = math.sqrt(kthRow.getLong(0).toDouble) + 2.0 * bound
-    // integer threshold, rounded UP with float slack so the certificate
-    // can only widen, never narrow
-    val thr = math.ceil(s * s * (1.0 + 1e-12)).toLong
-    val cand = codeD.where(col("cd") <= thr).select(col("id").as("_cand_id"))
-    // The shortlist join must never shuffle the full-precision side: a
-    // sort-merge plan here exchanges the whole f32 corpus to rerank a
-    // k-adjacent candidate set (measured 2-3× the cost of the plain
-    // exact scan at 1M×768, with GC-driven variance). Candidate ids are
-    // 8 bytes each, so broadcast them explicitly; the count guard (one
-    // cheap job over the code store, usually cached/preloaded) keeps a
-    // degenerate certificate — codes so collapsed the threshold admits
-    // the corpus — on the planner's shuffle join instead of an OOM.
-    // `maxBroadcastCand` defaults to 1M rows (~10-20 MB hashed relation,
-    // normal broadcast sizing); raise it only with driver memory to match.
-    val nCand = cand.count()
-    val candSide = if (nCand <= maxBroadcastCand) broadcast(cand) else cand
+    val kth = Knn.topK(codeD, col("cd"), col("id"), k).agg(max(col("cd"))).scalar()
+    // pow(s, 2.0) rather than s * s names the subquery once; Spark's
+    // StrictMath.pow(s, 2.0) returns exactly s * s
+    val thr = reference_value(
+      ceil(pow(sqrt(kth.cast("double")) + lit(2.0 * bound), 2.0) * lit(1.0 + 1e-12)))
+    val cap = math.min(math.max(maxBroadcastCand, 0L), Int.MaxValue - 1L).toInt
+    val shortlist = codeD.where(col("cd") <= thr).agg(bounded_id_list(col("id"), cap)).scalar()
     Knn.topK(
-      base.where(col(vecCol).isNotNull)
-        .join(candSide, col(idCol) === col("_cand_id"))
-        .select(col(idCol),
-          graft.functions.vector_distance(col(vecCol), graft.functions.vectorLit(probe), metric).as("distance")),
+      base.where(col(vecCol).isNotNull && id_set_member(col(idCol), shortlist))
+        .select(col(idCol), vector_distance(col(vecCol), vectorLit(probe), metric).as("distance")),
       col("distance"), col(idCol), k)
   }
 

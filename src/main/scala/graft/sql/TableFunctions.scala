@@ -1,25 +1,24 @@
 package graft.sql
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{DataFrame, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedRelation}
-import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Expression, ExpressionInfo, IsNotNull, Literal, SortOrder}
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, Limit, LogicalPlan, Project, Sort}
-import org.apache.spark.sql.types.{ArrayType, BinaryType, FloatType, IntegerType, LongType, StringType}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.catalog.VectorCatalog
 import graft.codec.VectorCodec
-import graft.expressions.{CodeDistance, VectorDistance}
-import graft.ops.Quantizer
-import graft.QType
+import graft.ops.{Knn, Quantizer}
 
 /** The reference's table-valued-function query surface in SQL
   * (`FROM vector_full_scan('t','c',probe,k)` — sqlite-vector.c:2377-2487,
-  * API.md:212-261), realized as Catalyst table functions that expand to a
-  * declarative plan: Project(distance) → Sort → Limit over the registered
-  * table. Catalyst then plans the usual TakeOrderedAndProject +
-  * codegen'd scan — the TVF adds SQL ergonomics, not a new physical path.
+  * API.md:212-261), realized as Catalyst table functions that expand to
+  * the Scala API's own plan over the registered table (Project(distance)
+  * → Sort → Limit for the scans). Catalyst then plans the usual
+  * TakeOrderedAndProject + codegen'd scan — the TVF adds SQL ergonomics,
+  * not a new physical path.
   *
   * Like the reference, the (table, column) pair must be registered first
   * (`vector_init` ≙ VectorCatalog.init, which also resolves the id column
@@ -44,147 +43,85 @@ object GraftTableFunctions {
   /** Probe argument: a JSON text array (the reference's JSON input path,
     * sqlite-vector.c:1528-1653), dimension-checked against the config.
     */
-  private def probeArg(e: Expression, dim: Int): Array[Float] = {
-    val parsed = VectorCodec.parseJson(strArg(e, "probe vector"), dim)
-    parsed
-  }
+  private def probeArg(e: Expression, dim: Int): Array[Float] =
+    VectorCodec.parseJson(strArg(e, "probe vector"), dim)
 
   private def config(table: String, column: String) =
     VectorCatalog.get(table, column).getOrElse(throw new IllegalArgumentException(
       s"vector_init('$table','$column',...) must be called before scanning (sqlite-vector.c:1760-1765)"))
 
-  /** `vector_full_scan(tbl, col, probeJson, k)` → rows (id, distance). */
-  def fullScanBuilder(args: Seq[Expression]): LogicalPlan = args match {
+  /** A vector TVF call `fn(table, column, probeJson, k)`, validated and
+    * resolved: the session, the registered table and column, its config,
+    * the parsed probe and k.
+    */
+  private case class ScanCall(spark: SparkSession, table: String, column: String,
+                              cfg: graft.VectorConfig, probe: Array[Float], k: Int) {
+    /** The Scala API's own plan for this call with the id column renamed
+      * `id` — no second implementation to drift, and no driver action.
+      */
+    def plan(df: DataFrame, idCol: String): LogicalPlan =
+      df.select(col(idCol).as("id"), col("distance")).queryExecution.logical
+  }
+
+  private def scanCall(fn: String, args: Seq[Expression]): ScanCall = args match {
     case Seq(t, c, probeE, kE) =>
       val table = strArg(t, "table name")
       val column = strArg(c, "column name")
       val cfg = config(table, column)
-      val probe = probeArg(probeE, cfg.dim)
-      val k = intArg(kE, "k")
-      val dist = Alias(
-        VectorDistance(UnresolvedAttribute(column), Literal.create(probe, ArrayType(FloatType)), cfg.metric),
-        "distance")()
-      val proj = Project(
-        Seq(Alias(UnresolvedAttribute(cfg.idCol), "id")(), dist),
-        Filter(IsNotNull(UnresolvedAttribute(column)), UnresolvedRelation(Seq(table))))
-      topK(proj, k)
+      ScanCall(Lifecycle.activeSession(fn), table, column, cfg,
+        probeArg(probeE, cfg.dim), intArg(kE, "k"))
     case other =>
-      throw new IllegalArgumentException(s"vector_full_scan expects (table, column, probe, k), got ${other.size} args")
+      throw new IllegalArgumentException(s"$fn expects (table, column, probe, k), got ${other.size} args")
+  }
+
+  /** `vector_full_scan(tbl, col, probeJson, k)` → rows (id, distance):
+    * [[graft.ops.Knn.fullScan]] over the registered table.
+    */
+  def fullScanBuilder(args: Seq[Expression]): LogicalPlan = {
+    val s = scanCall("vector_full_scan", args)
+    s.plan(Knn.fullScan(s.spark.table(s.table), s.cfg.idCol, s.column, s.probe, s.k,
+      s.cfg.metric.name), s.cfg.idCol)
   }
 
   /** `vector_quantize_scan(tbl, col, probeJson, k)` → rows (id, distance)
     * over the quant store, distance in i8/u8 code space (NOT dequantized,
     * sqlite-vector.c:2198-2200) with the probe quantized via the stored
-    * scale/offset (Q3, :2159-2177).
+    * scale/offset (Q3, :2159-2177): [[graft.ops.Quantizer.quantScan]] over
+    * the shadow view.
     */
-  def quantScanBuilder(args: Seq[Expression]): LogicalPlan = args match {
-    case Seq(t, c, probeE, kE) =>
-      val table = strArg(t, "table name")
-      val column = strArg(c, "column name")
-      val cfg = config(table, column)
-      val p = VectorCatalog.quantParams(table, column).getOrElse(throw new IllegalArgumentException(
-        s"vector_quantize('$table','$column') must run before a quantized scan (sqlite-vector.c:1780-1787)"))
-      val qprobe = Quantizer.quantizeProbe(probeArg(probeE, cfg.dim), p)
-      val k = intArg(kE, "k")
-      val dist = Alias(
-        CodeDistance(UnresolvedAttribute("code"), Literal(qprobe, BinaryType), cfg.metric,
-          signed = p.qType == QType.I8),
-        "distance")()
-      val proj = Project(
-        Seq(Alias(UnresolvedAttribute("id"), "id")(), dist),
-        UnresolvedRelation(Seq(s"vector0_${table}_$column")))
-      topK(proj, k)
-    case other =>
-      throw new IllegalArgumentException(s"vector_quantize_scan expects (table, column, probe, k), got ${other.size} args")
+  def quantScanBuilder(args: Seq[Expression]): LogicalPlan = {
+    val s = scanCall("vector_quantize_scan", args)
+    val p = VectorCatalog.quantParams(s.table, s.column).getOrElse(throw new IllegalArgumentException(
+      s"vector_quantize('${s.table}','${s.column}') must run before a quantized scan (sqlite-vector.c:1780-1787)"))
+    s.plan(Quantizer.quantScan(s.spark.table(shadowName(s.table, s.column)), s.probe, p, s.k,
+      s.cfg.metric.name), "id")
   }
 
   /** `vector_scan(tbl, col, probeJson, k)` — AUTOMATIC index selection,
     * the "the optimizer picks the access path" surface neither the
     * reference nor stock Spark has: when the (table, column) pair has a
-    * quantized store AND an L2-family metric, expand to the
-    * CERTIFIED-EXACT two-stage plan ([[graft.ops.Quantizer.certifiedTopK]]
-    * — code-store shortlist under the quantization-error bound, exact
-    * rerank); otherwise fall back to the brute-force full scan. Either
-    * path returns exactly the full-precision top-k, so swapping plans
-    * never changes results — which is precisely what licenses an
-    * optimizer to make the choice silently.
+    * quantized store, expand to the CERTIFIED-EXACT plan of
+    * [[graft.ops.Quantizer.certifiedTopK]] over the registered table and
+    * its shadow view — code-store shortlist under the quantization-error
+    * bound, exact rerank; otherwise fall back to the brute-force full
+    * scan. Either path returns exactly the full-precision top-k, so
+    * swapping plans never changes results — which is precisely what
+    * licenses an optimizer to make the choice silently.
     *
-    * The certified threshold is DECLARATIVE: the k-th code distance rides
-    * as an uncorrelated scalar subquery, so the whole thing is one
-    * LogicalPlan — no driver-side action at expansion time, EXPLAIN shows
-    * both stages, and Catalyst/AQE schedule the subquery like any other.
+    * Both branches return the Scala API's plan: one copy of the bound,
+    * the shortlist cap and the probe check. The certified plan's k-th
+    * code distance and shortlist are scalar subqueries, so EXPLAIN shows
+    * both stages.
     */
-  def autoScanBuilder(args: Seq[Expression]): LogicalPlan = args match {
-    case Seq(t, c, probeE, kE) =>
-      val table = strArg(t, "table name")
-      val column = strArg(c, "column name")
-      val cfg = config(table, column)
-      val probe = probeArg(probeE, cfg.dim)
-      val k = intArg(kE, "k")
-      VectorCatalog.quantParams(table, column) match {
-        case Some(p) if (cfg.metric == graft.Metric.L2 || cfg.metric == graft.Metric.SquaredL2) && k > 0 =>
-          certifiedPlan(table, column, cfg, probe, p, k)
-        case _ => fullScanBuilder(args)
-      }
-    case other =>
-      throw new IllegalArgumentException(s"vector_scan expects (table, column, probe, k), got ${other.size} args")
+  def autoScanBuilder(args: Seq[Expression]): LogicalPlan = {
+    val s = scanCall("vector_scan", args)
+    VectorCatalog.quantParams(s.table, s.column) match {
+      case Some(p) =>
+        s.plan(Quantizer.certifiedTopK(s.spark.table(s.table), s.cfg.idCol, s.column,
+          s.spark.table(shadowName(s.table, s.column)), s.probe, p, s.k, s.cfg.metric.name), s.cfg.idCol)
+      case None => fullScanBuilder(args)
+    }
   }
-
-  private def certifiedPlan(table: String, column: String, cfg: graft.VectorConfig,
-                            probe: Array[Float], p: graft.QuantParams, k: Int): LogicalPlan = {
-    import org.apache.spark.sql.catalyst.expressions.{Add, Cast, EqualTo, LessThanOrEqual, Multiply, ScalarSubquery, Sqrt}
-    import org.apache.spark.sql.catalyst.expressions.aggregate.Max
-    import org.apache.spark.sql.catalyst.plans.Inner
-    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, JoinHint}
-    import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
-
-    val qprobe = Quantizer.quantizeProbe(probe, p)
-    // probe's own quantization error in code units — exact, saturation
-    // included, so out-of-envelope probes only widen the bound
-    val ep = math.sqrt(probe.indices.map { i =>
-      val scaled = (probe(i).toDouble - p.offset) * p.scale
-      val cv = if (p.qType == QType.I8) qprobe(i).toDouble else (qprobe(i) & 0xff).toDouble
-      val d = scaled - cv; d * d
-    }.sum)
-    val bound = 0.5 * math.sqrt(probe.length.toDouble) + ep
-
-    def codeProj = Project(Seq(
-        Alias(UnresolvedAttribute("id"), "id")(),
-        Alias(CodeDistance(UnresolvedAttribute("code"), Literal(qprobe, BinaryType),
-          graft.Metric.SquaredL2, signed = p.qType == QType.I8), "cd")()),
-      UnresolvedRelation(Seq(s"vector0_${table}_$column")))
-
-    // k-th smallest code distance² as an uncorrelated scalar subquery
-    val kth = Aggregate(Nil,
-      Seq(Alias(Max(UnresolvedAttribute("cd")).toAggregateExpression(), "t")()),
-      Limit(Literal(k), Sort(
-        Seq(SortOrder(UnresolvedAttribute("cd"), Ascending),
-            SortOrder(UnresolvedAttribute("id"), Ascending)),
-        global = true, codeProj)))
-    // thr = (sqrt(T) + 2B)² widened by a float-slack factor — the
-    // certificate can only widen, never narrow
-    val sPlus = Add(Sqrt(Cast(ScalarSubquery(kth), DoubleType)), Literal(2.0 * bound))
-    val thr = Multiply(Multiply(sPlus, sPlus), Literal(1.0 + 1e-12))
-
-    val cand = Project(Seq(Alias(UnresolvedAttribute("id"), "_cand_id")()),
-      Filter(LessThanOrEqual(Cast(UnresolvedAttribute("cd"), DoubleType), thr), codeProj))
-    val joined = Join(
-      Filter(IsNotNull(UnresolvedAttribute(column)), UnresolvedRelation(Seq(table))),
-      cand, Inner,
-      Some(EqualTo(UnresolvedAttribute(cfg.idCol), UnresolvedAttribute("_cand_id"))),
-      JoinHint.NONE)
-    topK(Project(Seq(
-        Alias(UnresolvedAttribute(cfg.idCol), "id")(),
-        Alias(VectorDistance(UnresolvedAttribute(column),
-          Literal.create(probe, ArrayType(FloatType)), cfg.metric), "distance")()),
-      joined), k)
-  }
-
-  private def topK(proj: LogicalPlan, k: Int): LogicalPlan =
-    Limit(Literal(math.max(k, 0)), Sort(
-      Seq(SortOrder(UnresolvedAttribute("distance"), Ascending),
-          SortOrder(UnresolvedAttribute("id"), Ascending)),
-      global = true, proj))
 
   // ---------- lifecycle scalar functions (API.md:53-168) ----------
   //

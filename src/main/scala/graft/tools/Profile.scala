@@ -60,15 +60,24 @@ object Profile {
       }
     })
     val jobsVerbose = sys.env.get("SPARK_GRAFT_PROFILE_JOBS").contains("1")
+    // codegen compiles (CodegenMetrics) and their total time (ns), read
+    // per window so a per-query recompile shows up as compiles > 0
+    def codegenTotals() = (
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+      org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime)
     def timeJobs[T](name: String)(body: => T): T = {
-      jobWall.set(0L); jobCount.set(0); jobLog.clear()
+      // drain the previous window's events first, so none of them lands here
+      org.apache.spark.sql.GraftColumnShim.drainListenerBus(spark.sparkContext)
+      jobWall.set(0L); jobCount.set(0); jobLog.clear(); jobStarts.clear()
+      val (c0, ns0) = codegenTotals()
       val t0 = System.nanoTime()
       val r = body
       val el = (System.nanoTime() - t0) / 1e9
-      // listener bus is async — give it a beat before reading the counters
-      Thread.sleep(150)
+      org.apache.spark.sql.GraftColumnShim.drainListenerBus(spark.sparkContext)
+      val (c1, ns1) = codegenTotals()
       println(f"[profile] $name: $el%.3f s, jobs=${jobCount.get}, " +
-        f"jobs_wall=${jobWall.get / 1e9}%.3f s, driver_gap=${el - jobWall.get / 1e9}%.3f s")
+        f"jobs_wall=${jobWall.get / 1e9}%.3f s, driver_gap=${el - jobWall.get / 1e9}%.3f s, " +
+        f"compiles=${c1 - c0}, compile_ms=${(ns1 - ns0) / 1e6}%.1f")
       if (jobsVerbose) {
         val snap = jobLog.toArray(Array.empty[(Int, Double, Int, String)])
         snap.sortBy(-_._2).take(25).foreach { case (id, sec, tasks, site) =>

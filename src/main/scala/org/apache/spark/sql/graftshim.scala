@@ -28,6 +28,12 @@ object GraftColumnShim {
              plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** Block until every listener event posted so far has been delivered
+    * (the listener bus is `private[spark]`): a window read after this sees
+    * all of its own jobs' start and end events.
+    */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+
   /** The raw internal RDD behind a checkpointed frame's LogicalRDD leaf,
     * if that is what the frame is. `Dataset.rdd` would hand back the same
     * partitioning but pays a codegen'd row deserializer compile per call

@@ -2968,6 +2968,80 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Quantizer.certifiedTopK(e, "vec_id", "embedding", codes, probe, p, 0, "l2").count() == 0)
     assert(Quantizer.certifiedTopK(e, "vec_id", "embedding",
       codes.limit(0), probe, p, 10, "l2").count() == 0)
+    // a NaN lane makes the bound NaN: the probe must go to the full scan
+    // (every distance is NaN there, so compare ids and NaN-ness)
+    val nanProbe = probe.updated(3, Float.NaN)
+    def nanIds(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getDouble(1).isNaN)).toSeq
+    val exactN = nanIds(Knn.fullScan(e, "vec_id", "embedding", nanProbe, 5, "l2"))
+    assert(exactN.size == 5)
+    assert(nanIds(Quantizer.certifiedTopK(e, "vec_id", "embedding", codes, nanProbe, p, 5, "l2")) == exactN)
+  }
+
+  /** Exchanges in the executed main plan (adaptive stages included,
+    * subqueries not): the rerank's f32 side must never be shuffled.
+    */
+  private def mainExchanges(df: org.apache.spark.sql.DataFrame) = {
+    df.collect()
+    object H extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    H.collect(df.queryExecution.executedPlan) {
+      case x: org.apache.spark.sql.execution.exchange.Exchange => x
+    }
+  }
+
+  test("certifiedTopK over its shortlist cap reranks every vector, exact, with no exchange") {
+    val e = emb
+    val p = Quantizer.computeParams(e, "embedding")
+    val codes = Quantizer.quantizeCodes(e, "vec_id", "embedding", p)
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), math.round(r.getDouble(1) * 1e6))).toSeq
+    val exact = ids(Knn.fullScan(e, "vec_id", "embedding", probe, 10, "l2"))
+    val capped = Quantizer.certifiedTopK(e, "vec_id", "embedding", codes, probe, p, 10, "l2",
+      maxBroadcastCand = 1)
+    assert(ids(capped) == exact)
+    assert(mainExchanges(capped).isEmpty, capped.queryExecution.executedPlan.toString)
+    // collapsed codes: a scale so small every lane quantizes to 0 — the
+    // params' envelope still holds every vector, so the proof stands, but
+    // the certificate admits the whole corpus
+    val flat = p.copy(scale = p.scale * 1e-6)
+    val flatCodes = Quantizer.quantizeCodes(e, "vec_id", "embedding", flat)
+    assert(flatCodes.select(graft.functions.code_sum(col("code"), flat.qType)).distinct().count() == 1)
+    for (cap <- Seq(1000000L, 10L)) {
+      val df = Quantizer.certifiedTopK(e, "vec_id", "embedding", flatCodes, probe, flat, 10, "l2",
+        maxBroadcastCand = cap)
+      assert(ids(df) == exact, s"cap $cap")
+      assert(mainExchanges(df).isEmpty, df.queryExecution.executedPlan.toString)
+    }
+  }
+
+  /** Registers `emb` as `view` with a quantized shadow view, so
+    * vector_scan takes the certified plan; returns the params.
+    */
+  private def quantizedView(view: String): QuantParams = {
+    emb.createOrReplaceTempView(view)
+    graft.catalog.VectorCatalog.init(view, "embedding", VectorConfig(64, idCol = "vec_id"))
+    graft.sql.GraftTableFunctions.register(spark)
+    val p = Quantizer.computeParams(emb, "embedding")
+    Quantizer.quantizeCodes(emb, "vec_id", "embedding", p)
+      .createOrReplaceTempView(s"vector0_${view}_embedding")
+    graft.catalog.VectorCatalog.putQuantParams(view, "embedding", p)
+    p
+  }
+
+  test("certifiedTopK and vector_scan compile no code for a fresh probe") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val p = quantizedView("cg_emb")
+    val (e, codes) = (spark.table("cg_emb"), spark.table("vector0_cg_emb_embedding"))
+    def both(pr: Array[Float]): Unit = {
+      Quantizer.certifiedTopK(e, "vec_id", "embedding", codes, pr, p, 10, "l2").collect()
+      spark.sql(s"SELECT id, distance FROM vector_scan('cg_emb', 'embedding', " +
+        s"'${pr.mkString("[", ",", "]")}', 10)").collect()
+    }
+    both(probe)
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    both(probe.map(x => x * 0.5f + 0.01f))
+    both(probe.reverse)
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before == 0)
   }
 
   test("vector_scan TVF auto-selects: certified code path when quantized, full scan otherwise") {
@@ -2997,6 +3071,25 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val plan = cert.queryExecution.optimizedPlan.toString
     assert(plan.contains("scalar-subquery"), s"expected certified plan, got:\n$plan")
     assert(ids(cert) == exact)
+
+    // a NaN lane in the JSON probe takes the full scan, like the Scala API
+    val nanProbe = probe.updated(3, Float.NaN)
+    val nanQ = s"SELECT id FROM vector_scan('auto_emb', 'embedding', '${nanProbe.mkString("[", ",", "]")}', 5)"
+    assert(ids(spark.sql(nanQ)) == ids(Knn.fullScan(e, "vec_id", "embedding", nanProbe, 5, "l2")))
+  }
+
+  test("vector_scan and certifiedTopK produce the same optimized plan") {
+    val p = quantizedView("same_emb")
+    val sqlPlan = spark.sql("SELECT * FROM vector_scan('same_emb', 'embedding', " +
+      s"'${probe.mkString("[", ",", "]")}', 10)").queryExecution.optimizedPlan
+    val scalaPlan = Quantizer.certifiedTopK(spark.table("same_emb"), "vec_id", "embedding",
+      spark.table("vector0_same_emb_embedding"), probe, p, 10, "l2").queryExecution.optimizedPlan
+    // the SQL surface only renames vec_id to id on top of the shared plan
+    val unaliased = sqlPlan match {
+      case org.apache.spark.sql.catalyst.plans.logical.Project(_, child) => child
+      case other => other
+    }
+    assert(unaliased.canonicalized == scalaPlan.canonicalized, s"SQL:\n$sqlPlan\nScala:\n$scalaPlan")
   }
 
   // ---------- Z-order clustering ----------
