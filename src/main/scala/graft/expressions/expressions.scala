@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.{ElemType, Metric}
+import graft.{ElemType, Metric, QType, QuantParams}
 import graft.codec.VectorCodec
 import graft.kernels.{Distances, Quantize, Sketches}
 
@@ -20,10 +20,9 @@ import graft.kernels.{Distances, Quantize, Sketches}
   *
   * Replicates the reference's metric semantics (distance-cpu.c): negated
   * dot (:112-136), cosine zero-norm → 1.0 (:105-107) with clamp to [-1,1],
-  * L2 = sqrt of squared sum (:39-68). Fully whole-stage-codegen'd: the
-  * generated loop is a tight primitive `for` the JIT auto-vectorizes —
-  * the Spark-era replacement for the reference's hand-written SIMD kernels
-  * (distance-avx2.c etc).
+  * L2 = sqrt of squared sum (:39-68). Generated code and `eval` both copy
+  * the two arrays out and call the one kernel, `Distances.doubleJ`
+  * ([[Distances.onDouble]]), so a SIMD kernel there serves both.
   */
 case class VectorDistance(left: Expression, right: Expression, metric: Metric)
     extends BinaryExpression {
@@ -31,69 +30,14 @@ case class VectorDistance(left: Expression, right: Expression, metric: Metric)
   override def dataType: DataType = DoubleType
   override def prettyName: String = "vector_distance"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData].toFloatArray()
-    val y = b.asInstanceOf[ArrayData].toFloatArray()
-    Distances.onDouble(metric)(x, y)
-  }
+  private val mId = Distances.metricId(metric)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val body = metric match {
-        case Metric.L2 | Metric.SquaredL2 =>
-          val acc = ctx.freshName("acc")
-          val fin = if (metric == Metric.L2) s"java.lang.Math.sqrt($acc)" else acc
-          s"""
-             |double $acc = 0.0;
-             |for (int $i = 0; $i < $n; $i++) {
-             |  double d = (double) $a.getFloat($i) - (double) $b.getFloat($i);
-             |  $acc += d * d;
-             |}
-             |${ev.value} = $fin;
-           """.stripMargin
-        case Metric.L1 =>
-          val acc = ctx.freshName("acc")
-          s"""
-             |double $acc = 0.0;
-             |for (int $i = 0; $i < $n; $i++) {
-             |  $acc += java.lang.Math.abs((double) $a.getFloat($i) - (double) $b.getFloat($i));
-             |}
-             |${ev.value} = $acc;
-           """.stripMargin
-        case Metric.Dot =>
-          val acc = ctx.freshName("acc")
-          s"""
-             |double $acc = 0.0;
-             |for (int $i = 0; $i < $n; $i++) {
-             |  $acc += (double) $a.getFloat($i) * (double) $b.getFloat($i);
-             |}
-             |${ev.value} = -$acc;
-           """.stripMargin
-        case Metric.Cosine =>
-          val dot = ctx.freshName("dot"); val na = ctx.freshName("na"); val nb = ctx.freshName("nb")
-          val c = ctx.freshName("c")
-          s"""
-             |double $dot = 0.0, $na = 0.0, $nb = 0.0;
-             |for (int $i = 0; $i < $n; $i++) {
-             |  double x = (double) $a.getFloat($i);
-             |  double y = (double) $b.getFloat($i);
-             |  $dot += x * y; $na += x * x; $nb += y * y;
-             |}
-             |if ($na == 0.0 || $nb == 0.0) { ${ev.value} = 1.0; } else {
-             |  double $c = $dot / (java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb));
-             |  if (Double.isNaN($c) || Double.isInfinite($c)) { ${ev.value} = 1.0; }
-             |  else { ${ev.value} = 1.0 - java.lang.Math.max(-1.0, java.lang.Math.min(1.0, $c)); }
-             |}
-           """.stripMargin
-      }
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |$body
-       """.stripMargin
-    })
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    Distances.doubleJ(a.asInstanceOf[ArrayData].toFloatArray(), b.asInstanceOf[ArrayData].toFloatArray(), mId)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.value} = graft.kernels.Distances.doubleJ($a.toFloatArray(), $b.toFloatArray(), $mId);")
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
@@ -161,7 +105,9 @@ case class PackVector(child: Expression, target: ElemType)
 /** `quantize_codes(vec)` — array<float> → packed i8/u8 codes (BinaryType),
   * the per-row half of the reference's quantization pass 2
   * (sqlite-vector.c:1278-1327): code = round_half_away((x − offset) × scale)
-  * saturated, NaN→0 (:495-515).
+  * saturated, NaN→0 (:495-515), computed by [[Quantize.codes]] from both
+  * paths. Generated code reads the params from a reference object, so a
+  * new (scale, offset) reuses the compiled class.
   */
 case class QuantizeCodes(child: Expression, scale: Double, offset: Double, isU8: Boolean)
     extends UnaryExpression {
@@ -169,31 +115,13 @@ case class QuantizeCodes(child: Expression, scale: Double, offset: Double, isU8:
   override def dataType: DataType = BinaryType
   override def prettyName: String = "quantize_codes"
 
-  override def nullSafeEval(v: Any): Any = {
-    val x = v.asInstanceOf[ArrayData].toFloatArray()
-    val out = new Array[Byte](x.length)
-    var i = 0
-    while (i < x.length) {
-      val q = (x(i).toDouble - offset) * scale
-      out(i) = (if (isU8) Quantize.roundU8(q) else Quantize.roundI8(q)).toByte
-      i += 1
-    }
-    out
-  }
+  private val params = QuantParams(if (isU8) QType.U8 else QType.I8, scale, offset, 0L)
+
+  override def nullSafeEval(v: Any): Any = Quantize.codes(v.asInstanceOf[ArrayData].toFloatArray(), params)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    nullSafeCodeGen(ctx, ev, c => {
-      val i = ctx.freshName("i"); val n = ctx.freshName("n"); val out = ctx.freshName("out")
-      val round = if (isU8) "graft.kernels.Quantize.roundU8" else "graft.kernels.Quantize.roundI8"
-      s"""
-         |int $n = $c.numElements();
-         |byte[] $out = new byte[$n];
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $out[$i] = (byte) $round(((double) $c.getFloat($i) - $offset) * $scale);
-         |}
-         |${ev.value} = $out;
-       """.stripMargin
-    })
+    val p = ctx.addReferenceObj("quantParams", params, classOf[QuantParams].getName)
+    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = graft.kernels.Quantize.codes($c.toFloatArray(), $p);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -202,8 +130,10 @@ case class QuantizeCodes(child: Expression, scale: Double, offset: Double, isU8:
 
 /** Integer squared-L2 (or dot/L1/cosine) between packed i8/u8 code vectors —
   * the quantized-scan distance computed in code space, NOT dequantized
-  * (sqlite-vector.c:2198-2200). Exact integer accumulation (LongType out
-  * for L2²/L1/dot) makes results bit-exact and order-independent.
+  * (sqlite-vector.c:2198-2200). Both paths call the integer kernel
+  * `Distances.intJ` ([[Distances.intKernel]]); its exact accumulation
+  * (LongType out for L2²/L1/dot) makes results bit-exact and
+  * order-independent.
   */
 case class CodeDistance(left: Expression, right: Expression, metric: Metric, signed: Boolean)
     extends BinaryExpression {
@@ -214,91 +144,17 @@ case class CodeDistance(left: Expression, right: Expression, metric: Metric, sig
   }
   override def prettyName: String = "code_distance"
 
+  private val mId = Distances.metricId(metric)
+
   override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[Array[Byte]]; val y = b.asInstanceOf[Array[Byte]]
-    @inline def at(arr: Array[Byte], i: Int): Int = if (signed) arr(i).toInt else arr(i) & 0xff
-    val n = math.min(x.length, y.length)
-    metric match {
-      case Metric.SquaredL2 | Metric.L2 =>
-        var acc = 0L; var i = 0
-        while (i < n) { val d = at(x, i) - at(y, i); acc += d.toLong * d; i += 1 }
-        if (metric == Metric.L2) math.sqrt(acc.toDouble) else acc
-      case Metric.L1 =>
-        var acc = 0L; var i = 0
-        while (i < n) { acc += math.abs(at(x, i) - at(y, i)); i += 1 }
-        acc
-      case Metric.Dot =>
-        var acc = 0L; var i = 0
-        while (i < n) { acc += at(x, i).toLong * at(y, i); i += 1 }
-        -acc
-      case Metric.Cosine =>
-        var dot = 0L; var na = 0L; var nb = 0L; var i = 0
-        while (i < n) {
-          val p = at(x, i); val q = at(y, i)
-          dot += p.toLong * q; na += p.toLong * p; nb += q.toLong * q; i += 1
-        }
-        if (na == 0L || nb == 0L) 1.0
-        else {
-          val c = dot.toDouble / (math.sqrt(na.toDouble) * math.sqrt(nb.toDouble))
-          1.0 - math.max(-1.0, math.min(1.0, c))
-        }
-    }
+    val d = Distances.intJ(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]], mId, signed)
+    if (dataType == LongType) d.toLong else d
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i"); val n = ctx.freshName("n")
-      val rd = (arr: String) => if (signed) s"(int) $arr[$i]" else s"($arr[$i] & 0xff)"
-      val body = metric match {
-        case Metric.SquaredL2 | Metric.L2 =>
-          val acc = ctx.freshName("acc")
-          val fin = if (metric == Metric.L2) s"java.lang.Math.sqrt((double) $acc)" else acc
-          s"""
-             |long $acc = 0L;
-             |for (int $i = 0; $i < $n; $i++) {
-             |  int d = ${rd(a)} - ${rd(b)};
-             |  $acc += (long) d * d;
-             |}
-             |${ev.value} = $fin;
-           """.stripMargin
-        case Metric.L1 =>
-          val acc = ctx.freshName("acc")
-          s"""
-             |long $acc = 0L;
-             |for (int $i = 0; $i < $n; $i++) {
-             |  $acc += java.lang.Math.abs(${rd(a)} - ${rd(b)});
-             |}
-             |${ev.value} = $acc;
-           """.stripMargin
-        case Metric.Dot =>
-          val acc = ctx.freshName("acc")
-          s"""
-             |long $acc = 0L;
-             |for (int $i = 0; $i < $n; $i++) {
-             |  $acc += (long) (${rd(a)}) * (${rd(b)});
-             |}
-             |${ev.value} = -$acc;
-           """.stripMargin
-        case Metric.Cosine =>
-          val dot = ctx.freshName("dot"); val na = ctx.freshName("na"); val nb = ctx.freshName("nb")
-          val c = ctx.freshName("c")
-          s"""
-             |long $dot = 0L, $na = 0L, $nb = 0L;
-             |for (int $i = 0; $i < $n; $i++) {
-             |  int p = ${rd(a)}; int q = ${rd(b)};
-             |  $dot += (long) p * q; $na += (long) p * p; $nb += (long) q * q;
-             |}
-             |if ($na == 0L || $nb == 0L) { ${ev.value} = 1.0; } else {
-             |  double $c = (double) $dot / (java.lang.Math.sqrt((double) $na) * java.lang.Math.sqrt((double) $nb));
-             |  ${ev.value} = 1.0 - java.lang.Math.max(-1.0, java.lang.Math.min(1.0, $c));
-             |}
-           """.stripMargin
-      }
-      s"""
-         |int $n = java.lang.Math.min($a.length, $b.length);
-         |$body
-       """.stripMargin
-    })
+    val cast = if (dataType == LongType) "(long) " else ""
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.value} = ${cast}graft.kernels.Distances.intJ($a, $b, $mId, $signed);")
   }
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
@@ -374,6 +230,7 @@ case class IdSetMember(left: Expression, right: Expression) extends BinaryExpres
 
 /** Sum of a packed i8/u8 code vector as a Long — exact integer arithmetic
   * for verifying quantization output against an independent oracle.
+  * Both paths call [[Quantize.codeSum]].
   */
 case class CodeSum(child: Expression, signed: Boolean)
     extends UnaryExpression {
@@ -381,24 +238,10 @@ case class CodeSum(child: Expression, signed: Boolean)
   override def dataType: DataType = LongType
   override def prettyName: String = "code_sum"
 
-  override def nullSafeEval(v: Any): Any = {
-    val b = v.asInstanceOf[Array[Byte]]
-    var acc = 0L; var i = 0
-    while (i < b.length) { acc += (if (signed) b(i).toInt else b(i) & 0xff); i += 1 }
-    acc
-  }
+  override def nullSafeEval(v: Any): Any = Quantize.codeSum(v.asInstanceOf[Array[Byte]], signed)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    nullSafeCodeGen(ctx, ev, c => {
-      val i = ctx.freshName("i"); val acc = ctx.freshName("acc")
-      val rd = if (signed) s"(int) $c[$i]" else s"($c[$i] & 0xff)"
-      s"""
-         |long $acc = 0L;
-         |for (int $i = 0; $i < $c.length; $i++) { $acc += $rd; }
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
-  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = graft.kernels.Quantize.codeSum($c, $signed);")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

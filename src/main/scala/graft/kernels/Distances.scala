@@ -18,9 +18,12 @@ import graft.codec.Fp16
   * accumulators (:470-693); float32 accumulates in float. The callers'
   * 8·FLT_EPSILON zero clamp (sqlite-vector.c:994-996) is `zeroClamp`.
   *
-  * SIMD: the reference dispatches to AVX2/SSE2/NEON hand-kernels at load
-  * (distance-cpu.c:797-812); here the JIT auto-vectorizes these primitive
-  * loops — `backend()` reports that.
+  * Each (metric × type) kernel exists once. The Catalyst expressions reach
+  * them through the `…J` entry points with constant ids, from generated
+  * code and from `eval` alike, so a SIMD backend replaces one function
+  * per kernel. The reference dispatches to AVX2/SSE2/NEON hand-kernels at
+  * load (distance-cpu.c:797-812); these are scalar loops left to the JIT,
+  * which `backend()` reports.
   */
 object Distances {
 
@@ -128,7 +131,7 @@ object Distances {
   // double accumulation, which cannot overflow for 16-bit inputs.)
 
   private def withHalf(decode: Int => Float)(a: Array[Byte], b: Array[Byte], metric: Metric): Float = {
-    val n = a.length / 2
+    val n = math.min(a.length, b.length) / 2
     def at(arr: Array[Byte], i: Int): Float =
       decode(((arr(2 * i + 1) & 0xff) << 8) | (arr(2 * i) & 0xff))
     metric match {
@@ -171,34 +174,39 @@ object Distances {
     }
   }
 
-  // ---------- u8/i8 kernels: exact integer accumulation (distance-cpu.c:470-693) ----------
+  // ---------- u8/i8 kernel: exact integer accumulation (distance-cpu.c:470-693) ----------
 
-  private def intKernel(signed: Boolean)(a: Array[Byte], b: Array[Byte], metric: Metric): Float = {
-    val n = a.length
+  /** The one i8/u8 kernel, over the common prefix of `a` and `b`. The sums
+    * are exact integers below 2^53 (each term is at most 255² and an array
+    * holds under 2^31 of them), so the Double result is exact: L2², L1 and
+    * dot convert back to Long or Float without a second rounding.
+    */
+  def intKernel(a: Array[Byte], b: Array[Byte], metric: Metric, signed: Boolean): Double = {
+    val n = math.min(a.length, b.length)
     @inline def at(arr: Array[Byte], i: Int): Int = if (signed) arr(i).toInt else arr(i) & 0xff
     metric match {
       case Metric.L2 | Metric.SquaredL2 =>
         var acc = 0L; var i = 0
         while (i < n) { val d = at(a, i) - at(b, i); acc += d.toLong * d; i += 1 }
-        if (metric == Metric.L2) math.sqrt(acc.toDouble).toFloat else acc.toFloat
+        if (metric == Metric.L2) math.sqrt(acc.toDouble) else acc.toDouble
       case Metric.L1 =>
         var acc = 0L; var i = 0
         while (i < n) { acc += math.abs(at(a, i) - at(b, i)); i += 1 }
-        acc.toFloat
+        acc.toDouble
       case Metric.Dot =>
         var acc = 0L; var i = 0
         while (i < n) { acc += at(a, i).toLong * at(b, i); i += 1 }
-        (-acc).toFloat
+        (-acc).toDouble
       case Metric.Cosine =>
         var dot = 0L; var na = 0L; var nb = 0L; var i = 0
         while (i < n) {
           val x = at(a, i); val y = at(b, i)
           dot += x.toLong * y; na += x.toLong * x; nb += y.toLong * y; i += 1
         }
-        if (na == 0L || nb == 0L) 1.0f
+        if (na == 0L || nb == 0L) 1.0
         else {
           val c = dot.toDouble / (math.sqrt(na.toDouble) * math.sqrt(nb.toDouble))
-          (1.0 - math.max(-1.0, math.min(1.0, c))).toFloat
+          1.0 - math.max(-1.0, math.min(1.0, c))
         }
     }
   }
@@ -216,11 +224,20 @@ object Distances {
   private val metricsById = Array[Metric](Metric.L2, Metric.SquaredL2, Metric.Cosine, Metric.Dot, Metric.L1)
   private val typesById = Array[ElemType](ElemType.F32, ElemType.F16, ElemType.BF16, ElemType.I8, ElemType.U8)
 
-  /** Static entry point for generated code (PackedVectorDistance.doGenCode):
-    * same 25-entry dispatch, constant ids baked in at codegen time.
-    */
+  // Static entry points for the expressions: their generated code passes
+  // the ids as constants.
+
+  /** [[onPacked]]: PackedVectorDistance. */
   def packedJ(a: Array[Byte], b: Array[Byte], mId: Int, tId: Int): Float =
     onPacked(metricsById(mId), typesById(tId))(a, b)
+
+  /** [[intKernel]]: CodeDistance. */
+  def intJ(a: Array[Byte], b: Array[Byte], mId: Int, signed: Boolean): Double =
+    intKernel(a, b, metricsById(mId), signed)
+
+  /** [[onDouble]]: VectorDistance. */
+  def doubleJ(a: Array[Float], b: Array[Float], mId: Int): Double =
+    onDouble(metricsById(mId))(a, b)
 
   /** The 25-entry dispatch (distance-cpu.c:21 `dispatch_distance_table`):
     * packed-bytes in, float out.
@@ -229,19 +246,16 @@ object Distances {
     case ElemType.F32  => f32Packed(a, b, metric)
     case ElemType.F16  => withHalf(Fp16.f16ToFloat)(a, b, metric)
     case ElemType.BF16 => withHalf(Fp16.bf16ToFloat)(a, b, metric)
-    case ElemType.I8   => intKernel(signed = true)(a, b, metric)
-    case ElemType.U8   => intKernel(signed = false)(a, b, metric)
+    case ElemType.I8   => intKernel(a, b, metric, signed = true).toFloat
+    case ElemType.U8   => intKernel(a, b, metric, signed = false).toFloat
   }
 
   // ---------- double-precision kernels on float arrays ----------
-  // Used by the Catalyst expression on canonical array<float> columns.
+  // VectorDistance's kernels on canonical array<float> columns.
   // Sequential double accumulation — deterministic and bit-reproducible
   // across partitions/engines (matches an ANSI-SQL re-statement evaluated
   // in double precision, which is what the correctness oracle runs).
-
-  // NB: all double kernels iterate min(a.length, b.length) so the
-  // interpreted path agrees with VectorDistance's codegen (which also
-  // truncates to the shorter array) on mismatched-dimension inputs.
+  // Like every kernel here they read the common prefix of the two arrays.
 
   def l2Double(a: Array[Float], b: Array[Float]): Double = math.sqrt(sqL2Double(a, b))
 

@@ -50,18 +50,24 @@ object Quantize {
       .setScale(scale, java.math.RoundingMode.HALF_UP).doubleValue()
   }
 
+  // Both rounds are floor(|v| + 0.5)·signum(v), saturated, NaN → 0. With
+  // a = |v| + 0.5 ≥ 0.5, a.toInt truncates, which is floor(a) below the
+  // saturation bound; skipping floor and signum takes about a quarter off
+  // the time of `codes`.
+
   /** Half-away-from-zero round + saturate to [0,255]. sqlite-vector.c:495-505. */
   def roundU8(v: Double): Int = {
-    if (v.isNaN) return 0
-    val r = math.floor(math.abs(v) + 0.5) * math.signum(v)
-    if (r <= 0.0) 0 else if (r >= 255.0) 255 else r.toInt
+    if (!(v > 0.0)) return 0 // NaN, ±0 and negatives
+    val a = v + 0.5
+    if (a >= 255.0) 255 else a.toInt
   }
 
   /** Half-away-from-zero round + saturate to [-128,127]. sqlite-vector.c:507-515. */
   def roundI8(v: Double): Int = {
     if (v.isNaN) return 0
-    val r = math.floor(math.abs(v) + 0.5) * math.signum(v)
-    if (r <= -128.0) -128 else if (r >= 127.0) 127 else r.toInt
+    val a = math.abs(v) + 0.5
+    if (v < 0.0) { if (a >= 128.0) -128 else -a.toInt }
+    else if (a >= 127.0) 127 else a.toInt
   }
 
   /** Quantize one element: code = round((x − offset) × scale), saturated. */
@@ -71,12 +77,25 @@ object Quantize {
   }
 
   /** Quantize a whole vector into signed bytes (u8 codes stored with the
-    * usual wrap; read back with `& 0xff`).
+    * usual wrap; read back with `& 0xff`). The one copy of the loop:
+    * QuantizeCodes calls it from generated code and from eval.
     */
   def codes(v: Array[Float], p: QuantParams): Array[Byte] = {
     val out = new Array[Byte](v.length)
+    val u8 = p.qType == QType.U8; val scale = p.scale; val offset = p.offset
     var i = 0
-    while (i < v.length) { out(i) = code(v(i).toDouble, p).toByte; i += 1 }
+    while (i < v.length) {
+      val q = (v(i).toDouble - offset) * scale
+      out(i) = (if (u8) roundU8(q) else roundI8(q)).toByte
+      i += 1
+    }
     out
+  }
+
+  /** Exact sum of a packed i8/u8 code vector (CodeSum). */
+  def codeSum(c: Array[Byte], signed: Boolean): Long = {
+    var acc = 0L; var i = 0
+    while (i < c.length) { acc += (if (signed) c(i).toInt else c(i) & 0xff); i += 1 }
+    acc
   }
 }

@@ -83,6 +83,21 @@ object KernelProps extends Properties("kernels") {
       }: _*)
     }
 
+  // roundU8/roundI8 against the reference's formula (sqlite-vector.c:495-515):
+  // every half from -300.5 to 300.5 with its one-ulp neighbours (both
+  // saturation bounds of both types), the special values, random doubles
+  property("roundU8/roundI8 == floor(|v| + 0.5)·signum(v) saturated") = {
+    def ref(v: Double, lo: Double, hi: Double): Int =
+      if (v.isNaN) 0
+      else { val r = math.floor(math.abs(v) + 0.5) * math.signum(v); if (r <= lo) lo.toInt else if (r >= hi) hi.toInt else r.toInt }
+    def same(v: Double): Prop =
+      Prop(Quantize.roundU8(v) == ref(v, 0.0, 255.0) && Quantize.roundI8(v) == ref(v, -128.0, 127.0)) :| s"v=$v"
+    val halves = (-301 to 300).flatMap { k => val h = k + 0.5; Seq(h, Math.nextUp(h), Math.nextDown(h), k.toDouble) }
+    val special = Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity, 0.0, -0.0,
+      Double.MaxValue, -Double.MaxValue, Double.MinPositiveValue, -Double.MinPositiveValue, 3e9, -3e9)
+    Prop.all((halves ++ special).map(same): _*) && forAll(Gen.chooseNum(-1e12, 1e12))(same)
+  }
+
   property("JSON parse of rendered float array is the identity") =
     forAll(vec) { v =>
       VectorCodec.parseJson(v.mkString("[", ",", "]")).sameElements(v)
@@ -138,6 +153,82 @@ object KernelProps extends Properties("kernels") {
       Distances.sqL2Double(v, v) == 0.0 &&
         Distances.l1Double(v, v) == 0.0 &&
         (v.forall(_ == 0f) || Distances.cosineDouble(v, v) < 1e-9)
+    }
+
+  // ---------- the expressions against their kernels ----------
+  // Each expression is run interpreted (eval) and through generated code
+  // (GenerateUnsafeProjection, which fails on a compile error instead of
+  // falling back to eval); both results must equal the graft.kernels
+  // function bit for bit. Dims run past the unroll and SIMD widths.
+
+  import org.apache.spark.sql.catalyst.InternalRow
+  import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, UnsafeArrayData}
+  import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+  import org.apache.spark.sql.types.{ArrayType, BinaryType, FloatType, LongType}
+  import graft.expressions.{CodeDistance, QuantizeCodes, VectorDistance}
+
+  private val parityDim: Gen[Int] =
+    Gen.frequency(4 -> Gen.chooseNum(1, 1030), 1 -> Gen.oneOf(1, 7, 9, 15, 17, 63, 65, 127, 1023, 1025))
+
+  private val codesIn = BoundReference(0, BinaryType, nullable = true)
+  private val codesIn2 = BoundReference(1, BinaryType, nullable = true)
+  private val vecIn = BoundReference(0, ArrayType(FloatType, containsNull = false), nullable = true)
+  private val vecIn2 = BoundReference(1, ArrayType(FloatType, containsNull = false), nullable = true)
+
+  private def sameBits(x: Any, want: Any): Boolean = (x, want) match {
+    case (d: Double, w: Double) => java.lang.Double.doubleToLongBits(d) == java.lang.Double.doubleToLongBits(w)
+    case (c: Array[Byte], w: Array[Byte]) => c.sameElements(w)
+    case _ => x == want
+  }
+
+  /** `e` on `row`, interpreted and through generated code, against the kernel's `want`. */
+  private def parity(label: String, e: Expression, row: InternalRow, want: Any): Prop = {
+    val interp = e.eval(row)
+    val gen = GenerateUnsafeProjection.generate(Seq(e)).apply(row).get(0, e.dataType)
+    Prop(sameBits(interp, want) && sameBits(gen, want)) :| s"$label: eval=$interp codegen=$gen kernel=$want"
+  }
+
+  property("CodeDistance: eval == codegen == Distances.intKernel, bit for bit") =
+    forAll(parityDim, Gen.long) { (n, seed) =>
+      val rnd = new scala.util.Random(seed)
+      val a = new Array[Byte](n); val b = new Array[Byte](n)
+      rnd.nextBytes(a); rnd.nextBytes(b)
+      val row = InternalRow(a, b)
+      Prop.all((for (m <- Metric.all; signed <- Seq(true, false)) yield {
+        val e = CodeDistance(codesIn, codesIn2, m, signed)
+        val k = Distances.intKernel(a, b, m, signed)
+        parity(s"$m signed=$signed n=$n", e, row, if (e.dataType == LongType) k.toLong else k)
+      }): _*)
+    }
+
+  property("VectorDistance: eval == codegen == Distances.onDouble, bit for bit") =
+    forAll(parityDim, Gen.long) { (n, seed) =>
+      val rnd = new scala.util.Random(seed)
+      val (x, y) = (Array.fill(n)((rnd.nextGaussian() * 10).toFloat), Array.fill(n)((rnd.nextGaussian() * 10).toFloat))
+      // one sample in four carries a NaN or infinite lane
+      if (rnd.nextInt(4) == 0) x(rnd.nextInt(n)) = if (rnd.nextBoolean()) Float.NaN else Float.PositiveInfinity
+      val row = InternalRow(UnsafeArrayData.fromPrimitiveArray(x), UnsafeArrayData.fromPrimitiveArray(y))
+      Prop.all(Metric.all.map(m =>
+        parity(s"$m n=$n", VectorDistance(vecIn, vecIn2, m), row, Distances.onDouble(m)(x, y))): _*)
+    }
+
+  property("QuantizeCodes: eval == codegen == Quantize.codes (saturation, NaN lanes)") =
+    forAll(parityDim, Gen.long) { (n, seed) =>
+      val rnd = new scala.util.Random(seed)
+      // values of a few units against scales up to 151: many lanes saturate;
+      // NaN and ±Inf lanes mixed in
+      val v = Array.fill(n)(rnd.nextInt(50) match {
+        case 0 => Float.NaN
+        case 1 => Float.NegativeInfinity
+        case 2 => Float.PositiveInfinity
+        case _ => (rnd.nextGaussian() * 2).toFloat
+      })
+      val scale = 1.0 + rnd.nextDouble() * 150.0; val offset = rnd.nextDouble() * 2.0 - 1.0
+      val row = InternalRow(UnsafeArrayData.fromPrimitiveArray(v))
+      Prop.all(Seq(QType.I8, QType.U8).map { qt =>
+        val e = QuantizeCodes(vecIn, scale, offset, isU8 = qt == QType.U8)
+        parity(s"$qt n=$n scale=$scale offset=$offset", e, row, Quantize.codes(v, QuantParams(qt, scale, offset, 0L)))
+      }: _*)
     }
 
   property("hyperplane signature flips all decided bits under negation") =

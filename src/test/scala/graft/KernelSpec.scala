@@ -102,6 +102,26 @@ class KernelSpec extends AnyFunSuite {
     }
   }
 
+  test("packed kernels on mismatched lengths read the common prefix (i8/u8/f16/bf16)") {
+    val rnd = new scala.util.Random(5)
+    for (et <- Seq(ElemType.I8, ElemType.U8, ElemType.F16, ElemType.BF16); n <- Seq(1, 7, 64)) {
+      def vec(len: Int): Array[Float] = Array.fill(len)(et match {
+        case ElemType.I8 => (rnd.nextInt(255) - 127).toFloat
+        case ElemType.U8 => rnd.nextInt(256).toFloat
+        case _           => rnd.nextFloat() * 8f - 4f
+      })
+      val long = VectorCodec.pack(vec(n + 3), et)
+      val short = VectorCodec.pack(vec(n), et)
+      val prefix = long.take(short.length)
+      for (m <- Metric.all) {
+        val want = Distances.onPacked(m, et)(prefix, short)
+        assert(Distances.onPacked(m, et)(long, short) == want, s"$m $et n=$n long/short")
+        assert(Distances.onPacked(m, et)(short, long) == Distances.onPacked(m, et)(short, prefix),
+          s"$m $et n=$n short/long")
+      }
+    }
+  }
+
   test("unroll-boundary dims agree with naive reference loop") {
     for (n <- dims) {
       val a = Array.tabulate(n)(i => i * 0.25f - 2f)

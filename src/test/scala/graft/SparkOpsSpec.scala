@@ -3044,6 +3044,20 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before == 0)
   }
 
+  test("quantize_codes compiles no code for new (scale, offset)") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    // an input of its own: no table cache other tests leave behind
+    val vecs = spark.range(256).select(col("id"),
+      array((0 until 16).map(j => sin(col("id") * (j + 1)).cast("float")): _*).as("v"))
+    val p = Quantizer.computeParams(vecs, "v")
+    def codes(q: QuantParams): Unit = Quantizer.quantizeCodes(vecs, "id", "v", q).collect()
+    codes(p)
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    codes(p.copy(scale = p.scale * 0.5, offset = p.offset + 0.25))
+    codes(p.copy(scale = p.scale * 3.0))
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before == 0)
+  }
+
   test("vector_scan TVF auto-selects: certified code path when quantized, full scan otherwise") {
     val e = emb
     e.createOrReplaceTempView("auto_emb")
