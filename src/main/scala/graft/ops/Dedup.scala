@@ -401,24 +401,9 @@ object Dedup {
 
   /** Materialize `df` once behind the chosen [[Barrier]]; returns the
     * barrier-backed frame plus the matching release action.
-    *
-    * `compact` (eager LocalCheckpoint only): after materialization,
-    * COALESCE the barrier frame down to ~one partition per AQE advisory
-    * partition size, read from the checkpoint's OWN measured block bytes.
-    * A composition barrier inherits the width of the parallel per-row
-    * work above it (input splits × union lanes — ~100 partitions at gate
-    * scale), and every downstream exchange's map stage then re-scans that
-    * width: ~100 tasks of block reads per stage, each paying task launch/
-    * serialize/collect overhead that dwarfs the microseconds of work on a
-    * small corpus. Coalesce is NARROW — zero shuffle, the already-
-    * materialized blocks are just grouped per task — and the target is
-    * byte-derived, so a production-size barrier (bytes ≥ width × advisory)
-    * keeps its width untouched: the compaction self-deactivates at scale
-    * instead of being a local-core-count constant.
     */
   private[ops] def materialize(df: DataFrame, barrier: Barrier,
-                          eager: Boolean = true,
-                          compact: Boolean = false): (DataFrame, () => Unit) =
+                          eager: Boolean = true): (DataFrame, () => Unit) =
     barrier match {
       case Barrier.LocalCheckpoint =>
         // eager=false defers the checkpoint to the caller's first action —
@@ -426,14 +411,13 @@ object Dedup {
         // connected-components convergence probe) fold barrier + probe
         // into one job. Reliable checkpoint and staging write eagerly
         // regardless (their materialization IS the write).
-        val g0 = df.localCheckpoint(eager = eager)
+        val g = df.localCheckpoint(eager = eager)
         // the checkpoint RDD, read off the LogicalRDD leaf — Dataset.rdd
-        // would compile a row deserializer per call (driver latency both
-        // here and at release time)
-        val leaf0 = org.apache.spark.sql.GraftColumnShim.leafRdd(g0)
-        val g = if (eager && compact) compactCheckpointed(g0, leaf0) else g0
+        // would compile a row deserializer per call (driver latency at
+        // release time)
+        val leaf = org.apache.spark.sql.GraftColumnShim.leafRdd(g)
         (g, () => {
-          leaf0.orElse(Some(g0.rdd)).flatMap(persistedAncestor)
+          leaf.orElse(Some(g.rdd)).flatMap(persistedAncestor)
             .foreach(_.unpersist(blocking = false)); ()
         })
       case Barrier.ReliableCheckpoint =>
@@ -449,47 +433,12 @@ object Dedup {
         (spark.read.parquet(path), () => deletePath(spark, path))
     }
 
-  /** Byte-adaptive width for an eagerly checkpointed frame (see
-    * [[materialize]]'s `compact`), mirroring AQE's own parallelism-first
-    * coalescing policy for post-shuffle reads (it cannot see checkpoint
-    * blocks): per-partition size = max(min(advisoryPartitionSize,
-    * bytes / defaultParallelism), minPartitionSize), target =
-    * ⌈bytes / that⌉ clamped to [1, current width]. Tiny frames coalesce
-    * toward ~minPartitionSize partitions (a handful — downstream
-    * CPU-dense map work keeps SOME parallelism instead of serializing
-    * on 1), mid-size frames spread across the full parallelism, and a
-    * production-size frame (bytes ≥ width × advisory) keeps its width —
-    * the compaction self-deactivates at scale. No-op when the storage
-    * info is unreadable (size 0): never shrink what cannot be measured.
-    */
-  private def compactCheckpointed(g: DataFrame,
-      leaf: Option[org.apache.spark.rdd.RDD[_]]): DataFrame = {
-    val spark = g.sparkSession
-    if (leaf.isEmpty) return g
-    val width = leaf.get.getNumPartitions
-    if (width <= 1) return g
-    val bytes = persistedAncestor(leaf.get).flatMap(r =>
-      spark.sparkContext.getRDDStorageInfo.find(_.id == r.id)
-        .map(i => i.memSize + i.diskSize)).getOrElse(0L)
-    if (bytes <= 0L) return g
-    def confBytes(key: String, dflt: String): Long =
-      org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-        spark.conf.get(key, dflt))
-    val advisory = confBytes("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64MB")
-    val minSize = confBytes("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1MB")
-    val par = math.max(1L, spark.sparkContext.defaultParallelism.toLong)
-    val perPart = math.max(math.min(advisory, bytes / par), minSize)
-    val target = math.min(width.toLong,
-      math.max(1L, (bytes + perPart - 1) / perPart)).toInt
-    if (target < width) g.coalesce(target) else g
-  }
-
   /** The barrier's storage RDD sits a couple of deserialization hops below
     * `df.rdd` — walk down to the persisted (local checkpoint) ancestor so
     * release() can free its blocks.
     */
   @annotation.tailrec
-  private def persistedAncestor(rdd: org.apache.spark.rdd.RDD[_]): Option[org.apache.spark.rdd.RDD[_]] =
+  private[ops] def persistedAncestor(rdd: org.apache.spark.rdd.RDD[_]): Option[org.apache.spark.rdd.RDD[_]] =
     if (rdd.getStorageLevel != StorageLevel.NONE) Some(rdd)
     else rdd.dependencies.headOption match {
       case Some(d) => persistedAncestor(d.rdd)

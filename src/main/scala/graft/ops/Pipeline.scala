@@ -164,8 +164,9 @@ object Pipeline {
                   bench: DataFrame, benchTextCol: String,
                   shardDir: String,
                   cfg: CurateConfig = CurateConfig()): DataFrame =
-    run(captures, idCol, warcCol, robots, robotsHostCol,
-      robotsTxtCol, bench, benchTextCol, shardDir, cfg, audit = false).docs
+    Stages.run(captures.sparkSession, "curate")(runStages(captures, idCol,
+      warcCol, robots, robotsHostCol, robotsTxtCol, bench, benchTextCol,
+      shardDir, cfg, audit = false)).docs
 
   /** [[curateCrawl]] plus the stage funnel: (stage_idx, stage, n_docs)
     * for the eight document-dropping stages and the final on-disk
@@ -179,8 +180,9 @@ object Pipeline {
                          bench: DataFrame, benchTextCol: String,
                          shardDir: String,
                          cfg: CurateConfig = CurateConfig()): Curated =
-    run(captures, idCol, warcCol, robots, robotsHostCol,
-      robotsTxtCol, bench, benchTextCol, shardDir, cfg, audit = true)
+    Stages.run(captures.sparkSession, "curate")(runStages(captures, idCol,
+      warcCol, robots, robotsHostCol, robotsTxtCol, bench, benchTextCol,
+      shardDir, cfg, audit = true))
 
   /** Spread a CPU-heavy per-row chain's INPUT to the session's default
     * parallelism when the incoming plan carries fewer partitions. Small
@@ -253,30 +255,11 @@ object Pipeline {
     (flagged, packed)
   }
 
-  /** Owns the checkpoint-release buffer around [[runStages]]: a stage
-    * that throws (shard-write failure, a crashed incremental wave — the
-    * exact path the crash-retry spec exercises repeatedly) must not leak
-    * the chain's localCheckpoint RDD blocks for the life of the session,
-    * so every accumulated release runs before the rethrow.
-    */
-  private def run(captures: DataFrame, idCol: String, warcCol: String,
-                  robots: DataFrame, robotsHostCol: String, robotsTxtCol: String,
-                  bench: DataFrame, benchTextCol: String,
-                  shardDir: String, cfg: CurateConfig, audit: Boolean): Curated = {
-    val releases = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
-    try runStages(captures, idCol, warcCol, robots, robotsHostCol, robotsTxtCol,
-      bench, benchTextCol, shardDir, cfg, audit, releases)
-    catch { case t: Throwable =>
-      releases.foreach(r => scala.util.Try(r()))
-      throw t
-    }
-  }
-
   private def runStages(captures: DataFrame, idCol: String, warcCol: String,
                   robots: DataFrame, robotsHostCol: String, robotsTxtCol: String,
                   bench: DataFrame, benchTextCol: String,
-                  shardDir: String, cfg: CurateConfig, audit: Boolean,
-                  releases: scala.collection.mutable.ArrayBuffer[() => Unit]): Curated = {
+                  shardDir: String, cfg: CurateConfig, audit: Boolean)
+                 (st: Stages): Curated = {
     require(cfg.warcProfile == "text" || cfg.warcProfile == "gz",
       s"warcProfile must be 'text' or 'gz', got '${cfg.warcProfile}'")
     val spark = captures.sparkSession
@@ -299,38 +282,10 @@ object Pipeline {
           s"spark.sql.optimizer.runtime.bloomFilter.maxNumBits=$maxBits — " +
           "raise that conf to size the seen-store Bloom filter this large")
     }
-    val barrier = Dedup.Barrier.LocalCheckpoint
-    // per-stage wall time of the work newly executed at each
-    // materialization boundary (see Curated's scaladoc for the stage ↔
-    // label mapping); surfaces in the funnel's `seconds` column
-    val stageSecs = scala.collection.mutable.LinkedHashMap[String, Double]()
-    def timed[T](label: String)(body: => T): T = {
-      // label the stage's jobs (guide §1.5)
-      spark.sparkContext.setJobDescription(s"curate: $label")
-      val t0 = System.nanoTime()
-      val r = try body finally spark.sparkContext.setJobDescription(null)
-      stageSecs(label) =
-        stageSecs.getOrElse(label, 0.0) + (System.nanoTime() - t0) / 1e9
-      r
-    }
-    def materializedRaw(df: DataFrame): DataFrame = {
-      // Unaudited, the chain's barriers are LAZY local checkpoints: the
-      // plan-truncation semantics are identical (the frame is a
-      // LogicalRDD either way — none of the r16 lazification traps, which
-      // removed the barrier NODE), but each barrier's result-stage job
-      // folds into its single sequential consumer's first action instead
-      // of running standalone — ~10 fewer jobs per curate run, pure
-      // driver/scheduling overhead at gate scale and one fewer pass of
-      // block writes everywhere. The AUDITED path keeps eager barriers
-      // (the funnel's per-stage `seconds` attribution stays honest) with
-      // the byte-adaptive compaction.
-      val (g, rel) = Dedup.materialize(df, barrier, eager = audit,
-        compact = true)
-      releases += rel
-      g
-    }
-    def materialized(label: String)(df: DataFrame): DataFrame =
-      timed(label)(materializedRaw(df))
+    // Unaudited, the chain's barriers are LAZY (see [[Stages]]): each one's
+    // result-stage job folds into its single sequential consumer's first
+    // action. The AUDITED path keeps eager, compacted barriers, so the
+    // funnel's per-stage `seconds` attribution stays honest.
 
     // S1: WARC ingest — response records only. Checkpointed: the robots
     // stage scans its input three times (filter verdicts + two join
@@ -353,7 +308,7 @@ object Pipeline {
     // with body = NULL while still showing status 200 + an allowed mime —
     // it drops HERE, at ingest, instead of riding a NULL payload into
     // extraction.
-    val recs = materialized("ingest")(if (cfg.httpParse) {
+    val recs = st.stage("ingest", audit)(if (cfg.httpParse) {
       Warc.httpResponses(respRecs, "payload")
         .where(col("http_status") === 200 &&
           col("mime").isin(cfg.httpAllowedMimes: _*) &&
@@ -393,8 +348,8 @@ object Pipeline {
     // over the ingest barrier's width; past the guard the planner's
     // shuffle join returns, whose post-shuffle partitions are
     // advisory-sized (parallel) at that scale.
-    val allowedIds = materializedRaw(
-      verdicts.where(col("allowed")).select(idCol))
+    val allowedIds = st.barrier(
+      verdicts.where(col("allowed")).select(idCol), audit)
     val allowed = withHp.join(
       guardedBroadcast(allowedIds, cfg.maxBroadcastRows), idCol)
 
@@ -410,12 +365,12 @@ object Pipeline {
     // measured ~8× on the composition when tried.
     val t1 = TextAnalysis.fixMojibake(
       TextAnalysis.extractMainContent(col("payload")))
-    val c4 = materialized("lang")(allowed.select(col(idCol), col("url"), col("host"),
+    val c4 = st.stage("lang", audit)(allowed.select(col(idCol), col("url"), col("host"),
       Curation.c4CleanText(
         regexp_replace(t1, "([.!?]) +", "$1\n"), cfg.c4MinWords).as("text")))
 
     // S6: language gate
-    val en = materialized("lang")(c4.where(TextAnalysis.langIdScript(col("text"))
+    val en = st.stage("lang", audit)(c4.where(TextAnalysis.langIdScript(col("text"))
       .isin(cfg.keepLangs.toSeq: _*)))
 
     // S7: URL-level keep-first dedup
@@ -444,7 +399,7 @@ object Pipeline {
       // a full scan of the seen store executed eagerly (head()), and it
       // must land in the seen_screen stage budget, not evaluate as a
       // strict argument before the clock starts
-      val fresh = timed("seen_screen")(materializedRaw(
+      val fresh = st.timed("seen_screen")(st.barrier(
         if (!fs.exists(hp)) withFp
         else {
           val seen = spark.read.parquet(cfg.seenDir)
@@ -471,7 +426,7 @@ object Pipeline {
                 .unionByName(withFp.where(!maybe))
             }
           }
-        }))
+        }, audit))
       seenAppend = () => fresh.select(col("ck1"), col("ck2")).distinct()
         .write.mode("append").parquet(cfg.seenDir)
       fresh.drop("ck1", "ck2")
@@ -481,21 +436,21 @@ object Pipeline {
     val mh = Dedup.minhashLshRun(screened, idCol, "text",
       numHashes = cfg.minhashNumHashes, bands = cfg.minhashBands,
       shingleN = cfg.minhashShingleN, threshold = cfg.minhashThreshold)
-    releases += mh.release
-    val nd = materialized("near_dup")(screened.join(
+    st.onRelease(mh.release)
+    val nd = st.stage("near_dup", audit)(screened.join(
       mh.pairs.select(col("b").as(idCol)).distinct(), Seq(idCol), "left_anti"))
 
     // S9: sentence-level exact dedup (keep-first corpus-wide)
-    val sd = materialized("decontam")(Dedup.sentenceDedup(nd, idCol, "text")
+    val sd = st.stage("decontam", audit)(Dedup.sentenceDedup(nd, idCol, "text")
       .drop("n_sentences", "n_removed"))
 
     val (flagged, packed) = decisionAndPack(sd, bench, benchTextCol, idCol,
-      cfg, (label, df) => materialized(label)(df))
+      cfg, (label, df) => st.stage(label, audit)(df))
 
     // S14: shard write + READBACK — the result is read straight off the
     // store (no join back onto the plan), so its rows certify what
     // landed on disk, not what the plan intended
-    val result = timed("written") {
+    val result = st.timed("written") {
       Curation.writeTrainingShards(packed, idCol, col("n_tokens"), shardDir,
         cfg.nShards, nBuckets = cfg.shardBuckets)
       spark.read.parquet(shardDir)
@@ -520,12 +475,8 @@ object Pipeline {
     // nothing); `written` separately counts the store readback, so a row
     // lost in the shard write shows up as its own funnel cliff instead
     // of hiding inside the cap row.
-    val funnel = if (!audit) {
-      import spark.implicits._
-      Seq.empty[(Long, String, Long, Option[Double])]
-        .toDF("stage_idx", "stage", "n_docs", "seconds")
-    } else {
-      val rows = Seq(
+    val funnel = st.funnel(if (!audit) Nil else {
+      Seq(
         ("ingest", recs.count()), ("robots", allowed.count()),
         ("lang", en.count()), ("url_dedup", urld.count())) ++
         // the incremental screen gets its OWN funnel row (its frame is
@@ -536,17 +487,11 @@ object Pipeline {
         ("decontam", flagged.where(col("_keep_dec")).count()),
         ("quality", flagged.where(col("_keep_dec") && col("_keep_q")).count()),
         ("domain_cap", packed.count()), ("written", result.count()))
-      import spark.implicits._
-      // seconds = the stage's newly-executed wall time (Curated scaladoc);
-      // NULL for rows counted off a shared upstream barrier
-      rows.zipWithIndex.map { case ((st, n), i) =>
-        (i.toLong, st, n, stageSecs.get(st).map(x => math.rint(x * 1000) / 1000))
-      }.toDF("stage_idx", "stage", "n_docs", "seconds")
-    }
+    }, "n_docs")
 
     // the result lives on disk and the funnel is a literal local frame —
     // every intermediate barrier block can go
-    releases.foreach(r => r())
+    st.releaseExcept()
     Curated(result, funnel,
       () => Warc.cappedCaptures(allRecs, idCol, cfg.warcMaxRecords))
   }
@@ -720,10 +665,10 @@ object Pipeline {
                     redirectSrcCol: String = "src",
                     redirectDstCol: String = "dst",
                     redirectPermanentCol: String = ""): DataFrame =
-    frontierRun(pages, idCol, urlCol, htmlCol, robots, robotsHostCol,
-      robotsTxtCol, sitemaps, sitemapUrlCol, sitemapXmlCol,
-      redirects, redirectSrcCol, redirectDstCol, redirectPermanentCol, cfg,
-      audit = false).urls
+    Stages.run(pages.sparkSession, "frontier")(frontierStages(pages, idCol,
+      urlCol, htmlCol, robots, robotsHostCol, robotsTxtCol, sitemaps,
+      sitemapUrlCol, sitemapXmlCol, redirects, redirectSrcCol, redirectDstCol,
+      redirectPermanentCol, cfg, audit = false)).urls
 
   /** [[buildFrontier]] plus the audited funnel (the curateCrawlAudited
     * split: the unaudited path pays zero count jobs; the audited one
@@ -754,33 +699,10 @@ object Pipeline {
                            redirectSrcCol: String = "src",
                            redirectDstCol: String = "dst",
                            redirectPermanentCol: String = ""): Frontier =
-    frontierRun(pages, idCol, urlCol, htmlCol, robots, robotsHostCol,
-      robotsTxtCol, sitemaps, sitemapUrlCol, sitemapXmlCol,
-      redirects, redirectSrcCol, redirectDstCol, redirectPermanentCol, cfg,
-      audit = true)
-
-  /** Release-on-failure wrapper around [[frontierStages]] — same
-    * contract as [[run]]: a stage that throws must not leak the chain's
-    * localCheckpoint blocks for the life of the session.
-    */
-  private def frontierRun(pages: DataFrame, idCol: String, urlCol: String,
-                    htmlCol: String,
-                    robots: DataFrame, robotsHostCol: String, robotsTxtCol: String,
-                    sitemaps: Option[DataFrame], sitemapUrlCol: String,
-                    sitemapXmlCol: String,
-                    redirects: Option[DataFrame], redirectSrcCol: String,
-                    redirectDstCol: String, redirectPermanentCol: String,
-                    cfg: FrontierConfig, audit: Boolean): Frontier = {
-    val releases = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
-    try frontierStages(pages, idCol, urlCol, htmlCol, robots, robotsHostCol,
-      robotsTxtCol, sitemaps, sitemapUrlCol, sitemapXmlCol,
-      redirects, redirectSrcCol, redirectDstCol, redirectPermanentCol,
-      cfg, audit, releases)
-    catch { case t: Throwable =>
-      releases.foreach(r => scala.util.Try(r()))
-      throw t
-    }
-  }
+    Stages.run(pages.sparkSession, "frontier")(frontierStages(pages, idCol,
+      urlCol, htmlCol, robots, robotsHostCol, robotsTxtCol, sitemaps,
+      sitemapUrlCol, sitemapXmlCol, redirects, redirectSrcCol, redirectDstCol,
+      redirectPermanentCol, cfg, audit = true))
 
   private def frontierStages(pages: DataFrame, idCol: String, urlCol: String,
                     htmlCol: String,
@@ -789,73 +711,19 @@ object Pipeline {
                     sitemapXmlCol: String,
                     redirects: Option[DataFrame], redirectSrcCol: String,
                     redirectDstCol: String, redirectPermanentCol: String,
-                    cfg: FrontierConfig, audit: Boolean,
-                    releases: scala.collection.mutable.ArrayBuffer[() => Unit])
-      : Frontier = {
+                    cfg: FrontierConfig, audit: Boolean)
+                   (st: Stages): Frontier = {
     val spark = pages.sparkSession
-    val stageSecs = scala.collection.mutable.LinkedHashMap[String, Double]()
-    def timed[T](label: String)(body: => T): T = {
-      // label the stage's jobs (guide §1.5) — the UI/listener attribution
-      // for a composition whose cost is spread over ~50 tiny jobs
-      spark.sparkContext.setJobDescription(s"frontier: $label")
-      val t0 = System.nanoTime()
-      val r = try body finally spark.sparkContext.setJobDescription(null)
-      stageSecs(label) =
-        stageSecs.getOrElse(label, 0.0) + (System.nanoTime() - t0) / 1e9
-      r
-    }
-    def materializedRawF(df: DataFrame): DataFrame = {
-      // compact: the frontier's barrier frames inherit the extraction
-      // lanes' width (3 spread lanes ≈ 100 partitions) while holding a
-      // few thousand candidate URLs at gate scale — every downstream
-      // exchange then re-scanned ~100 block partitions per stage (~10
-      // such stages per build, each dominated by task launch overhead).
-      // Byte-adaptive, self-deactivates at production widths.
-      val (g, rel) = Dedup.materialize(df, Dedup.Barrier.LocalCheckpoint,
-        compact = true)
-      releases += rel
-      g
-    }
-    // Lazy barrier for the single-sequential-consumer stages (see the
-    // curate chain's materializedRaw): same LogicalRDD plan truncation,
-    // one fewer standalone job — the consumer's first action materializes
-    // the blocks and every later reader (deferred store appends, funnel
-    // counts) reads them.
-    def materializedLazyF(df: DataFrame): DataFrame = {
-      val (g, rel) = Dedup.materialize(df, Dedup.Barrier.LocalCheckpoint,
-        eager = false)
-      releases += rel
-      g
-    }
-    def materializedF(label: String)(df: DataFrame): DataFrame =
-      timed(label)(materializedRawF(df))
-    // The two NARROW post-extraction stages (the distinct fold and the
-    // robots-verdict join) checkpoint only on the AUDITED path, where
-    // the funnel's count jobs re-read each frame. Unaudited they stay
-    // lazy and fold into the final site_cap barrier: their subtrees are
-    // flat projections over the "extracted" LogicalRDD, so the ≤4
-    // logical copies the downstream double-consumers create are small
-    // plans, the heavy fold/verdict Exchanges below them deduplicate
-    // through Spark's exchange reuse at execution, and two sequential
-    // plan-compile + job + checkpoint cycles per frontier build
-    // disappear. The boundaries AROUND the per-row-heavy work keep
-    // their checkpoints on BOTH paths — extracted (the extraction
-    // chain; its logical subtree must never replicate into downstream
-    // plan copies: an experiment lazifying every intermediate stage
-    // compounded the copies ~2^depth and planned+ran 60× slower),
-    // seeded (a driver-loop lineage), seen_store (the persistent-store
-    // read must run once). The FINAL barrier stays always: the
-    // deferred fetched-store append runs only after it, and with a
-    // lazy output the append would precede the caller's first action —
-    // the store would screen its own wave.
-    // A/B'd AGAIN this round (r17, after the barrier compaction landed):
-    // lazy-CHECKPOINTING these two stages saves their ~2×0.25 s
-    // per-consumer projection recomputes but pays ~1.2 s of extra
-    // driver-side plan finalization per build (each lazy checkpoint
-    // finalizes its adaptive plan at declaration) — net worse; raw lazy
-    // stays.
-    def stageF(label: String)(df: DataFrame): DataFrame =
-      if (audit) materializedF(label)(df) else df
+    // Barriers (see [[Stages]]). Eager on both paths: `extracted` (its
+    // logical subtree, the extraction chain, must never replicate into
+    // downstream plan copies) and the final `site_cap` (the deferred
+    // fetched-store append runs only after it; with a lazy output the
+    // append would precede the caller's first action, and the store would
+    // screen its own wave). `seeded` (a driver-loop lineage) and
+    // `seen_store` (the persistent-store read must run once) keep a
+    // barrier on both paths, eager when audited and lazy otherwise. The
+    // narrow `distinct_url` and `robots_allowed` take one only when
+    // audited, where the funnel's count jobs re-read each frame.
 
     // F1: links extracted + resolved; F0: sitemap leaves unioned in with
     // their provenance tag. The sitemap walk materializes on its own
@@ -894,12 +762,7 @@ object Pipeline {
             robots.select(col(robotsHostCol).as("host"),
               col(robotsTxtCol).as("txt")), "host", "txt")
           .select(explode(col("sitemaps")).as("sitemap_url"))
-        // audited: eager, so the `seeded` funnel row carries the walk's
-        // own wall time; unaudited: lazy — the walk folds into the
-        // extracted barrier's materialization (one consumer)
-        val seededF: DataFrame => DataFrame =
-          if (audit) materializedF("seeded") else materializedLazyF
-        val leaves = seededF(Robots.sitemapFrontier(
+        val walk = Robots.sitemapFrontier(
             sm.select(col(sitemapUrlCol).as("sitemap_url"),
               col(sitemapXmlCol).as("_xml")),
             "sitemap_url", "_xml", roots, "sitemap_url", cfg.sitemapMaxDepth)
@@ -910,8 +773,12 @@ object Pipeline {
             when(expr("try_cast(priority AS DOUBLE)").isNotNull,
               least(greatest(expr("try_cast(priority AS DOUBLE)"), lit(0.0)),
                 lit(1.0))).otherwise(lit(null).cast("double")).as("_prio"),
-            noRef))
-        abs.unionByName(leaves)
+            noRef)
+        // audited: eager, so the `seeded` funnel row carries the walk's
+        // own wall time; unaudited: lazy — the walk folds into the
+        // extracted barrier's materialization (one consumer)
+        abs.unionByName(if (audit) st.stage("seeded", eager = true)(walk)
+          else st.barrier(walk, eager = false))
     }
     // F0b: redirect-discovered URLs — raw Location values resolve
     // RFC-3986 against their source (relative Locations are legal),
@@ -928,7 +795,7 @@ object Pipeline {
         val edges = spread(re).select(col(redirectSrcCol).as("_rs"),
           TextAnalysis.resolveUrl(col(redirectSrcCol), col(redirectDstCol))
             .as("_rd"))
-        val terms = timed("redirected")(
+        val terms = st.timed("redirected")(
           Warc.resolveRedirects(edges, "_rs", "_rd", cfg.redirectMaxHops)
             .where(col("terminal"))
             .select(col("final_url").as("_abs"), lit("redirect").as("_src"),
@@ -948,7 +815,7 @@ object Pipeline {
       .select(TextAnalysis.canonicalUrl(col(urlCol)).as("url")).distinct()
     val fetchedDistinct =
       if (cfg.fetchedDir.isEmpty) fetchedLazy
-      else materializedLazyF(fetchedLazy)
+      else st.barrier(fetchedLazy, eager = false)
     val fetched = fetchedDistinct.withColumn("_fetched0", lit(true))
     // F4b (redirectPermanentCol set on a redirects frame): the ALIAS
     // screen — a candidate whose canonical URL is a known PERMANENT
@@ -982,7 +849,7 @@ object Pipeline {
       .join(fetched, Seq("url"), "left")
       .withColumn("_fetched", coalesce(col("_fetched0"), lit(false)))
       .drop("_fetched0", "_abs")
-    val flagged = materializedF("extracted")(aliasSrcs match {
+    val flagged = st.stage("extracted", eager = true)(aliasSrcs match {
       case None => flagged0.withColumn("_alias", lit(false))
       case Some(a) => flagged0.join(a, Seq("url"), "left")
         .withColumn("_alias", coalesce(col("_alias0"), lit(false)))
@@ -1006,16 +873,16 @@ object Pipeline {
       val withH = pass
         .withColumn("_uh1", xxhash64(col("url")))
         .withColumn("_uh2", xxhash64(lit(0x9E3779B97F4A7C15L), col("url")))
-      // audited: eager for the seen_store funnel row's wall time;
-      // unaudited: lazy — the site_cap barrier's materialization is the
-      // single consumer and runs strictly before the deferred append
-      val seenF: DataFrame => DataFrame =
-        if (audit) materializedF("seen_store") else materializedLazyF
-      val fresh = seenF(
+      val unseen =
         if (!fs.exists(hp)) withH
         else withH.join(spark.read.parquet(cfg.fetchedDir),
           withH("_uh1") === col("uh1") && withH("_uh2") === col("uh2"),
-          "left_anti"))
+          "left_anti")
+      // audited: eager for the seen_store funnel row's wall time;
+      // unaudited: lazy — the site_cap barrier's materialization is the
+      // single consumer and runs strictly before the deferred append
+      val fresh = if (audit) st.stage("seen_store", eager = true)(unseen)
+        else st.barrier(unseen, eager = false)
       // reads the materialized wave-distinct's blocks — no pages replay
       fetchedAppend = () => fetchedDistinct
         .select(xxhash64(col("url")).as("uh1"),
@@ -1057,7 +924,7 @@ object Pipeline {
             min(col("domain")).as("domain")) ++ aggs): _*)
     // provenance: the legacy pair name 'both' = link+sitemap is kept;
     // combinations with redirect name their members explicitly
-    val dist = stageF("distinct_url")(folded
+    val dist0 = folded
       .withColumn("source",
         when(col("_fl") === 1 && col("_fs") === 1 && col("_fr") === 1,
           "both+redirect")
@@ -1073,7 +940,8 @@ object Pipeline {
       .withColumn("path",
         when(regexp_extract(col("url"), "(?i)https?://[^/]+(/.*)$", 1) === "",
           "/").otherwise(
-          regexp_extract(col("url"), "(?i)https?://[^/]+(/.*)$", 1))))
+          regexp_extract(col("url"), "(?i)https?://[^/]+(/.*)$", 1)))
+    val dist = if (audit) st.stage("distinct_url", eager = true)(dist0) else dist0
     // the verdict key: the URL itself (already distinct), or its hash —
     // robotsFilter's longest-match aggregation groups on whatever id
     // column it is handed, so the swap reaches inside the operator
@@ -1083,8 +951,10 @@ object Pipeline {
     val verdicts = Robots.robotsFilter(
       dist.select(col(idKey), col("host"), col("path")),
       idKey, "host", "path", rules, "host")
-    val allowed = stageF("robots_allowed")(dist
-      .join(verdicts.where(col("allowed")).select(idKey), Seq(idKey)))
+    val allowed0 = dist
+      .join(verdicts.where(col("allowed")).select(idKey), Seq(idKey))
+    val allowed =
+      if (audit) st.stage("robots_allowed", eager = true)(allowed0) else allowed0
 
     // F7: the bounded per-site cap, then host re-derivation + the
     // per-host Crawl-delay annotation and the source join-back (the
@@ -1133,7 +1003,7 @@ object Pipeline {
       .withColumn("host",
         lower(regexp_extract(col("url"), "(?i)https?://([^/?#]+)", 1)))
       .join(delays, Seq("host"), "left")
-    val out = materializedF("site_cap")(
+    val out = st.stage("site_cap", eager = true)(
       (if (!cfg.hashKeys)
         withDelay.join(allowed.select(col("url") +: srcCols: _*), Seq("url"))
       else withDelay.withColumn("_uh", xxhash64(col("url")))
@@ -1145,12 +1015,8 @@ object Pipeline {
     // anywhere above left the store untouched)
     fetchedAppend()
 
-    import spark.implicits._
-    val funnel = if (!audit)
-      Seq.empty[(Long, String, Long, Option[Double])]
-        .toDF("stage_idx", "stage", "n_urls", "seconds")
-    else {
-      val rows = Seq(
+    val funnel = st.funnel(if (!audit) Nil else {
+      Seq(
         ("extracted", flagged.where(col("_src") === "link").count()),
         ("seeded", flagged.where(col("_src") =!= "redirect").count())) ++
         // the redirect union is the second discovery row (like `seeded`,
@@ -1169,15 +1035,11 @@ object Pipeline {
         ("distinct_url", dist.count()),
         ("robots_allowed", allowed.count()),
         ("site_cap", out.count()))
-      rows.zipWithIndex.map { case ((st, n), i) =>
-        (i.toLong, st, n, stageSecs.get(st).map(x => math.rint(x * 1000) / 1000))
-      }.toDF("stage_idx", "stage", "n_urls", "seconds")
-    }
+    }, "n_urls")
 
     // the fetch list is checkpointed and the funnel is a literal frame;
     // keep only the final barrier alive for the caller
-    releases.dropRight(1).foreach(r => r())
-    releases.remove(0, releases.size - 1)
+    st.releaseExcept(out)
     Frontier(out, funnel)
   }
 

@@ -1283,7 +1283,7 @@ object TextAnalysis {
     // reads. Row-multiset identical either way.
     import org.apache.spark.sql.catalyst.plans.logical._
     // a COALESCE (Repartition shuffle=false — e.g. the byte-adaptive
-    // post-barrier compaction in Dedup.materialize) is narrow too, and
+    // post-barrier compaction of the Stages runner) is narrow too, and
     // when the chain spreads it is DROPPED: the injected round-robin is
     // about to re-widen the rows for the chain's per-row work, and a
     // surviving coalesce above it would fold everything straight back

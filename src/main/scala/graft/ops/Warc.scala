@@ -324,7 +324,9 @@ object Warc {
     * decompose maxHops over the built jump tables (lazy — folded into
     * one last materialization with the terminal verdict, a left join
     * against the edge sources). Every join keys on the 8-byte-hashable
-    * URL; per-round barriers truncate lineage and release at the end.
+    * URL; per-round barriers truncate lineage and are released when the
+    * call returns or throws (a round that throws frees every earlier
+    * round's blocks).
     * Output: (src, final_url, hops, terminal) — hops = edges actually
     * walked (≤ maxHops), terminal = the final position has no outgoing
     * edge; identical to the sequential chase by construction.
@@ -333,86 +335,89 @@ object Warc {
                        maxHops: Int = 8): DataFrame = {
     require(maxHops >= 1 && maxHops <= 16,
       s"maxHops must be in [1, 16], got $maxHops")
-    val releases = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
-    // the (deduplicated) edge table doubles as J_0: follow 1 edge.
-    // Lazy barrier: the first consumer's job materializes it (the
-    // baseline-sum probe below when probing is on, else the first
-    // doubling round / final materialization) — no standalone job.
-    val (e, eRel) = Dedup.materialize(
-      edges.groupBy(col(srcCol).as("_es")).agg(min(col(dstCol)).as("_ed")),
-      Dedup.Barrier.LocalCheckpoint, eager = false)
-    releases += eRel
-    // jump tables J_0..J_k (spans 1, 2, 4, …): (_jx, _jp, _jd) = from
-    // _jx, following min(span, dist-to-sink) edges lands on _jp after
-    // _jd edges
-    var jumps = List(
-      (1L, e.select(col("_es").as("_jx"), col("_ed").as("_jp"), lit(1L).as("_jd"))))
-    // Early-exit probe (the shrinking-set exit the sequential chase had):
-    // Σ_jd is strictly monotone while any chain can still extend (every
-    // row's _jd is non-decreasing across doublings), so an unchanged sum
-    // means EVERY row saturated within the current span — the remaining
-    // doublings would rebuild identical tables, and the decomposition
-    // below covers maxHops with the shorter spans (capacity 2·span−1 ≥
-    // span ≥ every true distance, so saturated positions stop moving).
-    // ZERO extra jobs: each round's table is a LAZY barrier and the sum
-    // is its materializing action — the join, the checkpoint and the
-    // probe ride one job (cycle-bearing corpora never saturate and run
-    // all ⌈log₂ maxHops⌉ rounds exactly as before); for the common
-    // all-short-chain corpus the later full-width self-joins are skipped
-    // outright. Probing is on only when ≥2 doubling rounds exist
-    // (maxHops ≥ 4) — with a single round there is nothing to skip.
-    def jdSum(j: DataFrame): Long = {
-      val r = j.agg(sum(col("_jd"))).head()
-      if (r.isNullAt(0)) 0L else r.getLong(0)
-    }
-    val probing = maxHops >= 4
-    // baseline Σ_jd over J_1 = |E| — this probe doubles as the edge
-    // table's materializing action (the job the eager barrier ran before)
-    var lastSum = if (probing) jdSum(jumps.head._2) else -1L
-    var saturated = false
-    while (!saturated && jumps.head._1 * 2 <= maxHops.toLong) {
-      val (span, j) = jumps.head
-      val b = j.select(col("_jx").as("_bx"), col("_jp").as("_bp"),
-        col("_jd").as("_bd"))
-      val (next, rel) = Dedup.materialize(
-        j.join(b, col("_jp") === col("_bx"), "left")
-          .select(col("_jx"), coalesce(col("_bp"), col("_jp")).as("_jp"),
-            (col("_jd") + coalesce(col("_bd"), lit(0L))).as("_jd")),
-        Dedup.Barrier.LocalCheckpoint, eager = false)
-      releases += rel
-      jumps = (span * 2, next) :: jumps
-      // probe only while another doubling round remains to be skipped;
-      // the sum is ALSO this round's materializing action
-      if (probing && jumps.head._1 * 2 <= maxHops.toLong) {
-        val s = jdSum(next)
-        if (s == lastSum) saturated = true
-        lastSum = s
+    // no job labels: the caller's stage (the frontier's `redirected`)
+    // labels these jobs
+    Stages.run(edges.sparkSession, "redirects") { st =>
+      // the (deduplicated) edge table doubles as J_0: follow 1 edge.
+      // Lazy barrier: the first consumer's job materializes it (the
+      // baseline-sum probe below when probing is on, else the first
+      // doubling round / final materialization) — no standalone job.
+      val e = st.barrier(
+        edges.groupBy(col(srcCol).as("_es")).agg(min(col(dstCol)).as("_ed")),
+        eager = false)
+      // jump tables J_0..J_k (spans 1, 2, 4, …): (_jx, _jp, _jd) = from
+      // _jx, following min(span, dist-to-sink) edges lands on _jp after
+      // _jd edges
+      var jumps = List(
+        (1L, e.select(col("_es").as("_jx"), col("_ed").as("_jp"), lit(1L).as("_jd"))))
+      // Early-exit probe (the shrinking-set exit the sequential chase had):
+      // Σ_jd is strictly monotone while any chain can still extend (every
+      // row's _jd is non-decreasing across doublings), so an unchanged sum
+      // means EVERY row saturated within the current span — the remaining
+      // doublings would rebuild identical tables, and the decomposition
+      // below covers maxHops with the shorter spans (capacity 2·span−1 ≥
+      // span ≥ every true distance, so saturated positions stop moving).
+      // ZERO extra jobs: each round's table is a LAZY barrier and the sum
+      // is its materializing action — the join, the checkpoint and the
+      // probe ride one job (cycle-bearing corpora never saturate and run
+      // all ⌈log₂ maxHops⌉ rounds exactly as before); for the common
+      // all-short-chain corpus the later full-width self-joins are skipped
+      // outright. Probing is on only when ≥2 doubling rounds exist
+      // (maxHops ≥ 4) — with a single round there is nothing to skip.
+      def jdSum(j: DataFrame): Long = {
+        val r = j.agg(sum(col("_jd"))).head()
+        if (r.isNullAt(0)) 0L else r.getLong(0)
       }
+      val probing = maxHops >= 4
+      // baseline Σ_jd over J_1 = |E| — this probe doubles as the edge
+      // table's materializing action (the job the eager barrier ran before)
+      var lastSum = if (probing) jdSum(jumps.head._2) else -1L
+      var saturated = false
+      while (!saturated && jumps.head._1 * 2 <= maxHops.toLong) {
+        val (span, j) = jumps.head
+        val b = j.select(col("_jx").as("_bx"), col("_jp").as("_bp"),
+          col("_jd").as("_bd"))
+        val next = st.barrier(
+          j.join(b, col("_jp") === col("_bx"), "left")
+            .select(col("_jx"), coalesce(col("_bp"), col("_jp")).as("_jp"),
+              (col("_jd") + coalesce(col("_bd"), lit(0L))).as("_jd")),
+          eager = false)
+        jumps = (span * 2, next) :: jumps
+        // probe only while another doubling round remains to be skipped;
+        // the sum is ALSO this round's materializing action
+        if (probing && jumps.head._1 * 2 <= maxHops.toLong) {
+          val s = jdSum(next)
+          if (s == lastSum) saturated = true
+          lastSum = s
+        }
+      }
+      // walk maxHops edges from every source, saturating at sinks: apply
+      // each set bit's jump table (largest first; composition of
+      // min(c, dist) segments is order-free). All lookups stay lazy and
+      // fold into the final materialization below.
+      var live = e.select(col("_es").as("src"), col("_es").as("_pos"),
+        lit(0L).as("_d"))
+      var remaining = maxHops.toLong
+      for ((span, j) <- jumps if span <= remaining) {
+        remaining -= span
+        val b = j.select(col("_jx").as("_bx"), col("_jp").as("_bp"),
+          col("_jd").as("_bd"))
+        live = live.join(b, col("_pos") === col("_bx"), "left")
+          .select(col("src"), coalesce(col("_bp"), col("_pos")).as("_pos"),
+            (col("_d") + coalesce(col("_bd"), lit(0L))).as("_d"))
+      }
+      // terminal verdict: the final position has no outgoing edge. The
+      // result's own eager barrier is not the runner's: it outlives the call
+      // (freed with the frame), uncompacted.
+      val (result, _) = Dedup.materialize(
+        live.join(e.select(col("_es"), lit(true).as("_has_out")),
+            live("_pos") === col("_es"), "left")
+          .select(col("src"), col("_pos").as("final_url"), col("_d").as("hops"),
+            col("_has_out").isNull.as("terminal")),
+        Dedup.Barrier.LocalCheckpoint)
+      st.releaseExcept()
+      result
     }
-    // walk maxHops edges from every source, saturating at sinks: apply
-    // each set bit's jump table (largest first; composition of
-    // min(c, dist) segments is order-free). All lookups stay lazy and
-    // fold into the final materialization below.
-    var live = e.select(col("_es").as("src"), col("_es").as("_pos"),
-      lit(0L).as("_d"))
-    var remaining = maxHops.toLong
-    for ((span, j) <- jumps if span <= remaining) {
-      remaining -= span
-      val b = j.select(col("_jx").as("_bx"), col("_jp").as("_bp"),
-        col("_jd").as("_bd"))
-      live = live.join(b, col("_pos") === col("_bx"), "left")
-        .select(col("src"), coalesce(col("_bp"), col("_pos")).as("_pos"),
-          (col("_d") + coalesce(col("_bd"), lit(0L))).as("_d"))
-    }
-    // terminal verdict: the final position has no outgoing edge
-    val (result, _) = Dedup.materialize(
-      live.join(e.select(col("_es"), lit(true).as("_has_out")),
-          live("_pos") === col("_es"), "left")
-        .select(col("src"), col("_pos").as("final_url"), col("_d").as("hops"),
-          col("_has_out").isNull.as("terminal")),
-      Dedup.Barrier.LocalCheckpoint)
-    releases.foreach(r => r())
-    result
   }
 
   /** Deterministic `.warc.gz` fixture for the gate (JVM-side, wrapped in

@@ -38,7 +38,7 @@ object GraftColumnShim {
     * if that is what the frame is. `Dataset.rdd` would hand back the same
     * partitioning but pays a codegen'd row deserializer compile per call
     * — pure driver latency when the caller only wants the partition count
-    * and block-storage identity (Dedup.materialize's compact step).
+    * and block-storage identity (the stage runner's barrier compaction).
     */
   def leafRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
     df.queryExecution.analyzed match {

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ops.Pipeline
+import graft.ops.{Pipeline, Stages}
 
 /** Structural invariants of the end-to-end crawl → shards composition
   * ([[graft.ops.Pipeline.curateCrawl]]) on a small synthetic crawl.
@@ -71,6 +71,91 @@ class PipelineSpec extends AnyFunSuite {
     assert(shards.subsetOf(Set(0, 1)) && shards.size === 2)
     assert(rows.map(_.getLong(7)).sorted.toSeq === (0L until rows.length).toSeq)
     res.unpersist()
+  }
+
+  test("curateCrawl job labels: exactly the stage set perfbench's CurateProbe reads") {
+    val out = java.nio.file.Files.createTempDirectory("graft_plabel").toString + "/shards"
+    val robots = spark.range(3).select(
+      concat(lit("site"), col("id").cast("string"), lit(".com")).as("host"),
+      lit("user-agent: *\ndisallow: /blocked/\n").as("txt"))
+    val bench = spark.range(1).select(lit("completely unrelated benchmark sentence").as("text"))
+    val sc = spark.sparkContext
+    val labels = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(js.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .foreach(labels.add)
+    }
+    sc.addSparkListener(listener)
+    // one input partition, the way a small corpus arrives as one file
+    // split: the spread's exchange then runs under the ingest label
+    try Pipeline.curateCrawl(crawl(60).coalesce(1), "doc_id", "warc", robots, "host", "txt",
+      bench, "text", out, Pipeline.CurateConfig(capPerDomain = 12,
+        packBudget = 128, nShards = 2, shardBuckets = 8))
+    finally {
+      org.apache.spark.sql.GraftColumnShim.drainListenerBus(sc)
+      sc.removeSparkListener(listener)
+    }
+    import scala.jdk.CollectionConverters._
+    assert(labels.asScala.filter(_.startsWith("curate:")).toSet ===
+      Seq("ingest", "lang", "near_dup", "decontam", "domain_cap", "written")
+        .map(l => s"curate: $l").toSet)
+    assert(sc.getLocalProperty("spark.job.description") === null)
+  }
+
+  test("Stages.run: a throwing body frees every barrier and outside release, label cleared") {
+    val sc = spark.sparkContext
+    val persisted0 = sc.getPersistentRDDs.size
+    var outsideRan = false
+    val e = intercept[IllegalStateException] {
+      Stages.run(spark, "spec") { st =>
+        st.barrier(spark.range(0, 4000, 1, 8).toDF(), eager = true)
+        st.barrier(spark.range(0, 10, 1, 2).toDF(), eager = false)
+        st.onRelease(() => outsideRan = true)
+        assert(sc.getPersistentRDDs.size === persisted0 + 2)
+        st.timed("boom")(throw new IllegalStateException("boom"))
+      }
+    }
+    assert(e.getMessage === "boom")
+    assert(sc.getPersistentRDDs.size === persisted0)
+    assert(outsideRan)
+    assert(sc.getLocalProperty("spark.job.description") === null)
+  }
+
+  test("Stages.timed: one label timed twice sums its seconds; untimed rows are NULL") {
+    val f = Stages.run(spark, "spec") { st =>
+      val label = st.timed("a") {
+        Thread.sleep(60)
+        spark.sparkContext.getLocalProperty("spark.job.description")
+      }
+      assert(label === "spec: a")
+      st.timed("a")(Thread.sleep(60))
+      st.funnel(Seq("a" -> 3L, "b" -> 2L), "n_items")
+    }
+    assert(f.columns.toSeq === Seq("stage_idx", "stage", "n_items", "seconds"))
+    val rows = f.orderBy("stage_idx").collect()
+    assert(rows.map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq ===
+      Seq((0L, "a", 3L), (1L, "b", 2L)))
+    assert(rows(0).getDouble(3) >= 0.12)
+    assert(rows(1).isNullAt(3))
+  }
+
+  test("resolveRedirects: a round that throws frees the barriers declared before it") {
+    val sc = spark.sparkContext
+    val persisted0 = sc.getPersistentRDDs.size
+    // AQE off: a lazy barrier's declaration then runs no job, so the edge
+    // table's barrier is persisted before the baseline probe first
+    // computes the failing row. A range, not a local relation, which the
+    // optimizer would fold (and throw) at declaration.
+    val boom = udf((s: String) => { if (s == "u2") throw new IllegalStateException("boom"); s })
+    val edges = spark.range(3).select(
+      boom(concat(lit("u"), col("id").cast("string"))).as("src"),
+      concat(lit("u"), (col("id") + 1).cast("string")).as("dst"))
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try intercept[Exception](graft.ops.Warc.resolveRedirects(edges, "src", "dst", maxHops = 8))
+    finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert(sc.getPersistentRDDs.size === persisted0)
   }
 
   test("decisionAndPack: text crosses exactly ONE exchange (the packing window)") {
@@ -214,9 +299,12 @@ class PipelineSpec extends AnyFunSuite {
     // the seen screen already ran
     java.nio.file.Files.write(java.nio.file.Paths.get(base + "/blockfile"),
       "x".getBytes)
+    val persisted0 = spark.sparkContext.getPersistentRDDs.size
     intercept[Exception] {
       run(Seq(2L, 6L), 1, base + "/blockfile/shards")
     }
+    // the release-on-failure path freed every checkpoint block
+    assert(spark.sparkContext.getPersistentRDDs.size === persisted0)
     // the store did NOT advance past the crash — the wave's own
     // fingerprints were never persisted...
     assert(spark.read.parquet(base + "/seen").count() === seenAfter0)
