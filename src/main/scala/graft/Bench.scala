@@ -601,6 +601,9 @@ object Bench {
       }
     }
 
+    // a mistyped SPARK_GRAFT_BENCH_ONLY name would drop its row unnoticed
+    onlyFilter.filterNot(results.contains).toSeq.sorted.foreach(n =>
+      System.err.println(s"graft.Bench: SPARK_GRAFT_BENCH_ONLY name '$n' matched no row"))
     val qs = results.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }.mkString("{", ",", "}")
     val total = results.values.sum
     val passesJson = passes.map { case (load, times) =>

@@ -1,10 +1,10 @@
 package graft.catalog
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
 import scala.collection.concurrent.TrieMap
 
-import org.apache.spark.sql.DataFrame
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{ArrayType, BinaryType, FloatType}
 
 import graft.{QType, QuantParams, VectorConfig}
@@ -65,17 +65,29 @@ object VectorCatalog {
   def clear(): Unit = { configs.clear(); quants.clear() }
 
   // ---------- sidecar IO (S4: the _sqliteai_vector equivalent) ----------
+  // through the path's own Hadoop filesystem, so a file:, hdfs: or s3a:
+  // URI resolves the way the store's codes do
+
+  private def conf = SparkSession.active.sessionState.newHadoopConf()
 
   def writeSidecar(path: String, p: QuantParams): Unit = {
     val json =
       s"""{"qtype":"${p.qType.name}","scale":${p.scale},"offset":${p.offset},"rows":${p.rows}}"""
-    val tmp = Paths.get(path + ".tmp")
-    Files.write(tmp, json.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, Paths.get(path), StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    val dst = new Path(path)
+    val tmp = dst.suffix(".tmp")
+    val fs = dst.getFileSystem(conf)
+    val out = fs.create(tmp, true)
+    try out.write(json.getBytes(StandardCharsets.UTF_8)) finally out.close()
+    // a local rename replaces the old file atomically; HDFS refuses to
+    // replace, so there the old sidecar is deleted first
+    if (!fs.rename(tmp, dst))
+      require(fs.delete(dst, false) && fs.rename(tmp, dst), s"writeSidecar: rename $tmp -> $dst failed")
   }
 
   def readSidecar(path: String): QuantParams = {
-    val json = new String(Files.readAllBytes(Paths.get(path)), StandardCharsets.UTF_8)
+    val src = new Path(path)
+    val in = src.getFileSystem(conf).open(src)
+    val json = try new String(in.readAllBytes(), StandardCharsets.UTF_8) finally in.close()
     def field(k: String): String = {
       val m = ("\"" + k + "\"\\s*:\\s*(\"[^\"]*\"|[^,}]+)").r.findFirstMatchIn(json)
         .getOrElse(throw new IllegalArgumentException(s"sidecar missing $k: $json"))

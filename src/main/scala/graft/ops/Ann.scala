@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{hyperplane_signature, vectorLit, vector_distance}
@@ -49,17 +49,23 @@ object Ann {
       col("distance"), col(idCol), k)
   }
 
+  /** Append `df` to `path` partitioned by `partCol`. Rows are clustered
+    * by the partition value before the write, so each directory gets O(1)
+    * files instead of one per (task × value) — at scale the partitionBy
+    * write would otherwise explode into tasks×2^nBits files.
+    */
+  private[ops] def writePartitioned(df: DataFrame, partCol: String, path: String): Unit =
+    df.repartition(graft.functions.writeParallelism(df.sparkSession), col(partCol))
+      .write.mode(SaveMode.Append).partitionBy(partCol).parquet(path)
+
   /** Materialize the bucketed table partitioned by bucket — the on-disk
-    * layout that makes probe scans read only probed partitions. Rows are
-    * clustered by bucket before the write, so each bucket directory gets
-    * O(1) files instead of one per (task × bucket) — at scale the
-    * partitionBy write would otherwise explode into tasks×2^nBits files.
+    * layout that makes probe scans read only probed partitions — and swap
+    * it in through [[StoreSwap.replace]].
     */
   def writeBucketed(df: DataFrame, vecCol: String, path: String,
                     nBits: Int, dim: Int, seed: Long = 42L): Unit =
-    withBuckets(df, vecCol, nBits, dim, seed)
-      .repartition(graft.functions.writeParallelism(df.sparkSession), col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket").parquet(path)
+    StoreSwap.replace(df.sparkSession, path)(
+      writePartitioned(withBuckets(df, vecCol, nBits, dim, seed), "bucket", _))
 
   /** Append an ingest wave to an existing LSH store. Unlike
     * [[appendIvf]]'s frozen centroids, there is no learned state to
@@ -70,10 +76,10 @@ object Ann {
     * (gated by lsh_append, whose oracle is the full-corpus replay).
     */
   def appendBucketed(wave: DataFrame, vecCol: String, path: String,
-                     nBits: Int, dim: Int, seed: Long = 42L): Unit =
-    withBuckets(wave, vecCol, nBits, dim, seed)
-      .repartition(graft.functions.writeParallelism(wave.sparkSession), col("bucket"))
-      .write.mode("append").partitionBy("bucket").parquet(path)
+                     nBits: Int, dim: Int, seed: Long = 42L): Unit = {
+    StoreSwap.open(wave.sparkSession, path)
+    writePartitioned(withBuckets(wave, vecCol, nBits, dim, seed), "bucket", path)
+  }
 
   /** Read ONLY the probed partition directories of a `partitionBy`
     * store: `spark.read.parquet(root)` lists EVERY partition directory
@@ -82,21 +88,24 @@ object Ann {
     * runs as its own Spark JOB (256 tasks for the LSH store, ~0.35 s per
     * probe at gate scale; at production store sizes the listing grows
     * with the store while the probe's true working set stays nprobe
-    * directories). Listing the probed values' directories under
-    * `basePath` keeps the partition column and reads the same rows; the
-    * callers keep their IN-list filter on top, so the scan's
-    * PartitionFilters contract is unchanged. Values without a directory
-    * contribute no rows either way; a store with none of the probed
-    * directories falls back to the root read (schema intact).
+    * directories). One `listStatus` of the root finds the probed values'
+    * directories; reading them under `basePath` keeps the partition
+    * column and reads the same rows; the callers keep their IN-list
+    * filter on top, so the scan's PartitionFilters contract is unchanged.
+    * Values without a directory contribute no rows either way; when none
+    * of the probed directories exists or holds a parquet footer to infer
+    * the schema from, the read falls back to the root (schema intact).
     */
   private[ops] def readProbedDirs(spark: SparkSession, path: String,
                                   partCol: String, values: Seq[Long]): DataFrame = {
     val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dirs = values.map(v => new org.apache.hadoop.fs.Path(path, s"$partCol=$v"))
-      .filter(fs.exists).map(_.toString)
+    val present = try root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listStatus(root).map(_.getPath.getName).toSet
+    catch { case _: java.io.FileNotFoundException => Set.empty[String] }
+    val dirs = values.map(v => s"$partCol=$v").filter(present).map(d => s"$path/$d")
     if (dirs.isEmpty) spark.read.parquet(path)
-    else spark.read.option("basePath", path).parquet(dirs: _*)
+    else try spark.read.option("basePath", path).parquet(dirs: _*)
+    catch { case _: AnalysisException => spark.read.parquet(path) }
   }
 
   /** ANN top-k over a bucket-partitioned store: the IN-list on the
@@ -258,13 +267,12 @@ object Ann {
       .map(r => r.getSeq[Double](r.fieldIndex("c")).map(x =>
         (graft.kernels.Quantize.roundHalfUp(x * 1048576.0, 0) / 1048576.0).toFloat))
 
-  /** Materialize the IVF store partitioned by cluster (clustered before
-    * the write — see [[writeBucketed]] on the small-files explosion).
+  /** Materialize the IVF store partitioned by cluster and swap it in
+    * through [[StoreSwap.replace]].
     */
   def writeIvf(df: DataFrame, vecCol: String, path: String, centroids: Seq[Seq[Float]]): Unit =
-    withClusters(df, vecCol, centroids)
-      .repartition(graft.functions.writeParallelism(df.sparkSession), col("cluster"))
-      .write.mode("overwrite").partitionBy("cluster").parquet(path)
+    StoreSwap.replace(df.sparkSession, path)(
+      writePartitioned(withClusters(df, vecCol, centroids), "cluster", _))
 
   /** Append an ingest wave to an existing IVF store under its FROZEN
     * centroids — the [[graft.ops.Quantizer.quantizeAppend]] lifecycle for
@@ -283,10 +291,11 @@ object Ann {
     * [[refineCentroids]] + rebuild when the histogram skews.
     */
   def appendIvf(wave: DataFrame, vecCol: String, path: String,
-                centroids: Seq[Seq[Float]]): Unit =
-    withClusters(wave.where(col(vecCol).isNotNull), vecCol, centroids)
-      .repartition(graft.functions.writeParallelism(wave.sparkSession), col("cluster"))
-      .write.mode("append").partitionBy("cluster").parquet(path)
+                centroids: Seq[Seq[Float]]): Unit = {
+    StoreSwap.open(wave.sparkSession, path)
+    writePartitioned(withClusters(wave.where(col(vecCol).isNotNull), vecCol, centroids),
+      "cluster", path)
+  }
 
   /** Per-cell row counts of an IVF store — the hot-cell health probe
     * appends are monitored with. Selecting only the PARTITION column, the
@@ -308,14 +317,8 @@ object Ann {
     */
   def ivfTopK(spark: SparkSession, path: String, idCol: String, vecCol: String,
               probe: Array[Float], k: Int, metric: String,
-              centroids: Seq[Seq[Float]], nprobe: Int): DataFrame = {
-    val cells = probeClusters(probe, centroids, nprobe)
-    val store = readProbedDirs(spark, path, "cluster", cells.map(_.toLong))
-      .where(col("cluster").isin(cells: _*))
-    Knn.topK(
-      store.select(col(idCol), vector_distance(col(vecCol), vectorLit(probe), metric).as("distance")),
-      col("distance"), col(idCol), k)
-  }
+              centroids: Seq[Seq[Float]], nprobe: Int): DataFrame =
+    ivfTopKFiltered(spark, path, idCol, vecCol, probe, k, metric, centroids, nprobe, lit(true))
 
   /** FILTERED vector search over the IVF store — "nearest `lang='en'`
     * documents", the metadata-constrained retrieval every serving stack

@@ -76,7 +76,7 @@ object Layout {
     */
   def readWithTombstones(spark: SparkSession, storePath: String,
                          tombstonePath: String, idCol: String): DataFrame = {
-    StoreSwap.recover(spark, storePath, storePath + "_compacting")
+    StoreSwap.open(spark, storePath)
     val store = spark.read.parquet(storePath)
     val fs = new org.apache.hadoop.fs.Path(tombstonePath)
       .getFileSystem(spark.sessionState.newHadoopConf())
@@ -109,7 +109,7 @@ object Layout {
   def readWithUpserts(spark: SparkSession, storePath: String,
                       upsertPath: String, idCol: String,
                       asOfWave: Option[Long] = None): DataFrame = {
-    StoreSwap.recover(spark, storePath, storePath + "_compacting")
+    StoreSwap.open(spark, storePath)
     val store = spark.read.parquet(storePath)
     val fs = new org.apache.hadoop.fs.Path(upsertPath)
       .getFileSystem(spark.sessionState.newHadoopConf())
@@ -129,48 +129,34 @@ object Layout {
   /** Fold the accumulated upserts into the store once (rewrite with
     * latest-wins applied, drop the sidecar) — [[compactTombstones]]' twin;
     * note compaction FORFEITS time travel for the folded waves, so run it
-    * when the history window ages out, not eagerly.
-    *
-    * Durability: the swap goes through [[StoreSwap.commit]] (rename old
-    * aside, rename staged in, delete old) — a crash at any point leaves a
-    * complete store recoverable by name, and the read paths' recovery
-    * probe finishes an interrupted swap. A crash between the swap and the
-    * sidecar delete merely reapplies the folded waves on read, which
+    * when the history window ages out, not eagerly. A crash between the
+    * swap and the sidecar delete reapplies the folded waves on read, which
     * latest-wins makes idempotent (same rows win again).
     */
   def compactUpserts(spark: SparkSession, storePath: String,
-                     upsertPath: String, idCol: String): Unit = {
-    val tmp = storePath + "_compacting"
-    readWithUpserts(spark, storePath, upsertPath, idCol)
-      .write.mode(SaveMode.Overwrite).parquet(tmp)
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = new org.apache.hadoop.fs.Path(storePath).getFileSystem(conf)
-    StoreSwap.commit(fs, new org.apache.hadoop.fs.Path(storePath),
-      new org.apache.hadoop.fs.Path(tmp))
-    fs.delete(new org.apache.hadoop.fs.Path(upsertPath), true)
-  }
+                     upsertPath: String, idCol: String): Unit =
+    compactWith(spark, storePath, upsertPath,
+      readWithUpserts(spark, storePath, upsertPath, idCol))
 
   /** Compaction: fold the accumulated tombstones into the store ONCE
     * (rewrite minus deleted rows, then drop the sidecar) — run on the
     * same cadence as any store compaction, after which reads pay zero
     * anti-join. The rewrite is the one full-corpus pass the sidecar
-    * design defers and batches.
-    *
-    * Durability: [[StoreSwap.commit]], same contract as
-    * [[compactUpserts]]; a crash between swap and sidecar delete
-    * reapplies the folded delete set on read — idempotent (the rows are
-    * already gone).
+    * design defers and batches. A crash between the swap and the sidecar
+    * delete reapplies the folded delete set on read — idempotent (the
+    * rows are already gone).
     */
   def compactTombstones(spark: SparkSession, storePath: String,
-                        tombstonePath: String, idCol: String): Unit = {
-    val tmp = storePath + "_compacting"
-    readWithTombstones(spark, storePath, tombstonePath, idCol)
-      .write.mode(SaveMode.Overwrite).parquet(tmp)
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = new org.apache.hadoop.fs.Path(storePath).getFileSystem(conf)
-    StoreSwap.commit(fs, new org.apache.hadoop.fs.Path(storePath),
-      new org.apache.hadoop.fs.Path(tmp))
-    fs.delete(new org.apache.hadoop.fs.Path(tombstonePath), true)
+                        tombstonePath: String, idCol: String): Unit =
+    compactWith(spark, storePath, tombstonePath,
+      readWithTombstones(spark, storePath, tombstonePath, idCol))
+
+  /** Swap `merged` in as the store, then delete the folded sidecar. */
+  private def compactWith(spark: SparkSession, storePath: String,
+                          sidecarPath: String, merged: DataFrame): Unit = {
+    StoreSwap.replace(spark, storePath)(merged.write.parquet(_))
+    val sidecar = new org.apache.hadoop.fs.Path(sidecarPath)
+    sidecar.getFileSystem(spark.sessionState.newHadoopConf()).delete(sidecar, true)
   }
 
   /** Per-file [min,max] stats of `column` from the parquet footers —

@@ -385,13 +385,7 @@ object Pipeline {
     // out the wave's own documents on retry.
     var seenAppend: () => Unit = () => ()
     val screened = if (cfg.seenDir.isEmpty) urld else {
-      val hp = new org.apache.hadoop.fs.Path(cfg.seenDir)
-      val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      // resolve any crash window an interrupted compactSeen left (the
-      // quant readStore convention) before the exists probe: an append
-      // against a stepped-aside store would otherwise fork a fresh store
-      // whose later recovery discards the pre-compaction content
-      StoreSwap.recover(fs, hp, new org.apache.hadoop.fs.Path(cfg.seenDir + ".compact"))
+      val seenExists = StoreSwap.open(spark, cfg.seenDir)
       val withFp = urld
         .withColumn("ck1", xxhash64(col("text")))
         .withColumn("ck2", xxhash64(lit(0x9E3779B97F4A7C15L), col("text")))
@@ -400,7 +394,7 @@ object Pipeline {
       // must land in the seen_screen stage budget, not evaluate as a
       // strict argument before the clock starts
       val fresh = st.timed("seen_screen")(st.barrier(
-        if (!fs.exists(hp)) withFp
+        if (!seenExists) withFp
         else {
           val seen = spark.read.parquet(cfg.seenDir)
           if (!cfg.seenBloom)
@@ -865,16 +859,12 @@ object Pipeline {
     // the frontier has materialized (see FrontierConfig).
     var fetchedAppend: () => Unit = () => ()
     val screened = if (cfg.fetchedDir.isEmpty) pass else {
-      val hp = new org.apache.hadoop.fs.Path(cfg.fetchedDir)
-      val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      // resolve any crash window an interrupted compactFetched left
-      // before the exists probe (see the seenDir screen's note)
-      StoreSwap.recover(fs, hp, new org.apache.hadoop.fs.Path(cfg.fetchedDir + ".compact"))
+      val fetchedExists = StoreSwap.open(spark, cfg.fetchedDir)
       val withH = pass
         .withColumn("_uh1", xxhash64(col("url")))
         .withColumn("_uh2", xxhash64(lit(0x9E3779B97F4A7C15L), col("url")))
       val unseen =
-        if (!fs.exists(hp)) withH
+        if (!fetchedExists) withH
         else withH.join(spark.read.parquet(cfg.fetchedDir),
           withH("_uh1") === col("uh1") && withH("_uh2") === col("uh2"),
           "left_anti")
@@ -1141,14 +1131,12 @@ object Pipeline {
     * solves for the quant store, solved the same way. Rewrites the
     * accumulated files into ~`targetFileBytes`-sized ones (sized by the
     * store's on-disk bytes, so a thousand tiny wave files fold into a
-    * handful regardless of cluster width) and promotes
-    * the rewrite via the crash-safe [[StoreSwap]] rename protocol: a
-    * crash at ANY point leaves a complete store recoverable by name, and
-    * both screen paths (and this method) run the recovery probe before
-    * touching the store. Content is row-identical — compaction never
-    * dedups, reorders semantics, or drops lanes; the screens' anti-joins
-    * read the same multiset. Returns the compacted row count (0 when the
-    * store does not exist yet — nothing accreted, nothing to do).
+    * handful regardless of cluster width) and swaps the rewrite in
+    * through [[StoreSwap.replace]]. Content is row-identical — compaction
+    * never dedups, reorders semantics, or drops lanes; the screens'
+    * anti-joins read the same multiset. Returns the compacted row count
+    * (0 when the store does not exist yet — nothing accreted, nothing to
+    * do).
     */
   def compactScreenStore(spark: org.apache.spark.sql.SparkSession,
                          storeDir: String,
@@ -1156,18 +1144,13 @@ object Pipeline {
     require(storeDir.nonEmpty, "compactScreenStore: empty store path")
     require(targetFileBytes > 0,
       s"compactScreenStore: targetFileBytes must be > 0, got $targetFileBytes")
+    if (!StoreSwap.open(spark, storeDir)) return 0L
     val store = new org.apache.hadoop.fs.Path(storeDir)
-    val tmp = new org.apache.hadoop.fs.Path(storeDir + ".compact")
-    val fs = store.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    StoreSwap.recover(fs, store, tmp)
-    if (!fs.exists(store)) return 0L
-    val bytes = fs.getContentSummary(store).getLength
+    val bytes = store.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getContentSummary(store).getLength
     val nFiles = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
-    spark.read.parquet(storeDir)
-      .repartition(nFiles)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(tmp.toString)
-    StoreSwap.commit(fs, store, tmp)
+    val rows = spark.read.parquet(storeDir)
+    StoreSwap.replace(spark, storeDir)(rows.repartition(nFiles).write.parquet(_))
     spark.read.parquet(storeDir).count()
   }
 }

@@ -37,7 +37,8 @@ import graft.kernels.Sketches
   *
   * Store layout ([[write]]/[[read]]): codes as `array<tinyint>` parquet
   * next to a `_pq_codebook` parquet sidecar (sub, code, cv) — parquet
-  * round-trips floats exactly, no text codec in the loop.
+  * round-trips floats exactly, no text codec in the loop. Both live in
+  * one [[StoreSwap]] store directory.
   */
 object Pq {
 
@@ -124,18 +125,21 @@ object Pq {
 
   /** Materialize the code store: `array<tinyint>` codes plus a
     * `_pq_codebook` parquet sidecar — exact float round-trip, readable
-    * without the original table.
+    * without the original table — staged together and swapped in through
+    * [[StoreSwap.replace]], so codes never pair with another codebook.
     */
-  def write(df: DataFrame, idCol: String, vecCol: String, path: String, cb: PqCodebook): Unit = {
-    val spark = df.sparkSession
-    encode(df, idCol, vecCol, cb)
-      .select(col("id"), col("codes").cast("array<tinyint>").as("codes"))
-      .write.mode("overwrite").parquet(s"$path/codes")
-    val rows = for (s <- 0 until cb.m; j <- 0 until cb.nCodes)
-      yield (s, j, cb.cents(s)(j).toSeq)
+  def write(df: DataFrame, idCol: String, vecCol: String, path: String, cb: PqCodebook): Unit =
+    StoreSwap.replace(df.sparkSession, path) { tmp =>
+      writeCodebook(df.sparkSession, cb, tmp)
+      encode(df, idCol, vecCol, cb)
+        .select(col("id"), col("codes").cast("array<tinyint>").as("codes"))
+        .write.parquet(s"$tmp/codes")
+    }
+
+  private def writeCodebook(spark: SparkSession, cb: PqCodebook, dir: String): Unit = {
     import spark.implicits._
-    rows.toDF("sub", "code", "cv").coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/_pq_codebook")
+    (for (s <- 0 until cb.m; j <- 0 until cb.nCodes) yield (s, j, cb.cents(s)(j).toSeq))
+      .toDF("sub", "code", "cv").coalesce(1).write.parquet(s"$dir/_pq_codebook")
   }
 
   // ---------- IVF-PQ: coarse partition pruning × code compression ----------
@@ -158,35 +162,39 @@ object Pq {
     * or the Lloyd-refined cells ([[Ann.refineCentroids]]) — the refined
     * coarse quantizer is measured against the sampled baseline by the
     * ivfpq_recall_kmeans gate, mirroring IVF's ivf_recall_kmeans.
-    */
-  /** `extraCols` ride along in the code store (metadata columns for
+    *
+    * `extraCols` ride along in the code store (metadata columns for
     * [[ivfPqTopKFiltered]] — a few bytes next to the 8-byte codes).
     */
   def writeIvfPq(df: DataFrame, idCol: String, vecCol: String, path: String,
                  centroids: Seq[Seq[Float]], cb: PqCodebook,
                  extraCols: Seq[String] = Nil): Unit = {
     val spark = df.sparkSession
+    import spark.implicits._
+    StoreSwap.replace(spark, path) { tmp =>
+      writeCodebook(spark, cb, tmp)
+      centroids.zipWithIndex.map { case (cv, i) => (i, cv) }
+        .toDF("cid", "cv").coalesce(1).write.parquet(s"$tmp/_ivf_centroids")
+      Ann.writePartitioned(ivfPqCodes(df, idCol, vecCol, centroids, cb, extraCols),
+        "cluster", s"$tmp/codes")
+    }
+  }
+
+  /** (id, codes, cluster, extraCols…) rows of the IVF-PQ code store. */
+  private def ivfPqCodes(df: DataFrame, idCol: String, vecCol: String,
+                         centroids: Seq[Seq[Float]], cb: PqCodebook,
+                         extraCols: Seq[String]): DataFrame =
     Ann.withClusters(df.where(col(vecCol).isNotNull), vecCol, centroids)
       .select(Seq(col(idCol).as("id"),
         encodeColumn(col(vecCol), cb).cast("array<tinyint>").as("codes"),
         col("cluster")) ++ extraCols.map(col): _*)
-      .repartition(graft.functions.writeParallelism(df.sparkSession), col("cluster"))
-      .write.mode("overwrite").partitionBy("cluster").parquet(s"$path/codes")
-    val rows = for (s <- 0 until cb.m; j <- 0 until cb.nCodes)
-      yield (s, j, cb.cents(s)(j).toSeq)
-    import spark.implicits._
-    rows.toDF("sub", "code", "cv").coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/_pq_codebook")
-    centroids.zipWithIndex.map { case (cv, i) => (i, cv) }
-      .toDF("cid", "cv").coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/_ivf_centroids")
-  }
 
   /** Read the IVF-PQ store back: (codes DataFrame with its `cluster`
     * partition column, coarse centroids, PQ codebook) — self-contained,
     * no original table needed.
     */
   def readIvfPq(spark: SparkSession, path: String): (DataFrame, Seq[Seq[Float]], PqCodebook) = {
+    StoreSwap.open(spark, path)
     val codes = spark.read.parquet(s"$path/codes")
       .select(col("id"), col("codes").cast("array<int>").as("codes"), col("cluster"))
     (codes, readCentroids(spark, s"$path/_ivf_centroids"),
@@ -212,14 +220,10 @@ object Pq {
     */
   def appendIvfPq(wave: DataFrame, idCol: String, vecCol: String, path: String): Unit = {
     val spark = wave.sparkSession
+    StoreSwap.open(spark, path)
     val cents = readCentroids(spark, s"$path/_ivf_centroids")
     val cb = readCodebook(spark, s"$path/_pq_codebook")
-    Ann.withClusters(wave.where(col(vecCol).isNotNull), vecCol, cents)
-      .select(col(idCol).as("id"),
-        encodeColumn(col(vecCol), cb).cast("array<tinyint>").as("codes"),
-        col("cluster"))
-      .repartition(graft.functions.writeParallelism(wave.sparkSession), col("cluster"))
-      .write.mode("append").partitionBy("cluster").parquet(s"$path/codes")
+    Ann.writePartitioned(ivfPqCodes(wave, idCol, vecCol, cents, cb, Nil), "cluster", s"$path/codes")
   }
 
   /** ADC top-k over the probed cells only: the IN-list on the `cluster`
@@ -228,18 +232,8 @@ object Pq {
     * rows are scored by the literal LUT inside WholeStageCodegen.
     */
   def ivfPqTopK(spark: SparkSession, path: String, probe: Array[Float], k: Int,
-                centroids: Seq[Seq[Float]], cb: PqCodebook, nprobe: Int): DataFrame = {
-    val cells = Ann.probeClusters(probe, centroids, nprobe)
-    // probed-directory read (see Ann.readProbedDirs): lists only the
-    // nprobe cell dirs instead of the whole store
-    val store = Ann.readProbedDirs(spark, s"$path/codes", "cluster",
-        cells.map(_.toLong))
-      .where(col("cluster").isin(cells: _*))
-    Knn.topK(
-      store.select(col("id"),
-        adcColumn(col("codes").cast("array<int>"), cb.lut(probe)).as("distance")),
-      col("distance"), col("id"), k)
-  }
+                centroids: Seq[Seq[Float]], cb: PqCodebook, nprobe: Int): DataFrame =
+    ivfPqTopKFiltered(spark, path, probe, k, centroids, cb, nprobe, lit(true))
 
   /** FILTERED IVF-PQ top-k — [[Ann.ivfTopKFiltered]]'s contract over the
     * COMBINED store: metadata written via `writeIvfPq(extraCols)` rides
@@ -253,8 +247,9 @@ object Pq {
                         k: Int, centroids: Seq[Seq[Float]], cb: PqCodebook,
                         nprobe: Int, predicate: Column): DataFrame = {
     val cells = Ann.probeClusters(probe, centroids, nprobe)
-    val store = Ann.readProbedDirs(spark, s"$path/codes", "cluster",
-        cells.map(_.toLong))
+    // probed-directory read (see Ann.readProbedDirs): lists only the
+    // nprobe cell dirs instead of the whole store
+    val store = Ann.readProbedDirs(spark, s"$path/codes", "cluster", cells.map(_.toLong))
       .where(col("cluster").isin(cells: _*))
       .where(predicate)
     Knn.topK(
@@ -294,6 +289,7 @@ object Pq {
 
   /** Read back (codes ready for [[adcTopK]], codebook from the sidecar). */
   def read(spark: SparkSession, path: String): (DataFrame, PqCodebook) = {
+    StoreSwap.open(spark, path)
     val codes = spark.read.parquet(s"$path/codes")
       .select(col("id"), col("codes").cast("array<int>").as("codes"))
     (codes, readCodebook(spark, s"$path/_pq_codebook"))

@@ -21,8 +21,8 @@ import graft.kernels.Quantize
   *  - Pass 2 is an embarrassingly parallel projection through the codegen'd
   *    `QuantizeCodes` expression, written as a Parquet "quant table"
   *    `(id, code binary)` — 8+dim bytes/row, the reference's exact record
-  *    layout (:1160-1161) with Parquet's atomic directory commit replacing
-  *    BEGIN/COMMIT (:1418-1437).
+  *    layout (:1160-1161), swapped in by [[StoreSwap]] where the reference
+  *    uses BEGIN/COMMIT (:1418-1437).
   *
   * At 100 TB both passes are single full scans with no row shuffle at all.
   */
@@ -65,20 +65,30 @@ object Quantizer {
     * (`max_vectors = max_memory / (8 + dim)`, sqlite-vector.c:1160-1186):
     * each output file holds at most one "batch" of records, so a scan can
     * bound its memory per split exactly like the chunked shadow-table read.
-    * Parquet's write-then-rename directory commit stands in for the
-    * BEGIN/COMMIT + DROP/CREATE transaction (:1418-1437).
+    * [[StoreSwap.replace]] stands in for the BEGIN/COMMIT + DROP/CREATE
+    * transaction (:1418-1437).
     */
   def quantize(df: DataFrame, idCol: String, vecCol: String, quantPath: String,
                qType: QType = QType.Auto, table: String = "", column: String = "",
                maxMemory: Long = 30L * 1024 * 1024, dim: Int = -1): (QuantParams, Long) = {
     val p = computeParams(df, vecCol, qType)
-    val writer = quantizeCodes(df, idCol, vecCol, p).write.mode(SaveMode.Overwrite)
-    val sized = if (dim > 0) writer.option("maxRecordsPerFile", math.max(1L, maxMemory / (8L + dim)))
-                else writer
-    sized.parquet(quantPath)
-    VectorCatalog.writeSidecar(s"$quantPath/_vector_meta.json", p)
+    StoreSwap.replace(df.sparkSession, quantPath) { tmp =>
+      VectorCatalog.writeSidecar(sidecar(tmp), p)
+      writeCodes(quantizeCodes(df, idCol, vecCol, p), tmp, maxMemory, dim)
+    }
     if (table.nonEmpty) VectorCatalog.putQuantParams(table, column, p)
     (p, p.rows)
+  }
+
+  private def sidecar(quantPath: String): String = s"$quantPath/_vector_meta.json"
+
+  /** Append code rows to `path`, each file holding at most one batch of
+    * `maxMemory / (8 + dim)` records when `dim` is known.
+    */
+  private def writeCodes(codes: DataFrame, path: String, maxMemory: Long, dim: Int): Unit = {
+    val w = codes.write.mode(SaveMode.Append)
+    (if (dim > 0) w.option("maxRecordsPerFile", math.max(1L, maxMemory / (8L + dim))) else w)
+      .parquet(path)
   }
 
   /** Config-driven form: a registered VectorConfig supplies qtype, the
@@ -147,7 +157,8 @@ object Quantizer {
                      quantPath: String, maxMemory: Long = 30L * 1024 * 1024,
                      dim: Int = -1, onDrift: String = "fail"): Long = {
     require(onDrift == "fail" || onDrift == "allow", s"onDrift must be fail|allow, got $onDrift")
-    val p = VectorCatalog.readSidecar(s"$quantPath/_vector_meta.json")
+    StoreSwap.open(df.sparkSession, quantPath)
+    val p = VectorCatalog.readSidecar(sidecar(quantPath))
     if (onDrift == "fail") {
       val (mn, mx) = waveExtrema(df, vecCol)
       val (emn, emx) = envelope(p)
@@ -158,15 +169,12 @@ object Quantizer {
           "saturate and certifiedTopK's exactness proof would be void. " +
           "Re-quantize (full rebuild) or pass onDrift=\"allow\".")
     }
-    val writer = quantizeCodes(df, idCol, vecCol, p).write.mode(SaveMode.Append)
-    val sized = if (dim > 0) writer.option("maxRecordsPerFile", math.max(1L, maxMemory / (8L + dim)))
-                else writer
-    sized.parquet(quantPath)
+    writeCodes(quantizeCodes(df, idCol, vecCol, p), quantPath, maxMemory, dim)
     // the appended row count comes from the compact code store's parquet
     // footers — truthful under task retries, unlike a separate pre-count
     // of a possibly non-deterministic input
     val total = df.sparkSession.read.parquet(quantPath).count()
-    VectorCatalog.writeSidecar(s"$quantPath/_vector_meta.json", p.copy(rows = total))
+    VectorCatalog.writeSidecar(sidecar(quantPath), p.copy(rows = total))
     total - p.rows
   }
 
@@ -205,48 +213,31 @@ object Quantizer {
 
   /** Compact a quant store after many [[quantizeAppend]] waves: rewrite
     * the accumulated small files into batch-sized ones (same
-    * `max_memory/(8+dim)` sizing as [[quantize]]) and swap directories.
-    * Codes and params are untouched — this is purely a small-files fix
-    * (each append wave adds its own files; a thousand waves would
-    * otherwise make every scan pay a thousand-file listing). The swap
-    * matches the reference's BEGIN/COMMIT-atomic rebuild
-    * (sqlite-vector.c:1418-1453): the staged copy is made COMPLETE first
-    * (codes + `_vector_meta.json` sidecar written INTO the staging dir),
-    * then promoted via [[StoreSwap.commit]] — a crash at any point leaves
-    * a complete store recoverable by name ([[readStore]] runs the
-    * recovery probe).
+    * `max_memory/(8+dim)` sizing as [[quantize]]) and swap it in through
+    * [[StoreSwap.replace]]. Codes and params are untouched — this is
+    * purely a small-files fix (each append wave adds its own files; a
+    * thousand waves would otherwise make every scan pay a thousand-file
+    * listing).
     *
     * Returns the store's row count.
     */
   def compact(spark: org.apache.spark.sql.SparkSession, quantPath: String,
               maxMemory: Long = 30L * 1024 * 1024, dim: Int = -1): Long = {
-    val tmpPath = quantPath + ".compact"
-    StoreSwap.recover(spark, quantPath, tmpPath)
-    val p = VectorCatalog.readSidecar(s"$quantPath/_vector_meta.json")
-    val writer = spark.read.parquet(quantPath)
-      .repartition(math.max(1, spark.sparkContext.defaultParallelism))
-      .write.mode(SaveMode.Overwrite)
-    val sized = if (dim > 0) writer.option("maxRecordsPerFile", math.max(1L, maxMemory / (8L + dim)))
-                else writer
-    sized.parquet(tmpPath)
-    // the sidecar joins the staged dir BEFORE any rename, so the promoted
-    // store carries it atomically with the codes (the old post-swap write
-    // had a window where a crash left a store with no params)
-    VectorCatalog.writeSidecar(s"$tmpPath/_vector_meta.json", p)
-    val hp = new org.apache.hadoop.fs.Path(quantPath)
-    val fs = hp.getFileSystem(spark.sessionState.newHadoopConf())
-    StoreSwap.commit(fs, hp, new org.apache.hadoop.fs.Path(tmpPath))
+    val codes = readStore(spark, quantPath)
+    val p = VectorCatalog.readSidecar(sidecar(quantPath))
+    StoreSwap.replace(spark, quantPath) { tmp =>
+      VectorCatalog.writeSidecar(sidecar(tmp), p)
+      writeCodes(codes.repartition(math.max(1, spark.sparkContext.defaultParallelism)),
+        tmp, maxMemory, dim)
+    }
     p.rows
   }
 
-  /** Open a quant store for scanning, resolving any crash window an
-    * interrupted [[compact]] swap left behind first (idempotent, a few
-    * filesystem probes). Readers that go straight to
-    * `spark.read.parquet(quantPath)` skip only the recovery, not
-    * correctness — a completed swap is indistinguishable.
+  /** Open a quant store for scanning through [[StoreSwap.open]], which
+    * resolves any crash window an interrupted rebuild or compaction left.
     */
   def readStore(spark: org.apache.spark.sql.SparkSession, quantPath: String): DataFrame = {
-    StoreSwap.recover(spark, quantPath, quantPath + ".compact")
+    StoreSwap.open(spark, quantPath)
     spark.read.parquet(quantPath)
   }
 
@@ -356,8 +347,8 @@ object Quantizer {
 
   /** S6 `vector_quantize_cleanup` (sqlite-vector.c:1501-1524), the full
     * drop: release any preloaded copy, delete the on-disk quant store —
-    * code files AND the `_vector_meta.json` sidecar, via the store path's
-    * own filesystem so HDFS/S3A/local all work — and drop the catalog's
+    * code files AND the `_vector_meta.json` sidecar, with any staged or
+    * stepped-aside copy ([[StoreSwap.drop]]) — and drop the catalog's
     * quant params. Parity with the reference's DROP TABLE of the shadow
     * table + `_sqliteai_vector` row delete + context removal; like there,
     * the `vector_init` registration survives and a fresh
@@ -367,9 +358,7 @@ object Quantizer {
               table: String = "", column: String = "",
               preloaded: Option[DataFrame] = None): Unit = {
     preloaded.foreach(_.unpersist())
-    val p = new org.apache.hadoop.fs.Path(quantPath)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(p)) fs.delete(p, true)
+    StoreSwap.drop(spark, quantPath)
     if (table.nonEmpty) VectorCatalog.dropQuantParams(table, column)
   }
 

@@ -203,7 +203,7 @@ object GraftTableFunctions {
       if (spark.catalog.tableExists(shadow)) spark.table(shadow).unpersist()
       val (_, rows) = Quantizer.quantize(spark.table(table), cfg.idCol, column,
         storePath(spark, cfg, table, column), cfg.qType, table, column, maxMem, cfg.dim)
-      spark.read.parquet(storePath(spark, cfg, table, column)).createOrReplaceTempView(shadow)
+      Quantizer.readStore(spark, storePath(spark, cfg, table, column)).createOrReplaceTempView(shadow)
       rows
     })
   }
@@ -231,7 +231,7 @@ object GraftTableFunctions {
         val path = storePath(spark, cfg, table, column)
         val rows = Quantizer.quantizeAppend(spark.table(wave), cfg.idCol, column,
           path, cfg.maxMemory, cfg.dim)
-        spark.read.parquet(path).createOrReplaceTempView(shadowName(table, column))
+        Quantizer.readStore(spark, path).createOrReplaceTempView(shadowName(table, column))
         rows
       })
     case other =>
@@ -251,7 +251,7 @@ object GraftTableFunctions {
         val cfg = config(table, column)
         val path = storePath(spark, cfg, table, column)
         val rows = Quantizer.compact(spark, path, cfg.maxMemory, cfg.dim)
-        spark.read.parquet(path).createOrReplaceTempView(shadowName(table, column))
+        Quantizer.readStore(spark, path).createOrReplaceTempView(shadowName(table, column))
         rows
       })
     case other =>

@@ -459,7 +459,8 @@ class PipelineSpec extends AnyFunSuite {
       spark.sparkContext.hadoopConfiguration)
     // (a) crash DURING the stage write: partial tmp without _SUCCESS —
     // the old files stay readable and the next compact discards the junk
-    val tmp = new java.io.File(store + ".compact"); tmp.mkdirs()
+    val staged = graft.ops.StoreSwap.stagingPath(new org.apache.hadoop.fs.Path(store)).toString
+    val tmp = new java.io.File(staged); tmp.mkdirs()
     java.nio.file.Files.write(tmp.toPath.resolve("part-junk.parquet"),
       Array[Byte](1, 2, 3))
     assert(Pipeline.compactFetched(spark, store) === 3L)
@@ -467,7 +468,7 @@ class PipelineSpec extends AnyFunSuite {
     assert(!tmp.exists())
     // (b) crash BETWEEN the two swap renames: store stepped aside whole,
     // staged copy complete (_SUCCESS present) — recovery rolls FORWARD
-    spark.read.parquet(store).write.parquet(store + ".compact")
+    spark.read.parquet(store).write.parquet(staged)
     assert(fs.rename(new org.apache.hadoop.fs.Path(store),
       new org.apache.hadoop.fs.Path(store + "_old")))
     assert(Pipeline.compactFetched(spark, store) === 3L)

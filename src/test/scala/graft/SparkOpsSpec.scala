@@ -2746,7 +2746,7 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     import graft.ops.{Layout, StoreSwap}
     import org.apache.hadoop.fs.Path
     val base = java.nio.file.Files.createTempDirectory("swapcrash").toString
-    val store = new Path(base + "/store"); val tmp = new Path(base + "/store_compacting")
+    val store = new Path(base + "/store"); val tmp = StoreSwap.stagingPath(store)
     val fs = store.getFileSystem(spark.sessionState.newHadoopConf())
     def writeStore(tag: String, path: String): Unit =
       (0L until 10L).map(i => (i, tag)).toDF("id", "v").write.mode("overwrite").parquet(path)
@@ -2781,7 +2781,7 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!fs.exists(tmp) && !fs.exists(StoreSwap.oldPath(store)))
 
     // recover is idempotent on a healthy store
-    assert(!StoreSwap.recover(fs, store, tmp))
+    assert(!StoreSwap.recover(fs, store))
 
     // and the full un-crashed cycle still round-trips end-to-end
     Layout.appendUpserts(Seq((3L, "up")).toDF("id", "v"), base + "/ups", 1)
