@@ -181,33 +181,58 @@ object Distances {
     * holds under 2^31 of them), so the Double result is exact: L2², L1 and
     * dot convert back to Long or Float without a second rounding.
     */
-  def intKernel(a: Array[Byte], b: Array[Byte], metric: Metric, signed: Boolean): Double = {
-    val n = math.min(a.length, b.length)
-    @inline def at(arr: Array[Byte], i: Int): Int = if (signed) arr(i).toInt else arr(i) & 0xff
-    metric match {
-      case Metric.L2 | Metric.SquaredL2 =>
-        var acc = 0L; var i = 0
-        while (i < n) { val d = at(a, i) - at(b, i); acc += d.toLong * d; i += 1 }
-        if (metric == Metric.L2) math.sqrt(acc.toDouble) else acc.toDouble
-      case Metric.L1 =>
-        var acc = 0L; var i = 0
-        while (i < n) { acc += math.abs(at(a, i) - at(b, i)); i += 1 }
-        acc.toDouble
-      case Metric.Dot =>
-        var acc = 0L; var i = 0
-        while (i < n) { acc += at(a, i).toLong * at(b, i); i += 1 }
-        (-acc).toDouble
-      case Metric.Cosine =>
-        var dot = 0L; var na = 0L; var nb = 0L; var i = 0
-        while (i < n) {
-          val x = at(a, i); val y = at(b, i)
-          dot += x.toLong * y; na += x.toLong * x; nb += y.toLong * y; i += 1
-        }
-        if (na == 0L || nb == 0L) 1.0
-        else {
-          val c = dot.toDouble / (math.sqrt(na.toDouble) * math.sqrt(nb.toDouble))
-          1.0 - math.max(-1.0, math.min(1.0, c))
-        }
+  def intKernel(a: Array[Byte], b: Array[Byte], metric: Metric, signed: Boolean): Double =
+    intKernel(a, 0, b, 0, math.min(a.length, b.length), metric, signed)
+
+  /** [[intKernel]] over `n` lanes of `a` from `aOff` and of `b` from
+    * `bOff` — the form a contiguous block of codes at stride dim is
+    * scanned with, one code per offset, no copy. Each metric's loop is a
+    * method of its own, small enough for the JIT to inline into the
+    * scanning loop and fold `signed` there.
+    */
+  def intKernel(a: Array[Byte], aOff: Int, b: Array[Byte], bOff: Int, n: Int,
+                metric: Metric, signed: Boolean): Double = metric match {
+    case Metric.SquaredL2 => sqL2Int(a, aOff, b, bOff, n, signed).toDouble
+    case Metric.L2 => math.sqrt(sqL2Int(a, aOff, b, bOff, n, signed).toDouble)
+    case Metric.L1 => l1Int(a, aOff, b, bOff, n, signed).toDouble
+    case Metric.Dot => (-dotInt(a, aOff, b, bOff, n, signed)).toDouble
+    case Metric.Cosine => cosineInt(a, aOff, b, bOff, n, signed)
+  }
+
+  // In the loops below i walks a and j walks b: two induction variables
+  // keep them as tight as loops over whole arrays.
+
+  @inline private def at(arr: Array[Byte], i: Int, signed: Boolean): Int =
+    if (signed) arr(i).toInt else arr(i) & 0xff
+
+  private def sqL2Int(a: Array[Byte], aOff: Int, b: Array[Byte], bOff: Int, n: Int, signed: Boolean): Long = {
+    var acc = 0L; var i = aOff; var j = bOff; val end = aOff + n
+    while (i < end) { val d = at(a, i, signed) - at(b, j, signed); acc += d.toLong * d; i += 1; j += 1 }
+    acc
+  }
+
+  private def l1Int(a: Array[Byte], aOff: Int, b: Array[Byte], bOff: Int, n: Int, signed: Boolean): Long = {
+    var acc = 0L; var i = aOff; var j = bOff; val end = aOff + n
+    while (i < end) { acc += math.abs(at(a, i, signed) - at(b, j, signed)); i += 1; j += 1 }
+    acc
+  }
+
+  private def dotInt(a: Array[Byte], aOff: Int, b: Array[Byte], bOff: Int, n: Int, signed: Boolean): Long = {
+    var acc = 0L; var i = aOff; var j = bOff; val end = aOff + n
+    while (i < end) { acc += at(a, i, signed).toLong * at(b, j, signed); i += 1; j += 1 }
+    acc
+  }
+
+  private def cosineInt(a: Array[Byte], aOff: Int, b: Array[Byte], bOff: Int, n: Int, signed: Boolean): Double = {
+    var dot = 0L; var na = 0L; var nb = 0L; var i = aOff; var j = bOff; val end = aOff + n
+    while (i < end) {
+      val x = at(a, i, signed); val y = at(b, j, signed)
+      dot += x.toLong * y; na += x.toLong * x; nb += y.toLong * y; i += 1; j += 1
+    }
+    if (na == 0L || nb == 0L) 1.0
+    else {
+      val c = dot.toDouble / (math.sqrt(na.toDouble) * math.sqrt(nb.toDouble))
+      1.0 - math.max(-1.0, math.min(1.0, c))
     }
   }
 

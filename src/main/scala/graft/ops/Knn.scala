@@ -17,6 +17,11 @@ import graft.functions.{vectorLit, vector_distance}
   * the per-partition winners, and the scan itself is a full
   * whole-stage-codegen'd pass over the Parquet column. No index, no
   * collect, no cross join.
+  *
+  * The quantized scan ([[Quantizer.quantScan]]) has the same shape but
+  * its own operator, [[QuantTopK]]: one job with a named task per query
+  * instead of `TakeOrderedAndProject`'s three cleaned closures, and a
+  * scan of contiguous code blocks when the store is preloaded.
   */
 object Knn {
 

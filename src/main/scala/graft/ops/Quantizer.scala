@@ -248,15 +248,18 @@ object Quantizer {
 
   /** K2 `vector_quantize_scan`: approximate k-NN over the code table,
     * distance computed in i8/u8 code space, NOT dequantized (:2198-2200).
+    * Rows with a NULL code are skipped (:2093); ties are broken by id.
+    *
+    * The frame is one [[QuantTopK]] operator: a single job whose named
+    * task feeds each partition's codes into a k-slot heap, and a driver
+    * merge of the per-partition heaps (the reference's k-slot loop,
+    * :2022-2113). Over a [[preload]]ed frame the tasks scan its
+    * contiguous code blocks (`vQuantRunMemory`, :2121-2157); over any
+    * other `(id, code)` frame, an on-disk store say, they scan its rows.
     */
   def quantScan(quantDF: DataFrame, probe: Array[Float], p: QuantParams,
-                k: Int, metric: String): DataFrame = {
-    val qprobe = quantizeProbe(probe, p)
-    Knn.topK(
-      quantDF.select(col("id"),
-        code_distance(col("code"), lit(qprobe), metric, p.qType).as("distance")),
-      col("distance"), col("id"), k)
-  }
+                k: Int, metric: String): DataFrame =
+    QuantTopK.frame(quantDF, quantizeProbe(probe, p), k, Metric.parse(metric), p.qType)
 
   /** CERTIFIED-EXACT k-NN from the quantized store (beyond-reference):
     * scans only the 1-byte codes like [[quantScan]], yet returns EXACTLY
@@ -308,7 +311,7 @@ object Quantizer {
       val d = scaled - c; d * d
     }.sum)
     val bound = 0.5 * math.sqrt(probe.length.toDouble) + ep
-    val codeD = quantDF.select(col("id"),
+    val codeD = quantDF.where(col("code").isNotNull).select(col("id"),
       code_distance(col("code"), lit(qprobe), "sq_l2", p.qType).as("cd"))
     val kth = Knn.topK(codeD, col("cd"), col("id"), k).agg(max(col("cd"))).scalar()
     // pow(s, 2.0) rather than s * s names the subquery once; Spark's
@@ -330,20 +333,43 @@ object Quantizer {
       code_distance(col("code"), lit(qprobe), metric, p.qType).as("distance"))
   }
 
-  /** S5 `vector_quantize_preload`: pin the quant table in executor memory —
-    * the reference's contiguous in-RAM buffer (:1338-1404).
+  /** S5 `vector_quantize_preload`: pin the quant table in executor memory
+    * as the reference's contiguous in-RAM buffer (:1338-1404): each
+    * partition becomes [[CodeBlock]]s — a `long[]` of ids and one
+    * `byte[]` of codes at stride dim, at most [[CodeBlocks.MaxBlockBytes]]
+    * of codes each — persisted and materialized eagerly, like the
+    * reference's preload.
+    *
+    * The returned frame reads the blocks back as `(id, code)` rows, so
+    * every generic consumer (code-distance projections, counts, joins,
+    * the `vector0_*` shadow view) works on it unchanged; [[quantScan]]
+    * scans the blocks themselves. `quantDF` needs an int or bigint `id`
+    * without NULLs and a binary `code`. Release with [[cleanup]].
     */
-  def preload(quantDF: DataFrame): DataFrame = {
-    val cached = quantDF.persist(StorageLevel.MEMORY_ONLY)
-    cached.count() // materialize eagerly, like the reference's preload
-    cached
+  def preload(quantDF: DataFrame): DataFrame = preload(quantDF, CodeBlocks.MaxBlockBytes)
+
+  private[graft] def preload(quantDF: DataFrame, maxBlockBytes: Int): DataFrame = {
+    val src = quantDF.select(col("id"), col("code"))
+    val idIsInt = CodeBlocks.idIsInt(src.schema(0).dataType, src.schema(1).dataType)
+    val blocks = src.queryExecution.toRdd
+      .mapPartitions(CodeBlocks.build(_, idIsInt, maxBlockBytes))
+      .setName("quant preload blocks")
+      .persist(StorageLevel.MEMORY_ONLY)
+    val stats = src.sparkSession.sparkContext.runJob(blocks,
+      (it: Iterator[CodeBlock]) => it.foldLeft((0L, 0L)) { case ((n, bytes), b) => (n + 1, bytes + b.bytes) })
+    org.apache.spark.sql.GraftColumnShim.rddFrame(src.sparkSession, src.schema,
+      new CodeBlockRows(blocks, idIsInt, stats.map(_._1).sum), stats.map(_._2).sum)
   }
 
-  /** S6 `vector_quantize_cleanup`, preload-release half only: unpin a
-    * [[preload]]ed copy from executor memory. The full drop (store +
-    * sidecar + catalog params) is the path-taking overload below.
+  /** S6 `vector_quantize_cleanup`, preload-release half only: release the
+    * code blocks behind a [[preload]]ed frame (or a view over one) and
+    * unpin the frame if it was persisted some other way. The full drop
+    * (store + sidecar + catalog params) is the path-taking overload below.
     */
-  def cleanup(quantDF: DataFrame): Unit = { quantDF.unpersist() }
+  def cleanup(quantDF: DataFrame): Unit = {
+    CodeBlocks.of(quantDF.queryExecution.analyzed).foreach(_.blocks.unpersist(blocking = false))
+    quantDF.unpersist()
+  }
 
   /** S6 `vector_quantize_cleanup` (sqlite-vector.c:1501-1524), the full
     * drop: release any preloaded copy, delete the on-disk quant store —
@@ -357,7 +383,7 @@ object Quantizer {
   def cleanup(spark: org.apache.spark.sql.SparkSession, quantPath: String,
               table: String = "", column: String = "",
               preloaded: Option[DataFrame] = None): Unit = {
-    preloaded.foreach(_.unpersist())
+    preloaded.foreach(cleanup)
     StoreSwap.drop(spark, quantPath)
     if (table.nonEmpty) VectorCatalog.dropQuantParams(table, column)
   }

@@ -15,10 +15,11 @@ import graft.ops.{Knn, Quantizer}
 /** The reference's table-valued-function query surface in SQL
   * (`FROM vector_full_scan('t','c',probe,k)` — sqlite-vector.c:2377-2487,
   * API.md:212-261), realized as Catalyst table functions that expand to
-  * the Scala API's own plan over the registered table (Project(distance)
-  * → Sort → Limit for the scans). Catalyst then plans the usual
-  * TakeOrderedAndProject + codegen'd scan — the TVF adds SQL ergonomics,
-  * not a new physical path.
+  * the Scala API's own plan over the registered table: Project(distance)
+  * → Sort → Limit for the full scan, which Catalyst plans as
+  * TakeOrderedAndProject over a codegen'd scan, and the
+  * [[graft.ops.QuantTopK]] operator for the quantized scan — the TVF adds
+  * SQL ergonomics, not a new physical path.
   *
   * Like the reference, the (table, column) pair must be registered first
   * (`vector_init` ≙ VectorCatalog.init, which also resolves the id column
@@ -200,13 +201,17 @@ object GraftTableFunctions {
           graft.VectorConfig.humanToNumber(kv.substring(kv.indexOf('=') + 1))
       }.getOrElse(cfg.maxMemory)
       val shadow = shadowName(table, column)
-      if (spark.catalog.tableExists(shadow)) spark.table(shadow).unpersist()
+      releasePreload(spark, shadow)
       val (_, rows) = Quantizer.quantize(spark.table(table), cfg.idCol, column,
         storePath(spark, cfg, table, column), cfg.qType, table, column, maxMem, cfg.dim)
       Quantizer.readStore(spark, storePath(spark, cfg, table, column)).createOrReplaceTempView(shadow)
       rows
     })
   }
+
+  /** Releases a preloaded copy behind the shadow view, if there is one. */
+  private def releasePreload(spark: SparkSession, shadow: String): Unit =
+    if (spark.catalog.tableExists(shadow)) Quantizer.cleanup(spark.table(shadow))
 
   private def shadowTable(spark: SparkSession, table: String, column: String) = {
     VectorCatalog.quantParams(table, column).getOrElse(throw new IllegalArgumentException(
@@ -231,6 +236,7 @@ object GraftTableFunctions {
         val path = storePath(spark, cfg, table, column)
         val rows = Quantizer.quantizeAppend(spark.table(wave), cfg.idCol, column,
           path, cfg.maxMemory, cfg.dim)
+        releasePreload(spark, shadowName(table, column))
         Quantizer.readStore(spark, path).createOrReplaceTempView(shadowName(table, column))
         rows
       })
@@ -251,6 +257,7 @@ object GraftTableFunctions {
         val cfg = config(table, column)
         val path = storePath(spark, cfg, table, column)
         val rows = Quantizer.compact(spark, path, cfg.maxMemory, cfg.dim)
+        releasePreload(spark, shadowName(table, column))
         Quantizer.readStore(spark, path).createOrReplaceTempView(shadowName(table, column))
         rows
       })
@@ -274,8 +281,9 @@ object GraftTableFunctions {
   }
 
   /** `vector_quantize_preload(tbl, col)` → NULL. Pins the shadow store in
-    * executor memory and rebinds the shadow view to the pinned copy, so
-    * subsequent `vector_quantize_scan` calls read RAM (API.md:139-150).
+    * executor memory as code blocks ([[Quantizer.preload]]) and rebinds
+    * the shadow view to the pinned copy, so subsequent
+    * `vector_quantize_scan` calls read RAM (API.md:139-150).
     */
   def preloadBuilder(args: Seq[Expression]): Expression = args match {
     case Seq(t, c) =>
@@ -283,8 +291,11 @@ object GraftTableFunctions {
       val column = strArg(c, "column name")
       LifecycleCall("vector_quantize_preload", StringType, () => {
         val spark = Lifecycle.activeSession("vector_quantize_preload")
-        Quantizer.preload(shadowTable(spark, table, column))
-          .createOrReplaceTempView(shadowName(table, column))
+        val shadow = shadowTable(spark, table, column)
+        val pinned = Quantizer.preload(shadow)
+        // a re-preload reads the old blocks once, then lets them go
+        Quantizer.cleanup(shadow)
+        pinned.createOrReplaceTempView(shadowName(table, column))
         null
       })
     case other =>
@@ -305,7 +316,7 @@ object GraftTableFunctions {
         val cfg = config(table, column)
         val shadow = shadowName(table, column)
         if (spark.catalog.tableExists(shadow)) {
-          spark.table(shadow).unpersist()
+          releasePreload(spark, shadow)
           spark.catalog.dropTempView(shadow)
         }
         Quantizer.cleanup(spark, storePath(spark, cfg, table, column), table, column)
@@ -453,6 +464,7 @@ object GraftTableFunctions {
         new ExpressionInfo(GraftTableFunctions.getClass.getCanonicalName, name), b))
     }
     ext.injectOptimizerRule(_ => LifecycleExecutionRule)
+    ext.injectPlannerStrategy(_ => graft.ops.QuantTopK.Strategy)
   }
 }
 

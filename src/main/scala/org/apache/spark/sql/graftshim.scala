@@ -28,6 +28,16 @@ object GraftColumnShim {
              plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** A frame over an RDD of internal rows — a `LogicalRDD` leaf, with
+    * `sizeInBytes` as its statistics so join planning sees the real size.
+    */
+  def rddFrame(spark: SparkSession, schema: types.StructType,
+               rdd: org.apache.spark.rdd.RDD[catalyst.InternalRow], sizeInBytes: Long): DataFrame = {
+    val s = spark.asInstanceOf[classic.SparkSession]
+    ofRows(s, execution.LogicalRDD(catalyst.types.DataTypeUtils.toAttributes(schema), rdd)(
+      s, Some(catalyst.plans.logical.Statistics(sizeInBytes = BigInt(sizeInBytes)))))
+  }
+
   /** Block until every listener event posted so far has been delivered
     * (the listener bus is `private[spark]`): a window read after this sees
     * all of its own jobs' start and end events.

@@ -201,6 +201,25 @@ object KernelProps extends Properties("kernels") {
       }): _*)
     }
 
+  property("intKernel at offsets inside a block == intKernel on the copied codes") =
+    forAll(parityDim, Gen.long) { (n, seed) =>
+      val rnd = new scala.util.Random(seed)
+      // a block of a few codes at stride n, read at a random row, against
+      // a probe placed at a random offset of its own buffer
+      val rows = 1 + rnd.nextInt(4)
+      val block = new Array[Byte](rows * n); rnd.nextBytes(block)
+      val pad = rnd.nextInt(17)
+      val probeBuf = new Array[Byte](pad + n + rnd.nextInt(17)); rnd.nextBytes(probeBuf)
+      val row = rnd.nextInt(rows)
+      val code = block.slice(row * n, row * n + n)
+      val probe = probeBuf.slice(pad, pad + n)
+      Prop.all((for (m <- Metric.all; signed <- Seq(true, false)) yield {
+        val at = Distances.intKernel(block, row * n, probeBuf, pad, n, m, signed)
+        val copied = Distances.intKernel(code, probe, m, signed)
+        Prop(sameBits(at, copied)) :| s"$m signed=$signed n=$n row=$row pad=$pad: $at vs $copied"
+      }): _*)
+    }
+
   property("VectorDistance: eval == codegen == Distances.onDouble, bit for bit") =
     forAll(parityDim, Gen.long) { (n, seed) =>
       val rnd = new scala.util.Random(seed)
