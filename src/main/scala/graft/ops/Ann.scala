@@ -3,13 +3,15 @@ package graft.ops
 import org.apache.spark.sql.{AnalysisException, Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{hyperplane_signature, vectorLit, vector_distance}
+import graft.functions.{hyperplane_signature, vector_distance}
 import graft.kernels.Sketches
 
 /** Approximate nearest-neighbor search over an embedding column.
   *
-  * Baseline: brute-force top-k ([[Knn.fullScan]]) — one codegen'd scan +
-  * TakeOrderedAndProject, the exact path.
+  * Each search here only picks its candidate rows — the probed LSH
+  * buckets or IVF cells, plus an optional predicate — and ranks them with
+  * [[Knn.fullScan]]; the rank's shape and NULL rule are written once, in
+  * [[Knn]].
   *
   * Scale path: random-hyperplane LSH bucketing. Each vector gets an
   * `nBits`-bit signature (one codegen'd traversal — HyperplaneSignature);
@@ -34,19 +36,18 @@ object Ann {
     sig +: (0 until nBits).map(b => sig ^ (1L << b))
   }
 
-  /** ANN top-k over an in-memory/bucketed DataFrame: score only rows whose
-    * bucket is within hamming distance 1 of the probe's, then exact-rank
-    * the survivors. The bucket filter is a long IN-list → pushed to the
-    * scan (and to partition pruning when the source is bucket-partitioned).
+  /** ANN top-k over an in-memory/bucketed DataFrame: the candidates are
+    * the rows whose bucket is within hamming distance 1 of the probe's,
+    * ranked by [[Knn.fullScan]]. The bucket filter is a long IN-list →
+    * pushed to the scan (and to partition pruning when the source is
+    * bucket-partitioned).
     */
   def lshTopK(df: DataFrame, idCol: String, vecCol: String, probe: Array[Float],
               k: Int, metric: String, nBits: Int = 8, seed: Long = 42L): DataFrame = {
     val bucketed = if (df.columns.contains("bucket")) df
                    else withBuckets(df, vecCol, nBits, probe.length, seed)
-    Knn.topK(
-      bucketed.where(col("bucket").isin(probeBuckets(probe, nBits, seed): _*))
-        .select(col(idCol), vector_distance(col(vecCol), vectorLit(probe), metric).as("distance")),
-      col("distance"), col(idCol), k)
+    Knn.fullScan(bucketed.where(col("bucket").isin(probeBuckets(probe, nBits, seed): _*)),
+      idCol, vecCol, probe, k, metric)
   }
 
   /** Append `df` to `path` partitioned by `partCol`. Rows are clustered
@@ -116,11 +117,8 @@ object Ann {
                     probe: Array[Float], k: Int, metric: String,
                     nBits: Int = 8, seed: Long = 42L): DataFrame = {
     val buckets = probeBuckets(probe, nBits, seed)
-    val store = readProbedDirs(spark, path, "bucket", buckets)
-      .where(col("bucket").isin(buckets: _*))
-    Knn.topK(
-      store.select(col(idCol), vector_distance(col(vecCol), vectorLit(probe), metric).as("distance")),
-      col("distance"), col(idCol), k)
+    Knn.fullScan(readProbedDirs(spark, path, "bucket", buckets).where(col("bucket").isin(buckets: _*)),
+      idCol, vecCol, probe, k, metric)
   }
 
   /** Table-to-table ANN JOIN: every LEFT row gets its top-k nearest RIGHT
@@ -313,7 +311,7 @@ object Ann {
       .zipWithIndex.sortBy { case (d, i) => (d, i) }.take(nprobe).map(_._2).toSeq
 
   /** IVF ANN top-k: scan only the `nprobe` nearest cells (partition-pruned
-    * like the LSH store), exact-rank the survivors.
+    * like the LSH store) and rank their rows with [[Knn.fullScan]].
     */
   def ivfTopK(spark: SparkSession, path: String, idCol: String, vecCol: String,
               probe: Array[Float], k: Int, metric: String,
@@ -326,7 +324,7 @@ object Ann {
     * rides IN the store and the predicate composes with cell pruning:
     * the cluster IN-list prunes partition DIRECTORIES at listing time,
     * the predicate pushes into the parquet scan of the surviving cells
-    * (PushedFilters), and only rows passing BOTH are distance-ranked.
+    * (PushedFilters), and only rows passing BOTH are ranked.
     *
     * This is post-filtering, with its standard recall trade: candidates
     * come from the `nprobe` probed cells FIRST, so a selective predicate
@@ -345,8 +343,6 @@ object Ann {
     val store = readProbedDirs(spark, path, "cluster", cells.map(_.toLong))
       .where(col("cluster").isin(cells: _*))
       .where(predicate)
-    Knn.topK(
-      store.select(col(idCol), vector_distance(col(vecCol), vectorLit(probe), metric).as("distance")),
-      col("distance"), col(idCol), k)
+    Knn.fullScan(store, idCol, vecCol, probe, k, metric)
   }
 }

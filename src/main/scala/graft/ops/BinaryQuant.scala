@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{hamming_distance, sign_bits, vectorLit, vector_distance}
+import graft.functions.{hamming_distance, sign_bits}
 import graft.kernels.Sketches
 
 /** 1-bit (sign) binary quantization + Hamming-distance search — the
@@ -13,12 +13,11 @@ import graft.kernels.Sketches
   * full-precision scan reads, and the per-row kernel is a single XOR +
   * POPCNT inside whole-stage codegen.
   *
-  * Serving shape at 100 TB: stage 1 scans only the narrow `(id, sig)`
+  * Serving shape at 100 TB: stage 1 ranks only the narrow `(id, sig)`
   * store (parquet column pruning keeps the wide embedding column on disk)
-  * and keeps a C-candidate shortlist via TakeOrderedAndProject — O(C)
-  * state per partition, C-row driver merge. Stage 2 broadcasts the C ids
-  * back to the base table (BroadcastHashJoin, no base-table shuffle) and
-  * reranks exactly. Total bytes touched ≈ corpus/32 + C full vectors.
+  * into a C-candidate shortlist; stage 2 is [[Knn]]'s rerank of those C
+  * ids against the base table. Total bytes touched ≈ corpus/32 + C full
+  * vectors.
   */
 object BinaryQuant {
 
@@ -31,34 +30,22 @@ object BinaryQuant {
     df.where(col(vecCol).isNotNull)
       .select(col(idCol), sign_bits(col(vecCol), dim).as("sig"))
 
-  /** Exact top-k under Hamming distance over the signature store. Ties
-    * (common: Hamming is integer-valued with range [0, dim]) break by id
-    * for deterministic output.
+  /** Exact top-k under Hamming distance over the signature store, as
+    * `(id, hamming)`. Hamming is integer-valued in [0, dim], so ties are
+    * common; they break by id like every rank.
     */
   def hammingTopK(sigs: DataFrame, idCol: String, probe: Array[Float],
-                  dim: Int, k: Int): DataFrame = {
-    val probeSig = packProbe(probe, dim)
-    Knn.topK(
-      sigs.select(col(idCol), hamming_distance(col("sig"), lit(probeSig)).as("hamming")),
-      col("hamming"), col(idCol), k)
-  }
+                  dim: Int, k: Int): DataFrame =
+    Knn.rank(sigs, idCol, col("sig"), k, "hamming")(hamming_distance(_, lit(packProbe(probe, dim))))
 
   /** Two-stage search: Hamming shortlist of `c` candidates from the
     * signature store, exact `metric` rerank of those candidates against the
-    * full-precision vectors, top `k` out. `base` is only ever probed by a
-    * broadcast of the c-row shortlist.
+    * full-precision vectors, top `k` out.
     */
   def rerankTopK(sigs: DataFrame, base: DataFrame, idCol: String, vecCol: String,
                  probe: Array[Float], dim: Int, c: Int, k: Int,
-                 metric: String): DataFrame = {
-    val shortlist = hammingTopK(sigs, idCol, probe, dim, c).select(col(idCol))
-    // NULL vectors (sigs built from a different/stale snapshot) would sort
-    // first under ASC NULLS FIRST and displace real neighbors from the top-k
-    val exact = base.where(col(vecCol).isNotNull).join(broadcast(shortlist), idCol)
-      .select(col(idCol),
-        vector_distance(col(vecCol), vectorLit(probe), metric).as("distance"))
-    Knn.topK(exact, col("distance"), col(idCol), k)
-  }
+                 metric: String): DataFrame =
+    Knn.rerank(base, hammingTopK(sigs, idCol, probe, dim, c), idCol, vecCol, probe, k, metric)
 
   /** Probe-side signature, computed once on the driver with the SAME
     * kernel the store uses ([[Sketches.signBits]]).

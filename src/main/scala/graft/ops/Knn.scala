@@ -9,14 +9,38 @@ import graft.functions.{vectorLit, vector_distance}
   * re-expression of the reference's four table-valued scan modules
   * (vector_full_scan / _stream, sqlite-vector.c:2377-2459).
   *
-  * Physical shape (the point at 100 TB): `orderBy(distance).limit(k)` is
-  * planned as `TakeOrderedAndProject` — a bounded priority queue per
+  * Every vector access path in `graft.ops` — the exact scans here, the
+  * LSH and IVF stores ([[Ann]]), PQ and IVF-PQ ([[Pq]]), the binary
+  * signatures ([[BinaryQuant]]) and the certified code-store plan
+  * ([[Quantizer.certifiedTopK]]) — ends in one of two steps, and both
+  * exist only here:
+  *
+  *  - the '''rank''' ([[rank]]; [[fullScan]] is the rank by a metric
+  *    distance to the probe): drop every row whose ranked value (the
+  *    vector, blob, code array or signature the distance is taken of) is
+  *    NULL, as the reference skips NULL vectors (sqlite-vector.c:2093);
+  *    project `(id, distance)`; take [[topK]]. Every distance kernel is
+  *    NULL exactly when its stored input is, so no NULL distance reaches
+  *    a top-k. The filter sits on the input column, not on the distance,
+  *    so parquet can push it and each distance is computed once per row;
+  *  - the '''rerank''' ([[rerank]]): broadcast a shortlist of ids into
+  *    the full-precision frame (a BroadcastHashJoin, never a shuffle of
+  *    that frame), then rank it. A shortlisted id whose full vector is
+  *    NULL is dropped by that rank like any other NULL row.
+  *
+  * A path only chooses its candidate frame: a partition-pruned store
+  * read, a bucket IN-list, a metadata predicate, a hash-set filter, or a
+  * shortlist.
+  *
+  * Physical shape (the point at 100 TB): `orderBy(distance, id).limit(k)`
+  * is planned as `TakeOrderedAndProject` — a bounded priority queue per
   * partition followed by a k-row driver merge. That is the distributed
   * analogue of the reference's k-slot array + argmax replacement loop
   * (:2022-2113): each executor holds O(k) state, nothing shuffles except
   * the per-partition winners, and the scan itself is a full
   * whole-stage-codegen'd pass over the Parquet column. No index, no
-  * collect, no cross join.
+  * collect, no cross join. Ties break by id for deterministic output (the
+  * reference leaves tie order unspecified — strict `<` at :2102).
   *
   * The quantized scan ([[Quantizer.quantScan]]) has the same shape but
   * its own operator, [[QuantTopK]]: one job with a named task per query
@@ -25,29 +49,21 @@ import graft.functions.{vectorLit, vector_distance}
   */
 object Knn {
 
-  /** K1 `vector_full_scan`: exact k-NN. Rows with NULL vectors are skipped
-    * (sqlite-vector.c:2093); k=0 → empty (:1796). Ties broken by id for
-    * deterministic output (the reference leaves tie order unspecified —
-    * strict `<` at :2102).
+  /** K1 `vector_full_scan`: exact k-NN over `df`, the rank by `metric`
+    * distance to the probe; k=0 → empty (:1796).
     */
   def fullScan(df: DataFrame, idCol: String, vecCol: String,
                probe: Array[Float], k: Int, metric: String): DataFrame =
-    topK(df.where(col(vecCol).isNotNull)
-           .select(col(idCol), vector_distance(col(vecCol), vectorLit(probe), metric).as("distance")),
-         col("distance"), col(idCol), k)
+    rank(df, idCol, col(vecCol), k)(probeDistance(probe, metric))
 
   /** K1 over the reference's native storage form: a packed BLOB column,
-    * ranked by the (metric × element-type) kernel dispatch — same
-    * TakeOrderedAndProject shape, distance computed straight off the bytes.
+    * ranked by the (metric × element-type) kernel dispatch, distance
+    * computed straight off the bytes.
     */
   def fullScanPacked(df: DataFrame, idCol: String, blobCol: String,
                      probe: Array[Float], k: Int, metric: String, elemType: String): DataFrame = {
-    val et = graft.ElemType.parse(elemType)
-    val pl = lit(graft.codec.VectorCodec.pack(probe, et))
-    topK(df.where(col(blobCol).isNotNull)
-           .select(col(idCol),
-             graft.functions.vector_distance_packed(col(blobCol), pl, metric, elemType).as("distance")),
-         col("distance"), col(idCol), k)
+    val pl = lit(graft.codec.VectorCodec.pack(probe, graft.ElemType.parse(elemType)))
+    rank(df, idCol, col(blobCol), k)(graft.functions.vector_distance_packed(_, pl, metric, elemType))
   }
 
   /** K3 `vector_full_scan_stream`: distance annotation with no sort/limit —
@@ -55,8 +71,7 @@ object Knn {
     */
   def distanceStream(df: DataFrame, idCol: String, vecCol: String,
                      probe: Array[Float], metric: String): DataFrame =
-    df.where(col(vecCol).isNotNull)
-      .select(col(idCol), vector_distance(col(vecCol), vectorLit(probe), metric).as("distance"))
+    score(df, idCol, col(vecCol))(probeDistance(probe, metric))
 
   /** The documented join-back idiom (reference README.md:97-99): k-NN ids
     * joined to the base table. The k-row side is always broadcast — a
@@ -72,26 +87,10 @@ object Knn {
     * stage 1 touches coarseDim/dim of the vector bytes (and, if the store
     * is written with a separate prefix column, parquet prunes the rest at
     * the scan).
-    *
-    * Same physical shape as [[BinaryQuant.rerankTopK]]: two
-    * TakeOrderedAndProject scans, a broadcast of the c-row shortlist, no
-    * full-table shuffle anywhere.
     */
   def mrlTopK(df: DataFrame, idCol: String, vecCol: String, probe: Array[Float],
-              coarseDim: Int, c: Int, k: Int, metric: String): DataFrame = {
-    require(coarseDim > 0 && coarseDim <= probe.length,
-      s"coarseDim $coarseDim out of range (dim ${probe.length})")
-    val coarseProbe = vectorLit(probe.take(coarseDim))
-    val shortlist = topK(
-      df.where(col(vecCol).isNotNull)
-        .select(col(idCol),
-          vector_distance(slice(col(vecCol), 1, coarseDim), coarseProbe, metric)
-            .as("coarse_distance")),
-      col("coarse_distance"), col(idCol), c).select(col(idCol))
-    val exact = df.join(broadcast(shortlist), idCol)
-      .select(col(idCol), vector_distance(col(vecCol), vectorLit(probe), metric).as("distance"))
-    topK(exact, col("distance"), col(idCol), k)
-  }
+              coarseDim: Int, c: Int, k: Int, metric: String): DataFrame =
+    mrl(df, idCol, slice(col(vecCol), 1, coarseDim), vecCol, probe, coarseDim, c, k, metric)
 
   /** [[mrlTopK]] over a store written with a DEDICATED prefix column
     * (`writeMrl`): stage 1 selects only (id, prefix), so the parquet scan
@@ -101,18 +100,15 @@ object Knn {
     */
   def mrlTopKStored(df: DataFrame, idCol: String, prefixCol: String,
                     vecCol: String, probe: Array[Float],
-                    coarseDim: Int, c: Int, k: Int, metric: String): DataFrame = {
+                    coarseDim: Int, c: Int, k: Int, metric: String): DataFrame =
+    mrl(df, idCol, col(prefixCol), vecCol, probe, coarseDim, c, k, metric)
+
+  private def mrl(df: DataFrame, idCol: String, prefix: Column, vecCol: String,
+                  probe: Array[Float], coarseDim: Int, c: Int, k: Int, metric: String): DataFrame = {
     require(coarseDim > 0 && coarseDim <= probe.length,
       s"coarseDim $coarseDim out of range (dim ${probe.length})")
-    val shortlist = topK(
-      df.where(col(prefixCol).isNotNull)
-        .select(col(idCol),
-          vector_distance(col(prefixCol), vectorLit(probe.take(coarseDim)), metric)
-            .as("coarse_distance")),
-      col("coarse_distance"), col(idCol), c).select(col(idCol))
-    val exact = df.where(col(vecCol).isNotNull).join(broadcast(shortlist), idCol)
-      .select(col(idCol), vector_distance(col(vecCol), vectorLit(probe), metric).as("distance"))
-    topK(exact, col("distance"), col(idCol), k)
+    val shortlist = rank(df, idCol, prefix, c)(probeDistance(probe.take(coarseDim), metric))
+    rerank(df, shortlist, idCol, vecCol, probe, k, metric)
   }
 
   /** Write the MRL two-column layout: (id, prefix = first coarseDim lanes,
@@ -127,4 +123,26 @@ object Knn {
 
   def topK(scored: DataFrame, dist: Column, id: Column, k: Int): DataFrame =
     scored.orderBy(dist.asc, id.asc).limit(math.max(k, 0))
+
+  private def probeDistance(probe: Array[Float], metric: String)(v: Column): Column =
+    vector_distance(v, vectorLit(probe), metric)
+
+  /** `(id, <as>)` with `<as>` = `distance(value)`, for the rows of
+    * `candidates` whose ranked `value` is not NULL.
+    */
+  private[ops] def score(candidates: DataFrame, idCol: String, value: Column,
+                         as: String = "distance")(distance: Column => Column): DataFrame =
+    candidates.where(value.isNotNull).select(col(idCol), distance(value).as(as))
+
+  /** The rank: the k nearest rows of [[score]], by (`<as>`, id). */
+  private[ops] def rank(candidates: DataFrame, idCol: String, value: Column, k: Int,
+                        as: String = "distance")(distance: Column => Column): DataFrame =
+    topK(score(candidates, idCol, value, as)(distance), col(as), col(idCol), k)
+
+  /** The rerank: `shortlist`'s `idCol` ids broadcast into `full`, then
+    * [[fullScan]] of the joined rows.
+    */
+  private[ops] def rerank(full: DataFrame, shortlist: DataFrame, idCol: String, vecCol: String,
+                          probe: Array[Float], k: Int, metric: String): DataFrame =
+    fullScan(full.join(broadcast(shortlist.select(col(idCol))), idCol), idCol, vecCol, probe, k, metric)
 }

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{nearest_centroid, vectorLit, vector_distance}
+import graft.functions.nearest_centroid
 import graft.kernels.Sketches
 
 /** Product quantization (PQ) — the third compression tier next to the
@@ -28,12 +28,11 @@ import graft.kernels.Sketches
   *     per-(subspace, code) squared-L2 table is computed ONCE driver-side
   *     ([[PqCodebook.lut]], m×nCodes doubles) and embedded as literals;
   *     each row's approximate distance is m array lookups + a sequential
-  *     double sum, inside WholeStageCodegen, topped by
-  *     TakeOrderedAndProject — O(k) state per partition, k-row shuffle;
-  *  4. [[rerankTopK]] — the standard serving pipeline: ADC shortlist
-  *     (k·overscan candidates) → broadcast semi-join back to the full
-  *     vectors → exact re-rank. Recall is the shortlist's, latency is the
-  *     code scan's.
+  *     double sum inside WholeStageCodegen, ranked by [[Knn]]'s rank;
+  *  4. [[rerankTopK]] — the standard serving pipeline: an ADC shortlist
+  *     of k·overscan candidates, reranked by [[Knn]]'s rerank against the
+  *     full vectors. Recall is the shortlist's, latency is the code
+  *     scan's.
   *
   * Store layout ([[write]]/[[read]]): codes as `array<tinyint>` parquet
   * next to a `_pq_codebook` parquet sidecar (sub, code, cv) — parquet
@@ -98,30 +97,21 @@ object Pq {
     }.reduce(_ + _)
 
   /** Approximate top-k by ADC over (id, codes): scans ONLY the code
-    * column (8 bytes/row at m=8), TakeOrderedAndProject on top.
+    * column (8 bytes/row at m=8).
     */
   def adcTopK(codesDf: DataFrame, idCol: String, codesCol: String,
               probe: Array[Float], k: Int, cb: PqCodebook): DataFrame =
-    Knn.topK(
-      codesDf.where(col(codesCol).isNotNull)
-        .select(col(idCol), adcColumn(col(codesCol), cb.lut(probe)).as("distance")),
-      col("distance"), col(idCol), k)
+    Knn.rank(codesDf, idCol, col(codesCol), k)(adcColumn(_, cb.lut(probe)))
 
-  /** ADC shortlist → exact re-rank: the k·overscan ADC winners (a k-row
-    * driver merge) broadcast-join back to the full vectors for an exact
-    * top-k. The full-precision table is touched only for the shortlist.
+  /** ADC shortlist → exact re-rank: the k·overscan ADC winners, reranked
+    * against the full vectors. The full-precision table is touched only
+    * for the shortlist.
     */
   def rerankTopK(codesDf: DataFrame, fullDf: DataFrame, idCol: String, codesCol: String,
                  vecCol: String, probe: Array[Float], k: Int, cb: PqCodebook,
-                 overscan: Int = 10, metric: String = "l2"): DataFrame = {
-    val short = adcTopK(codesDf, idCol, codesCol, probe, k * overscan, cb)
-      .select(col(idCol))
-    Knn.topK(
-      fullDf.join(broadcast(short), idCol)
-        .select(col(idCol),
-          vector_distance(col(vecCol), vectorLit(probe), metric).as("distance")),
-      col("distance"), col(idCol), k)
-  }
+                 overscan: Int = 10, metric: String = "l2"): DataFrame =
+    Knn.rerank(fullDf, adcTopK(codesDf, idCol, codesCol, probe, k * overscan, cb),
+      idCol, vecCol, probe, k, metric)
 
   /** Materialize the code store: `array<tinyint>` codes plus a
     * `_pq_codebook` parquet sidecar — exact float round-trip, readable
@@ -252,27 +242,19 @@ object Pq {
     val store = Ann.readProbedDirs(spark, s"$path/codes", "cluster", cells.map(_.toLong))
       .where(col("cluster").isin(cells: _*))
       .where(predicate)
-    Knn.topK(
-      store.select(col("id"),
-        adcColumn(col("codes").cast("array<int>"), cb.lut(probe)).as("distance")),
-      col("distance"), col("id"), k)
+    Knn.rank(store, "id", col("codes"), k)(c => adcColumn(c.cast("array<int>"), cb.lut(probe)))
   }
 
-  /** IVF-PQ shortlist → exact re-rank against the full-precision table
-    * (broadcast semi-join, k·overscan rows) — the end-to-end serving path.
+  /** IVF-PQ shortlist (k·overscan rows) → exact re-rank against the
+    * full-precision table — the end-to-end serving path.
     */
   def ivfPqRerank(spark: SparkSession, path: String, fullDf: DataFrame,
                   idCol: String, vecCol: String, probe: Array[Float], k: Int,
                   centroids: Seq[Seq[Float]], cb: PqCodebook, nprobe: Int,
-                  overscan: Int = 10, metric: String = "l2"): DataFrame = {
-    val short = ivfPqTopK(spark, path, probe, k * overscan, centroids, cb, nprobe)
-      .select(col("id").as(idCol))
-    Knn.topK(
-      fullDf.join(broadcast(short), idCol)
-        .select(col(idCol),
-          vector_distance(col(vecCol), vectorLit(probe), metric).as("distance")),
-      col("distance"), col(idCol), k)
-  }
+                  overscan: Int = 10, metric: String = "l2"): DataFrame =
+    Knn.rerank(fullDf,
+      ivfPqTopK(spark, path, probe, k * overscan, centroids, cb, nprobe).select(col("id").as(idCol)),
+      idCol, vecCol, probe, k, metric)
 
   private def readCodebook(spark: SparkSession, cbPath: String): PqCodebook = {
     val cbRows = spark.read.parquet(cbPath)

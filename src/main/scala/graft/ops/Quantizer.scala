@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 import graft.{Metric, QType, QuantParams}
-import graft.functions.{bounded_id_list, code_distance, id_set_member, quantize_codes, reference_value, vectorLit, vector_distance}
+import graft.functions.{bounded_id_list, code_distance, id_set_member, quantize_codes, reference_value}
 import graft.catalog.VectorCatalog
 import graft.kernels.Quantize
 
@@ -278,16 +278,18 @@ object Quantizer {
     * k-th smallest code distance² then every true top-k row has code
     * distance² ≤ (√T + 2B)².
     *
-    * One declarative plan, no driver action while it is built: T is a
-    * scalar subquery over [[Knn.topK]] of the code distances; the
-    * threshold ⌈(√T + 2B)²·(1 + 1e-12)⌉ (float slack: the certificate can
-    * only widen) filters a second code scan into a scalar-subquery id
-    * list; the rerank filters the f32 store by that list's hash set —
-    * never a join, so the f32 side is never shuffled. The threshold and
-    * the set reach generated code as reference objects, so a fresh probe
-    * compiles no new class. The list holds at most `maxBroadcastCand`
-    * ids; a certificate that admits more (collapsed codes) makes the
-    * rerank an exact pass over every vector, in bounded memory.
+    * One declarative plan, no driver action while it is built. Both code
+    * scans are [[quantStream]]`(…, "sq_l2")`: T is a scalar subquery, the
+    * largest of the k smallest code distances; the threshold
+    * ⌈(√T + 2B)²·(1 + 1e-12)⌉ (float slack: the certificate can only
+    * widen) filters the second scan into a scalar-subquery id list. The
+    * f32 store filtered by that list's hash set is the candidate frame
+    * [[Knn.fullScan]] ranks — never a join, so the f32 side is never
+    * shuffled. The threshold and the set reach generated code as
+    * reference objects, so a fresh probe compiles no new class. The list
+    * holds at most `maxBroadcastCand` ids; a certificate that admits more
+    * (collapsed codes) makes the rank an exact pass over every vector, in
+    * bounded memory.
     *
     * Preconditions: every stored code in-envelope — guaranteed by the
     * full rebuild and ENFORCED on appends ([[quantizeAppend]]'s default
@@ -311,27 +313,22 @@ object Quantizer {
       val d = scaled - c; d * d
     }.sum)
     val bound = 0.5 * math.sqrt(probe.length.toDouble) + ep
-    val codeD = quantDF.where(col("code").isNotNull).select(col("id"),
-      code_distance(col("code"), lit(qprobe), "sq_l2", p.qType).as("cd"))
-    val kth = Knn.topK(codeD, col("cd"), col("id"), k).agg(max(col("cd"))).scalar()
+    val codeD = quantStream(quantDF, probe, p, "sq_l2")
+    val kth = Knn.topK(codeD, col("distance"), col("id"), k).agg(max(col("distance"))).scalar()
     // pow(s, 2.0) rather than s * s names the subquery once; Spark's
     // StrictMath.pow(s, 2.0) returns exactly s * s
     val thr = reference_value(
       ceil(pow(sqrt(kth.cast("double")) + lit(2.0 * bound), 2.0) * lit(1.0 + 1e-12)))
     val cap = math.min(math.max(maxBroadcastCand, 0L), Int.MaxValue - 1L).toInt
-    val shortlist = codeD.where(col("cd") <= thr).agg(bounded_id_list(col("id"), cap)).scalar()
-    Knn.topK(
-      base.where(col(vecCol).isNotNull && id_set_member(col(idCol), shortlist))
-        .select(col(idCol), vector_distance(col(vecCol), vectorLit(probe), metric).as("distance")),
-      col("distance"), col(idCol), k)
+    val shortlist = codeD.where(col("distance") <= thr).agg(bounded_id_list(col("id"), cap)).scalar()
+    Knn.fullScan(base.where(id_set_member(col(idCol), shortlist)), idCol, vecCol, probe, k, metric)
   }
 
-  /** K4 `vector_quantize_scan_stream`: code-space distances, no sort/limit. */
-  def quantStream(quantDF: DataFrame, probe: Array[Float], p: QuantParams, metric: String): DataFrame = {
-    val qprobe = quantizeProbe(probe, p)
-    quantDF.select(col("id"),
-      code_distance(col("code"), lit(qprobe), metric, p.qType).as("distance"))
-  }
+  /** K4 `vector_quantize_scan_stream`: code-space distances, no sort/limit.
+    * Rows with a NULL code are skipped (:2093), like [[Knn.distanceStream]].
+    */
+  def quantStream(quantDF: DataFrame, probe: Array[Float], p: QuantParams, metric: String): DataFrame =
+    Knn.score(quantDF, "id", col("code"))(code_distance(_, lit(quantizeProbe(probe, p)), metric, p.qType))
 
   /** S5 `vector_quantize_preload`: pin the quant table in executor memory
     * as the reference's contiguous in-RAM buffer (:1338-1404): each

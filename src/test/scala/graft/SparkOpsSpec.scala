@@ -59,6 +59,151 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(n == emb.count() / 2)
   }
 
+  // ---------- every vector access path drops NULL values before its rank ----------
+
+  /** One row per path of the shared rank and rerank: the path's input
+    * carries a NULL vector, blob, code or signature on an id its
+    * candidate set or shortlist holds (taken from the same path over the
+    * un-nulled input), and no output row may carry a NULL distance.
+    */
+  private val nullRankCases: Seq[(String, () => DataFrame)] = {
+    val dim = Queries.Dim
+    def e = emb.where(col("embedding").isNotNull).select("vec_id", "embedding")
+    def first(df: DataFrame): Long = df.head().getLong(0)
+    def nullOn(df: DataFrame, c: String, id: Long, idCol: String = "vec_id"): DataFrame =
+      df.withColumn(c, when(col(idCol) =!= id, col(c)))
+    def dir(name: String): String = java.nio.file.Files.createTempDirectory(name).toString + "/store"
+    def cents = Ann.ivfCentroids(e, "vec_id", "embedding", 16)
+    def cb = Pq.codebook(e, "vec_id", "embedding", dim, 8, 16)
+    def pqCodes = Pq.encode(e, "vec_id", "embedding", cb).withColumnRenamed("id", "vec_id")
+    def sigs = BinaryQuant.signatures(e, "vec_id", "embedding", dim)
+    def bucketed = Ann.withBuckets(e, "embedding", 8, dim)
+    /** (store dir, centroids) of an IVF store whose nearest probed row has a NULL vector. */
+    def ivfStore: (String, Seq[Seq[Float]]) = {
+      val (d, cs) = (dir("null_ivf"), cents)
+      val assigned = Ann.withClusters(e, "embedding", cs)
+      val top = first(Knn.fullScan(assigned.where(col("cluster").isin(Ann.probeClusters(probe, cs, 4): _*)),
+        "vec_id", "embedding", probe, 1, "l2"))
+      nullOn(assigned, "embedding", top).write.partitionBy("cluster").parquet(d)
+      (d, cs)
+    }
+    /** An IVF-PQ store; with `nullCode`, its nearest probed id gets a
+      * second row, with NULL codes, in the same cell.
+      */
+    def ivfPqStore(nullCode: Boolean): (String, Seq[Seq[Float]], Pq.PqCodebook) = {
+      val (d, cs, b) = (dir("null_ivfpq"), cents, cb)
+      Pq.writeIvfPq(e, "vec_id", "embedding", d, cs, b)
+      if (nullCode) {
+        val inCells = Ann.withClusters(e, "embedding", cs)
+          .where(col("cluster").isin(Ann.probeClusters(probe, cs, 4): _*))
+        val top = first(Pq.adcTopK(Pq.encode(inCells, "vec_id", "embedding", b), "id", "codes", probe, 1, b))
+        inCells.where(col("vec_id") === top)
+          .select(col("vec_id").as("id"), lit(null).cast("array<tinyint>").as("codes"), col("cluster"))
+          .write.mode("append").partitionBy("cluster").parquet(s"$d/codes")
+      }
+      (d, cs, b)
+    }
+    def quantized: (DataFrame, QuantParams) = {
+      val p = Quantizer.computeParams(e, "embedding")
+      (Quantizer.quantizeCodes(e, "vec_id", "embedding", p), p)
+    }
+    Seq(
+      "Knn.fullScan" -> { () =>
+        val top = first(Knn.fullScan(e, "vec_id", "embedding", probe, 1, "l2"))
+        Knn.fullScan(nullOn(e, "embedding", top), "vec_id", "embedding", probe, 10, "l2")
+      },
+      "Knn.fullScanPacked" -> { () =>
+        val packed = e.select(col("vec_id"), graft.functions.pack_vector(col("embedding"), "f32").as("blob"))
+        val top = first(Knn.fullScanPacked(packed, "vec_id", "blob", probe, 1, "l2", "f32"))
+        Knn.fullScanPacked(nullOn(packed, "blob", top), "vec_id", "blob", probe, 10, "l2", "f32")
+      },
+      "Knn.distanceStream" -> { () =>
+        val top = first(Knn.fullScan(e, "vec_id", "embedding", probe, 1, "l2"))
+        Knn.distanceStream(nullOn(e, "embedding", top), "vec_id", "embedding", probe, "l2")
+      },
+      "Knn.mrlTopK" -> { () =>
+        val top = first(Knn.mrlTopK(e, "vec_id", "embedding", probe, 16, 50, 1, "l2"))
+        val dup = nullOn(e.where(col("vec_id") === top), "embedding", top)
+        Knn.mrlTopK(e.union(dup), "vec_id", "embedding", probe, 16, 50, 10, "l2")
+      },
+      "Knn.mrlTopKStored" -> { () =>
+        val store = e.select(col("vec_id"), slice(col("embedding"), 1, 16).as("prefix"), col("embedding"))
+        val top = first(Knn.mrlTopKStored(store, "vec_id", "prefix", "embedding", probe, 16, 50, 1, "l2"))
+        val dup = nullOn(store.where(col("vec_id") === top), "embedding", top)
+        Knn.mrlTopKStored(store.union(dup), "vec_id", "prefix", "embedding", probe, 16, 50, 10, "l2")
+      },
+      "BinaryQuant.hammingTopK" -> { () =>
+        val top = first(BinaryQuant.hammingTopK(sigs, "vec_id", probe, dim, 1))
+        BinaryQuant.hammingTopK(nullOn(sigs, "sig", top), "vec_id", probe, dim, 10)
+      },
+      "BinaryQuant.rerankTopK" -> { () =>
+        val top = first(BinaryQuant.hammingTopK(sigs, "vec_id", probe, dim, 1))
+        BinaryQuant.rerankTopK(sigs, nullOn(e, "embedding", top), "vec_id", "embedding",
+          probe, dim, 50, 10, "l2")
+      },
+      "Ann.lshTopK" -> { () =>
+        val top = first(Ann.lshTopK(bucketed, "vec_id", "embedding", probe, 1, "l2"))
+        Ann.lshTopK(nullOn(bucketed, "embedding", top), "vec_id", "embedding", probe, 10, "l2")
+      },
+      "Ann.lshTopKPruned" -> { () =>
+        val d = dir("null_lsh")
+        val top = first(Ann.lshTopK(bucketed, "vec_id", "embedding", probe, 1, "l2"))
+        nullOn(bucketed, "embedding", top).write.partitionBy("bucket").parquet(d)
+        Ann.lshTopKPruned(spark, d, "vec_id", "embedding", probe, 10, "l2")
+      },
+      "Ann.ivfTopK" -> { () =>
+        val (d, cs) = ivfStore
+        Ann.ivfTopK(spark, d, "vec_id", "embedding", probe, 10, "l2", cs, 4)
+      },
+      "Ann.ivfTopKFiltered" -> { () =>
+        val (d, cs) = ivfStore
+        Ann.ivfTopKFiltered(spark, d, "vec_id", "embedding", probe, 10, "l2", cs, 4, col("vec_id") >= 0)
+      },
+      "Pq.adcTopK" -> { () =>
+        val (codes, b) = (pqCodes, cb)
+        val top = first(Pq.adcTopK(codes, "vec_id", "codes", probe, 1, b))
+        Pq.adcTopK(nullOn(codes, "codes", top), "vec_id", "codes", probe, 10, b)
+      },
+      "Pq.rerankTopK" -> { () =>
+        val (codes, b) = (pqCodes, cb)
+        val top = first(Pq.adcTopK(codes, "vec_id", "codes", probe, 1, b))
+        Pq.rerankTopK(codes, nullOn(e, "embedding", top), "vec_id", "codes", "embedding", probe, 10, b)
+      },
+      "Pq.ivfPqTopK" -> { () =>
+        val (d, cs, b) = ivfPqStore(nullCode = true)
+        Pq.ivfPqTopK(spark, d, probe, 10, cs, b, 4)
+      },
+      "Pq.ivfPqTopKFiltered" -> { () =>
+        val (d, cs, b) = ivfPqStore(nullCode = true)
+        Pq.ivfPqTopKFiltered(spark, d, probe, 10, cs, b, 4, col("id") >= 0)
+      },
+      "Pq.ivfPqRerank" -> { () =>
+        val (d, cs, b) = ivfPqStore(nullCode = false)
+        val top = first(Pq.ivfPqTopK(spark, d, probe, 1, cs, b, 4))
+        Pq.ivfPqRerank(spark, d, nullOn(e, "embedding", top), "vec_id", "embedding", probe, 10, cs, b, 4)
+      },
+      "Quantizer.certifiedTopK" -> { () =>
+        val (codes, p) = quantized
+        val Seq(top, second) = Knn.fullScan(e, "vec_id", "embedding", probe, 2, "l2")
+          .collect().map(_.getLong(0)).toSeq
+        val nullCode = nullOn(codes.where(col("id") === second), "code", second, "id")
+        Quantizer.certifiedTopK(nullOn(e, "embedding", top), "vec_id", "embedding",
+          codes.union(nullCode), probe, p, 10, "l2")
+      },
+      "Quantizer.quantStream" -> { () =>
+        val (codes, p) = quantized
+        val top = first(Knn.topK(Quantizer.quantStream(codes, probe, p, "sq_l2"), col("distance"), col("id"), 1))
+        Quantizer.quantStream(nullOn(codes, "code", top, "id"), probe, p, "sq_l2")
+      })
+  }
+
+  for ((path, frame) <- nullRankCases)
+    test(s"rank drops NULL values: $path") {
+      val rows = frame().collect()
+      assert(rows.nonEmpty)
+      assert(!rows.exists(_.isNullAt(1)), rows.take(3).mkString(", "))
+    }
+
   test("flagship plan shapes: TakeOrderedAndProject, broadcast join-back, column pruning") {
     val knn = Knn.fullScan(emb, "vec_id", "embedding", probe, 10, "l2")
     val plan = knn.queryExecution.executedPlan.toString
@@ -72,6 +217,38 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       case f: org.apache.spark.sql.execution.FileSourceScanExec => f
     }.head
     assert(scan.requiredSchema.fieldNames.toSet == Set("vec_id", "embedding"))
+    // every rerank broadcasts its shortlist into the full-precision frame:
+    // a BroadcastHashJoin built from the shortlist's top-k, a
+    // TakeOrderedAndProject, and no SortMergeJoin anywhere
+    import org.apache.spark.sql.execution.{SparkPlan, TakeOrderedAndProjectExec}
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
+    import org.apache.spark.sql.catalyst.optimizer.BuildLeft
+    object H extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    def isTopK(n: SparkPlan) = n.isInstanceOf[TakeOrderedAndProjectExec]
+    val e = emb.where(col("embedding").isNotNull)
+    val cb = Pq.codebook(e, "vec_id", "embedding", Queries.Dim, 8, 16)
+    val cents = Ann.ivfCentroids(e, "vec_id", "embedding", 16)
+    val ivfPqDir = java.nio.file.Files.createTempDirectory("shape_ivfpq").toString + "/store"
+    Pq.writeIvfPq(e, "vec_id", "embedding", ivfPqDir, cents, cb)
+    val reranks = Seq(
+      "Knn.mrlTopK" -> Knn.mrlTopK(emb, "vec_id", "embedding", probe, 16, 50, 10, "l2"),
+      "BinaryQuant.rerankTopK" -> BinaryQuant.rerankTopK(
+        BinaryQuant.signatures(emb, "vec_id", "embedding", Queries.Dim), emb, "vec_id", "embedding",
+        probe, Queries.Dim, 50, 10, "l2"),
+      "Pq.rerankTopK" -> Pq.rerankTopK(
+        Pq.encode(e, "vec_id", "embedding", cb).withColumnRenamed("id", "vec_id"), e,
+        "vec_id", "codes", "embedding", probe, 10, cb),
+      "Pq.ivfPqRerank" -> Pq.ivfPqRerank(spark, ivfPqDir, e, "vec_id", "embedding", probe, 10,
+        cents, cb, 4))
+    for ((path, df) <- reranks) {
+      val p = df.queryExecution.executedPlan
+      val joins = H.collect(p) { case j: BroadcastHashJoinExec => j }
+      assert(joins.size == 1, s"$path:\n$p")
+      val build = if (joins.head.buildSide == BuildLeft) joins.head.left else joins.head.right
+      assert(build.find(isTopK).isDefined, s"$path: the broadcast side is not the shortlist\n$p")
+      assert(H.find(p)(isTopK).isDefined, s"$path:\n$p")
+      assert(H.find(p)(_.isInstanceOf[SortMergeJoinExec]).isEmpty, s"$path:\n$p")
+    }
   }
 
   // ---------- Q1/K2: quantization pipeline + recall harness ----------
