@@ -11,6 +11,8 @@ import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 
+import graft.kernels.TopKHeap
+
 /** Grouped top-k: a bounded-heap aggregate with map-side partial
   * aggregation — the distributed, *grouped* generalization of the
   * reference's k-slot scan loop (sqlite-vector.c:2022-2113 keeps k best in
@@ -55,18 +57,17 @@ case class TopKPairs(valueExpr: Expression, idExpr: Expression, k: Int,
     // be evicted from the heap nor ordered in the output (±Inf is fine —
     // the reference's L2 yields +Inf on Inf lanes and orders normally)
     if (v != null && id != null && !v.asInstanceOf[Double].isNaN)
-      buffer.insert(v.asInstanceOf[Double], id.asInstanceOf[Long])
+      buffer.offer(v.asInstanceOf[Double], id.asInstanceOf[Long])
     buffer
   }
 
   override def merge(buffer: TopKHeap, other: TopKHeap): TopKHeap = {
-    var i = 0
-    while (i < other.size) { buffer.insert(other.dists(i), other.ids(i)); i += 1 }
+    other.foreach(buffer.offer)
     buffer
   }
 
   override def eval(buffer: TopKHeap): Any = {
-    val (ds, is) = buffer.sortedAscending()
+    val (ds, is) = buffer.drainSorted()
     val rows = new Array[Any](ds.length)
     var i = 0
     while (i < ds.length) {
@@ -79,8 +80,7 @@ case class TopKPairs(valueExpr: Expression, idExpr: Expression, k: Int,
   override def serialize(buffer: TopKHeap): Array[Byte] = {
     val bb = ByteBuffer.allocate(4 + 16 * buffer.size)
     bb.putInt(buffer.size)
-    var i = 0
-    while (i < buffer.size) { bb.putDouble(buffer.dists(i)); bb.putLong(buffer.ids(i)); i += 1 }
+    buffer.foreach { (d, id) => bb.putDouble(d); bb.putLong(id) }
     bb.array()
   }
 
@@ -89,7 +89,7 @@ case class TopKPairs(valueExpr: Expression, idExpr: Expression, k: Int,
     val n = bb.getInt
     val h = new TopKHeap(k)
     var i = 0
-    while (i < n) { h.insert(bb.getDouble, bb.getLong); i += 1 }
+    while (i < n) { h.offer(bb.getDouble, bb.getLong); i += 1 }
     h
   }
 
@@ -135,66 +135,6 @@ case class BoundedIdList(child: Expression, maxIds: Int,
   override def withNewInputAggBufferOffset(offset: Int): ImperativeAggregate =
     copy(inputAggBufferOffset = offset)
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
-/** Bounded binary max-heap over (value, id) pairs, lexicographic order —
-  * the root is the WORST kept pair, so `insert` is O(log k) replace-worst
-  * exactly like the reference's slot-array argmax replacement, minus the
-  * linear rescan.
-  */
-final class TopKHeap(k: Int) {
-  val dists = new Array[Double](k)
-  val ids = new Array[Long](k)
-  var size = 0
-
-  @inline private def worse(d1: Double, i1: Long, d2: Double, i2: Long): Boolean =
-    d1 > d2 || (d1 == d2 && i1 > i2)
-
-  def insert(d: Double, id: Long): Unit = {
-    if (size < k) {
-      var i = size
-      dists(i) = d; ids(i) = id; size += 1
-      // sift up
-      while (i > 0 && worse(dists(i), ids(i), dists((i - 1) / 2), ids((i - 1) / 2))) {
-        swap(i, (i - 1) / 2); i = (i - 1) / 2
-      }
-    } else if (worse(dists(0), ids(0), d, id)) {
-      dists(0) = d; ids(0) = id
-      siftDown(0)
-    }
-  }
-
-  private def swap(a: Int, b: Int): Unit = {
-    val td = dists(a); dists(a) = dists(b); dists(b) = td
-    val ti = ids(a); ids(a) = ids(b); ids(b) = ti
-  }
-
-  private def siftDown(start: Int): Unit = {
-    var i = start
-    var done = false
-    while (!done) {
-      val l = 2 * i + 1; val r = 2 * i + 2
-      var m = i
-      if (l < size && worse(dists(l), ids(l), dists(m), ids(m))) m = l
-      if (r < size && worse(dists(r), ids(r), dists(m), ids(m))) m = r
-      if (m == i) done = true else { swap(i, m); i = m }
-    }
-  }
-
-  /** Destructive heap-sort: extract worst-first into the tail → ascending. */
-  def sortedAscending(): (Array[Double], Array[Long]) = {
-    val n = size
-    val ds = new Array[Double](n); val is = new Array[Long](n)
-    var out = n - 1
-    while (size > 0) {
-      ds(out) = dists(0); is(out) = ids(0)
-      size -= 1
-      dists(0) = dists(size); ids(0) = ids(size)
-      siftDown(0)
-      out -= 1
-    }
-    (ds, is)
-  }
 }
 
 /** Bounded DISTINCT top-k strings by (priority, value) — the skew-proof

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.GraftColumnShim
 import org.apache.spark.sql.functions.{lit, typedlit}
 
@@ -222,110 +222,8 @@ object functions {
   def vector_backend(): Column = lit(kernels.Distances.backend())
 
   /** Register the SQL surface so `spark.sql("... vector_distance(a, b, 'l2') ...")`
-    * works — parity with the reference's CREATE FUNCTION registrations
-    * (sqlite-vector.c:2581-2597).
+    * works — the whole of it, as [[graft.sql.GraftTableFunctions.register]]
+    * does (sqlite-vector.c:2581-2597).
     */
-  def registerSql(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    def strArg(e: Expression, what: String): String = e match {
-      case Literal(s, _) if s != null => s.toString
-      case other => throw new IllegalArgumentException(s"$what must be a string literal, got $other")
-    }
-    reg.createOrReplaceTempFunction("vector_version",
-      _ => Literal(org.apache.spark.unsafe.types.UTF8String.fromString(Version)), "scala_udf")
-    reg.createOrReplaceTempFunction("vector_backend",
-      _ => Literal(org.apache.spark.unsafe.types.UTF8String.fromString(kernels.Distances.backend())), "scala_udf")
-    reg.createOrReplaceTempFunction("vector_distance", {
-      case Seq(a, b) => VectorDistance(a, b, Metric.L2)
-      case Seq(a, b, m) => VectorDistance(a, b, Metric.parse(strArg(m, "metric")))
-      case args => throw new IllegalArgumentException(s"vector_distance expects 2-3 args, got ${args.size}")
-    }, "scala_udf")
-    def asFn(et: ElemType): Seq[Expression] => Expression = {
-      case Seq(v) => ToVector(v, et)
-      case Seq(v, Literal(d, _)) => ToVector(v, et, d.toString.toInt)
-      case args => throw new IllegalArgumentException(s"vector_as_* expects 1-2 args, got ${args.size}")
-    }
-    reg.createOrReplaceTempFunction("string_hash61", {
-      case Seq(s) => StringHash61(s)
-      case args => throw new IllegalArgumentException(s"string_hash61 expects 1 arg, got ${args.size}")
-    }, "scala_udf")
-    reg.createOrReplaceTempFunction("nfc_normalize", {
-      case Seq(s) => NfcNormalize(s)
-      case args => throw new IllegalArgumentException(s"nfc_normalize expects 1 arg, got ${args.size}")
-    }, "scala_udf")
-    reg.createOrReplaceTempFunction("pcm_stats", {
-      case Seq(p) => PcmStatsExpr(p)
-      case args => throw new IllegalArgumentException(s"pcm_stats expects 1 arg, got ${args.size}")
-    }, "scala_udf")
-    reg.createOrReplaceTempFunction("png_dhash", {
-      case Seq(p) => PngDhashExpr(p)
-      case args => throw new IllegalArgumentException(s"png_dhash expects 1 arg, got ${args.size}")
-    }, "scala_udf")
-    reg.createOrReplaceTempFunction("gif_frames", {
-      case Seq(p) => GifFramesExpr(p)
-      case args => throw new IllegalArgumentException(s"gif_frames expects 1 arg, got ${args.size}")
-    }, "scala_udf")
-    reg.createOrReplaceTempFunction("media_probe", {
-      case Seq(p, d) => MediaProbeExpr(p, d)
-      case args => throw new IllegalArgumentException(s"media_probe expects 2 args, got ${args.size}")
-    }, "scala_udf")
-    // text-cleaning scalar surface: the column chains ARE the
-    // registration (one implementation, two front doors)
-    reg.createOrReplaceTempFunction("fix_mojibake", {
-      case Seq(t) => GraftColumnShim.eagerExpression(ops.TextAnalysis.fixMojibake(col(t)))
-      case args => throw new IllegalArgumentException(s"fix_mojibake expects 1 arg, got ${args.size}")
-    }, "scala_udf")
-    reg.createOrReplaceTempFunction("script_mix", {
-      case Seq(t) => GraftColumnShim.eagerExpression(ops.TextAnalysis.scriptMix(col(t)))
-      case args => throw new IllegalArgumentException(s"script_mix expects 1 arg, got ${args.size}")
-    }, "scala_udf")
-    reg.createOrReplaceTempFunction("card_redact", {
-      case Seq(t) => GraftColumnShim.eagerExpression(ops.Curation.redactCards(col(t)))
-      case args => throw new IllegalArgumentException(s"card_redact expects 1 arg, got ${args.size}")
-    }, "scala_udf")
-    reg.createOrReplaceTempFunction("pcm_fingerprint", {
-      case Seq(p) => PcmFingerprintExpr(p, 8)
-      case args => throw new IllegalArgumentException(s"pcm_fingerprint expects 1 arg, got ${args.size}")
-    }, "scala_udf")
-    reg.createOrReplaceTempFunction("png_pixel_stats", {
-      case Seq(p) => PngPixelStatsExpr(p)
-      case args => throw new IllegalArgumentException(s"png_pixel_stats expects 1 arg, got ${args.size}")
-    }, "scala_udf")
-    reg.createOrReplaceTempFunction("vector_as_f32", asFn(ElemType.F32), "scala_udf")
-    reg.createOrReplaceTempFunction("vector_as_f16", asFn(ElemType.F16), "scala_udf")
-    reg.createOrReplaceTempFunction("vector_as_bf16", asFn(ElemType.BF16), "scala_udf")
-    reg.createOrReplaceTempFunction("vector_as_i8", asFn(ElemType.I8), "scala_udf")
-    reg.createOrReplaceTempFunction("vector_as_u8", asFn(ElemType.U8), "scala_udf")
-    def intArg(e: Expression, what: String): Int = e match {
-      case Literal(v, _) if v != null => v.toString.toInt
-      case other => throw new IllegalArgumentException(s"$what must be an integer literal, got $other")
-    }
-    // aggregate builders return the bare AggregateFunction — the analyzer
-    // wraps it in an AggregateExpression like any built-in SQL aggregate
-    reg.createOrReplaceTempFunction("knn_topk", {
-      case Seq(d, id, k) => TopKPairs(d, id, intArg(k, "k"))
-      case args => throw new IllegalArgumentException(s"knn_topk expects (distance, id, k), got ${args.size} args")
-    }, "scala_udf")
-    reg.createOrReplaceTempFunction("vector_avg", {
-      case Seq(v, d) => VectorAvgFixed(v, intArg(d, "dim"))
-      case args => throw new IllegalArgumentException(s"vector_avg expects (vec, dim), got ${args.size} args")
-    }, "scala_udf")
-    reg.createOrReplaceTempFunction("random_projection", {
-      case Seq(v, o, d) => RandomProjection(v, intArg(o, "outDim"), intArg(d, "dim"), 42L)
-      case Seq(v, o, d, sd) => RandomProjection(v, intArg(o, "outDim"), intArg(d, "dim"), intArg(sd, "seed").toLong)
-      case args => throw new IllegalArgumentException(s"random_projection expects (vec, outDim, dim[, seed]), got ${args.size} args")
-    }, "scala_udf")
-    reg.createOrReplaceTempFunction("freq_items_sketch", {
-      case Seq(item, k) => FreqItemsSketch(item, intArg(k, "k"))
-      case args => throw new IllegalArgumentException(s"freq_items_sketch expects (item, k), got ${args.size} args")
-    }, "scala_udf")
-    reg.createOrReplaceTempFunction("sign_bits", {
-      case Seq(v, d) => SignBits(v, intArg(d, "dim"))
-      case args => throw new IllegalArgumentException(s"sign_bits expects (vec, dim), got ${args.size} args")
-    }, "scala_udf")
-    reg.createOrReplaceTempFunction("hamming_distance", {
-      case Seq(a, b) => HammingDistance(a, b)
-      case args => throw new IllegalArgumentException(s"hamming_distance expects (a, b), got ${args.size} args")
-    }, "scala_udf")
-  }
+  def registerSql(spark: SparkSession): Unit = graft.sql.SqlRegistry.register(spark)
 }

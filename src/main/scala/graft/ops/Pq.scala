@@ -90,11 +90,13 @@ object Pq {
 
   /** ADC distance column over a codes array: m literal-table lookups +
     * a left-to-right double sum (the SQL restatement's list_sum order).
+    * NULL codes give a NULL distance: the bare sum reads a number there
+    * (0.0 over an in-memory frame, a LUT entry over parquet).
     */
   def adcColumn(codes: Column, lut: Array[Array[Double]]): Column =
-    lut.indices.map { s =>
+    when(codes.isNotNull, lut.indices.map { s =>
       element_at(typedlit(lut(s).toSeq), element_at(codes, s + 1) + 1)
-    }.reduce(_ + _)
+    }.reduce(_ + _))
 
   /** Approximate top-k by ADC over (id, codes): scans ONLY the code
     * column (8 bytes/row at m=8).

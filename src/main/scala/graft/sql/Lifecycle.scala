@@ -2,7 +2,7 @@ package graft.sql
 
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, LeafExpression, NamedExpression}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, Expression, LeafExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, OneRowRelation, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -89,32 +89,33 @@ case class LifecycleCall(fnName: String, resultType: DataType, thunk: () => Any)
 /** The executed form of `SELECT lifecycle_fn(...)`: runs each call's thunk
   * on the driver at command execution and returns the single result row.
   * Non-lifecycle expressions in the same projection evaluate normally.
+  * The output names are kept apart from the values: `CleanupAliases`
+  * strips every alias from a node that is not a Project, and
+  * `FoldablePropagation` runs it in the operator batch that holds a rule
+  * injected through `SparkSessionExtensions`.
   */
-case class RunLifecycleCommand(projectList: Seq[NamedExpression])
+case class RunLifecycleCommand(override val output: Seq[Attribute], values: Seq[Expression])
     extends LeafRunnableCommand {
 
-  override val output: Seq[Attribute] = projectList.map(_.toAttribute)
-
-  override def run(spark: SparkSession): Seq[Row] = {
-    val values = projectList.map {
-      case Alias(c: LifecycleCall, _) => c.run()
-      case c: LifecycleCall           => c.run()
-      case other =>
-        CatalystTypeConverters.convertToScala(other.eval(InternalRow.empty), other.dataType)
-    }
-    Seq(Row.fromSeq(values))
-  }
+  override def run(spark: SparkSession): Seq[Row] = Seq(Row.fromSeq(values.map {
+    case c: LifecycleCall => c.run()
+    case other => CatalystTypeConverters.convertToScala(other.eval(InternalRow.empty), other.dataType)
+  }))
 }
 
 /** Rewrites the standalone lifecycle statement shape into the driver-side
-  * command. Runs at the tail of optimization (injected via
-  * `GraftExtensions` or `spark.experimental.extraOptimizations`), after
-  * which no rule reorders a leaf command; EXPLAIN renders it unexecuted.
+  * command: in the operator batch of the optimizer when injected through
+  * `GraftExtensions`, at its tail through
+  * `spark.experimental.extraOptimizations`. No rule reorders a leaf
+  * command; EXPLAIN renders it unexecuted.
   */
 object LifecycleExecutionRule extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
     case Project(projectList, _: OneRowRelation)
         if projectList.exists(_.exists(_.isInstanceOf[LifecycleCall])) =>
-      RunLifecycleCommand(projectList)
+      RunLifecycleCommand(projectList.map(_.toAttribute), projectList.map {
+        case Alias(c, _) => c
+        case e => e
+      })
   }
 }

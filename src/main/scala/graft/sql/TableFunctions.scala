@@ -1,12 +1,10 @@
 package graft.sql
 
 import org.apache.spark.sql.{DataFrame, SparkSession, SparkSessionExtensions}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.types.{LongType, StringType}
 
 import graft.catalog.VectorCatalog
 import graft.codec.VectorCodec
@@ -27,19 +25,12 @@ import graft.ops.{Knn, Quantizer}
   * additionally requires quantization metadata and the shadow store — a
   * view named `vector0_<table>_<column>`, the reference's shadow-table
   * naming (sqlite-vector.c:1000-1002).
+  *
+  * The builders here take their arguments already counted:
+  * [[SqlRegistry]] holds every function's name and signature.
   */
 object GraftTableFunctions {
-
-  private def strArg(e: Expression, what: String): String = e match {
-    case Literal(s: UTF8String, StringType) => s.toString
-    case other => throw new IllegalArgumentException(s"$what must be a string literal, got $other")
-  }
-
-  private def intArg(e: Expression, what: String): Int = e match {
-    case Literal(i: Int, IntegerType) => i
-    case Literal(l: Long, LongType)   => l.toInt
-    case other => throw new IllegalArgumentException(s"$what must be an integer literal, got $other")
-  }
+  import SqlRegistry.{doubleArg, intArg, strArg}
 
   /** Probe argument: a JSON text array (the reference's JSON input path,
     * sqlite-vector.c:1528-1653), dimension-checked against the config.
@@ -55,8 +46,8 @@ object GraftTableFunctions {
     * resolved: the session, the registered table and column, its config,
     * the parsed probe and k.
     */
-  private case class ScanCall(spark: SparkSession, table: String, column: String,
-                              cfg: graft.VectorConfig, probe: Array[Float], k: Int) {
+  private[sql] case class ScanCall(spark: SparkSession, table: String, column: String,
+                                   cfg: graft.VectorConfig, probe: Array[Float], k: Int) {
     /** The Scala API's own plan for this call with the id column renamed
       * `id` — no second implementation to drift, and no driver action.
       */
@@ -64,25 +55,20 @@ object GraftTableFunctions {
       df.select(col(idCol).as("id"), col("distance")).queryExecution.logical
   }
 
-  private def scanCall(fn: String, args: Seq[Expression]): ScanCall = args match {
-    case Seq(t, c, probeE, kE) =>
-      val table = strArg(t, "table name")
-      val column = strArg(c, "column name")
-      val cfg = config(table, column)
-      ScanCall(Lifecycle.activeSession(fn), table, column, cfg,
-        probeArg(probeE, cfg.dim), intArg(kE, "k"))
-    case other =>
-      throw new IllegalArgumentException(s"$fn expects (table, column, probe, k), got ${other.size} args")
+  private[sql] def scanCall(fn: String, t: Expression, c: Expression, probeE: Expression,
+                            kE: Expression): ScanCall = {
+    val table = strArg(t, "table name")
+    val column = strArg(c, "column name")
+    val cfg = config(table, column)
+    ScanCall(Lifecycle.activeSession(fn), table, column, cfg, probeArg(probeE, cfg.dim), intArg(kE, "k"))
   }
 
   /** `vector_full_scan(tbl, col, probeJson, k)` → rows (id, distance):
     * [[graft.ops.Knn.fullScan]] over the registered table.
     */
-  def fullScanBuilder(args: Seq[Expression]): LogicalPlan = {
-    val s = scanCall("vector_full_scan", args)
+  private[sql] def fullScan(s: ScanCall): LogicalPlan =
     s.plan(Knn.fullScan(s.spark.table(s.table), s.cfg.idCol, s.column, s.probe, s.k,
       s.cfg.metric.name), s.cfg.idCol)
-  }
 
   /** `vector_quantize_scan(tbl, col, probeJson, k)` → rows (id, distance)
     * over the quant store, distance in i8/u8 code space (NOT dequantized,
@@ -90,8 +76,7 @@ object GraftTableFunctions {
     * scale/offset (Q3, :2159-2177): [[graft.ops.Quantizer.quantScan]] over
     * the shadow view.
     */
-  def quantScanBuilder(args: Seq[Expression]): LogicalPlan = {
-    val s = scanCall("vector_quantize_scan", args)
+  private[sql] def quantScan(s: ScanCall): LogicalPlan = {
     val p = VectorCatalog.quantParams(s.table, s.column).getOrElse(throw new IllegalArgumentException(
       s"vector_quantize('${s.table}','${s.column}') must run before a quantized scan (sqlite-vector.c:1780-1787)"))
     s.plan(Quantizer.quantScan(s.spark.table(shadowName(s.table, s.column)), s.probe, p, s.k,
@@ -114,15 +99,13 @@ object GraftTableFunctions {
     * code distance and shortlist are scalar subqueries, so EXPLAIN shows
     * both stages.
     */
-  def autoScanBuilder(args: Seq[Expression]): LogicalPlan = {
-    val s = scanCall("vector_scan", args)
+  private[sql] def autoScan(s: ScanCall): LogicalPlan =
     VectorCatalog.quantParams(s.table, s.column) match {
       case Some(p) =>
         s.plan(Quantizer.certifiedTopK(s.spark.table(s.table), s.cfg.idCol, s.column,
           s.spark.table(shadowName(s.table, s.column)), s.probe, p, s.k, s.cfg.metric.name), s.cfg.idCol)
-      case None => fullScanBuilder(args)
+      case None => fullScan(s)
     }
-  }
 
   // ---------- lifecycle scalar functions (API.md:53-168) ----------
   //
@@ -159,34 +142,25 @@ object GraftTableFunctions {
   /** `vector_init(tbl, col, options)` → NULL. Registers + validates the
     * vector column (API.md:53-88); idempotent re-init must match.
     */
-  def initBuilder(args: Seq[Expression]): Expression = args match {
-    case Seq(t, c, o) =>
-      val table = strArg(t, "table name")
-      val column = strArg(c, "column name")
-      // option parsing is pure validation — keep it at analysis so a typo
-      // fails the statement before anything executes
-      val cfg = graft.VectorConfig.fromOptions(strArg(o, "options"))
-      LifecycleCall("vector_init", StringType, () => {
-        val spark = Lifecycle.activeSession("vector_init")
-        VectorCatalog.init(table, column, cfg, Some(spark.table(table)))
-        null
-      })
-    case other =>
-      throw new IllegalArgumentException(s"vector_init expects (table, column, options), got ${other.size} args")
+  private[sql] def init(t: Expression, c: Expression, o: Expression): Expression = {
+    val table = strArg(t, "table name")
+    val column = strArg(c, "column name")
+    // option parsing is pure validation — keep it at analysis so a typo
+    // fails the statement before anything executes
+    val cfg = graft.VectorConfig.fromOptions(strArg(o, "options"))
+    LifecycleCall("vector_init", StringType, () => {
+      val spark = Lifecycle.activeSession("vector_init")
+      VectorCatalog.init(table, column, cfg, Some(spark.table(table)))
+      null
+    })
   }
 
   /** `vector_quantize(tbl, col[, options])` → quantized row count
     * (API.md:93-118). Rebuilds the shadow store, refreshes the shadow view
-    * (dropping any preloaded copy first — the reference's auto-reload on
+    * (dropping any preloaded copy — the reference's auto-reload on
     * re-quantize), and records params in the catalog + sidecar.
     */
-  def quantizeBuilder(args: Seq[Expression]): Expression = {
-    val (t, c, opts) = args match {
-      case Seq(t0, c0)     => (t0, c0, "")
-      case Seq(t0, c0, o0) => (t0, c0, strArg(o0, "options"))
-      case other =>
-        throw new IllegalArgumentException(s"vector_quantize expects (table, column[, options]), got ${other.size} args")
-    }
+  private[sql] def quantize(t: Expression, c: Expression, opts: String): Expression = {
     val table = strArg(t, "table name")
     val column = strArg(c, "column name")
     // the config lookup happens at execution so a vector_init earlier in
@@ -200,18 +174,30 @@ object GraftTableFunctions {
         case kv if kv.toLowerCase.startsWith("max_memory=") =>
           graft.VectorConfig.humanToNumber(kv.substring(kv.indexOf('=') + 1))
       }.getOrElse(cfg.maxMemory)
-      val shadow = shadowName(table, column)
-      releasePreload(spark, shadow)
-      val (_, rows) = Quantizer.quantize(spark.table(table), cfg.idCol, column,
-        storePath(spark, cfg, table, column), cfg.qType, table, column, maxMem, cfg.dim)
-      Quantizer.readStore(spark, storePath(spark, cfg, table, column)).createOrReplaceTempView(shadow)
-      rows
+      rebuildShadow(spark, cfg, table, column) { path =>
+        Quantizer.quantize(spark.table(table), cfg.idCol, column, path, cfg.qType, table, column,
+          maxMem, cfg.dim)._2
+      }
     })
   }
 
   /** Releases a preloaded copy behind the shadow view, if there is one. */
   private def releasePreload(spark: SparkSession, shadow: String): Unit =
     if (spark.catalog.tableExists(shadow)) Quantizer.cleanup(spark.table(shadow))
+
+  /** Rewrites the store behind the shadow view with `rebuild` (given the
+    * store path, it returns the statement's row count), then releases any
+    * preloaded copy and rebinds the view to the store's new files.
+    */
+  private def rebuildShadow(spark: SparkSession, cfg: graft.VectorConfig, table: String, column: String)
+                           (rebuild: String => Long): Long = {
+    val path = storePath(spark, cfg, table, column)
+    val rows = rebuild(path)
+    val shadow = shadowName(table, column)
+    releasePreload(spark, shadow)
+    Quantizer.readStore(spark, path).createOrReplaceTempView(shadow)
+    rows
+  }
 
   private def shadowTable(spark: SparkSession, table: String, column: String) = {
     VectorCatalog.quantParams(table, column).getOrElse(throw new IllegalArgumentException(
@@ -225,44 +211,31 @@ object GraftTableFunctions {
     * store's frozen sidecar params and appends them (one scan of the
     * wave, [[Quantizer.quantizeAppend]]), then refreshes the shadow view.
     */
-  def appendBuilder(args: Seq[Expression]): Expression = args match {
-    case Seq(t, c, w) =>
-      val table = strArg(t, "table name")
-      val column = strArg(c, "column name")
-      val wave = strArg(w, "wave view name")
-      LifecycleCall("vector_quantize_append", LongType, () => {
-        val spark = Lifecycle.activeSession("vector_quantize_append")
-        val cfg = config(table, column)
-        val path = storePath(spark, cfg, table, column)
-        val rows = Quantizer.quantizeAppend(spark.table(wave), cfg.idCol, column,
-          path, cfg.maxMemory, cfg.dim)
-        releasePreload(spark, shadowName(table, column))
-        Quantizer.readStore(spark, path).createOrReplaceTempView(shadowName(table, column))
-        rows
-      })
-    case other =>
-      throw new IllegalArgumentException(s"vector_quantize_append expects (table, column, wave_view), got ${other.size} args")
+  private[sql] def append(t: Expression, c: Expression, w: Expression): Expression = {
+    val table = strArg(t, "table name")
+    val column = strArg(c, "column name")
+    val wave = strArg(w, "wave view name")
+    LifecycleCall("vector_quantize_append", LongType, () => {
+      val spark = Lifecycle.activeSession("vector_quantize_append")
+      val cfg = config(table, column)
+      rebuildShadow(spark, cfg, table, column) { path =>
+        Quantizer.quantizeAppend(spark.table(wave), cfg.idCol, column, path, cfg.maxMemory, cfg.dim)
+      }
+    })
   }
 
   /** `vector_quantize_compact(tbl, col)` → store row count. BEYOND-
     * REFERENCE: merges accumulated append-wave files into batch-sized
     * ones ([[Quantizer.compact]]) and refreshes the shadow view.
     */
-  def compactBuilder(args: Seq[Expression]): Expression = args match {
-    case Seq(t, c) =>
-      val table = strArg(t, "table name")
-      val column = strArg(c, "column name")
-      LifecycleCall("vector_quantize_compact", LongType, () => {
-        val spark = Lifecycle.activeSession("vector_quantize_compact")
-        val cfg = config(table, column)
-        val path = storePath(spark, cfg, table, column)
-        val rows = Quantizer.compact(spark, path, cfg.maxMemory, cfg.dim)
-        releasePreload(spark, shadowName(table, column))
-        Quantizer.readStore(spark, path).createOrReplaceTempView(shadowName(table, column))
-        rows
-      })
-    case other =>
-      throw new IllegalArgumentException(s"vector_quantize_compact expects (table, column), got ${other.size} args")
+  private[sql] def compact(t: Expression, c: Expression): Expression = {
+    val table = strArg(t, "table name")
+    val column = strArg(c, "column name")
+    LifecycleCall("vector_quantize_compact", LongType, () => {
+      val spark = Lifecycle.activeSession("vector_quantize_compact")
+      val cfg = config(table, column)
+      rebuildShadow(spark, cfg, table, column)(Quantizer.compact(spark, _, cfg.maxMemory, cfg.dim))
+    })
   }
 
   /** `vector_quantize_memory(tbl, col)` → preload bytes = Σ(8 + len(code))
@@ -270,36 +243,27 @@ object GraftTableFunctions {
     * a pure read whose literal result composes inside row-producing
     * queries without launching nested jobs from executor tasks.
     */
-  def memoryBuilder(args: Seq[Expression]): Expression = args match {
-    case Seq(t, c) =>
-      val spark = SparkSession.active
-      val table = strArg(t, "table name")
-      val column = strArg(c, "column name")
-      Literal(Quantizer.memoryBytes(shadowTable(spark, table, column)))
-    case other =>
-      throw new IllegalArgumentException(s"vector_quantize_memory expects (table, column), got ${other.size} args")
-  }
+  private[sql] def memory(t: Expression, c: Expression): Expression =
+    Literal(Quantizer.memoryBytes(shadowTable(SparkSession.active, strArg(t, "table name"),
+      strArg(c, "column name"))))
 
   /** `vector_quantize_preload(tbl, col)` → NULL. Pins the shadow store in
     * executor memory as code blocks ([[Quantizer.preload]]) and rebinds
     * the shadow view to the pinned copy, so subsequent
     * `vector_quantize_scan` calls read RAM (API.md:139-150).
     */
-  def preloadBuilder(args: Seq[Expression]): Expression = args match {
-    case Seq(t, c) =>
-      val table = strArg(t, "table name")
-      val column = strArg(c, "column name")
-      LifecycleCall("vector_quantize_preload", StringType, () => {
-        val spark = Lifecycle.activeSession("vector_quantize_preload")
-        val shadow = shadowTable(spark, table, column)
-        val pinned = Quantizer.preload(shadow)
-        // a re-preload reads the old blocks once, then lets them go
-        Quantizer.cleanup(shadow)
-        pinned.createOrReplaceTempView(shadowName(table, column))
-        null
-      })
-    case other =>
-      throw new IllegalArgumentException(s"vector_quantize_preload expects (table, column), got ${other.size} args")
+  private[sql] def preload(t: Expression, c: Expression): Expression = {
+    val table = strArg(t, "table name")
+    val column = strArg(c, "column name")
+    LifecycleCall("vector_quantize_preload", StringType, () => {
+      val spark = Lifecycle.activeSession("vector_quantize_preload")
+      val shadow = shadowTable(spark, table, column)
+      val pinned = Quantizer.preload(shadow)
+      // a re-preload reads the old blocks once, then lets them go
+      Quantizer.cleanup(shadow)
+      pinned.createOrReplaceTempView(shadowName(table, column))
+      null
+    })
   }
 
   /** `vector_quantize_cleanup(tbl, col)` → NULL. Releases the preloaded
@@ -307,31 +271,20 @@ object GraftTableFunctions {
     * removes the catalog's quant params (API.md:155-168,
     * sqlite-vector.c:1501-1524). The vector_init registration survives.
     */
-  def cleanupBuilder(args: Seq[Expression]): Expression = args match {
-    case Seq(t, c) =>
-      val table = strArg(t, "table name")
-      val column = strArg(c, "column name")
-      LifecycleCall("vector_quantize_cleanup", StringType, () => {
-        val spark = Lifecycle.activeSession("vector_quantize_cleanup")
-        val cfg = config(table, column)
-        val shadow = shadowName(table, column)
-        if (spark.catalog.tableExists(shadow)) {
-          releasePreload(spark, shadow)
-          spark.catalog.dropTempView(shadow)
-        }
-        Quantizer.cleanup(spark, storePath(spark, cfg, table, column), table, column)
-        null
-      })
-    case other =>
-      throw new IllegalArgumentException(s"vector_quantize_cleanup expects (table, column), got ${other.size} args")
-  }
-
-  private def doubleArg(e: Expression, what: String): Double = e match {
-    case Literal(d: Double, org.apache.spark.sql.types.DoubleType) => d
-    case Literal(dec: org.apache.spark.sql.types.Decimal, _: org.apache.spark.sql.types.DecimalType) => dec.toDouble
-    case Literal(i: Int, IntegerType) => i.toDouble
-    case Literal(l: Long, LongType) => l.toDouble
-    case other => throw new IllegalArgumentException(s"$what must be a numeric literal, got $other")
+  private[sql] def cleanup(t: Expression, c: Expression): Expression = {
+    val table = strArg(t, "table name")
+    val column = strArg(c, "column name")
+    LifecycleCall("vector_quantize_cleanup", StringType, () => {
+      val spark = Lifecycle.activeSession("vector_quantize_cleanup")
+      val cfg = config(table, column)
+      val shadow = shadowName(table, column)
+      if (spark.catalog.tableExists(shadow)) {
+        releasePreload(spark, shadow)
+        spark.catalog.dropTempView(shadow)
+      }
+      Quantizer.cleanup(spark, storePath(spark, cfg, table, column), table, column)
+      null
+    })
   }
 
   /** `near_dup_pairs(tbl, idCol, textCol, threshold)` → (a, b, jaccard):
@@ -364,34 +317,28 @@ object GraftTableFunctions {
     * long-lived sessions doing repeated programmatic dedup runs should
     * use the Scala Run variants + release() for deterministic freeing.
     */
-  def nearDupPairsBuilder(args: Seq[Expression]): LogicalPlan = args match {
-    case Seq(t, idE, txtE, thrE) =>
-      val spark = Lifecycle.activeSession("near_dup_pairs")
-      val table = strArg(t, "table name")
-      graft.ops.Dedup.minhashLshRun(spark.table(table),
-          strArg(idE, "id column"), strArg(txtE, "text column"),
-          numHashes = 128, bands = 16, shingleN = 3,
-          threshold = doubleArg(thrE, "threshold"), eager = false)
-        .pairs.queryExecution.logical
-    case other =>
-      throw new IllegalArgumentException(s"near_dup_pairs expects (table, idCol, textCol, threshold), got ${other.size} args")
+  private[sql] def nearDupPairs(t: Expression, idE: Expression, txtE: Expression, thrE: Expression): LogicalPlan = {
+    val spark = Lifecycle.activeSession("near_dup_pairs")
+    graft.ops.Dedup.minhashLshRun(spark.table(strArg(t, "table name")),
+        strArg(idE, "id column"), strArg(txtE, "text column"),
+        numHashes = 128, bands = 16, shingleN = 3,
+        threshold = doubleArg(thrE, "threshold"), eager = false)
+      .pairs.queryExecution.logical
   }
 
   /** `containment_pairs(tbl, idCol, textCol, shingleN, threshold)` →
     * (a, b, containment): the exact prefix-filtered containment join
     * ([[graft.ops.Dedup.containmentPairs]]) in SQL. Its barriers are
     * lazy already; release follows the same GC contract as
-    * [[nearDupPairsBuilder]].
+    * [[nearDupPairs]].
     */
-  def containmentPairsBuilder(args: Seq[Expression]): LogicalPlan = args match {
-    case Seq(t, idE, txtE, nE, thrE) =>
-      val spark = Lifecycle.activeSession("containment_pairs")
-      graft.ops.Dedup.containmentRun(spark.table(strArg(t, "table name")),
-          strArg(idE, "id column"), strArg(txtE, "text column"),
-          shingleN = intArg(nE, "shingleN"), threshold = doubleArg(thrE, "threshold"))
-        .pairs.queryExecution.logical
-    case other =>
-      throw new IllegalArgumentException(s"containment_pairs expects (table, idCol, textCol, shingleN, threshold), got ${other.size} args")
+  private[sql] def containmentPairs(t: Expression, idE: Expression, txtE: Expression, nE: Expression,
+                                    thrE: Expression): LogicalPlan = {
+    val spark = Lifecycle.activeSession("containment_pairs")
+    graft.ops.Dedup.containmentRun(spark.table(strArg(t, "table name")),
+        strArg(idE, "id column"), strArg(txtE, "text column"),
+        shingleN = intArg(nE, "shingleN"), threshold = doubleArg(thrE, "threshold"))
+      .pairs.queryExecution.logical
   }
 
   /** `sentence_dedup(tbl, idCol, textCol)` → the input rows with the text
@@ -404,73 +351,24 @@ object GraftTableFunctions {
     * the pipeline has no materialization barrier, so unlike the pair
     * TVFs there is no block-lifetime caveat.
     */
-  def sentenceDedupBuilder(args: Seq[Expression]): LogicalPlan = args match {
-    case Seq(t, idE, txtE) =>
-      val spark = Lifecycle.activeSession("sentence_dedup")
-      graft.ops.Dedup.sentenceDedup(spark.table(strArg(t, "table name")),
-          strArg(idE, "id column"), strArg(txtE, "text column"),
-          graft.functions.string_hash61)
-        .queryExecution.logical
-    case other =>
-      throw new IllegalArgumentException(s"sentence_dedup expects (table, idCol, textCol), got ${other.size} args")
+  private[sql] def sentenceDedup(t: Expression, idE: Expression, txtE: Expression): LogicalPlan = {
+    val spark = Lifecycle.activeSession("sentence_dedup")
+    graft.ops.Dedup.sentenceDedup(spark.table(strArg(t, "table name")),
+        strArg(idE, "id column"), strArg(txtE, "text column"),
+        graft.functions.string_hash61)
+      .queryExecution.logical
   }
 
-  private val builders: Seq[(String, Seq[Expression] => LogicalPlan)] = Seq(
-    "vector_full_scan" -> (fullScanBuilder _),
-    "vector_quantize_scan" -> (quantScanBuilder _),
-    "vector_scan" -> (autoScanBuilder _),
-    "near_dup_pairs" -> (nearDupPairsBuilder _),
-    "containment_pairs" -> (containmentPairsBuilder _),
-    "sentence_dedup" -> (sentenceDedupBuilder _))
-
-  private val scalarBuilders: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "vector_init" -> (initBuilder _),
-    "vector_quantize" -> (quantizeBuilder _),
-    "vector_quantize_memory" -> (memoryBuilder _),
-    "vector_quantize_preload" -> (preloadBuilder _),
-    "vector_quantize_cleanup" -> (cleanupBuilder _),
-    "vector_quantize_append" -> (appendBuilder _),
-    "vector_quantize_compact" -> (compactBuilder _))
-
-  /** Runtime registration on a live session (the `CREATE FUNCTION` path). */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.tableFunctionRegistry
-    builders.foreach { case (name, b) =>
-      reg.createOrReplaceTempFunction(name, b, "scala_udf")
-    }
-    val sreg = spark.sessionState.functionRegistry
-    scalarBuilders.foreach { case (name, b) =>
-      sreg.createOrReplaceTempFunction(name, b, "scala_udf")
-    }
-    // the lifecycle statement shape must plan as a driver-side command
-    // (Lifecycle.scala); experimental.extraOptimizations is the live-
-    // session hook for the same rule inject() adds at session build
-    if (!spark.experimental.extraOptimizations.contains(LifecycleExecutionRule)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ LifecycleExecutionRule
-    }
-  }
-
-  /** `SparkSessionExtensions` injection — enable with
-    * `spark.sql.extensions=graft.sql.GraftExtensions`.
+  /** Registers the whole graft SQL surface ([[SqlRegistry]]) on a live
+    * session — the same table `spark.sql.extensions=graft.sql.GraftExtensions`
+    * installs at session build.
     */
-  def inject(ext: SparkSessionExtensions): Unit = {
-    builders.foreach { case (name, b) =>
-      ext.injectTableFunction((FunctionIdentifier(name),
-        new ExpressionInfo(GraftTableFunctions.getClass.getCanonicalName, name), b))
-    }
-    scalarBuilders.foreach { case (name, b) =>
-      ext.injectFunction((FunctionIdentifier(name),
-        new ExpressionInfo(GraftTableFunctions.getClass.getCanonicalName, name), b))
-    }
-    ext.injectOptimizerRule(_ => LifecycleExecutionRule)
-    ext.injectPlannerStrategy(_ => graft.ops.QuantTopK.Strategy)
-  }
+  def register(spark: SparkSession): Unit = SqlRegistry.register(spark)
 }
 
-/** Session extension entry point: registers the vector table functions at
+/** Session extension entry point: registers the whole graft SQL surface at
   * session build time (`--conf spark.sql.extensions=graft.sql.GraftExtensions`).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = GraftTableFunctions.inject(ext)
+  override def apply(ext: SparkSessionExtensions): Unit = SqlRegistry.inject(ext)
 }

@@ -234,21 +234,20 @@ class KernelSpec extends AnyFunSuite {
       val pairs = Array.fill(n)((rnd.nextInt(12).toDouble, rnd.nextLong() & 0xFFFFL))
       val expected = pairs.sortBy(p => (p._1, p._2)).take(k).toSeq
 
-      val h = new graft.expressions.TopKHeap(k)
-      pairs.foreach { case (d, id) => h.insert(d, id) }
-      val (ds, is) = h.sortedAscending()
+      val h = new graft.kernels.TopKHeap(k)
+      pairs.foreach { case (d, id) => h.offer(d, id) }
+      val (ds, is) = h.drainSorted()
       assert(ds.zip(is).map(p => (p._1, p._2)).toSeq == expected, s"trial $trial")
 
-      // split into random sub-heaps and merge via re-insert (the agg path)
+      // split into random sub-heaps and merge via re-offer (the agg path)
       val parts = pairs.grouped(1 + rnd.nextInt(pairs.length + 1)).toSeq
-      val m = new graft.expressions.TopKHeap(k)
+      val m = new graft.kernels.TopKHeap(k)
       parts.foreach { part =>
-        val sub = new graft.expressions.TopKHeap(k)
-        part.foreach { case (d, id) => sub.insert(d, id) }
-        var i = 0
-        while (i < sub.size) { m.insert(sub.dists(i), sub.ids(i)); i += 1 }
+        val sub = new graft.kernels.TopKHeap(k)
+        part.foreach { case (d, id) => sub.offer(d, id) }
+        sub.foreach(m.offer)
       }
-      val (md, mi) = m.sortedAscending()
+      val (md, mi) = m.drainSorted()
       assert(md.zip(mi).map(p => (p._1, p._2)).toSeq == expected, s"merge trial $trial")
     }
   }

@@ -766,6 +766,21 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got == expected)
   }
 
+  test("Pq.adcColumn: NULL codes give NULL over an in-memory frame and over parquet") {
+    import graft.ops.Pq
+    val lut = Array(Array(1.0, 2.0), Array(3.0, 4.0))
+    val mem = Seq((1L, Option(Seq[Byte](0, 1))), (2L, Option.empty[Seq[Byte]])).toDF("id", "codes")
+    val dir = java.nio.file.Files.createTempDirectory("adcnull").toString + "/codes"
+    mem.write.parquet(dir)
+    for ((source, df) <- Seq("memory" -> mem, "parquet" -> spark.read.parquet(dir));
+         codes <- Seq(col("codes"), col("codes").cast("array<int>"))) {
+      val got = df.select(col("id"), Pq.adcColumn(codes, lut), element_at(codes, 1))
+        .orderBy("id").collect()
+        .map(r => (r.getLong(0), Option(r.get(1)), Option(r.get(2)).map(_.toString))).toSeq
+      assert(got == Seq((1L, Some(5.0), Some("0")), (2L, None, None)), s"$source $codes")
+    }
+  }
+
   test("appendIvfPq: wave encoded from the store's own sidecars, content equals a rebuild") {
     import graft.ops.Pq
     val e = emb.where(col("embedding").isNotNull)
@@ -1598,6 +1613,46 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(tk.map(r => (r.getDouble(0), r.getLong(1))) == Seq((0.0, 0L)))
   }
 
+  test("SQL registry: GraftExtensions, GraftTableFunctions.register and registerSql install one surface") {
+    val injected = (scala.collection.mutable.Set.empty[String], scala.collection.mutable.Set.empty[String])
+    new graft.sql.GraftExtensions().apply(new org.apache.spark.sql.SparkSessionExtensions {
+      override def injectFunction(f: FunctionDescription): Unit = injected._1 += f._1.funcName
+      override def injectTableFunction(f: TableFunctionDescription): Unit = injected._2 += f._1.funcName
+    })
+    // the (function, table function) names one call adds to a fresh session
+    def added(install: SparkSession => Unit): (Set[String], Set[String]) = {
+      val s = spark.newSession()
+      def names = (s.sessionState.functionRegistry.listFunction().map(_.funcName).toSet,
+        s.sessionState.tableFunctionRegistry.listFunction().map(_.funcName).toSet)
+      val (f0, t0) = names
+      install(s)
+      val (f1, t1) = names
+      (f1 -- f0, t1 -- t0)
+    }
+    val viaRegister = added(graft.sql.GraftTableFunctions.register)
+    assert(viaRegister == ((injected._1.toSet, injected._2.toSet)))
+    assert(added(graft.functions.registerSql) == viaRegister)
+    // 25 scalars and aggregates, 7 lifecycle scalars, 6 table functions
+    assert(viaRegister._1.size == 32 && viaRegister._2.size == 6, viaRegister)
+
+    val viaTvf = spark.newSession()
+    graft.sql.GraftTableFunctions.register(viaTvf)
+    assert(viaTvf.sql("SELECT vector_distance(vector_as_f32('[1,2]'), vector_as_f32('[1,3]'), 'l2')")
+      .head().getDouble(0) == 1.0)
+    assert(viaTvf.sql("SELECT vector_version()").head().getString(0) == graft.functions.Version)
+    val tk = viaTvf.sql("SELECT knn_topk(CAST(1.5 AS DOUBLE), CAST(7 AS BIGINT), 1)").head()
+      .getSeq[org.apache.spark.sql.Row](0)
+    assert(tk.map(r => (r.getDouble(0), r.getLong(1))) == Seq((1.5, 7L)))
+
+    val viaSql = spark.newSession()
+    graft.functions.registerSql(viaSql)
+    viaSql.createDataFrame(Seq((1L, Seq(1f, 0f)), (2L, Seq(0f, 1f)))).toDF("id", "v")
+      .createOrReplaceTempView("registry_vfs")
+    catalog.VectorCatalog.init("registry_vfs", "v", VectorConfig(2, idCol = "id"))
+    assert(viaSql.sql("SELECT id FROM vector_full_scan('registry_vfs', 'v', '[0,1]', 1)")
+      .collect().map(_.getLong(0)).toSeq == Seq(2L))
+  }
+
   test("SQL TVF surface: vector_full_scan / vector_quantize_scan in pure SQL") {
     emb.createOrReplaceTempView("emb_tvf")
     catalog.VectorCatalog.init("emb_tvf", "embedding", VectorConfig(64, idCol = "vec_id"))
@@ -1683,6 +1738,17 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // memory after cleanup errors like an unquantized scan
     assertThrows[IllegalArgumentException](
       spark.sql("SELECT vector_quantize_memory('emb_life', 'embedding')"))
+  }
+
+  test("lifecycle command keeps its output through FoldablePropagation, the batch GraftExtensions injects into") {
+    graft.sql.GraftTableFunctions.register(spark)
+    emb.createOrReplaceTempView("emb_fold")
+    val analyzed = spark.sql("SELECT vector_init('emb_fold', 'embedding', " +
+      "'dimension=64,type=FLOAT32,id_column=vec_id') AS r, 1 AS one").queryExecution.analyzed
+    val cmd = org.apache.spark.sql.catalyst.optimizer.FoldablePropagation(
+      graft.sql.LifecycleExecutionRule(analyzed))
+    assert(cmd.isInstanceOf[graft.sql.RunLifecycleCommand], cmd)
+    assert(cmd.output.map(_.name) == Seq("r", "one"))
   }
 
   test("lifecycle SQL side effects fire at execution, never at analysis or EXPLAIN") {
