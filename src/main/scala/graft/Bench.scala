@@ -118,7 +118,7 @@ object Bench {
 
     // Untimed setup: materialize the synthetic vector table to parquet so
     // the timed k-NN queries measure the actual serving path — parquet
-    // scan + codegen'd distance + TakeOrderedAndProject — not the
+    // scan + codegen'd distance + KnnTopK — not the
     // synthetic-vector generation (which at 100 TB doesn't exist). The
     // packed store is the reference's native BLOB storage form.
     val benchDir = java.nio.file.Files.createTempDirectory("graft_bench").toString

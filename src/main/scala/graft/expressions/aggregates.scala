@@ -2,12 +2,9 @@ package graft.expressions
 
 import java.nio.ByteBuffer
 
-import scala.collection.mutable
-
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpectsInputTypes}
-import org.apache.spark.sql.catalyst.expressions.aggregate.{Collect, ImperativeAggregate, TypedImperativeAggregate}
-import org.apache.spark.sql.catalyst.trees.UnaryLike
+import org.apache.spark.sql.catalyst.expressions.aggregate.{ImperativeAggregate, TypedImperativeAggregate}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 
@@ -16,8 +13,8 @@ import graft.kernels.TopKHeap
 /** Grouped top-k: a bounded-heap aggregate with map-side partial
   * aggregation — the distributed, *grouped* generalization of the
   * reference's k-slot scan loop (sqlite-vector.c:2022-2113 keeps k best in
-  * a flat slot array with worst-replacement; `TakeOrderedAndProject` is
-  * that shape for ONE query).
+  * a flat slot array with worst-replacement; `KnnTopK` is that shape
+  * for ONE query).
   *
   * `knn_topk(distance, id, k)` in a `groupBy(probe_id)` answers N probes
   * in one corpus scan: each task folds its partition into an O(k) heap per
@@ -99,42 +96,6 @@ case class TopKPairs(valueExpr: Expression, idExpr: Expression, k: Int,
     copy(inputAggBufferOffset = offset)
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
     copy(valueExpr = c(0), idExpr = c(1))
-}
-
-/** `bounded_id_list(id, maxIds)`: `collect_list` that gives up past a
-  * bound — the non-null ids, or NULL once more than `maxIds` arrived.
-  * Every buffer holds at most maxIds + 1 ids, so a shortlist that turns
-  * out to cover most of a corpus costs bounded memory, not a corpus-sized
-  * array. An object aggregate: `maxIds` never reaches generated source.
-  */
-case class BoundedIdList(child: Expression, maxIds: Int,
-                         mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-    extends Collect[mutable.ArrayBuffer[Any]] with UnaryLike[Expression] {
-
-  override def nullable: Boolean = true
-  override def prettyName: String = "bounded_id_list"
-  override protected lazy val bufferElementType: DataType = child.dataType
-  override def convertToBufferElement(value: Any): Any = InternalRow.copyValue(value)
-  override def createAggregationBuffer(): mutable.ArrayBuffer[Any] = mutable.ArrayBuffer.empty
-
-  override def update(buffer: mutable.ArrayBuffer[Any], input: InternalRow): mutable.ArrayBuffer[Any] =
-    if (buffer.size > maxIds) buffer else super.update(buffer, input)
-
-  override def merge(buffer: mutable.ArrayBuffer[Any],
-                     other: mutable.ArrayBuffer[Any]): mutable.ArrayBuffer[Any] = {
-    val it = other.iterator
-    while (buffer.size <= maxIds && it.hasNext) buffer += it.next()
-    buffer
-  }
-
-  override def eval(buffer: mutable.ArrayBuffer[Any]): Any =
-    if (buffer.size > maxIds) null else new GenericArrayData(buffer.toArray)
-
-  override def withNewMutableAggBufferOffset(offset: Int): ImperativeAggregate =
-    copy(mutableAggBufferOffset = offset)
-  override def withNewInputAggBufferOffset(offset: Int): ImperativeAggregate =
-    copy(inputAggBufferOffset = offset)
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 /** Bounded DISTINCT top-k strings by (priority, value) — the skew-proof

@@ -1,7 +1,8 @@
 package graft.expressions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, LeafExpression, UnaryExpression, Unevaluable}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, CodeGenerator, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -161,71 +162,57 @@ case class CodeDistance(left: Expression, right: Expression, metric: Metric, sig
     copy(left = newLeft, right = newRight)
 }
 
-/** A per-query value (arithmetic over a scalar-subquery result, say)
-  * that generated code reads from a reference object. Spark writes a
-  * primitive literal or a scalar subquery's result into the generated
-  * Java, so each new value is a new class to compile; here the child is
-  * evaluated once, when its stage is generated (subquery results are
-  * ready by then). Never foldable, so it never becomes a literal again.
+/** The certificate's shortlist: sorted ids that
+  * [[graft.ops.CertifiedTopKExec]] publishes after its code pass and
+  * before its rank runs — a per-query value held here, like a scalar
+  * subquery's result, and never written into generated source. NULL, a
+  * shortlist over its cap or none published yet, stands for every id.
+  * Copies of an [[IdSetMember]] share this leaf, so a bound copy reads
+  * what the plan's own expression was given.
   */
-case class ReferenceValue(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = child.dataType
-  override def foldable: Boolean = false
-  override def prettyName: String = "reference_value"
-
-  @transient private lazy val value: Any = child.eval(null)
-
-  override def eval(input: InternalRow): Any = value
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("refValue", value, CodeGenerator.boxedType(dataType))
-    ev.copy(code = code"""
-      |boolean ${ev.isNull} = $ref == null;
-      |${CodeGenerator.javaType(dataType)} ${ev.value} = ${CodeGenerator.defaultValue(dataType)};
-      |if (!${ev.isNull}) { ${ev.value} = $ref; }
-     """.stripMargin)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+case class ShortlistIds() extends LeafExpression with Unevaluable {
+  @volatile private[graft] var ids: Array[Long] = _
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def nullable: Boolean = true
+  override def prettyName: String = "shortlist"
 }
 
-/** `left ∈ right` for a per-query id list (a scalar subquery's array),
-  * probed through one hash set built when the stage is generated and
-  * read by generated code as a reference object. A NULL list — an
-  * overflowed [[BoundedIdList]] — admits every row.
+/** `left ∈ right` for the certificate's shortlist, an int or bigint id
+  * probed by binary search over the sorted ids. Generated code reads the
+  * ids as a reference object when its stage is generated, so a fresh
+  * probe compiles no class. A NULL shortlist admits every row.
   */
-case class IdSetMember(left: Expression, right: Expression) extends BinaryExpression {
+case class IdSetMember(left: Expression, right: ShortlistIds) extends BinaryExpression {
 
+  override def checkInputDataTypes(): TypeCheckResult = left.dataType match {
+    case IntegerType | LongType => TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(s"id_set_member needs an int or bigint id, got ${t.simpleString}")
+  }
   override def dataType: DataType = BooleanType
   override def nullable: Boolean = false
   override def prettyName: String = "id_set_member"
 
-  @transient private lazy val set: java.util.HashSet[Any] = {
-    val ids = right.eval(null).asInstanceOf[ArrayData]
-    if (ids == null) null
-    else {
-      val s = new java.util.HashSet[Any](math.max(16, ids.numElements() * 2))
-      ids.foreach(right.dataType.asInstanceOf[ArrayType].elementType, (_, v) => s.add(v))
-      s
-    }
+  override def eval(input: InternalRow): Any = {
+    val ids = right.ids
+    ids == null || (left.eval(input) match {
+      case null => false
+      case v: Int => java.util.Arrays.binarySearch(ids, v.toLong) >= 0
+      case v => java.util.Arrays.binarySearch(ids, v.asInstanceOf[Long]) >= 0
+    })
   }
 
-  override def eval(input: InternalRow): Any =
-    set == null || { val v = left.eval(input); v != null && set.contains(v) }
-
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val setRef = ctx.addReferenceObj("idSet", set, "java.util.HashSet")
+    val ids = ctx.addReferenceObj("shortlist", right.ids, "long[]")
     val c = left.genCode(ctx)
     ev.copy(code = code"""
       |${c.code}
-      |boolean ${ev.value} = $setRef == null || (!${c.isNull} && $setRef.contains(${c.value}));
+      |boolean ${ev.value} = $ids == null ||
+      |  (!${c.isNull} && java.util.Arrays.binarySearch($ids, (long) ${c.value}) >= 0);
      """.stripMargin, isNull = FalseLiteral)
   }
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
+    copy(left = newLeft, right = newRight.asInstanceOf[ShortlistIds])
 }
 
 /** Sum of a packed i8/u8 code vector as a Long — exact integer arithmetic

@@ -46,15 +46,8 @@ object functions {
   def code_distance(a: Column, b: Column, metric: String, qType: QType): Column =
     col(CodeDistance(expr(a), expr(b), Metric.parse(metric), signed = qType == QType.I8))
 
-  /** See [[graft.expressions.ReferenceValue]]. */
-  private[graft] def reference_value(c: Column): Column = col(ReferenceValue(expr(c)))
-
   /** See [[graft.expressions.IdSetMember]]. */
-  private[graft] def id_set_member(id: Column, ids: Column): Column = col(IdSetMember(expr(id), expr(ids)))
-
-  /** See [[graft.expressions.BoundedIdList]]. */
-  private[graft] def bounded_id_list(id: Column, maxIds: Int): Column =
-    col(BoundedIdList(expr(id), maxIds).toAggregateExpression())
+  private[graft] def id_set_member(id: Column, ids: ShortlistIds): Column = col(IdSetMember(expr(id), ids))
 
   def code_sum(c: Column, qType: QType): Column =
     col(CodeSum(expr(c), signed = qType == QType.I8))

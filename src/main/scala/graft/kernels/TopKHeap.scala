@@ -4,10 +4,11 @@ package graft.kernels
   * max-heap on (distance, id): the worst kept row sits at the root, and a
   * row enters only if it sorts before it, so ties break by id. Slots grow
   * on demand up to k, so a k far beyond the row count allocates only what
-  * it keeps. The quantized top-k operator's tasks and driver merge, and
-  * `knn_topk`'s aggregation buffer, are this heap.
+  * it keeps. The quantized top-k operator's tasks and driver merge, the
+  * certificate's code pass, and `knn_topk`'s aggregation buffer, are this
+  * heap.
   */
-final class TopKHeap(k: Int) {
+final class TopKHeap(k: Int) extends DistanceSink {
   private var d = new Array[Double](math.min(k, 64))
   private var ids = new Array[Long](math.min(k, 64))
   private var n = 0
@@ -15,6 +16,9 @@ final class TopKHeap(k: Int) {
   @inline private def before(x: Double, xi: Long, y: Double, yi: Long): Boolean = x < y || (x == y && xi < yi)
 
   def size: Int = n
+
+  /** The distance of the last row kept; the heap must not be empty. */
+  def worst: Double = d(0)
 
   def offer(dist: Double, id: Long): Unit =
     if (n < k) {
@@ -65,4 +69,12 @@ final class TopKHeap(k: Int) {
     n = 0
     out
   }
+}
+
+/** Where one partition's (distance, id) rows go, and what comes back:
+  * the rows kept, in ascending (distance, id) order.
+  */
+trait DistanceSink {
+  def offer(dist: Double, id: Long): Unit
+  def drainSorted(): (Array[Double], Array[Long])
 }

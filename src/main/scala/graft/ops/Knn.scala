@@ -32,20 +32,20 @@ import graft.functions.{vectorLit, vector_distance}
   * read, a bucket IN-list, a metadata predicate, a hash-set filter, or a
   * shortlist.
   *
-  * Physical shape (the point at 100 TB): `orderBy(distance, id).limit(k)`
-  * is planned as `TakeOrderedAndProject` — a bounded priority queue per
-  * partition followed by a k-row driver merge. That is the distributed
-  * analogue of the reference's k-slot array + argmax replacement loop
-  * (:2022-2113): each executor holds O(k) state, nothing shuffles except
-  * the per-partition winners, and the scan itself is a full
-  * whole-stage-codegen'd pass over the Parquet column. No index, no
-  * collect, no cross join. Ties break by id for deterministic output (the
-  * reference leaves tie order unspecified — strict `<` at :2102).
+  * Physical shape (the point at 100 TB): [[topK]] is one engine-owned
+  * node, [[KnnTopK]], planned as one job — a named task keeps a bounded
+  * heap of rows per partition, and the driver merges the k-row heaps.
+  * That is the distributed analogue of the reference's k-slot array +
+  * argmax replacement loop (:2022-2113): each executor holds O(k) state,
+  * nothing shuffles, and the scan itself is a full whole-stage-codegen'd
+  * pass over the Parquet column. No index, no collect, no cross join.
+  * The rows are ordered as Spark sorts them: ties break by id for
+  * deterministic output (the reference leaves tie order unspecified —
+  * strict `<` at :2102), NULLs first and NaN last.
   *
-  * The quantized scan ([[Quantizer.quantScan]]) has the same shape but
-  * its own operator, [[QuantTopK]]: one job with a named task per query
-  * instead of `TakeOrderedAndProject`'s three cleaned closures, and a
-  * scan of contiguous code blocks when the store is preloaded.
+  * The quantized scan ([[Quantizer.quantScan]]) and the certificate's
+  * code pass have the same shape in their own operator, [[QuantTopK]],
+  * which scans contiguous code blocks when the store is preloaded.
   */
 object Knn {
 
@@ -122,7 +122,7 @@ object Knn {
       .write.mode("overwrite").parquet(path)
 
   def topK(scored: DataFrame, dist: Column, id: Column, k: Int): DataFrame =
-    scored.orderBy(dist.asc, id.asc).limit(math.max(k, 0))
+    KnnTopK.frame(scored, dist, id, k)
 
   private def probeDistance(probe: Array[Float], metric: String)(v: Column): Column =
     vector_distance(v, vectorLit(probe), metric)

@@ -2,20 +2,20 @@ package graft.ops
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.{Partition, TaskContext}
+import org.apache.spark.{Partition, SparkContext, TaskContext}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, GraftColumnShim, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, AttributeSet, ExprId, NamedExpression, SortOrder}
 import org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, SinglePartition}
 import org.apache.spark.sql.execution.{LeafExecNode, LogicalRDD, SQLExecution, SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType, IntegerType, LongType}
 
 import graft.{Metric, QType}
-import graft.kernels.{Distances, TopKHeap}
+import graft.kernels.{DistanceSink, Distances, TopKHeap}
 
 /** A run of one partition's code rows in the reference's preload layout
   * (`vQuantRunMemory`'s buffer, sqlite-vector.c:2121-2157): row i has id
@@ -119,15 +119,75 @@ object CodeBlocks {
     plan.collectLeaves().collect { case l: LogicalRDD => l.rdd }.collect { case r: CodeBlockRows => r }
 }
 
-/** One partition's top-k as (distances, ids), ascending. A named class,
-  * not a closure: `SparkContext.clean` returns at once for it, where a
-  * lambda costs an ASM pass over its capturing class on every query.
+/** The certificate of [[Quantizer.certifiedTopK]] over code distances:
+  * `bound` is B, and a shortlist holds at most `cap` ids.
   */
-abstract class TopKTask[T](probe: Array[Byte], k: Int, metric: Metric, signed: Boolean,
-                           scanned: SQLMetric, blocksRead: SQLMetric)
+final case class Certificate(bound: Double, cap: Int) {
+
+  /** thr(T) = ⌈(√T + 2B)²·(1 + 1e-12)⌉: every true top-k row has a code
+    * distance of at most thr(T) when T is the k-th smallest. The float
+    * slack can only widen it; T = +∞ gives +∞.
+    */
+  def threshold(t: Double): Double =
+    math.ceil(StrictMath.pow(math.sqrt(t) + 2.0 * bound, 2.0) * (1.0 + 1e-12))
+
+  /** The shortlist from every partition's [[CertificateSink]] rows: the
+    * global T is the k-th smallest of them, and the shortlist is every row
+    * within thr(T), as sorted ids. None when it holds more than `cap` ids.
+    */
+  def shortlist(k: Int, parts: Array[(Array[Double], Array[Long])]): Option[Array[Long]] = {
+    val top = CodePass.merge(k, parts)
+    val thr = threshold(if (top.size == k) top.worst else Double.PositiveInfinity)
+    val out = Array.newBuilder[Long]
+    var n = 0L
+    parts.foreach { case (ds, ids) =>
+      var i = 0
+      while (i < ds.length && ds(i) <= thr) { if (n < cap) out += ids(i); n += 1; i += 1 }
+    }
+    if (n > cap) None else Some(out.result().sorted)
+  }
+}
+
+/** One partition's certificate candidates, in one pass: the k smallest
+  * code distances give the partition's own k-th distance T_p, and every
+  * row within thr(T_p) is returned. A row is kept when it arrives within
+  * thr of the k-th distance so far, which only falls towards T_p. The
+  * global T is at most any full partition's T_p and thr is monotone, so
+  * this is a superset of the partition's share of the global shortlist.
+  * At most max(cap + 1, k) rows are kept, the smallest: enough for the
+  * driver to see a shortlist over its cap.
+  */
+final class CertificateSink(k: Int, c: Certificate) extends DistanceSink {
+  private val top = new TopKHeap(k)
+  private val kept = new TopKHeap(math.max(c.cap + 1, k))
+  private var t = Double.PositiveInfinity
+  private var thr = Double.PositiveInfinity
+
+  override def offer(dist: Double, id: Long): Unit = {
+    top.offer(dist, id)
+    if (top.size == k && top.worst != t) { t = top.worst; thr = c.threshold(t) }
+    if (dist <= thr) kept.offer(dist, id)
+  }
+
+  override def drainSorted(): (Array[Double], Array[Long]) = {
+    val (ds, ids) = kept.drainSorted()
+    var n = 0
+    while (n < ds.length && ds(n) <= thr) n += 1
+    (java.util.Arrays.copyOf(ds, n), java.util.Arrays.copyOf(ids, n))
+  }
+}
+
+/** One partition's pass over its codes: each code's distance to the
+  * probe goes into a k-slot heap, or into a [[CertificateSink]] when a
+  * certificate is given. A named class, not a closure:
+  * `SparkContext.clean` returns at once for it, where a lambda costs an
+  * ASM pass over its capturing class on every query.
+  */
+abstract class CodePassTask[T](probe: Array[Byte], k: Int, metric: Metric, signed: Boolean,
+                               certificate: Option[Certificate], scanned: SQLMetric, blocksRead: SQLMetric)
     extends ((TaskContext, Iterator[T]) => (Array[Double], Array[Long])) with Serializable {
 
-  protected def scan(it: Iterator[T], heap: TopKHeap): Unit
+  protected def scan(it: Iterator[T], sink: DistanceSink): Unit
 
   /** The code at `off` against the probe, over their common prefix like `code_distance`. */
   protected def distance(codes: Array[Byte], off: Int, dim: Int): Double =
@@ -136,38 +196,85 @@ abstract class TopKTask[T](probe: Array[Byte], k: Int, metric: Metric, signed: B
   protected def count(rows: Long, blocks: Long): Unit = { scanned.add(rows); blocksRead.add(blocks) }
 
   override def apply(ctx: TaskContext, it: Iterator[T]): (Array[Double], Array[Long]) = {
-    val heap = new TopKHeap(k)
-    scan(it, heap)
-    heap.drainSorted()
+    val sink = certificate.fold[DistanceSink](new TopKHeap(k))(new CertificateSink(k, _))
+    scan(it, sink)
+    sink.drainSorted()
   }
 }
 
-final class BlockTopKTask(probe: Array[Byte], k: Int, metric: Metric, signed: Boolean,
-                          scanned: SQLMetric, blocksRead: SQLMetric)
-    extends TopKTask[CodeBlock](probe, k, metric, signed, scanned, blocksRead) {
-  override protected def scan(it: Iterator[CodeBlock], heap: TopKHeap): Unit = it.foreach { b =>
+final class BlockPassTask(probe: Array[Byte], k: Int, metric: Metric, signed: Boolean,
+                          certificate: Option[Certificate], scanned: SQLMetric, blocksRead: SQLMetric)
+    extends CodePassTask[CodeBlock](probe, k, metric, signed, certificate, scanned, blocksRead) {
+  override protected def scan(it: Iterator[CodeBlock], sink: DistanceSink): Unit = it.foreach { b =>
     var i = 0; var off = 0
     while (i < b.ids.length) {
-      heap.offer(distance(b.codes, off, b.dim), b.ids(i))
+      sink.offer(distance(b.codes, off, b.dim), b.ids(i))
       i += 1; off += b.dim
     }
     count(b.rows, 1)
   }
 }
 
-final class RowTopKTask(probe: Array[Byte], k: Int, metric: Metric, signed: Boolean, idIsInt: Boolean,
-                        scanned: SQLMetric, blocksRead: SQLMetric)
-    extends TopKTask[InternalRow](probe, k, metric, signed, scanned, blocksRead) {
-  override protected def scan(it: Iterator[InternalRow], heap: TopKHeap): Unit = {
+final class RowPassTask(probe: Array[Byte], k: Int, metric: Metric, signed: Boolean, idIsInt: Boolean,
+                        certificate: Option[Certificate], scanned: SQLMetric, blocksRead: SQLMetric)
+    extends CodePassTask[InternalRow](probe, k, metric, signed, certificate, scanned, blocksRead) {
+  override protected def scan(it: Iterator[InternalRow], sink: DistanceSink): Unit = {
     var rows = 0L
     it.foreach { r =>
       rows += 1
       if (!r.isNullAt(1)) {
         val c = r.getBinary(1)
-        heap.offer(distance(c, 0, c.length), CodeBlocks.idAt(r, idIsInt))
+        sink.offer(distance(c, 0, c.length), CodeBlocks.idAt(r, idIsInt))
       }
     }
     count(rows, 0)
+  }
+}
+
+/** A preloaded frame planned under a code pass: a leaf over its blocks,
+  * which the pass scans with the offset kernel, never building a row.
+  * Executed on its own it yields the row view.
+  */
+case class CodeBlocksExec(output: Seq[Attribute], rows: CodeBlockRows) extends LeafExecNode {
+  override protected def stringArgs: Iterator[Any] = Iterator(s"blocks=${rows.blockCount}")
+  override protected def doExecute(): RDD[InternalRow] = rows
+}
+
+object CodePass {
+
+  /** The metrics every code pass reports. */
+  def metrics(sc: SparkContext): Map[String, SQLMetric] = Map(
+    "rowsScanned" -> SQLMetrics.createMetric(sc, "rows scanned"),
+    "blocksRead" -> SQLMetrics.createMetric(sc, "blocks read"))
+
+  /** One job over `source`'s partitions: the blocks of a [[CodeBlocksExec]],
+    * or the `(id, code)` rows of any other plan. Returns each partition's
+    * sink rows.
+    */
+  def run(sc: SparkContext, source: SparkPlan, probe: Array[Byte], k: Int, metric: Metric, qType: QType,
+          certificate: Option[Certificate], metrics: Map[String, SQLMetric]): Array[(Array[Double], Array[Long])] = {
+    val signed = qType == QType.I8
+    val (scanned, blocks) = (metrics("rowsScanned"), metrics("blocksRead"))
+    source match {
+      case b: CodeBlocksExec =>
+        sc.runJob(b.rows.blocks, new BlockPassTask(probe, k, metric, signed, certificate, scanned, blocks))
+      case rows =>
+        sc.runJob(rows.execute(), new RowPassTask(probe, k, metric, signed,
+          rows.output.head.dataType == IntegerType, certificate, scanned, blocks))
+    }
+  }
+
+  /** Every partition's rows offered to one k-slot heap. */
+  def merge(k: Int, parts: Array[(Array[Double], Array[Long])]): TopKHeap = {
+    val heap = new TopKHeap(k)
+    parts.foreach { case (ds, ids) => var i = 0; while (i < ds.length) { heap.offer(ds(i), ids(i)); i += 1 } }
+    heap
+  }
+
+  /** Sets driver-side metrics and posts them to the running query. */
+  def post(sc: SparkContext, values: (SQLMetric, Long)*): Unit = {
+    values.foreach { case (m, v) => m.set(v) }
+    SQLMetrics.postDriverMetricUpdates(sc, sc.getLocalProperty(SQLExecution.EXECUTION_ID_KEY), values.map(_._1))
   }
 }
 
@@ -208,40 +315,52 @@ object QuantTopK {
   private[ops] def args(k: Int, metric: Metric, qType: QType, more: String*): Iterator[Any] =
     (Seq(s"k=$k", s"metric=${metric.name}", s"qtype=${qType.name}") ++ more).iterator
 
+  /** `quantDF`'s analyzed `(id, code)` plan, its column types checked. */
+  private[ops] def codeSource(quantDF: DataFrame): LogicalPlan = {
+    val plan = quantDF.queryExecution.analyzed
+    val codes =
+      if (plan.output.map(_.name) == Seq("id", "code")) plan
+      else quantDF.select("id", "code").queryExecution.analyzed
+    CodeBlocks.idIsInt(codes.output.head.dataType, codes.output(1).dataType)
+    codes
+  }
+
   /** A frame over the operator: `quantDF`'s `(id, code)` columns ranked
     * against the quantized probe.
     */
   def frame(quantDF: DataFrame, probeCodes: Array[Byte], k: Int, metric: Metric, qType: QType): DataFrame = {
     val spark = quantDF.sparkSession
     Strategy.install(spark)
-    val plan = quantDF.queryExecution.analyzed
-    val child =
-      if (plan.output.map(_.name) == Seq("id", "code")) plan
-      else quantDF.select("id", "code").queryExecution.analyzed
-    CodeBlocks.idIsInt(child.output.head.dataType, child.output(1).dataType)
-    GraftColumnShim.ofRows(spark, QuantTopK(child, probeCodes, k, metric, qType))
+    GraftColumnShim.ofRows(spark, QuantTopK(codeSource(quantDF), probeCodes, k, metric, qType))
   }
 
-  /** Plans [[QuantTopK]]: a scan of the blocks when the child is a
-    * preloaded frame, a scan of the child's rows otherwise.
+  /** Plans graft's three top-k nodes: [[KnnTopK]], [[QuantTopK]] and
+    * [[CertifiedTopK]]. A code pass scans the blocks when its source is a
+    * preloaded frame and the source's rows otherwise; a projection over a
+    * rank is applied to its k rows on the driver.
     */
   object Strategy extends SparkStrategy {
     override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-      case q: QuantTopK =>
-        val blocks = q.child match {
-          case l: LogicalRDD => CodeBlocks.of(l).headOption
-          case _ => None
-        }
-        blocks match {
-          case Some(b) => QuantTopKBlocksExec(q.output, b, q.probeCodes, q.k, q.metric, q.qType) :: Nil
-          case None => QuantTopKRowsExec(q.output, q.probeCodes, q.k, q.metric, q.qType, planLater(q.child)) :: Nil
-        }
+      case t: KnnTopK => KnnTopKExec(t.order, t.k, t.output, planLater(t.child)) :: Nil
+      case Project(list, t: KnnTopK) => KnnTopKExec(t.order, t.k, list, planLater(t.child)) :: Nil
+      case q: QuantTopK => QuantTopKExec(q.output, q.probeCodes, q.k, q.metric, q.qType, source(q.child)) :: Nil
+      case c: CertifiedTopK => certified(c, c.rank) :: Nil
+      case Project(list, c: CertifiedTopK) => certified(c, Project(list, c.rank)) :: Nil
       case _ => Nil
+    }
+
+    private def certified(c: CertifiedTopK, rank: LogicalPlan): SparkPlan =
+      CertifiedTopKExec(c.probeCodes.value.asInstanceOf[Array[Byte]], c.k, c.qType, c.certificate,
+        source(c.codes), planLater(rank))
+
+    private def source(codes: LogicalPlan): SparkPlan = codes match {
+      case l: LogicalRDD => CodeBlocks.of(l).headOption.fold(planLater(l))(CodeBlocksExec(l.output, _))
+      case other => planLater(other)
     }
 
     /** Adds the strategy to a session once. Sessions built with
       * `GraftExtensions` have it already; any other session gets it from
-      * its first quantized scan.
+      * its first top-k.
       */
     def install(spark: SparkSession): Unit = synchronized {
       val e = spark.experimental
@@ -250,26 +369,17 @@ object QuantTopK {
   }
 }
 
-/** What both physical forms share: one job over the source's partitions
-  * with a named task, a k-slot heap per task, and the merge of the
-  * per-partition heaps on the driver. The result is one partition,
-  * sorted by (distance, id).
+/** [[QuantTopK]]: one code pass with a k-slot heap per task, and the
+  * merge of the per-partition heaps on the driver. The result is one
+  * partition, sorted by (distance, id).
   */
-trait QuantTopKExecLike extends SparkPlan {
-  def probeCodes: Array[Byte]
-  def k: Int
-  def metric: Metric
-  def qType: QType
+case class QuantTopKExec(output: Seq[Attribute], probeCodes: Array[Byte], k: Int, metric: Metric,
+                         qType: QType, child: SparkPlan) extends UnaryExecNode {
 
-  protected def signed: Boolean = qType == QType.I8
+  override lazy val metrics: Map[String, SQLMetric] = CodePass.metrics(sparkContext) +
+    ("numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"))
 
-  /** Runs the job: each partition's top-k. */
-  protected def partials(): Array[(Array[Double], Array[Long])]
-
-  override lazy val metrics: Map[String, SQLMetric] = Map(
-    "rowsScanned" -> SQLMetrics.createMetric(sparkContext, "rows scanned"),
-    "blocksRead" -> SQLMetrics.createMetric(sparkContext, "blocks read"),
-    "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"))
+  override protected def stringArgs: Iterator[Any] = QuantTopK.args(k, metric, qType)
 
   override def outputPartitioning: Partitioning = SinglePartition
   override def outputOrdering: Seq[SortOrder] =
@@ -277,16 +387,9 @@ trait QuantTopKExecLike extends SparkPlan {
 
   override def executeCollect(): Array[InternalRow] = {
     if (k == 0) return Array.empty
-    val heap = new TopKHeap(k)
-    partials().foreach { case (ds, ids) =>
-      var i = 0
-      while (i < ds.length) { heap.offer(ds(i), ids(i)); i += 1 }
-    }
-    val (ds, ids) = heap.drainSorted()
-    val out = longMetric("numOutputRows")
-    out += ds.length
-    SQLMetrics.postDriverMetricUpdates(sparkContext,
-      sparkContext.getLocalProperty(SQLExecution.EXECUTION_ID_KEY), Seq(out))
+    val (ds, ids) =
+      CodePass.merge(k, CodePass.run(sparkContext, child, probeCodes, k, metric, qType, None, metrics)).drainSorted()
+    CodePass.post(sparkContext, longMetric("numOutputRows") -> ds.length.toLong)
     val idIsInt = output.head.dataType == IntegerType
     val isLong = output(1).dataType == LongType
     val w = new UnsafeRowWriter(2)
@@ -299,35 +402,6 @@ trait QuantTopKExecLike extends SparkPlan {
   }
 
   override protected def doExecute(): RDD[InternalRow] = sparkContext.parallelize(executeCollect().toSeq, 1)
-}
 
-/** [[QuantTopK]] over a preloaded frame: the tasks scan its code blocks
-  * with the offset kernel, never building a row.
-  */
-case class QuantTopKBlocksExec(output: Seq[Attribute], rows: CodeBlockRows, probeCodes: Array[Byte],
-                               k: Int, metric: Metric, qType: QType)
-    extends LeafExecNode with QuantTopKExecLike {
-
-  override protected def stringArgs: Iterator[Any] =
-    QuantTopK.args(k, metric, qType, s"blocks=${rows.blockCount}")
-
-  override protected def partials(): Array[(Array[Double], Array[Long])] =
-    sparkContext.runJob(rows.blocks, new BlockTopKTask(probeCodes, k, metric, signed,
-      longMetric("rowsScanned"), longMetric("blocksRead")))
-}
-
-/** [[QuantTopK]] over any other `(id, code)` plan, an on-disk store say:
-  * the tasks scan the child's rows.
-  */
-case class QuantTopKRowsExec(output: Seq[Attribute], probeCodes: Array[Byte], k: Int,
-                             metric: Metric, qType: QType, child: SparkPlan)
-    extends UnaryExecNode with QuantTopKExecLike {
-
-  override protected def stringArgs: Iterator[Any] = QuantTopK.args(k, metric, qType, "source=rows")
-
-  override protected def partials(): Array[(Array[Double], Array[Long])] =
-    sparkContext.runJob(child.execute(), new RowTopKTask(probeCodes, k, metric, signed,
-      output.head.dataType == IntegerType, longMetric("rowsScanned"), longMetric("blocksRead")))
-
-  override protected def withNewChildInternal(newChild: SparkPlan): QuantTopKRowsExec = copy(child = newChild)
+  override protected def withNewChildInternal(newChild: SparkPlan): QuantTopKExec = copy(child = newChild)
 }

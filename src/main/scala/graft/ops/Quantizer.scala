@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 import graft.{Metric, QType, QuantParams}
-import graft.functions.{bounded_id_list, code_distance, id_set_member, quantize_codes, reference_value}
+import graft.functions.{code_distance, id_set_member, quantize_codes}
+import graft.expressions.ShortlistIds
 import graft.catalog.VectorCatalog
 import graft.kernels.Quantize
 
@@ -278,18 +279,22 @@ object Quantizer {
     * k-th smallest code distance² then every true top-k row has code
     * distance² ≤ (√T + 2B)².
     *
-    * One declarative plan, no driver action while it is built. Both code
-    * scans are [[quantStream]]`(…, "sq_l2")`: T is a scalar subquery, the
-    * largest of the k smallest code distances; the threshold
-    * ⌈(√T + 2B)²·(1 + 1e-12)⌉ (float slack: the certificate can only
-    * widen) filters the second scan into a scalar-subquery id list. The
-    * f32 store filtered by that list's hash set is the candidate frame
-    * [[Knn.fullScan]] ranks — never a join, so the f32 side is never
-    * shuffled. The threshold and the set reach generated code as
-    * reference objects, so a fresh probe compiles no new class. The list
-    * holds at most `maxBroadcastCand` ids; a certificate that admits more
-    * (collapsed codes) makes the rank an exact pass over every vector, in
-    * bounded memory.
+    * One declarative plan, [[CertifiedTopK]], run as two jobs; building
+    * it runs none. The first job is one code pass over `quantDF` (its
+    * preloaded blocks, or the rows of any other `(id, code)` frame): each
+    * task returns the rows within thr(T_p) = ⌈(√T_p + 2B)²·(1 + 1e-12)⌉ of
+    * its partition's own k-th code distance T_p (all of its rows when it
+    * has fewer than k), a superset of its share of the shortlist since
+    * the global T is at most any full partition's T_p. The driver takes
+    * the global T from the merged candidates and keeps those within
+    * thr(T) (float slack: the certificate can only widen). The second job
+    * is [[Knn.fullScan]] of the f32 rows whose id is in that shortlist —
+    * a filter, never a join, so the f32 side is never shuffled. The ids
+    * reach generated code as a reference object, so a fresh probe
+    * compiles no new class. The shortlist holds at most
+    * `maxBroadcastCand` ids; a certificate that admits more (collapsed
+    * codes) makes the rank an exact pass over every vector, and each
+    * task keeps at most max(`maxBroadcastCand` + 1, k) candidates.
     *
     * Preconditions: every stored code in-envelope — guaranteed by the
     * full rebuild and ENFORCED on appends ([[quantizeAppend]]'s default
@@ -313,15 +318,10 @@ object Quantizer {
       val d = scaled - c; d * d
     }.sum)
     val bound = 0.5 * math.sqrt(probe.length.toDouble) + ep
-    val codeD = quantStream(quantDF, probe, p, "sq_l2")
-    val kth = Knn.topK(codeD, col("distance"), col("id"), k).agg(max(col("distance"))).scalar()
-    // pow(s, 2.0) rather than s * s names the subquery once; Spark's
-    // StrictMath.pow(s, 2.0) returns exactly s * s
-    val thr = reference_value(
-      ceil(pow(sqrt(kth.cast("double")) + lit(2.0 * bound), 2.0) * lit(1.0 + 1e-12)))
     val cap = math.min(math.max(maxBroadcastCand, 0L), Int.MaxValue - 1L).toInt
-    val shortlist = codeD.where(col("distance") <= thr).agg(bounded_id_list(col("id"), cap)).scalar()
-    Knn.fullScan(base.where(id_set_member(col(idCol), shortlist)), idCol, vecCol, probe, k, metric)
+    val shortlist = ShortlistIds()
+    val rank = Knn.fullScan(base.where(id_set_member(col(idCol), shortlist)), idCol, vecCol, probe, k, metric)
+    CertifiedTopK.frame(quantDF, rank, qprobe, k, p.qType, Certificate(bound, cap))
   }
 
   /** K4 `vector_quantize_scan_stream`: code-space distances, no sort/limit.

@@ -35,8 +35,7 @@ private[graft] final class TableFunction(name: String, signature: String,
   * scalars, lifecycle functions and scan modules from one entry point
   * (sqlite-vector.c:2581-2597). [[GraftTableFunctions.register]],
   * [[graft.functions.registerSql]] and [[GraftExtensions]] all install
-  * it, with the lifecycle statement rewrite and the quantized top-k
-  * strategy.
+  * it, with the lifecycle statement rewrite and the top-k strategy.
   */
 private[graft] object SqlRegistry {
 
@@ -45,10 +44,10 @@ private[graft] object SqlRegistry {
     case other => throw new IllegalArgumentException(s"$what must be a string literal, got $other")
   }
 
+  /** An integer literal of any type, or its text, within the int range. */
   def intArg(e: Expression, what: String): Int = e match {
-    case Literal(l: Long, LongType) => l.toInt
-    case Literal(v, _) if v != null => v.toString.toInt
-    case other => throw new IllegalArgumentException(s"$what must be an integer literal, got $other")
+    case Literal(v, _) if v != null && v.toString.toLongOption.exists(_.isValidInt) => v.toString.toInt
+    case other => throw new IllegalArgumentException(s"$what must be an integer literal in int range, got $other")
   }
 
   def doubleArg(e: Expression, what: String): Double = e match {
@@ -140,13 +139,19 @@ private[graft] object SqlRegistry {
 
   /** Runtime registration on a live session (the `CREATE FUNCTION`
     * path); the experimental hooks add the rule and the strategy that
-    * `inject` adds at session build.
+    * `inject` adds at session build. A function whose registered builder
+    * is already this table's is left as it is, so a repeated call
+    * replaces nothing.
     */
   def register(spark: SparkSession): Unit = {
     val (fns, tfns) = (spark.sessionState.functionRegistry, spark.sessionState.tableFunctionRegistry)
+    def installed(f: SqlFunction[_], builder: Option[Seq[Expression] => Any]) = builder.exists(_ eq f.builder)
     all.foreach {
-      case f: ScalarFunction => fns.createOrReplaceTempFunction(f.name, f.builder, "scala_udf")
-      case f: TableFunction => tfns.createOrReplaceTempFunction(f.name, f.builder, "scala_udf")
+      case f: ScalarFunction if !installed(f, fns.lookupFunctionBuilder(FunctionIdentifier(f.name))) =>
+        fns.createOrReplaceTempFunction(f.name, f.builder, "scala_udf")
+      case f: TableFunction if !installed(f, tfns.lookupFunctionBuilder(FunctionIdentifier(f.name))) =>
+        tfns.createOrReplaceTempFunction(f.name, f.builder, "scala_udf")
+      case _ =>
     }
     val e = spark.experimental
     if (!e.extraOptimizations.contains(LifecycleExecutionRule))

@@ -13,11 +13,10 @@ import graft.ops.{Knn, Quantizer}
 /** The reference's table-valued-function query surface in SQL
   * (`FROM vector_full_scan('t','c',probe,k)` — sqlite-vector.c:2377-2487,
   * API.md:212-261), realized as Catalyst table functions that expand to
-  * the Scala API's own plan over the registered table: Project(distance)
-  * → Sort → Limit for the full scan, which Catalyst plans as
-  * TakeOrderedAndProject over a codegen'd scan, and the
-  * [[graft.ops.QuantTopK]] operator for the quantized scan — the TVF adds
-  * SQL ergonomics, not a new physical path.
+  * the Scala API's own plan over the registered table: the
+  * [[graft.ops.KnnTopK]] rank over a codegen'd distance projection for
+  * the full scan, and the [[graft.ops.QuantTopK]] operator for the
+  * quantized scan — the TVF adds SQL ergonomics, not a new physical path.
   *
   * Like the reference, the (table, column) pair must be registered first
   * (`vector_init` ≙ VectorCatalog.init, which also resolves the id column
@@ -95,9 +94,9 @@ object GraftTableFunctions {
     * licenses an optimizer to make the choice silently.
     *
     * Both branches return the Scala API's plan: one copy of the bound,
-    * the shortlist cap and the probe check. The certified plan's k-th
-    * code distance and shortlist are scalar subqueries, so EXPLAIN shows
-    * both stages.
+    * the shortlist cap and the probe check. The certified plan is one
+    * [[graft.ops.CertifiedTopK]] node over the code pass and the exact
+    * rank, so EXPLAIN shows both stages.
     */
   private[sql] def autoScan(s: ScanCall): LogicalPlan =
     VectorCatalog.quantParams(s.table, s.column) match {

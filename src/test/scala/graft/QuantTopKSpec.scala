@@ -37,7 +37,7 @@ class QuantTopKSpec extends AnyFunSuite {
 
   private def rows(df: DataFrame): Seq[Row] = df.collect().toSeq
 
-  private def nodes(df: DataFrame) = df.queryExecution.executedPlan.collect { case e: QuantTopKExecLike => e }
+  private def nodes(df: DataFrame) = df.queryExecution.executedPlan.collect { case e: QuantTopKExec => e }
 
   private def metric(df: DataFrame, name: String): Long = nodes(df).map(_.metrics(name).value).sum
 

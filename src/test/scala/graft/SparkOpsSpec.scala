@@ -204,11 +204,11 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(!rows.exists(_.isNullAt(1)), rows.take(3).mkString(", "))
     }
 
-  test("flagship plan shapes: TakeOrderedAndProject, broadcast join-back, column pruning") {
+  test("flagship plan shapes: KnnTopK, broadcast join-back, column pruning") {
     val knn = Knn.fullScan(emb, "vec_id", "embedding", probe, 10, "l2")
     val plan = knn.queryExecution.executedPlan.toString
     // top-k must fuse to per-partition bounded heaps + driver merge, never a global sort
-    assert(plan.contains("TakeOrderedAndProject"), plan)
+    assert(plan.contains("KnnTopK"), plan)
     // join-back of k rows must broadcast, never shuffle the base table
     val joined = Knn.joinBack(knn, spark.read.parquet(s"$sfDir/documents.parquet"), "vec_id", "doc_id")
     assert(joined.queryExecution.executedPlan.toString.contains("BroadcastHashJoin"))
@@ -219,12 +219,12 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(scan.requiredSchema.fieldNames.toSet == Set("vec_id", "embedding"))
     // every rerank broadcasts its shortlist into the full-precision frame:
     // a BroadcastHashJoin built from the shortlist's top-k, a
-    // TakeOrderedAndProject, and no SortMergeJoin anywhere
-    import org.apache.spark.sql.execution.{SparkPlan, TakeOrderedAndProjectExec}
+    // KnnTopK, and no SortMergeJoin anywhere
+    import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
     import org.apache.spark.sql.catalyst.optimizer.BuildLeft
     object H extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-    def isTopK(n: SparkPlan) = n.isInstanceOf[TakeOrderedAndProjectExec]
+    def isTopK(n: SparkPlan) = n.isInstanceOf[KnnTopKExec]
     val e = emb.where(col("embedding").isNotNull)
     val cb = Pq.codebook(e, "vec_id", "embedding", Queries.Dim, 8, 16)
     val cents = Ann.ivfCentroids(e, "vec_id", "embedding", 16)
@@ -1189,12 +1189,12 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(uncapped.collect().count(r => r.getLong(2) >= 100000L) > 0)
   }
 
-  test("binary Hamming top-k plans as one exchange-free TakeOrderedAndProject scan") {
+  test("binary Hamming top-k plans as one exchange-free KnnTopK scan") {
     val sigs = BinaryQuant.signatures(emb, "vec_id", "embedding", Queries.Dim)
     val q = BinaryQuant.hammingTopK(sigs, "vec_id", probe, Queries.Dim, 10)
     q.collect()
     val plan = q.queryExecution.executedPlan.toString
-    assert(plan.contains("TakeOrderedAndProject"), plan)
+    assert(plan.contains("KnnTopK"), plan)
     assert(!plan.contains("Exchange"), plan)
   }
 
@@ -1653,6 +1653,61 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .collect().map(_.getLong(0)).toSeq == Seq(2L))
   }
 
+  test("SQL registry: a bigint k outside the int range fails instead of wrapping") {
+    graft.sql.GraftTableFunctions.register(spark)
+    Seq((1L, Seq(1f, 0f)), (2L, Seq(0f, 1f)), (3L, Seq(1f, 1f))).toDF("id", "v").createOrReplaceTempView("wrap_t")
+    catalog.VectorCatalog.init("wrap_t", "v", VectorConfig(2, idCol = "id"))
+    for (k <- Seq("4294967297", "4294967298", "-4294967295")) {
+      val e = intercept[IllegalArgumentException](
+        spark.sql(s"SELECT * FROM vector_full_scan('wrap_t', 'v', '[1,0]', $k)").collect())
+      assert(e.getMessage.contains("k must be an integer literal in int range"), e.getMessage)
+    }
+    assert(spark.sql("SELECT * FROM vector_full_scan('wrap_t', 'v', '[1,0]', 2L)").count() == 2)
+  }
+
+  test("SQL registry: a repeated register replaces no function and logs no WARN") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.{Configurator, Property}
+    val s = spark.newSession()
+    graft.sql.GraftTableFunctions.register(s)
+    val warned = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("registry-replaced", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = warned.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val names = Seq(s.sessionState.functionRegistry, s.sessionState.tableFunctionRegistry)
+      .map(_.getClass.getName.stripSuffix("$"))
+    val levels = names.map(n => LogManager.getLogger(n).getLevel)
+    names.foreach { n =>
+      Configurator.setLevel(n, Level.WARN)
+      ctx.getConfiguration.getLoggerConfig(n).addAppender(appender, Level.WARN, null)
+    }
+    ctx.updateLoggers()
+    try {
+      // the probe hears a replacement: without it an empty log proves nothing
+      val fns = s.sessionState.functionRegistry
+      fns.createOrReplaceTempFunction("vector_version",
+        fns.lookupFunctionBuilder(org.apache.spark.sql.catalyst.FunctionIdentifier("vector_version")).get, "scala_udf")
+      assert(warned.size == 1, warned)
+      warned.clear()
+      graft.sql.GraftTableFunctions.register(s)
+      graft.functions.registerSql(s)
+    } finally names.zip(levels).foreach { case (n, lv) =>
+      ctx.getConfiguration.getLoggerConfig(n).removeAppender(appender.getName)
+      Configurator.setLevel(n, lv)
+    }
+    assert(warned.isEmpty, warned)
+    assert(s.sql("SELECT vector_distance(vector_as_f32('[1,2]'), vector_as_f32('[1,3]'), 'l2')")
+      .head().getDouble(0) == 1.0)
+    s.createDataFrame(Seq((1L, Seq(1f, 0f)), (2L, Seq(0f, 1f)))).toDF("id", "v").createOrReplaceTempView("rereg_t")
+    catalog.VectorCatalog.init("rereg_t", "v", VectorConfig(2, idCol = "id"))
+    assert(s.sql("SELECT id FROM vector_full_scan('rereg_t', 'v', '[0,1]', 1)").collect().map(_.getLong(0)).toSeq ==
+      Seq(2L))
+  }
+
   test("SQL TVF surface: vector_full_scan / vector_quantize_scan in pure SQL") {
     emb.createOrReplaceTempView("emb_tvf")
     catalog.VectorCatalog.init("emb_tvf", "embedding", VectorConfig(64, idCol = "vec_id"))
@@ -1661,7 +1716,7 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val tvfDf = spark.sql(
       s"SELECT id, distance FROM vector_full_scan('emb_tvf', 'embedding', '$probeJson', 5)")
     // the TVF expands to the same fused top-k physical plan as the DataFrame API
-    assert(tvfDf.queryExecution.executedPlan.toString.contains("TakeOrderedAndProject"))
+    assert(tvfDf.queryExecution.executedPlan.toString.contains("KnnTopK"))
     val got = tvfDf.collect().map(_.getLong(0)).toSeq
     val want = Knn.fullScan(emb, "vec_id", "embedding", probe, 5, "l2")
       .collect().map(_.getLong(0)).toSeq
@@ -3312,21 +3367,21 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     def ids(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.getLong(0)).toSeq
     val exact = ids(Knn.fullScan(e, "vec_id", "embedding", probe, 10, "l2"))
 
-    // not quantized -> brute-force expansion, no subquery in the plan
+    // not quantized -> brute-force expansion, no certificate in the plan
     graft.catalog.VectorCatalog.dropQuantParams("auto_emb", "embedding")
     val full = spark.sql(q)
-    assert(!full.queryExecution.optimizedPlan.toString.contains("scalar-subquery"))
+    assert(!full.queryExecution.optimizedPlan.toString.contains("CertifiedTopK"))
     assert(ids(full) == exact)
 
-    // quantized -> certified expansion: scalar-subquery threshold over the
-    // code view, same exact results
+    // quantized -> certified expansion: a code pass over the code view
+    // shortlists the exact rank, same exact results
     val p = Quantizer.computeParams(e, "embedding")
     Quantizer.quantizeCodes(e, "vec_id", "embedding", p)
       .createOrReplaceTempView("vector0_auto_emb_embedding")
     graft.catalog.VectorCatalog.putQuantParams("auto_emb", "embedding", p)
     val cert = spark.sql(q)
     val plan = cert.queryExecution.optimizedPlan.toString
-    assert(plan.contains("scalar-subquery"), s"expected certified plan, got:\n$plan")
+    assert(plan.contains("CertifiedTopK"), s"expected certified plan, got:\n$plan")
     assert(ids(cert) == exact)
 
     // a NaN lane in the JSON probe takes the full scan, like the Scala API
