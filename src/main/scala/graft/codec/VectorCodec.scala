@@ -9,6 +9,9 @@ import graft.ElemType
   */
 object VectorCodec {
 
+  /** The one packer: the probes' literals, and `PackVector` from
+    * `eval` and generated code alike.
+    */
   def pack(v: Array[Float], et: ElemType): Array[Byte] = {
     val out = new Array[Byte](v.length * et.bytesPerElem)
     val bb = ByteBuffer.wrap(out).order(ByteOrder.LITTLE_ENDIAN)
@@ -20,35 +23,6 @@ object VectorCodec {
       case ElemType.U8   => var i = 0; while (i < v.length) { bb.put((v(i).toInt & 0xff).toByte); i += 1 }
     }
     out
-  }
-
-  /** Codegen entry point (PackVector.doGenCode): pack straight from the
-    * ArrayData without materializing an Array[Float]. Type id per
-    * Distances.typeId.
-    */
-  def packArrayData(ad: org.apache.spark.sql.catalyst.util.ArrayData, typeId: Int): Array[Byte] = {
-    val n = ad.numElements()
-    typeId match {
-      case 0 =>
-        val out = new Array[Byte](n * 4)
-        val bb = ByteBuffer.wrap(out).order(ByteOrder.LITTLE_ENDIAN)
-        var i = 0; while (i < n) { bb.putFloat(ad.getFloat(i)); i += 1 }; out
-      case 1 =>
-        val out = new Array[Byte](n * 2)
-        val bb = ByteBuffer.wrap(out).order(ByteOrder.LITTLE_ENDIAN)
-        var i = 0; while (i < n) { bb.putShort(Fp16.floatToF16(ad.getFloat(i))); i += 1 }; out
-      case 2 =>
-        val out = new Array[Byte](n * 2)
-        val bb = ByteBuffer.wrap(out).order(ByteOrder.LITTLE_ENDIAN)
-        var i = 0; while (i < n) { bb.putShort(Fp16.floatToBf16(ad.getFloat(i))); i += 1 }; out
-      case 3 =>
-        val out = new Array[Byte](n)
-        var i = 0; while (i < n) { out(i) = ad.getFloat(i).toByte; i += 1 }; out
-      case 4 =>
-        val out = new Array[Byte](n)
-        var i = 0; while (i < n) { out(i) = (ad.getFloat(i).toInt & 0xff).toByte; i += 1 }; out
-      case other => throw new IllegalArgumentException(s"bad typeId $other")
-    }
   }
 
   def unpack(b: Array[Byte], et: ElemType): Array[Float] = {

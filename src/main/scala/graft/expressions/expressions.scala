@@ -79,7 +79,8 @@ case class PackedVectorDistance(left: Expression, right: Expression, metric: Met
 /** `pack_vector(v)` — canonical `array<float>` → packed little-endian BLOB
   * of the target element type (the reference's storage form,
   * sqlite-vector.c:1663-1675; f16/bf16 conversion distance-cpu.h:100-128).
-  * Codegen'd via a static helper taking the ArrayData directly.
+  * Both paths copy the array out and call [[VectorCodec.pack]]; generated
+  * code reads the ElemType case object as a reference object.
   */
 case class PackVector(child: Expression, target: ElemType)
     extends UnaryExpression with ExpectsInputTypes {
@@ -91,12 +92,12 @@ case class PackVector(child: Expression, target: ElemType)
   override def prettyName: String = s"pack_vector_${target.name.toLowerCase}"
 
   override def nullSafeEval(v: Any): Any =
-    VectorCodec.packArrayData(v.asInstanceOf[ArrayData], Distances.typeId(target))
+    VectorCodec.pack(v.asInstanceOf[ArrayData].toFloatArray(), target)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val tId = Distances.typeId(target)
+    val etRef = ctx.addReferenceObj("elemType", target, classOf[ElemType].getName)
     nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.codec.VectorCodec.packArrayData($c, $tId);")
+      s"${ev.value} = graft.codec.VectorCodec.pack($c.toFloatArray(), $etRef);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -139,10 +140,7 @@ case class QuantizeCodes(child: Expression, scale: Double, offset: Double, isU8:
 case class CodeDistance(left: Expression, right: Expression, metric: Metric, signed: Boolean)
     extends BinaryExpression {
 
-  override def dataType: DataType = metric match {
-    case Metric.Cosine | Metric.L2 => DoubleType
-    case _                         => LongType
-  }
+  override def dataType: DataType = graft.ops.QuantTopK.distanceType(metric)
   override def prettyName: String = "code_distance"
 
   private val mId = Distances.metricId(metric)

@@ -18,12 +18,21 @@ import graft.codec.Fp16
   * accumulators (:470-693); float32 accumulates in float. The callers'
   * 8·FLT_EPSILON zero clamp (sqlite-vector.c:994-996) is `zeroClamp`.
   *
-  * Each (metric × type) kernel exists once. The Catalyst expressions reach
-  * them through the `…J` entry points with constant ids, from generated
-  * code and from `eval` alike, so a SIMD backend replaces one function
-  * per kernel. The reference dispatches to AVX2/SSE2/NEON hand-kernels at
-  * load (distance-cpu.c:797-812); these are scalar loops left to the JIT,
-  * which `backend()` reports.
+  * Each (metric × type) kernel exists once: `f32Packed` for packed f32,
+  * `withHalf` for f16/bf16, `intKernel` for i8/u8, and `l2Double` …
+  * `cosineDouble` for `array<float>` in double. `sqL2Double` is also the
+  * squared-L2 loop of [[Sketches.centroidDistances]] and
+  * [[Sketches.nearestCentroid]]. The cosine finish is written twice, once
+  * for the float kernels and once for the double-accumulating ones. The
+  * `Array[Float]` kernels `l2F32` … `cosineF32` stay as the reference the
+  * packed f32 kernels are checked against bit for bit (KernelProps).
+  *
+  * The Catalyst expressions reach the kernels through the `…J` entry
+  * points with constant ids, from generated code and from `eval` alike, so
+  * a SIMD backend replaces one function per kernel. The reference
+  * dispatches to AVX2/SSE2/NEON hand-kernels at load
+  * (distance-cpu.c:797-812); these are scalar loops left to the JIT, which
+  * `backend()` reports.
   */
 object Distances {
 
@@ -65,13 +74,19 @@ object Distances {
   def cosineF32(a: Array[Float], b: Array[Float]): Float = {
     var dot = 0f; var na = 0f; var nb = 0f; var i = 0
     while (i < a.length) { dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }
+    cosineFinish(dot, na, nb)
+  }
+
+  /** The float kernels' cosine finish: 1.0 on a zero norm or a non-finite
+    * ratio, else 1 − the ratio clamped to [−1, 1].
+    */
+  private def cosineFinish(dot: Float, na: Float, nb: Float): Float =
     if (na == 0f || nb == 0f) 1.0f
     else {
       val c = dot / (math.sqrt(na.toDouble) * math.sqrt(nb.toDouble)).toFloat
       if (c.isNaN || c.isInfinite) 1.0f
       else 1.0f - math.max(-1.0f, math.min(1.0f, c))
     }
-  }
 
   // ---------- f32 kernels on packed bytes (no per-row unpack allocation) ----------
 
@@ -117,12 +132,7 @@ object Distances {
           val x = f32At(a, i); val y = f32At(b, i)
           dot += x * y; na += x * x; nb += y * y; i += 1
         }
-        if (na == 0f || nb == 0f) 1.0f
-        else {
-          val c = dot / (math.sqrt(na.toDouble) * math.sqrt(nb.toDouble)).toFloat
-          if (c.isNaN || c.isInfinite) 1.0f
-          else 1.0f - math.max(-1.0f, math.min(1.0f, c))
-        }
+        cosineFinish(dot, na, nb)
     }
   }
 
@@ -166,11 +176,7 @@ object Distances {
           if (!(x.isNaN || y.isNaN)) { dot += x * y; na += x * x; nb += y * y }
           i += 1
         }
-        if (na == 0.0 || nb == 0.0) 1.0f
-        else {
-          val c = dot / (math.sqrt(na) * math.sqrt(nb))
-          if (c.isNaN || c.isInfinite) 1.0f else (1.0 - math.max(-1.0, math.min(1.0, c))).toFloat
-        }
+        cosineFinish(dot, na, nb).toFloat
     }
   }
 
@@ -229,11 +235,7 @@ object Distances {
       val x = at(a, i, signed); val y = at(b, j, signed)
       dot += x.toLong * y; na += x.toLong * x; nb += y.toLong * y; i += 1; j += 1
     }
-    if (na == 0L || nb == 0L) 1.0
-    else {
-      val c = dot.toDouble / (math.sqrt(na.toDouble) * math.sqrt(nb.toDouble))
-      1.0 - math.max(-1.0, math.min(1.0, c))
-    }
+    cosineFinish(dot.toDouble, na.toDouble, nb.toDouble)
   }
 
   // Stable integer ids so generated Java code can bake the dispatch into a
@@ -312,12 +314,20 @@ object Distances {
       val x = a(i).toDouble; val y = b(i).toDouble
       dot += x * y; na += x * x; nb += y * y; i += 1
     }
+    cosineFinish(dot, na, nb)
+  }
+
+  /** The double-accumulating kernels' cosine finish (f16/bf16, i8/u8 and
+    * [[cosineDouble]]): 1.0 on a zero norm or a non-finite ratio, else
+    * 1 − the ratio clamped to [−1, 1]. An integer kernel's non-zero norms
+    * are at least 1, so its ratio is always finite.
+    */
+  private def cosineFinish(dot: Double, na: Double, nb: Double): Double =
     if (na == 0.0 || nb == 0.0) 1.0
     else {
       val c = dot / (math.sqrt(na) * math.sqrt(nb))
       if (c.isNaN || c.isInfinite) 1.0 else 1.0 - math.max(-1.0, math.min(1.0, c))
     }
-  }
 
   def onDouble(metric: Metric)(a: Array[Float], b: Array[Float]): Double = metric match {
     case Metric.L2        => l2Double(a, b)

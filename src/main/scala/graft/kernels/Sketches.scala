@@ -74,15 +74,10 @@ object Sketches {
     * pigeonhole blocking stays exact.
     */
   def tokenHash63(t: String): Long = {
-    var h1 = 0L; var h2 = 0L; var i = 0
-    while (i < t.length) {
-      val c = t.charAt(i).toInt
-      h1 = (h1 * 31 + c) % 1000000007L
-      h2 = (h2 * 131 + c) % 2147483647L
-      i += 1
-    }
-    val g1 = (h1 * 2654435761L) % 2147483648L
-    val g2 = (h2 * 2246822519L) % 4294967296L
+    // h1 and h2 are the two residues of tokenHash61 (h2 < 2^31)
+    val h = tokenHash61(t)
+    val g1 = ((h >>> 31) * 2654435761L) % 2147483648L
+    val g2 = ((h & 0x7fffffffL) * 2246822519L) % 4294967296L
     g1 * 4294967296L + g2
   }
 
@@ -256,129 +251,81 @@ object Sketches {
 
   /** Gaussian random projection (Johnson-Lindenstrauss): out_b =
     * dot(v, plane_b) · scale, scale = 1/√outDim so expected pairwise
-    * L2 distances are preserved. ONE traversal of the vector; per-plane
-    * accumulation is sequential in element order (the same order an SQL
-    * list_sum restatement uses). Static entry point for generated code.
+    * L2 distances are preserved. Static entry point for generated code.
     */
-  def project(v: ArrayData, planes: Array[Array[Double]], scale: Double): ArrayData = {
-    require(v.numElements() == planes(0).length,
-      s"vector dim ${v.numElements()} != plane dim ${planes(0).length}")
-    val nb = planes.length
-    val acc = new Array[Double](nb)
-    val n = v.numElements()
-    var i = 0
-    while (i < n) {
-      if (v.isNullAt(i)) throw new IllegalArgumentException(
-        s"random_projection: NULL lane at index $i (vectors must be dense)")
-      val x = v.getFloat(i).toDouble
-      var b = 0
-      while (b < nb) { acc(b) += x * planes(b)(i); b += 1 }
-      i += 1
-    }
-    val out = new Array[Any](nb)
-    var b = 0
-    while (b < nb) { out(b) = acc(b) * scale; b += 1 }
-    new GenericArrayData(out)
-  }
+  def project(v: ArrayData, planes: Array[Array[Double]], scale: Double): ArrayData =
+    new GenericArrayData(planeDots("vector", denseLanes(v, "random_projection"), planes).map(_ * scale))
 
-  /** Hyperplane signature: bit b set iff dot(v, plane_b) > 0. ONE traversal
-    * of the vector; per-plane accumulation is sequential in element order
-    * (the same order an SQL list_sum restatement uses). Static entry point
-    * for generated code.
+  /** Hyperplane signature: bit b set iff dot(v, plane_b) > 0. Static entry
+    * point for generated code.
     */
-  def hyperplaneSig(v: ArrayData, planes: Array[Array[Double]]): Long = {
-    require(v.numElements() == planes(0).length,
-      s"vector dim ${v.numElements()} != plane dim ${planes(0).length}")
-    val nb = planes.length
-    val acc = new Array[Double](nb)
-    val n = v.numElements()
-    var i = 0
-    while (i < n) {
-      // fail fast: a NULL lane would silently read as 0.0 through getFloat
-      // and diverge from any SQL restatement's NULL propagation
-      if (v.isNullAt(i)) throw new IllegalArgumentException(
-        s"hyperplane_signature: NULL lane at index $i (vectors must be dense)")
-      val x = v.getFloat(i).toDouble
-      var b = 0
-      while (b < nb) {
-        acc(b) += x * planes(b)(i)
-        b += 1
-      }
-      i += 1
-    }
-    var sig = 0L
-    var b = 0
-    while (b < nb) { if (acc(b) > 0.0) sig |= 1L << b; b += 1 }
-    sig
-  }
+  def hyperplaneSig(v: ArrayData, planes: Array[Array[Double]]): Long =
+    positiveBits(planeDots("vector", denseLanes(v, "hyperplane_signature"), planes))
 
-  /** Nearest centroid by squared L2 (sequential double accumulation, ties
-    * to the lowest index). Static entry point for generated code.
-    */
-  def nearestCentroid(v: ArrayData, centroids: Array[Array[Float]]): Int = {
-    // fail fast on dimension drift — a truncated comparison would assign a
-    // confidently wrong cell and silently pollute the IVF store
-    require(v.numElements() == centroids(0).length,
-      s"vector dim ${v.numElements()} != centroid dim ${centroids(0).length}")
-    var j = 0
-    while (j < v.numElements()) {
-      // fail fast: a NULL lane would silently read as 0.0 through getFloat
-      // and assign a confidently wrong cell
-      if (v.isNullAt(j)) throw new IllegalArgumentException(
-        s"nearest_centroid: NULL lane at index $j (vectors must be dense)")
-      j += 1
-    }
-    var best = 0
-    var bestD = Double.PositiveInfinity
-    var c = 0
-    while (c < centroids.length) {
-      val ct = centroids(c)
-      var acc = 0.0
-      var i = 0
-      while (i < ct.length) {
-        val d = v.getFloat(i).toDouble - ct(i).toDouble
-        acc += d * d
-        i += 1
-      }
-      if (acc < bestD) { bestD = acc; best = c }
-      c += 1
-    }
-    best
-  }
+  /** Driver-side signature of a probe vector. */
+  def hyperplaneSig(v: Array[Float], planes: Array[Array[Double]]): Long =
+    positiveBits(planeDots("probe", v, planes))
 
-  /** Driver-side variant for the probe vector: squared-L2 to every
-    * centroid, same arithmetic as the expression path.
+  /** dot(v, plane_b) for every plane, each summed sequentially in lane
+    * order in double (the order an SQL list_sum restatement uses).
     */
-  def centroidDistances(v: Array[Float], centroids: Array[Array[Float]]): Array[Double] = {
-    require(v.length == centroids(0).length,
-      s"probe dim ${v.length} != centroid dim ${centroids(0).length}")
-    centroids.map { ct =>
-      var acc = 0.0
-      var i = 0
-      while (i < ct.length) {
-        val d = v(i).toDouble - ct(i).toDouble
-        acc += d * d
-        i += 1
-      }
+  private def planeDots(what: String, v: Array[Float], planes: Array[Array[Double]]): Array[Double] = {
+    require(v.length == planes(0).length,
+      s"$what dim ${v.length} != plane dim ${planes(0).length}")
+    planes.map { p =>
+      var acc = 0.0; var i = 0
+      while (i < p.length) { acc += v(i).toDouble * p(i); i += 1 }
       acc
     }
   }
 
-  /** Driver-side signature of a probe vector. */
-  def hyperplaneSig(v: Array[Float], planes: Array[Array[Double]]): Long = {
-    require(v.length == planes(0).length,
-      s"probe dim ${v.length} != plane dim ${planes(0).length}")
-    var sig = 0L
-    var b = 0
-    while (b < planes.length) {
-      val p = planes(b)
-      var acc = 0.0
-      var i = 0
-      while (i < p.length) { acc += v(i).toDouble * p(i); i += 1 }
-      if (acc > 0.0) sig |= 1L << b
-      b += 1
-    }
+  private def positiveBits(dots: Array[Double]): Long = {
+    var sig = 0L; var b = 0
+    while (b < dots.length) { if (dots(b) > 0.0) sig |= 1L << b; b += 1 }
     sig
+  }
+
+  /** Nearest centroid by squared L2: the first argmin of
+    * [[centroidDistances]], so ties go to the lowest index. Static entry
+    * point for generated code.
+    */
+  def nearestCentroid(v: ArrayData, centroids: Array[Array[Float]]): Int = {
+    val d = sqL2ToEach("vector", denseLanes(v, "nearest_centroid"), centroids)
+    var best = 0; var bestD = Double.PositiveInfinity; var c = 0
+    while (c < d.length) { if (d(c) < bestD) { bestD = d(c); best = c }; c += 1 }
+    best
+  }
+
+  /** Driver-side variant for the probe vector: squared L2 to every
+    * centroid, same arithmetic as the expression path.
+    */
+  def centroidDistances(v: Array[Float], centroids: Array[Array[Float]]): Array[Double] =
+    sqL2ToEach("probe", v, centroids)
+
+  /** [[Distances.sqL2Double]] to each centroid. A dimension drift fails
+    * fast: a truncated comparison would assign a confidently wrong cell
+    * and silently pollute the IVF store.
+    */
+  private def sqL2ToEach(what: String, v: Array[Float], centroids: Array[Array[Float]]): Array[Double] = {
+    require(centroids.nonEmpty, "at least one centroid required")
+    require(v.length == centroids(0).length,
+      s"$what dim ${v.length} != centroid dim ${centroids(0).length}")
+    centroids.map(Distances.sqL2Double(v, _))
+  }
+
+  /** The lanes of a row's vector, copied once. A NULL lane fails fast:
+    * it would read as 0.0 and diverge from any SQL restatement's NULL
+    * propagation. The check runs before the copy, which would not see it.
+    */
+  private def denseLanes(v: ArrayData, fn: String): Array[Float] = {
+    val n = v.numElements()
+    var i = 0
+    while (i < n) {
+      if (v.isNullAt(i)) throw new IllegalArgumentException(
+        s"$fn: NULL lane at index $i (vectors must be dense)")
+      i += 1
+    }
+    v.toFloatArray()
   }
 
   /** One BPE merge round over a symbol array: replace every non-overlapping

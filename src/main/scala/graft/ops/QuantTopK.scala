@@ -306,6 +306,10 @@ object QuantTopK {
   def apply(child: LogicalPlan, probeCodes: Array[Byte], k: Int, metric: Metric, qType: QType): QuantTopK =
     QuantTopK(child, probeCodes, math.max(k, 0), metric, qType, NamedExpression.newExprId)
 
+  /** The type of a code distance, the operator's column and
+    * [[graft.expressions.CodeDistance]]'s alike: exact Long sums for L2²,
+    * L1 and dot, Double for L2 and cosine.
+    */
   def distanceType(m: Metric): DataType = m match {
     case Metric.Cosine | Metric.L2 => DoubleType
     case _ => LongType

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -34,18 +34,7 @@ object Quantizer {
     * (sqlite-vector.c:1258-1272); empty input → (U8, 1, 0) (:1172-1178).
     */
   def computeParams(df: DataFrame, vecCol: String, qType: QType = QType.Auto): QuantParams = {
-    val nonNull = df.where(col(vecCol).isNotNull)
-    // NaN lanes are skipped like the reference's min/max loop (ordinary
-    // comparisons never select NaN, sqlite-vector.c:1250-1255). ArrayMinMax
-    // does the skip and both extrema in ONE codegen'd traversal — Spark's
-    // array_min/array_max would need a NaN pre-filter pass and a second
-    // traversal per extremum.
-    val row = nonNull.select(graft.functions.array_min_max(col(vecCol)).as("mm"))
-      .agg(
-        min(col("mm.mn")).as("mn"),
-        max(col("mm.mx")).as("mx"),
-        count(lit(1)).as("rows")
-      ).head()
+    val row = extrema(df, vecCol)
     val rows = row.getLong(2)
     if (rows == 0 || row.isNullAt(0)) Quantize.params(qType, 0.0, 0.0, hasNegative = false, rows max 0L)
     else {
@@ -53,6 +42,22 @@ object Quantizer {
       Quantize.params(qType, mn, mx, hasNegative = mn < 0.0, rows)
     }
   }
+
+  /** One aggregation job: (min, max, rows) over the non-NULL vectors, the
+    * extrema NULL when no lane is valid. NaN lanes are skipped like the
+    * reference's min/max loop (ordinary comparisons never select NaN,
+    * sqlite-vector.c:1250-1255). ArrayMinMax does the skip and both
+    * extrema in ONE codegen'd traversal — Spark's array_min/array_max
+    * would need a NaN pre-filter pass and a second traversal per extremum.
+    */
+  private def extrema(df: DataFrame, vecCol: String): Row =
+    df.where(col(vecCol).isNotNull)
+      .select(graft.functions.array_min_max(col(vecCol)).as("mm"))
+      .agg(
+        min(col("mm.mn")).as("mn"),
+        max(col("mm.mx")).as("mx"),
+        count(lit(1)).as("rows")
+      ).head()
 
   /** Pass 2: project (id, code) through the codegen'd expression. */
   def quantizeCodes(df: DataFrame, idCol: String, vecCol: String, p: QuantParams): DataFrame =
@@ -199,15 +204,12 @@ object Quantizer {
   }
 
   /** Global (min, max) over every lane of every vector in the wave — the
-    * same NaN-skipping single-traversal `array_min_max` aggregation as
-    * [[computeParams]] pass 1; shuffles two doubles per partition. An
-    * empty / all-null wave returns the degenerate (+Inf, −Inf), which is
-    * inside every envelope (an empty append never drifts).
+    * extrema pass of [[computeParams]] pass 1. An empty / all-null wave
+    * returns the degenerate (+Inf, −Inf), which is inside every envelope
+    * (an empty append never drifts).
     */
   def waveExtrema(df: DataFrame, vecCol: String): (Double, Double) = {
-    val row = df.where(col(vecCol).isNotNull)
-      .select(graft.functions.array_min_max(col(vecCol)).as("mm"))
-      .agg(min(col("mm.mn")).as("mn"), max(col("mm.mx")).as("mx")).head()
+    val row = extrema(df, vecCol)
     if (row.isNullAt(0)) (Double.PositiveInfinity, Double.NegativeInfinity)
     else (row.getDouble(0), row.getDouble(1))
   }

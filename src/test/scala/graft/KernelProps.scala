@@ -258,6 +258,63 @@ object KernelProps extends Properties("kernels") {
       (s & sn) == 0L
     }
 
+  // ---------- the sketch row kernels against their driver-side forms ----------
+  // dims 1, odd and 768; the references restate the arithmetic: each sum
+  // sequential in lane order, in double
+
+  private val sketchDim: Gen[Int] = Gen.oneOf(1, 13, 768)
+
+  private def gaussians(rnd: scala.util.Random, n: Int): Array[Float] =
+    Array.fill(n)((rnd.nextGaussian() * 3).toFloat)
+
+  private def sameDoubles(a: Array[Double], b: Array[Double]): Boolean =
+    a.length == b.length && a.indices.forall(i =>
+      java.lang.Double.doubleToLongBits(a(i)) == java.lang.Double.doubleToLongBits(b(i)))
+
+  property("nearestCentroid == first argmin of centroidDistances, ties included") =
+    forAll(sketchDim, Gen.long) { (n, seed) =>
+      val rnd = new scala.util.Random(seed)
+      val v = gaussians(rnd, n)
+      // a few centroids, then copies of some at later indices: ties the
+      // lowest index must win
+      val base = Array.fill(1 + rnd.nextInt(6))(gaussians(rnd, n))
+      val cents = base ++ Array.fill(rnd.nextInt(4))(base(rnd.nextInt(base.length)).clone())
+      val d = Sketches.centroidDistances(v, cents)
+      val ref = cents.map(c => c.indices.foldLeft(0.0) { (acc, i) => val x = v(i).toDouble - c(i).toDouble; acc + x * x })
+      val got = Sketches.nearestCentroid(UnsafeArrayData.fromPrimitiveArray(v), cents)
+      Prop(sameDoubles(d, ref) && got == d.indexOf(d.min)) :|
+        s"n=$n centroids=${cents.length} got=$got distances=${d.mkString(",")}"
+    }
+
+  property("hyperplaneSig and project: row and probe paths agree bit for bit") =
+    forAll(sketchDim, Gen.chooseNum(1, 63), Gen.long) { (n, nBits, seed) =>
+      val rnd = new scala.util.Random(seed)
+      val v = gaussians(rnd, n)
+      val planes = Sketches.planes(nBits, n, seed)
+      val row = UnsafeArrayData.fromPrimitiveArray(v)
+      val sig = Sketches.hyperplaneSig(v, planes)
+      val proj = Sketches.project(row, planes, 1.0).toDoubleArray()
+      val ref = planes.map(p => p.indices.foldLeft(0.0)((acc, i) => acc + v(i).toDouble * p(i)))
+      val signs = proj.indices.foldLeft(0L)((s, b) => if (proj(b) > 0.0) s | (1L << b) else s)
+      Prop(Sketches.hyperplaneSig(row, planes) == sig && signs == sig && sameDoubles(proj, ref)) :|
+        s"n=$n nBits=$nBits sig=$sig signs=$signs"
+    }
+
+  property("PackVector: eval == codegen == VectorCodec.pack, all element types") =
+    forAll(sketchDim, Gen.long) { (n, seed) =>
+      val rnd = new scala.util.Random(seed)
+      // spans the i8/u8 ranges and past them; NaN and ±Inf lanes mixed in
+      val v = Array.fill(n)(rnd.nextInt(40) match {
+        case 0 => Float.NaN
+        case 1 => Float.PositiveInfinity
+        case 2 => Float.NegativeInfinity
+        case _ => (rnd.nextGaussian() * 100).toFloat
+      })
+      val row = InternalRow(UnsafeArrayData.fromPrimitiveArray(v))
+      Prop.all(ElemType.all.map(et =>
+        parity(s"${et.name} n=$n", graft.expressions.PackVector(vecIn, et), row, VectorCodec.pack(v, et))): _*)
+    }
+
   // FastRound's fast path must agree with Spark's Round-on-double
   // semantics (BigDecimal.valueOf + HALF_UP) for every input, including
   // values engineered onto .5 decimal boundaries where the two paths

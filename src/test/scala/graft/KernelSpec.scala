@@ -281,4 +281,24 @@ class KernelSpec extends AnyFunSuite {
     // (float*2 is exact; the dot is linear)
     assert((0 until 8).forall(i => math.abs(p2.getDouble(i) - 2 * p1.getDouble(i)) < 1e-12))
   }
+
+  test("a NULL lane fails fast, naming its function, in eval and in generated code") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.types.{ArrayType, FloatType}
+    import graft.expressions.{HyperplaneSignature, NearestCentroid, RandomProjection}
+    val in = BoundReference(0, ArrayType(FloatType, containsNull = true), nullable = true)
+    val row = InternalRow(new GenericArrayData(Array[Any](1.0f, null, 2.0f)))
+    for ((fn, e) <- Seq(
+        "random_projection" -> RandomProjection(in, 4, 3, 42L),
+        "hyperplane_signature" -> HyperplaneSignature(in, 4, 3, 42L),
+        "nearest_centroid" -> NearestCentroid(in, Seq(Seq(0f, 0f, 0f), Seq(1f, 1f, 1f))))) {
+      val evalEx = intercept[IllegalArgumentException](e.eval(row))
+      val genEx = intercept[IllegalArgumentException](GenerateUnsafeProjection.generate(Seq(e)).apply(row))
+      for (ex <- Seq(evalEx, genEx))
+        assert(ex.getMessage == s"$fn: NULL lane at index 1 (vectors must be dense)")
+    }
+  }
 }

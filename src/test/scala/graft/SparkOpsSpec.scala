@@ -354,6 +354,19 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(hasNullLaneMsg(ex))
   }
 
+  test("IVF probes reject an empty centroid set") {
+    // ivfCentroids returns no centroids for an empty or all-NULL corpus
+    val noCells = Seq.empty[Seq[Float]]
+    val probe = Array(1.0f, 0.0f)
+    val e1 = intercept[IllegalArgumentException](
+      Ann.ivfTopK(spark, "/nonexistent/ivf", "id", "v", probe, 3, "l2", noCells, 1))
+    assert(e1.getMessage.contains("at least one centroid required"))
+    val cb = Pq.PqCodebook(1, 2, Array(Array(Array(0f, 0f))))
+    val e2 = intercept[IllegalArgumentException](
+      Pq.ivfPqTopK(spark, "/nonexistent/ivfpq", probe, 3, noCells, cb, 1))
+    assert(e2.getMessage.contains("at least one centroid required"))
+  }
+
   // ---------- catalog ----------
 
   test("vector_init validation: idempotent re-init must match (sqlite-vector.c:2518-2540)") {
