@@ -3,15 +3,21 @@ package graft.expressions
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, LeafExpression, UnaryExpression, Unevaluable}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, CodeGenerator, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.{ElemType, Metric, QType, QuantParams}
 import graft.codec.VectorCodec
 import graft.kernels.{Distances, Quantize, Sketches}
+
+// Each expression's value is computed by one static kernel, in
+// graft.kernels or in a graft.ops codec: `nullSafeEval` calls it, and
+// `doGenCode` emits the same call (the nullable ones through
+// NullableKernelCall), so generated code restates no computation as Java
+// source. KernelProps checks eval == codegen == kernel, bit for bit.
 
 /** `vector_distance(a, b)` over canonical `array<float>` columns.
   *
@@ -428,11 +434,11 @@ case class StringHash61(child: Expression)
   * visually identical strings with different codepoint sequences (`é`
   * composed U+00E9 vs decomposed U+0065 U+0301) must hash and dedup
   * together, and NFC is the canonical composed form crawlers disagree
-  * on most. Wraps the JDK's `java.text.Normalizer` as a codegen'd
-  * expression (no UDF, no per-row serialization); the gate's oracle is
-  * DuckDB's `nfc_normalize` — an INDEPENDENT implementation (utf8proc)
-  * of the same Unicode algorithm, so the comparison cross-checks two
-  * codebases against the standard.
+  * on most. Both paths call [[Sketches.nfc]], the JDK's
+  * `java.text.Normalizer` (no UDF, no per-row serialization); the gate's
+  * oracle is DuckDB's `nfc_normalize` — an INDEPENDENT implementation
+  * (utf8proc) of the same Unicode algorithm, so the comparison
+  * cross-checks two codebases against the standard.
   */
 case class NfcNormalize(child: Expression)
     extends UnaryExpression with ExpectsInputTypes {
@@ -441,14 +447,10 @@ case class NfcNormalize(child: Expression)
   override def inputTypes: Seq[DataType] = Seq(StringType)
   override def prettyName: String = "nfc_normalize"
 
-  override def nullSafeEval(v: Any): Any =
-    UTF8String.fromString(java.text.Normalizer.normalize(
-      v.asInstanceOf[UTF8String].toString, java.text.Normalizer.Form.NFC))
+  override def nullSafeEval(v: Any): Any = Sketches.nfc(v.asInstanceOf[UTF8String])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"""${ev.value} = UTF8String.fromString(java.text.Normalizer.normalize(
-         |  $c.toString(), java.text.Normalizer.Form.NFC));""".stripMargin)
+    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = graft.kernels.Sketches.nfc($c);")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -572,66 +574,45 @@ case class NearestCentroid(child: Expression, centroids: Seq[Seq[Float]])
     copy(child = newChild)
 }
 
+/** A unary expression whose value is one static kernel call that returns
+  * null for SQL NULL (a vector with no numeric lane, an undecodable
+  * payload). `nullSafeEval` returns the kernel's value; generated code
+  * makes the same call, [[kernelCall]], once and sets the NULL flag on a
+  * null result, unboxing a boxed primitive (the dhash kernels return
+  * `java.lang.Long`).
+  */
+private[expressions] trait NullableKernelCall extends UnaryExpression {
+  override def nullable: Boolean = true
+
+  /** Java source of the kernel call on the child's value `c`. */
+  protected def kernelCall(c: String): String
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c => {
+      val r = ctx.freshName("r")
+      val unbox = if (CodeGenerator.isPrimitiveType(dataType)) s".${CodeGenerator.javaType(dataType)}Value()" else ""
+      s"""${CodeGenerator.boxedType(dataType)} $r = ${kernelCall(c)};
+         |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r$unbox; }""".stripMargin
+    })
+}
+
 /** Single-traversal (min, max) over an `array<float>` with NaN lanes
-  * skipped — the per-row half of quantization pass 1
-  * (sqlite-vector.c:1199-1255; its min/max comparisons never select NaN,
-  * :1250-1255). One pass replaces the filter + array_min + array_max
-  * chain that traversed every array twice. NULL when no valid lane.
+  * skipped — the per-row half of quantization pass 1, computed by
+  * [[Quantize.laneExtrema]]. One pass replaces the filter + array_min +
+  * array_max chain that traversed every array twice. NULL when no valid
+  * lane.
   */
 case class ArrayMinMax(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
+    extends NullableKernelCall with ExpectsInputTypes {
 
   override def dataType: DataType = StructType(Seq(
     StructField("mn", DoubleType, nullable = false),
     StructField("mx", DoubleType, nullable = false)))
   override def inputTypes: Seq[DataType] = Seq(ArrayType(FloatType))
-  override def nullable: Boolean = true
   override def prettyName: String = "array_min_max"
 
-  override def nullSafeEval(v: Any): Any = {
-    val arr = v.asInstanceOf[ArrayData]
-    val n = arr.numElements()
-    var mn = Double.PositiveInfinity; var mx = Double.NegativeInfinity
-    var any = false
-    var i = 0
-    while (i < n) {
-      // fail fast: a NULL lane would silently read as 0.0 through getFloat
-      // and corrupt the global quantization extrema
-      if (arr.isNullAt(i)) throw new IllegalArgumentException(
-        s"array_min_max: NULL lane at index $i (vectors must be dense)")
-      val x = arr.getFloat(i).toDouble
-      if (!x.isNaN) { if (x < mn) mn = x; if (x > mx) mx = x; any = true }
-      i += 1
-    }
-    if (!any) null else InternalRow(mn, mx)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    nullSafeCodeGen(ctx, ev, c => {
-      val i = ctx.freshName("i"); val n = ctx.freshName("n")
-      val mn = ctx.freshName("mn"); val mx = ctx.freshName("mx")
-      val any = ctx.freshName("any"); val x = ctx.freshName("x")
-      s"""
-         |int $n = $c.numElements();
-         |double $mn = Double.POSITIVE_INFINITY, $mx = Double.NEGATIVE_INFINITY;
-         |boolean $any = false;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if ($c.isNullAt($i)) throw new IllegalArgumentException(
-         |    "array_min_max: NULL lane at index " + $i + " (vectors must be dense)");
-         |  double $x = (double) $c.getFloat($i);
-         |  if (!Double.isNaN($x)) {
-         |    if ($x < $mn) $mn = $x;
-         |    if ($x > $mx) $mx = $x;
-         |    $any = true;
-         |  }
-         |}
-         |if (!$any) { ${ev.isNull} = true; } else {
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-         |    new Object[]{$mn, $mx});
-         |}
-       """.stripMargin
-    })
-  }
+  override def nullSafeEval(v: Any): Any = Quantize.laneExtrema(v.asInstanceOf[ArrayData])
+  override protected def kernelCall(c: String): String = s"graft.kernels.Quantize.laneExtrema($c)"
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -670,7 +651,7 @@ case class ToVector(child: Expression, target: ElemType, expectDim: Int = -1)
   * decode runs as one static call inside whole-stage codegen.
   */
 case class PcmStatsExpr(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
+    extends NullableKernelCall with ExpectsInputTypes {
 
   override def dataType: DataType = StructType(Seq(
     StructField("n_samples", LongType, nullable = false),
@@ -678,22 +659,10 @@ case class PcmStatsExpr(child: Expression)
     StructField("max_abs", LongType, nullable = false),
     StructField("zero_cross", LongType, nullable = false)))
   override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def nullable: Boolean = true
   override def prettyName: String = "pcm_stats"
 
-  override def nullSafeEval(v: Any): Any =
-    graft.ops.MediaCodec.pcmStatsRow(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    nullSafeCodeGen(ctx, ev, c => {
-      val r = ctx.freshName("r")
-      s"""
-         |org.apache.spark.sql.catalyst.InternalRow $r =
-         |  graft.ops.MediaCodec.pcmStatsRow($c);
-         |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r; }
-       """.stripMargin
-    })
-  }
+  override def nullSafeEval(v: Any): Any = graft.ops.MediaCodec.pcmStatsRow(v.asInstanceOf[Array[Byte]])
+  override protected def kernelCall(c: String): String = s"graft.ops.MediaCodec.pcmStatsRow($c)"
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -705,7 +674,7 @@ case class PcmStatsExpr(child: Expression)
   * sum_r, sum_g, sum_b, max_px). NULL for undecodable payloads.
   */
 case class PngPixelStatsExpr(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
+    extends NullableKernelCall with ExpectsInputTypes {
 
   override def dataType: DataType = StructType(Seq(
     StructField("width", LongType, nullable = false),
@@ -716,22 +685,10 @@ case class PngPixelStatsExpr(child: Expression)
     StructField("sum_b", LongType, nullable = false),
     StructField("max_px", LongType, nullable = false)))
   override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def nullable: Boolean = true
   override def prettyName: String = "png_pixel_stats"
 
-  override def nullSafeEval(v: Any): Any =
-    graft.ops.MediaCodec.pngPixelStatsRow(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    nullSafeCodeGen(ctx, ev, c => {
-      val r = ctx.freshName("r")
-      s"""
-         |org.apache.spark.sql.catalyst.InternalRow $r =
-         |  graft.ops.MediaCodec.pngPixelStatsRow($c);
-         |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r; }
-       """.stripMargin
-    })
-  }
+  override def nullSafeEval(v: Any): Any = graft.ops.MediaCodec.pngPixelStatsRow(v.asInstanceOf[Array[Byte]])
+  override protected def kernelCall(c: String): String = s"graft.ops.MediaCodec.pngPixelStatsRow($c)"
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -743,7 +700,7 @@ case class PngPixelStatsExpr(child: Expression)
   * max_luma). NULL for undecodable / out-of-profile payloads.
   */
 case class JpegLumaStatsExpr(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
+    extends NullableKernelCall with ExpectsInputTypes {
 
   override def dataType: DataType = StructType(Seq(
     StructField("width", LongType, nullable = false),
@@ -751,22 +708,10 @@ case class JpegLumaStatsExpr(child: Expression)
     StructField("sum_luma", LongType, nullable = false),
     StructField("max_luma", LongType, nullable = false)))
   override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def nullable: Boolean = true
   override def prettyName: String = "jpeg_luma_stats"
 
-  override def nullSafeEval(v: Any): Any =
-    graft.ops.Jpeg.jpegLumaStatsRow(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    nullSafeCodeGen(ctx, ev, c => {
-      val r = ctx.freshName("r")
-      s"""
-         |org.apache.spark.sql.catalyst.InternalRow $r =
-         |  graft.ops.Jpeg.jpegLumaStatsRow($c);
-         |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r; }
-       """.stripMargin
-    })
-  }
+  override def nullSafeEval(v: Any): Any = graft.ops.Jpeg.jpegLumaStatsRow(v.asInstanceOf[Array[Byte]])
+  override protected def kernelCall(c: String): String = s"graft.ops.Jpeg.jpegLumaStatsRow($c)"
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -778,27 +723,14 @@ case class JpegLumaStatsExpr(child: Expression)
   * 9×8 pool does not divide the dimensions.
   */
 case class JpegDhashExpr(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
+    extends NullableKernelCall with ExpectsInputTypes {
 
   override def dataType: DataType = LongType
   override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def nullable: Boolean = true
   override def prettyName: String = "jpeg_dhash"
 
-  override def nullSafeEval(v: Any): Any = {
-    val r = graft.ops.Jpeg.jpegDhashBoxed(v.asInstanceOf[Array[Byte]])
-    if (r == null) null else r.longValue()
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    nullSafeCodeGen(ctx, ev, c => {
-      val r = ctx.freshName("r")
-      s"""
-         |java.lang.Long $r = graft.ops.Jpeg.jpegDhashBoxed($c);
-         |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r.longValue(); }
-       """.stripMargin
-    })
-  }
+  override def nullSafeEval(v: Any): Any = graft.ops.Jpeg.jpegDhashBoxed(v.asInstanceOf[Array[Byte]])
+  override protected def kernelCall(c: String): String = s"graft.ops.Jpeg.jpegDhashBoxed($c)"
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -810,7 +742,7 @@ case class JpegDhashExpr(child: Expression)
   * for payloads that are not gzip at all; lenient tail inside.
   */
 case class WarcRecordsGzExpr(child: Expression, maxRecords: Int)
-    extends UnaryExpression with ExpectsInputTypes {
+    extends NullableKernelCall with ExpectsInputTypes {
 
   override def dataType: DataType = ArrayType(StructType(Seq(
     StructField("warc_type", StringType, nullable = false),
@@ -818,22 +750,10 @@ case class WarcRecordsGzExpr(child: Expression, maxRecords: Int)
     StructField("content_length", LongType, nullable = false),
     StructField("payload", StringType, nullable = false))), containsNull = false)
   override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def nullable: Boolean = true
   override def prettyName: String = "warc_records_gz"
 
-  override def nullSafeEval(v: Any): Any =
-    graft.ops.Warc.gzRecordRows(v.asInstanceOf[Array[Byte]], maxRecords)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    nullSafeCodeGen(ctx, ev, c => {
-      val r = ctx.freshName("r")
-      s"""
-         |org.apache.spark.sql.catalyst.util.ArrayData $r =
-         |  graft.ops.Warc.gzRecordRows($c, $maxRecords);
-         |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r; }
-       """.stripMargin
-    })
-  }
+  override def nullSafeEval(v: Any): Any = graft.ops.Warc.gzRecordRows(v.asInstanceOf[Array[Byte]], maxRecords)
+  override protected def kernelCall(c: String): String = s"graft.ops.Warc.gzRecordRows($c, $maxRecords)"
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -877,20 +797,8 @@ case class BpeMerge(child: Expression, a: String, b: String)
   * render per evaluated value, which dominates pair-dense plans (the ANN
   * join and the Jaccard verify round one value per CANDIDATE PAIR).
   *
-  * Fast path: `floor(x·10^s + 0.5) / 10^s` in pure double math. That
-  * agrees with the BigDecimal decision whenever `x·10^s` is farther from
-  * a .5 boundary than the product/shortest-repr-decimal discrepancy —
-  * which is a few ulps of the product, NOT an absolute constant: above
-  * ~2^33 one ulp of `x·10^s` exceeds 1e-6, so a fixed guard would let
-  * the discrepancy cross a boundary undetected. The guard therefore
-  * scales with the magnitude: any value within `max(1e-6, 4·ulp(x·10^s))`
-  * of a boundary — plus NaN/±Inf and magnitudes ≥ 4.5e15 where doubles
-  * go integer-sparse — takes the exact
-  * [[graft.kernels.Quantize.roundHalfUp]] fallback instead. ~2e-6 of
-  * uniformly distributed small inputs fall back (the ulp term dominates
-  * only above ~8.6e9 where it admits ~2e-15 of inputs); equality with
-  * Spark's round is property-tested on boundary-adversarial inputs in
-  * BOTH bands (KernelProps).
+  * Both paths call [[Quantize.fastRound]]: pure double math, with the
+  * exact [[Quantize.roundHalfUp]] as the fallback near a .5 boundary.
   */
 case class FastRound(child: Expression, scale: Int)
     extends UnaryExpression with ExpectsInputTypes {
@@ -900,35 +808,10 @@ case class FastRound(child: Expression, scale: Int)
   override def inputTypes: Seq[DataType] = Seq(DoubleType)
   override def prettyName: String = "fast_round"
 
-  private val pow10 = math.pow(10.0, scale)
+  override def nullSafeEval(v: Any): Any = Quantize.fastRound(v.asInstanceOf[Double], scale)
 
-  override def nullSafeEval(v: Any): Any = {
-    val x = v.asInstanceOf[Double]
-    val y = x * pow10
-    val diff = y - math.floor(y)
-    if (!(math.abs(diff - 0.5) >= math.max(1e-6, 4.0 * math.ulp(y))) || math.abs(y) >= 4.5e15)
-      Quantize.roundHalfUp(x, scale)
-    else math.floor(y + 0.5) / pow10
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    nullSafeCodeGen(ctx, ev, c => {
-      val y = ctx.freshName("y"); val diff = ctx.freshName("diff")
-      val guard = ctx.freshName("guard")
-      // NB: no generated line may BEGIN with '|' (a downstream stripMargin
-      // pass would eat it) — keep each condition on one line
-      s"""
-         |double $y = $c * ${pow10}d;
-         |double $diff = $y - java.lang.Math.floor($y);
-         |double $guard = java.lang.Math.max(1.0e-6d, 4.0d * java.lang.Math.ulp($y));
-         |if (!(java.lang.Math.abs($diff - 0.5d) >= $guard) || java.lang.Math.abs($y) >= 4.5e15d) {
-         |  ${ev.value} = graft.kernels.Quantize.roundHalfUp($c, $scale);
-         |} else {
-         |  ${ev.value} = java.lang.Math.floor($y + 0.5d) / ${pow10}d;
-         |}
-       """.stripMargin
-    })
-  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = graft.kernels.Quantize.fastRound($c, $scale);")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -964,9 +847,9 @@ case class CdcBoundaries(child: Expression, window: Int, divisor: Int)
 }
 
 /** `centered_dot(vec)` — ⟨x−μ, v⟩ against constant (μ, v) vectors as ONE
-  * codegen'd sequential fold (index order, the oracle's
-  * `list_sum(list_transform(...))` tree), replacing the interpreted
-  * per-lane `aggregate` HOF in the PCA / all-but-the-top scans. The
+  * codegen'd sequential fold ([[graft.kernels.Embed.centeredDot]], index
+  * order, the oracle's `list_sum(list_transform(...))` tree), replacing
+  * the interpreted per-lane `aggregate` HOF in the PCA / all-but-the-top scans. The
   * constant vectors ride as reference objects, not literals — no
   * 64-element expression tree to compile per round.
   */
@@ -994,7 +877,8 @@ case class CenteredDot(child: Expression, mu: Array[Double], v: Array[Double])
 }
 
 /** `pca_lane_terms(vec)` — the per-row PCA contribution vector
-  * `round9((x_i−μ_i)·⟨x−μ, v⟩)` in one codegen'd pass: the dot and all
+  * `round9((x_i−μ_i)·⟨x−μ, v⟩)` in one codegen'd pass
+  * ([[graft.kernels.Embed.pcaLaneTerms]]): the dot and all
   * dim lane terms share a single traversal, and the 9-dp HALF_UP
   * rounding is exactly Spark `round`'s BigDecimal semantics
   * ([[graft.kernels.Quantize.roundHalfUp]]), so the plan change cannot
@@ -1030,28 +914,14 @@ case class PcaLaneTerms(child: Expression, mu: Array[Double], v: Array[Double])
   * pool grid. Codegen'd static call, one pass per row.
   */
 case class PngDhashExpr(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
+    extends NullableKernelCall with ExpectsInputTypes {
 
   override def dataType: DataType = LongType
   override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def nullable: Boolean = true
   override def prettyName: String = "png_dhash"
 
-  override def nullSafeEval(v: Any): Any =
-    graft.ops.MediaCodec.pngDhashBoxed(v.asInstanceOf[Array[Byte]]) match {
-      case null => null
-      case boxed => boxed.longValue()
-    }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    nullSafeCodeGen(ctx, ev, c => {
-      val r = ctx.freshName("r")
-      s"""
-         |java.lang.Long $r = graft.ops.MediaCodec.pngDhashBoxed($c);
-         |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r.longValue(); }
-       """.stripMargin
-    })
-  }
+  override def nullSafeEval(v: Any): Any = graft.ops.MediaCodec.pngDhashBoxed(v.asInstanceOf[Array[Byte]])
+  override protected def kernelCall(c: String): String = s"graft.ops.MediaCodec.pngDhashBoxed($c)"
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -1064,7 +934,7 @@ case class PngDhashExpr(child: Expression)
   * isn't decodable PCM16.
   */
 case class PcmFingerprintExpr(child: Expression, window: Int)
-    extends UnaryExpression with ExpectsInputTypes {
+    extends NullableKernelCall with ExpectsInputTypes {
   require(window >= 1, s"window must be >= 1, got $window")
 
   override def dataType: DataType = StructType(Seq(
@@ -1072,22 +942,10 @@ case class PcmFingerprintExpr(child: Expression, window: Int)
     StructField("n_peaks", LongType, nullable = false),
     StructField("fingerprint", LongType, nullable = false)))
   override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def nullable: Boolean = true
   override def prettyName: String = "pcm_fingerprint"
 
-  override def nullSafeEval(v: Any): Any =
-    graft.ops.MediaCodec.pcmEnergyFingerprintRow(v.asInstanceOf[Array[Byte]], window)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    nullSafeCodeGen(ctx, ev, c => {
-      val r = ctx.freshName("r")
-      s"""
-         |org.apache.spark.sql.catalyst.InternalRow $r =
-         |  graft.ops.MediaCodec.pcmEnergyFingerprintRow($c, $window);
-         |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r; }
-       """.stripMargin
-    })
-  }
+  override def nullSafeEval(v: Any): Any = graft.ops.MediaCodec.pcmEnergyFingerprintRow(v.asInstanceOf[Array[Byte]], window)
+  override protected def kernelCall(c: String): String = s"graft.ops.MediaCodec.pcmEnergyFingerprintRow($c, $window)"
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -1135,28 +993,16 @@ case class MediaProbeExpr(left: Expression, right: Expression)
   * Control Extensions, no LZW decode. NULL for malformed payloads.
   */
 case class GifFramesExpr(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
+    extends NullableKernelCall with ExpectsInputTypes {
 
   override def dataType: DataType = StructType(Seq(
     StructField("n_frames", LongType, nullable = false),
     StructField("total_delay_cs", LongType, nullable = false)))
   override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def nullable: Boolean = true
   override def prettyName: String = "gif_frames"
 
-  override def nullSafeEval(v: Any): Any =
-    graft.ops.MediaCodec.gifFrameStatsRow(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    nullSafeCodeGen(ctx, ev, c => {
-      val r = ctx.freshName("r")
-      s"""
-         |org.apache.spark.sql.catalyst.InternalRow $r =
-         |  graft.ops.MediaCodec.gifFrameStatsRow($c);
-         |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r; }
-       """.stripMargin
-    })
-  }
+  override def nullSafeEval(v: Any): Any = graft.ops.MediaCodec.gifFrameStatsRow(v.asInstanceOf[Array[Byte]])
+  override protected def kernelCall(c: String): String = s"graft.ops.MediaCodec.gifFrameStatsRow($c)"
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

@@ -1,5 +1,9 @@
 package graft.kernels
 
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.util.ArrayData
+
 import graft.{QType, QuantParams}
 
 /** Global min–max scalar quantization math, replicating
@@ -41,13 +45,41 @@ object Quantize {
   }
 
   /** Exact decimal HALF_UP rounding of a double — the slow-but-exact half
-    * of [[graft.expressions.FastRound]]; literally Spark's `Round`-on-
+    * of [[fastRound]]; literally Spark's `Round`-on-
     * DoubleType semantics (`BigDecimal.valueOf` = shortest-repr decimal).
     */
   def roundHalfUp(x: Double, scale: Int): Double = {
     if (java.lang.Double.isNaN(x) || java.lang.Double.isInfinite(x)) x
     else java.math.BigDecimal.valueOf(x)
       .setScale(scale, java.math.RoundingMode.HALF_UP).doubleValue()
+  }
+
+  private val Pow10 = Array.tabulate(10)(s => math.pow(10.0, s))
+
+  /** [[roundHalfUp]] at scale 1-9 without its per-row `Double.toString`:
+    * the value of [[graft.expressions.FastRound]], from both paths.
+    *
+    * Fast path: `floor(x·10^s + 0.5) / 10^s` in pure double math. That
+    * agrees with the BigDecimal decision whenever `x·10^s` is farther from
+    * a .5 boundary than the product/shortest-repr-decimal discrepancy —
+    * which is a few ulps of the product, NOT an absolute constant: above
+    * ~2^33 one ulp of `x·10^s` exceeds 1e-6, so a fixed guard would let
+    * the discrepancy cross a boundary undetected. The guard therefore
+    * scales with the magnitude: any value within `max(1e-6, 4·ulp(x·10^s))`
+    * of a boundary — plus NaN/±Inf and magnitudes ≥ 4.5e15 where doubles
+    * go integer-sparse — takes the exact [[roundHalfUp]] fallback
+    * instead. ~2e-6 of uniformly distributed small inputs fall back (the
+    * ulp term dominates only above ~8.6e9 where it admits ~2e-15 of
+    * inputs); equality with Spark's round is property-tested on
+    * boundary-adversarial inputs in BOTH bands (KernelProps).
+    */
+  def fastRound(x: Double, scale: Int): Double = {
+    val pow10 = Pow10(scale)
+    val y = x * pow10
+    val diff = y - math.floor(y)
+    if (!(math.abs(diff - 0.5) >= math.max(1e-6, 4.0 * math.ulp(y))) || math.abs(y) >= 4.5e15)
+      roundHalfUp(x, scale)
+    else math.floor(y + 0.5) / pow10
   }
 
   // Both rounds are floor(|v| + 0.5)·signum(v), saturated, NaN → 0. With
@@ -90,6 +122,26 @@ object Quantize {
       i += 1
     }
     out
+  }
+
+  /** (min, max) over a row's lanes with NaN lanes skipped, or null when no
+    * lane is a number — the per-row half of quantization pass 1
+    * (sqlite-vector.c:1199-1255; its min/max comparisons never select NaN,
+    * :1250-1255), in one traversal that copies no lane. A NULL lane fails
+    * fast ([[Sketches.denseLane]]): read as 0.0 it would corrupt the global
+    * extrema. [[graft.expressions.ArrayMinMax]] calls it from both paths.
+    */
+  def laneExtrema(v: ArrayData): InternalRow = {
+    val n = v.numElements()
+    var mn = Double.PositiveInfinity; var mx = Double.NegativeInfinity
+    var any = false
+    var i = 0
+    while (i < n) {
+      val x = Sketches.denseLane(v, i, "array_min_max").toDouble
+      if (!x.isNaN) { if (x < mn) mn = x; if (x > mx) mx = x; any = true }
+      i += 1
+    }
+    if (any) new GenericInternalRow(Array[Any](mn, mx)) else null
   }
 
   /** Exact sum of a packed i8/u8 code vector (CodeSum). */

@@ -121,11 +121,7 @@ object Sketches {
     val words = new Array[Long]((dim + 63) >>> 6)
     var i = 0
     while (i < dim) {
-      // fail fast: a NULL lane would silently read as 0.0 (bit clear) and
-      // diverge from the SQL restatement `embedding[i] > 0` (NULL there)
-      if (v.isNullAt(i)) throw new IllegalArgumentException(
-        s"sign_bits: NULL lane at index $i (vectors must be dense)")
-      if (v.getFloat(i) > 0f) words(i >>> 6) |= 1L << (i & 63)
+      if (denseLane(v, i, "sign_bits") > 0f) words(i >>> 6) |= 1L << (i & 63)
       i += 1
     }
     new GenericArrayData(words)
@@ -313,20 +309,31 @@ object Sketches {
     centroids.map(Distances.sqL2Double(v, _))
   }
 
-  /** The lanes of a row's vector, copied once. A NULL lane fails fast:
-    * it would read as 0.0 and diverge from any SQL restatement's NULL
-    * propagation. The check runs before the copy, which would not see it.
+  /** Lane `i` of a row's vector — the one NULL-lane rule of every kernel
+    * that reads `array<float>` rows. A NULL lane fails fast, naming the
+    * SQL function `fn`: read through `getFloat` it would be 0.0 and
+    * diverge from any SQL restatement's NULL propagation.
     */
-  private def denseLanes(v: ArrayData, fn: String): Array[Float] = {
-    val n = v.numElements()
-    var i = 0
-    while (i < n) {
-      if (v.isNullAt(i)) throw new IllegalArgumentException(
-        s"$fn: NULL lane at index $i (vectors must be dense)")
-      i += 1
-    }
-    v.toFloatArray()
+  private[kernels] def denseLane(v: ArrayData, i: Int, fn: String): Float = {
+    if (v.isNullAt(i)) throw new IllegalArgumentException(
+      s"$fn: NULL lane at index $i (vectors must be dense)")
+    v.getFloat(i)
   }
+
+  /** The lanes of a row's vector, copied once through [[denseLane]]. */
+  private def denseLanes(v: ArrayData, fn: String): Array[Float] = {
+    val out = new Array[Float](v.numElements())
+    var i = 0
+    while (i < out.length) { out(i) = denseLane(v, i, fn); i += 1 }
+    out
+  }
+
+  /** Unicode NFC canonical composition (UAX #15) by the JDK's
+    * `java.text.Normalizer`. Static entry point for generated code
+    * ([[graft.expressions.NfcNormalize]]).
+    */
+  def nfc(s: UTF8String): UTF8String =
+    UTF8String.fromString(java.text.Normalizer.normalize(s.toString, java.text.Normalizer.Form.NFC))
 
   /** One BPE merge round over a symbol array: replace every non-overlapping
     * (a, b) adjacency with the concatenation a+b, greedy left-to-right on

@@ -389,4 +389,134 @@ object KernelProps extends Properties("kernels") {
     forAll(uniStr) { s =>
       nfc(java.text.Normalizer.normalize(s, java.text.Normalizer.Form.NFD)) == nfc(s)
     }
+
+  // ---------- one kernel per expression: the nullable calls, fast_round,
+  // array_min_max and nfc_normalize ----------
+  // Values compare as the one field of an UnsafeRow, so structs, arrays,
+  // NULL and double bits (NaN, ±0) all compare byte for byte. A kernel
+  // that throws must throw the same exception class from eval and
+  // generated code (the JIT's fast throw may drop the message).
+
+  import org.apache.spark.sql.catalyst.expressions.{Literal, Round, UnsafeProjection}
+  import org.apache.spark.sql.types.{DoubleType, StringType}
+  import org.apache.spark.unsafe.types.UTF8String
+  import graft.expressions.{ArrayMinMax, FastRound, GifFramesExpr, JpegDhashExpr, JpegLumaStatsExpr, NfcNormalize,
+    PcmFingerprintExpr, PcmStatsExpr, PngDhashExpr, PngPixelStatsExpr, WarcRecordsGzExpr}
+  import graft.ops.{Jpeg, MediaCodec, Warc}
+
+  private final case class Thrown(cls: Class[_])
+
+  /** The value of `f`, or the class of what it threw. */
+  private def outcome(f: => Any): Any =
+    try f catch { case e: Exception => Thrown(e.getClass) }
+
+  /** `e` on each row, interpreted and through generated code, against
+    * every expected outcome for that row.
+    */
+  private def rowParity(label: String, e: Expression, cases: Seq[(InternalRow, Seq[Any])]): Prop = {
+    val gen = GenerateUnsafeProjection.generate(Seq(e))
+    val unsafe = UnsafeProjection.create(Array(e.dataType))
+    Prop.all(cases.map { case (row, wants) =>
+      val got = outcome(gen(row))
+      val interp = outcome(e.eval(row))
+      val same = (interp +: wants).forall {
+        case t: Thrown => t == got
+        case v => !got.isInstanceOf[Thrown] && unsafe(InternalRow(v)) == got
+      }
+      Prop(same) :| s"$label: eval=$interp codegen=$got want=${wants.mkString(", ")}"
+    }: _*)
+  }
+
+  private val dblIn = BoundReference(0, DoubleType, nullable = true)
+  private val strIn = BoundReference(0, StringType, nullable = true)
+
+  // the fast_round properties' inputs, all in each sample: a random
+  // double, a decimal and a large-magnitude half boundary with their
+  // one-ulp neighbours, and the special values
+  private val roundCase: Gen[(Int, Seq[Double])] = for {
+    s <- Gen.chooseNum(1, 9)
+    x <- Gen.chooseNum(-1e12, 1e12)
+    k <- Gen.chooseNum(-2000000L, 2000000L)
+    big <- Gen.chooseNum(8L * 1000L * 1000L * 1000L, 450L * 1000L * 1000L * 1000L * 1000L).flatMap(k => Gen.oneOf(k, -k))
+  } yield {
+    def halves(k: Long): Seq[Double] = {
+      val half = (k + 0.5) / math.pow(10.0, s)
+      Seq(half, Math.nextUp(half), Math.nextDown(half), k / math.pow(10.0, s))
+    }
+    s -> (x +: (halves(k) ++ halves(big) ++
+      Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity, 0.0, -0.0, 4.6e15, -4.6e15)))
+  }
+
+  // NaN, ±Inf and ±0 lanes mixed in; all-NaN and empty vectors have no extrema
+  private val extremaLanes: Gen[Array[Float]] = Gen.frequency(
+    4 -> Gen.chooseNum(1, 40).flatMap(n => Gen.containerOfN[Array, Float](n, Gen.frequency(
+      6 -> Gen.chooseNum(-1e4f, 1e4f), 1 -> Gen.const(Float.NaN),
+      1 -> Gen.oneOf(Float.PositiveInfinity, Float.NegativeInfinity), 1 -> Gen.oneOf(0f, -0f)))),
+    1 -> Gen.chooseNum(0, 8).map(Array.fill(_)(Float.NaN)))
+
+  private val blobIn = BoundReference(0, BinaryType, nullable = true)
+  private val media: Seq[(Expression, Array[Byte] => Any)] = Seq(
+    PcmStatsExpr(blobIn) -> MediaCodec.pcmStatsRow,
+    PngPixelStatsExpr(blobIn) -> MediaCodec.pngPixelStatsRow,
+    JpegLumaStatsExpr(blobIn) -> Jpeg.jpegLumaStatsRow,
+    JpegDhashExpr(blobIn) -> Jpeg.jpegDhashBoxed,
+    WarcRecordsGzExpr(blobIn, 8) -> (Warc.gzRecordRows(_, 8)),
+    PngDhashExpr(blobIn) -> MediaCodec.pngDhashBoxed,
+    PcmFingerprintExpr(blobIn, 16) -> (MediaCodec.pcmEnergyFingerprintRow(_, 16)),
+    GifFramesExpr(blobIn) -> MediaCodec.gifFrameStatsRow)
+
+  /** A 72×64 grayscale baseline JPEG (9|w and 8|h, so it has a dhash). */
+  private def jpegGray(rnd: scala.util.Random): Array[Byte] = {
+    val img = new java.awt.image.BufferedImage(72, 64, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
+    val (a, b) = (rnd.nextInt(8), rnd.nextInt(8))
+    for (y <- 0 until 64; x <- 0 until 72) img.getRaster.setSample(x, y, 0, (a * x + b * y) % 256)
+    val bos = new java.io.ByteArrayOutputStream()
+    javax.imageio.ImageIO.write(img, "jpg", bos)
+    bos.toByteArray
+  }
+
+  /** The decodable media fixtures, the header-only fixtures, one
+    * decodable fixture cut short, and random bytes behind each
+    * container's magic and behind none.
+    */
+  private def mediaPayloads(rnd: scala.util.Random): Seq[Array[Byte]] = {
+    val decodable = Seq(
+      MediaCodec.wavPcmFixture(8000, 1 + rnd.nextInt(2), 16 + rnd.nextInt(200), rnd.nextInt(1000).toLong),
+      MediaCodec.pngPixelFixture(9 * (1 + rnd.nextInt(3)), 8 * (1 + rnd.nextInt(3)), rnd.nextInt(1000).toLong,
+        rnd.nextInt(5), Seq(1, 3, 4)(rnd.nextInt(3))),
+      jpegGray(rnd),
+      MediaCodec.gifAnimFixture(1 + rnd.nextInt(64), 1 + rnd.nextInt(64), 1 + rnd.nextInt(5), rnd.nextInt(100)),
+      Warc.gzCaptureFixture(rnd.nextInt(1000).toLong, "en"))
+    // a PNG cut inside IHDR: pngDecodePixels reads past its end and
+    // throws ArrayIndexOutOfBoundsException instead of returning NULL
+    val headers = Seq(MediaCodec.wavFixture(8000, 1, 100), MediaCodec.pngFixture(9, 8),
+      MediaCodec.jpegFixture(9, 8), MediaCodec.gifFixture(9, 8), MediaCodec.pngFixture(9, 8).take(26))
+    val cut = decodable(rnd.nextInt(decodable.length))
+    val magics = Seq(Array[Byte](), "RIFF".getBytes, Array(0x89, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a).map(_.toByte),
+      Array(0xff, 0xd8, 0xff).map(_.toByte), "GIF89a".getBytes, Array(0x1f, 0x8b, 0x08).map(_.toByte))
+    decodable ++ headers ++ Seq(cut.take(rnd.nextInt(cut.length))) ++
+      magics.map(_ ++ Array.fill(rnd.nextInt(64))(rnd.nextInt(256).toByte))
+  }
+
+  property("fast_round, array_min_max, nfc_normalize, media calls: codegen == eval == kernel, bit for bit") =
+    Prop.forAllNoShrink(roundCase, extremaLanes, uniStr, Gen.long) { case ((s, xs), lanes, text, seed) =>
+      val extrema = UnsafeArrayData.fromPrimitiveArray(lanes)
+      val str = UTF8String.fromString(text)
+      val payloads = mediaPayloads(new scala.util.Random(seed))
+      Prop.all(
+        // fast_round also against Spark's own round
+        rowParity(s"fast_round s=$s", FastRound(dblIn, s),
+          xs.map(x => InternalRow(x) -> Seq(Quantize.fastRound(x, s), Round(dblIn, Literal(s)).eval(InternalRow(x))))),
+        rowParity(s"array_min_max ${lanes.mkString("[", ",", "]")}", ArrayMinMax(vecIn),
+          Seq(InternalRow(extrema) -> Seq(Quantize.laneExtrema(extrema)))),
+        rowParity("nfc_normalize", NfcNormalize(strIn),
+          Seq(InternalRow(str) -> Seq(Sketches.nfc(str), UTF8String.fromString(nfc(text))))),
+        Prop.all(media.map { case (e, kernel) =>
+          // a NULL payload and every undecodable one are NULL; at least one decodes
+          val wants = payloads.map(b => outcome(kernel(b)))
+          Prop(wants.exists(w => w != null && !w.isInstanceOf[Thrown])) :| s"${e.prettyName}: no payload decodes" &&
+            rowParity(e.prettyName, e,
+              (InternalRow(null) -> Seq(null)) +: payloads.zip(wants).map { case (b, w) => InternalRow(b) -> Seq(w) })
+        }: _*))
+    }
 }

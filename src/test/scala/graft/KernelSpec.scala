@@ -288,13 +288,17 @@ class KernelSpec extends AnyFunSuite {
     import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
     import org.apache.spark.sql.catalyst.util.GenericArrayData
     import org.apache.spark.sql.types.{ArrayType, FloatType}
-    import graft.expressions.{HyperplaneSignature, NearestCentroid, RandomProjection}
+    import graft.expressions.{ArrayMinMax, CenteredDot, HyperplaneSignature, NearestCentroid, PcaLaneTerms, RandomProjection, SignBits}
     val in = BoundReference(0, ArrayType(FloatType, containsNull = true), nullable = true)
     val row = InternalRow(new GenericArrayData(Array[Any](1.0f, null, 2.0f)))
     for ((fn, e) <- Seq(
         "random_projection" -> RandomProjection(in, 4, 3, 42L),
         "hyperplane_signature" -> HyperplaneSignature(in, 4, 3, 42L),
-        "nearest_centroid" -> NearestCentroid(in, Seq(Seq(0f, 0f, 0f), Seq(1f, 1f, 1f))))) {
+        "nearest_centroid" -> NearestCentroid(in, Seq(Seq(0f, 0f, 0f), Seq(1f, 1f, 1f))),
+        "array_min_max" -> ArrayMinMax(in),
+        "sign_bits" -> SignBits(in, 3),
+        "centered_dot" -> CenteredDot(in, Array(0.5, 0.5, 0.5), Array(1.0, -1.0, 2.0)),
+        "pca_lane_terms" -> PcaLaneTerms(in, Array(0.5, 0.5, 0.5), Array(1.0, -1.0, 2.0)))) {
       val evalEx = intercept[IllegalArgumentException](e.eval(row))
       val genEx = intercept[IllegalArgumentException](GenerateUnsafeProjection.generate(Seq(e)).apply(row))
       for (ex <- Seq(evalEx, genEx))
