@@ -82,12 +82,12 @@ object Curation {
   }
 
   /** The per-row stat pass shared by [[qualityFilter]] and
-    * [[curationLog]]: one select over the text; `extra` passthrough
-    * columns ride the same scan so composed consumers never pay a join
-    * back onto the corpus.
+    * [[curationLog]]: one select over the text; the named `extra`
+    * passthrough columns ride the same scan so composed consumers never
+    * pay a join back onto the corpus.
     */
   private def qualityStats(df: DataFrame, idCol: String, textCol: String,
-                           extra: Seq[(String, Column)]): DataFrame = {
+                           extra: Seq[Column]): DataFrame = {
     val ws = cleanTokens(col(textCol))
     val ac = cleanText(col(textCol))
     df.select(Seq(
@@ -100,7 +100,7 @@ object Curation {
       size(filter(ws, t => array_contains(
         array(TextAnalysis.EnStopwords.map(lit): _*), t))).cast("long").as("n_stop"),
       TextAnalysis.runStats(sort_array(ws)).getField("best").cast("long").as("top_word")) ++
-      extra.map { case (n, c) => c.as(n) }: _*)
+      extra: _*)
   }
 
   /** [[qualityFilter]]'s five-rule bitmask over [[qualityStats]]' columns
@@ -1141,10 +1141,7 @@ object Curation {
       avg(col("n_chr")).as("mean_chars"),
       (sum(col("q").cast("decimal(38,6)")).cast("double") / count(lit(1))).as("mean_quality"),
       expr("percentile(n_tok, array(0.25, 0.5, 0.75))").as("tq")).head()
-    val distinctTexts = df
-      .select(xxhash64(col(textCol)).as("ck1"),
-        xxhash64(lit(0x9E3779B97F4A7C15L), col(textCol)).as("ck2"))
-      .distinct().count()
+    val distinctTexts = Dedup.fingerprints(df, textCol).distinct().count()
     val nDocs = row.getDouble(0)
     def r6(x: Double): Double = graft.kernels.Quantize.roundHalfUp(x, 6)
     val tq = row.getSeq[Double](4)
@@ -1389,10 +1386,8 @@ object Curation {
                   maxWords: Int = 100000,
                   barrier: Dedup.Barrier = Dedup.Barrier.LocalCheckpoint): DataFrame = {
     require(capN >= 1, s"capN must be >= 1, got $capN")
-    val base = Dedup.materialize(qualityStats(df, idCol, textCol, Seq(
-        "key" -> col(keyCol),
-        "_ck1" -> xxhash64(col(textCol)),
-        "_ck2" -> xxhash64(lit(0x9E3779B97F4A7C15L), col(textCol))))
+    val base = Dedup.materialize(qualityStats(df, idCol, textCol,
+        col(keyCol).as("key") +: Dedup.fingerprintLanes(col(textCol), "_ck1", "_ck2"))
       .withColumn("fail_mask", failMaskCol(minWords, maxWords))
       .select(col(idCol).as("id"), col("key"), col("_ck1"), col("_ck2"),
         col("fail_mask")), barrier)._1

@@ -27,6 +27,11 @@ import graft.functions.minhash_signature
   * representatives' Jaccard is every member pair's Jaccard (identical
   * sets), so the expansion is exact and its cost is proportional to the
   * emitted pair set, which is the output's inherent size.
+  *
+  * Content fingerprint: every 16-byte content key the engine builds is
+  * [[Dedup.fingerprintLanes]], and every screen of a batch against a
+  * persisted fingerprint store is [[Dedup.screenUnseen]] — the one home
+  * of the two-lane seed convention and of the Bloom prefilter.
   */
 object Dedup {
 
@@ -76,75 +81,97 @@ object Dedup {
     df.groupBy(keyCols.map(col): _*)
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("dup_count"))
 
+  /** The 128-bit content fingerprint of `c` as two xxhash64 lanes named
+    * `n1` and `n2`. Lane 2's seed literal comes FIRST, so its hash chain
+    * starts from a different state than lane 1's (appending the literal
+    * would make lane 2 a function of lane 1). The lanes are two seedings
+    * of one hash family, correlated rather than independent: a false
+    * match needs both 64-bit lanes to agree, rarer than 2⁻⁸⁰ even at 10¹²
+    * distinct keys. The screen stores on disk hold these values, so a
+    * change here orphans every store already written.
+    */
+  def fingerprintLanes(c: Column, n1: String = "ck1", n2: String = "ck2"): Seq[Column] =
+    Seq(xxhash64(c).as(n1), xxhash64(lit(0x9E3779B97F4A7C15L), c).as(n2))
+
+  /** Rows of `probe` whose lanes `(l1, l2)` are absent from `store`'s
+    * `(l1, l2)`: an equi-join anti-join on the 16 fingerprint bytes.
+    *
+    * `bloom = Some((items, bits))` first folds the store's first lane
+    * into one Bloom filter in an eager job (executors build local
+    * filters, the merge ORs them, only the ~`bits/8`-byte blob reaches
+    * the driver). It rides to every probe partition as a `might_contain`
+    * literal: the rows it rejects are provably fresh (Bloom has no false
+    * negatives) and skip the join, so only true dups and the fpp tail pay
+    * the anti-join, and the result is the plain anti-join's. Spark checks
+    * `(items, bits)` against the session's
+    * `spark.sql.optimizer.runtime.bloomFilter.maxNum{Items,Bits}` at
+    * analysis time. An empty store gives a null filter, and the probe
+    * passes whole.
+    */
+  def screenUnseen(probe: DataFrame, store: DataFrame, l1: String, l2: String,
+                   bloom: Option[(Long, Long)] = None): DataFrame = {
+    import org.apache.spark.sql.GraftColumnShim.{column, expression}
+    import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
+    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+    import org.apache.spark.sql.types.BinaryType
+    val seen = store.select(col(l1), col(l2))
+    def unseen(df: DataFrame) = df.join(seen, Seq(l1, l2), "left_anti")
+    bloom match {
+      case None => unseen(probe)
+      case Some((items, bits)) =>
+        val filter = seen
+          .select(column(new BloomFilterAggregate(expression(col(l1)),
+            Literal(items), Literal(bits)).toAggregateExpression()))
+          .head.getAs[Array[Byte]](0)
+        if (filter == null) probe
+        else {
+          val maybe = column(BloomFilterMightContain(
+            Literal(filter, BinaryType), expression(col(l1))))
+          unseen(probe.where(maybe)).unionByName(probe.where(!maybe))
+        }
+    }
+  }
+
   /** Incremental exact dedup: rows of `batch` whose content does not
     * already appear in `seen` — the continuous-ingest shape, where every
     * new crawl/delivery is screened against the accumulated corpus
     * instead of re-deduplicating the whole corpus.
     *
-    * The anti-join runs on a 16-byte content fingerprint (two
-    * independently-seeded xxhash64 lanes), NOT the text: the shuffle
-    * carries ~2% of the corpus bytes, and at 100 TB the `seen` side is a
-    * fingerprint-only table that accretes batch-over-batch (persist
-    * `fingerprints(seen)` once, union each accepted batch's fingerprints
-    * into it). A double-lane collision (~2^-128 per pair) would wrongly
-    * drop a row — acceptable for corpus dedup, and the DuckDB gate
-    * restates the semantics on raw text equality so any collision at test
-    * scale would fail the gate.
+    * The anti-join runs on the 16-byte content fingerprint
+    * ([[fingerprintLanes]]), NOT the text: the shuffle carries ~2% of the
+    * corpus bytes, and at 100 TB the `seen` side is a fingerprint-only
+    * table that accretes batch-over-batch (persist `fingerprints(seen)`
+    * once, union each accepted batch's fingerprints into it). A
+    * double-lane collision would wrongly drop a row — acceptable for
+    * corpus dedup, and the DuckDB gate restates the semantics on raw text
+    * equality so any collision at test scale would fail the gate.
     */
   def fingerprints(df: DataFrame, textCol: String): DataFrame =
-    df.select(xxhash64(col(textCol)).as("ck1"),
-      xxhash64(lit(0x9E3779B97F4A7C15L), col(textCol)).as("ck2"))
+    df.select(fingerprintLanes(col(textCol)): _*)
 
   def dedupAgainst(batch: DataFrame, seen: DataFrame, textCol: String): DataFrame =
-    batch
-      .withColumn("ck1", xxhash64(col(textCol)))
-      .withColumn("ck2", xxhash64(lit(0x9E3779B97F4A7C15L), col(textCol)))
-      .join(fingerprints(seen, textCol), Seq("ck1", "ck2"), "left_anti")
-      .drop("ck1", "ck2")
+    screenText(batch, seen, textCol, None)
 
   /** [[dedupAgainst]] with a Bloom prefilter — the 100 TB shape of
-    * incremental dedup. The anti-join above shuffles the WHOLE batch even
-    * though almost all of it is fresh; here the seen corpus is first
-    * folded into one Bloom filter (a distributed partial aggregate — each
-    * executor builds a local filter over its partitions, the merge ORs
-    * fixed-size bit arrays, and only the final ~`numBits/8`-byte blob
-    * reaches the driver), the filter rides to every batch partition as a
-    * literal inside a codegen'd `might_contain`, and:
-    *
-    *  - rows the filter rejects are DEFINITIVELY fresh (Bloom has no
-    *    false negatives) — they bypass the join entirely, zero shuffle;
-    *  - rows the filter accepts (true dups + the fpp tail) go through the
-    *    exact fingerprint anti-join of [[dedupAgainst]].
-    *
-    * Result is therefore exactly `dedupAgainst`'s, but the join input
-    * shrinks from |batch| to ~|dups| + fpp·|batch|. Size `numBits` at
-    * ~10 bits/item for fpp ≈ 1% (default: 8M bits = 1 MiB for ~800k seen
-    * texts); at 100 TB the filter is built once per ingest wave and the
-    * one-per-executor deserialization is amortized by Spark's literal
-    * handling. An empty `seen` yields a null aggregate — the batch passes
-    * through unfiltered (nothing seen, nothing dropped).
+    * incremental dedup. The plain anti-join shuffles the WHOLE batch even
+    * though almost all of it is fresh; here the join input shrinks from
+    * |batch| to ~|dups| + fpp·|batch| ([[screenUnseen]]'s prefilter over
+    * the seen corpus's first lane), with a result exactly
+    * `dedupAgainst`'s. Size `numBits` at ~10 bits/item for fpp ≈ 1%
+    * (default: 8M bits = 1 MiB for ~800k seen texts); at 100 TB the
+    * filter is built once per ingest wave and the one-per-executor
+    * deserialization is amortized by Spark's literal handling.
     */
   def dedupAgainstBloom(batch: DataFrame, seen: DataFrame, textCol: String,
                         expectedItems: Long = 1L << 20,
-                        numBits: Long = 1L << 23): DataFrame = {
-    import org.apache.spark.sql.GraftColumnShim.{column, expression}
-    import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
-    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-    import org.apache.spark.sql.types.BinaryType
-    val bloom = seen
-      .select(column(new BloomFilterAggregate(
-          expression(xxhash64(col(textCol))),
-          Literal(expectedItems), Literal(numBits)).toAggregateExpression())
-        .as("bf"))
-      .head.getAs[Array[Byte]](0)
-    if (bloom == null) batch // empty seen corpus: everything is fresh
-    else {
-      val mightBeSeen = column(BloomFilterMightContain(
-        Literal(bloom, BinaryType), expression(xxhash64(col(textCol)))))
-      dedupAgainst(batch.where(mightBeSeen), seen, textCol)
-        .unionByName(batch.where(!mightBeSeen))
-    }
-  }
+                        numBits: Long = 1L << 23): DataFrame =
+    screenText(batch, seen, textCol, Some((expectedItems, numBits)))
+
+  // a `ck1`/`ck2` column of the batch's own is replaced, never joined on
+  private def screenText(batch: DataFrame, seen: DataFrame, textCol: String,
+                         bloom: Option[(Long, Long)]): DataFrame =
+    screenUnseen(batch.drop("ck1", "ck2").select(col("*") +: fingerprintLanes(col(textCol)): _*),
+      fingerprints(seen, textCol), "ck1", "ck2", bloom).drop("ck1", "ck2")
 
   // ---------- shared text prep ----------
 
@@ -225,8 +252,8 @@ object Dedup {
   /** MinHash-LSH near-dup pairs, the 100 TB-shaped pipeline:
     *
     *  1. per-row hashed shingle set, then ONE `groupBy` on a narrow 128-bit
-    *     content fingerprint (two independently-seeded xxhash64 lanes over
-    *     the hashed shingle set): identical documents collapse to a
+    *     content fingerprint ([[fingerprintLanes]] of the hashed shingle
+    *     set): identical documents collapse to a
     *     representative + member list before any pairwise machinery — a
     *     10⁵-identical-doc cluster contributes ONE row to LSH instead of
     *     quadratizing a bucket. The grouping shuffle carries 16-byte keys
@@ -303,14 +330,12 @@ object Dedup {
     // is materialized ONCE behind the chosen barrier before the fan-out
     // (see the scaladoc step-2 note on why a barrier and not persist or
     // re-execution).
-    // The grouping key is a 128-bit fingerprint (ck2's seed literal comes
-    // FIRST so its hash chain starts from a different state than ck1's —
-    // appending the literal would make ck2 a function of ck1); `first(sh)`
-    // is safe because every row in a group has the identical array.
+    // The grouping key is the 128-bit fingerprint of the shingle set
+    // ([[fingerprintLanes]]); `first(sh)` is safe because every row in a
+    // group has the identical array.
     val (grouped, releaseBarrier) = materialize(
       df.select(col(idCol).as("id"), shingleHashes(col(textCol), shingleN).as("sh"))
-        .withColumn("ck1", xxhash64(col("sh")))
-        .withColumn("ck2", xxhash64(lit(0x9E3779B97F4A7C15L), col("sh")))
+        .select(col("*") +: fingerprintLanes(col("sh")): _*)
         .groupBy(col("ck1"), col("ck2"))
         .agg(min(col("id")).as("rep"), sort_array(collect_list(col("id"))).as("members"),
           first(col("sh")).as("sh"))
@@ -521,9 +546,7 @@ object Dedup {
     * Output: (id, n_copies, weight = 1/n_copies at 6 dp).
     */
   def softDedupWeights(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val fp = df.select(col(idCol).as("id"),
-      xxhash64(col(textCol)).as("ck1"),
-      xxhash64(lit(0x9E3779B97F4A7C15L), col(textCol)).as("ck2"))
+    val fp = df.select(col(idCol).as("id") +: fingerprintLanes(col(textCol)): _*)
     val counts = fp.groupBy(col("ck1"), col("ck2")).agg(count(lit(1)).as("n_copies"))
     fp.join(counts, Seq("ck1", "ck2"))
       .select(col("id"), col("n_copies"),
@@ -894,12 +917,11 @@ object Dedup {
     *
     * Output: (id, pos (1-based window start), gram) for each repeated
     * window. Plan: one posexplode scan → count per 128-bit gram
-    * fingerprint (two xxhash64 lanes, the [[fingerprints]] seed
-    * convention — the counting exchange moves 16-byte keys, never the
+    * fingerprint ([[fingerprintLanes]] — the counting exchange moves 16-byte keys, never the
     * window text) → left-semi join of positions against the over-once
     * fingerprints. The dup set is output-sized, so AQE broadcasts it and
     * the position stream's strings stay put; a lane collision
-    * (< 2⁻⁸⁰ at 10¹² windows, see [[minhashLshRun]]) would flag a
+    * (< 2⁻⁸⁰ at 10¹² windows, see [[fingerprintLanes]]) would flag a
     * unique span as repeated. No pairwise comparison exists anywhere —
     * the span space is linear in corpus tokens.
     */
@@ -910,9 +932,8 @@ object Dedup {
       transform(sequence(lit(1), size(ws) - (n - 1)),
         i => concat_ws(" ", (0 until n).map(j => element_at(ws, i + j)): _*)))
     val w = df.select(col(idCol).as("id"), posexplode(grams).as(Seq("p0", "gram")))
-      .select(col("id"), (col("p0") + 1).cast("long").as("pos"), col("gram"),
-        xxhash64(col("gram")).as("h1"),
-        xxhash64(lit(0x9E3779B97F4A7C15L), col("gram")).as("h2"))
+      .select(Seq(col("id"), (col("p0") + 1).cast("long").as("pos"), col("gram")) ++
+        fingerprintLanes(col("gram"), "h1", "h2"): _*)
     val dups = w.groupBy("h1", "h2").agg(count(lit(1)).as("cnt")).where(col("cnt") > 1)
     w.join(dups.select("h1", "h2"), Seq("h1", "h2"), "left_semi")
       .select(col("id"), col("pos"), col("gram"))
@@ -951,8 +972,8 @@ object Dedup {
     * summing removal volume.)
     *
     * Plan ([[repeatedSpans]]' exchange discipline): one posexplode scan
-    * projects each window to its 128-bit fingerprint (two xxhash64
-    * lanes; the window TEXT dies in the mapper — both exchanges move
+    * projects each window to its 128-bit fingerprint
+    * ([[fingerprintLanes]]; the window TEXT dies in the mapper — both exchanges move
     * 16-byte keys), a map-side-combined count rollup keeps fingerprints
     * with ≥2 occurrences (output-sized, AQE broadcasts it back), and the
     * island merge (lag-gap flag + running sum) runs per document —
@@ -960,7 +981,7 @@ object Dedup {
     * space, no all-pairs join: cost is linear in corpus tokens at any
     * scale. A lane collision (< 2⁻⁸⁰ at 10¹² windows) could mark a
     * unique window shared — the same accepted budget as
-    * [[minhashLshRun]].
+    * [[repeatedSpans]].
     *
     * Output: (id, start (1-based token index), len (tokens)), one row
     * per maximal covered span, len ≥ minTokens, spans disjoint.
@@ -976,9 +997,8 @@ object Dedup {
             transform(sequence(lit(1), cnt),
               i => array_join(slice(col("_toks"), i, lit(minTokens)), " ")))
           .otherwise(array().cast("array<string>"))).as(Seq("p0", "gram")))
-      .select(col("id"), (col("p0") + 1).cast("long").as("pos"),
-        xxhash64(col("gram")).as("h1"),
-        xxhash64(lit(0x9E3779B97F4A7C15L), col("gram")).as("h2"))
+      .select(Seq(col("id"), (col("p0") + 1).cast("long").as("pos")) ++
+        fingerprintLanes(col("gram"), "h1", "h2"): _*)
     val dups = grams.groupBy("h1", "h2").agg(count(lit(1)).as("cnt"))
       .where(col("cnt") >= 2)
     val shared = grams.join(dups.select("h1", "h2"), Seq("h1", "h2"), "left_semi")

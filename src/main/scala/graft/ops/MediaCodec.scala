@@ -335,7 +335,9 @@ object MediaCodec {
     * truncated stream) live here once.
     */
   private[ops] def pngDecodePixels(b: Array[Byte]): Option[(Int, Int, Int, Array[Byte], Int)] = {
-    if (probePng(b).isEmpty) return None
+    // probePng admits 24 bytes (width and height); the IHDR fields read
+    // below run to the interlace byte at offset 28
+    if (b.length < 29 || probePng(b).isEmpty) return None
     val w = be32(b, 16); val h = be32(b, 20)
     val bitDepth = u8(b, 24); val colorType = u8(b, 25); val interlace = u8(b, 28)
     if (bitDepth != 8 || interlace != 0) return None

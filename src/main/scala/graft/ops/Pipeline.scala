@@ -65,7 +65,7 @@ object Pipeline {
     * `seenDir` (non-empty = on) makes the run INCREMENTAL — the
     * continuous-ingest loop as one knob: after URL dedup each wave
     * anti-joins its content fingerprints (the 16-byte two-lane
-    * [[Dedup.fingerprints]] keys) against the store at `seenDir`, and
+    * [[Dedup.fingerprintLanes]] keys) against the store at `seenDir`, and
     * the accepted wave's fingerprints append back — so a page SEEN by
     * any earlier wave never re-enters the corpus, including pages an
     * earlier wave later dropped for quality (the decision was already
@@ -264,7 +264,7 @@ object Pipeline {
       s"warcProfile must be 'text' or 'gz', got '${cfg.warcProfile}'")
     val spark = captures.sparkSession
     if (cfg.seenDir.nonEmpty && cfg.seenBloom) {
-      // Spark validates BloomFilterAggregate's (items, bits) against
+      // Spark validates the Bloom filter's (items, bits) against
       // these session confs at ANALYSIS time — surface the dependency as
       // a clear error here instead of a mid-pipeline AnalysisException,
       // so 100 TB sizing (items ≈ store rows, bits ≈ 10×items) knows to
@@ -386,41 +386,16 @@ object Pipeline {
     var seenAppend: () => Unit = () => ()
     val screened = if (cfg.seenDir.isEmpty) urld else {
       val seenExists = StoreSwap.open(spark, cfg.seenDir)
-      val withFp = urld
-        .withColumn("ck1", xxhash64(col("text")))
-        .withColumn("ck2", xxhash64(lit(0x9E3779B97F4A7C15L), col("text")))
+      val withFp = urld.select(col("*") +: Dedup.fingerprintLanes(col("text")): _*)
       // timed() wraps the WHOLE screen construction: the Bloom build is
       // a full scan of the seen store executed eagerly (head()), and it
       // must land in the seen_screen stage budget, not evaluate as a
       // strict argument before the clock starts
       val fresh = st.timed("seen_screen")(st.barrier(
         if (!seenExists) withFp
-        else {
-          val seen = spark.read.parquet(cfg.seenDir)
-          if (!cfg.seenBloom)
-            withFp.join(seen, Seq("ck1", "ck2"), "left_anti")
-          else {
-            // the dedupAgainstBloom shape over the store's first lane:
-            // filter-rejected rows are provably fresh (no false
-            // negatives) and skip the join; only the might-be-seen
-            // sliver pays the exact two-lane anti-join
-            import org.apache.spark.sql.GraftColumnShim.{column, expression}
-            import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
-            import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-            import org.apache.spark.sql.types.BinaryType
-            val bloom = seen.select(column(new BloomFilterAggregate(
-                expression(col("ck1")), Literal(cfg.seenBloomItems),
-                Literal(cfg.seenBloomBits)).toAggregateExpression()).as("bf"))
-              .head.getAs[Array[Byte]](0)
-            if (bloom == null) withFp // empty store: everything is fresh
-            else {
-              val maybe = column(BloomFilterMightContain(
-                Literal(bloom, BinaryType), expression(col("ck1"))))
-              withFp.where(maybe).join(seen, Seq("ck1", "ck2"), "left_anti")
-                .unionByName(withFp.where(!maybe))
-            }
-          }
-        }, audit))
+        else Dedup.screenUnseen(withFp, spark.read.parquet(cfg.seenDir), "ck1", "ck2",
+          if (cfg.seenBloom) Some((cfg.seenBloomItems, cfg.seenBloomBits)) else None),
+        audit))
       seenAppend = () => fresh.select(col("ck1"), col("ck2")).distinct()
         .write.mode("append").parquet(cfg.seenDir)
       fresh.drop("ck1", "ck2")
@@ -504,14 +479,10 @@ object Pipeline {
     * AFTER the frontier has fully materialized (deferred-commit — a
     * crash anywhere mid-composition leaves the store untouched, so a
     * retried wave recomputes identically instead of inheriting an
-    * aborted run's rows). The store carries two 8-byte xxhash64 lanes
-    * of the canonical URL — never the strings — so at 100 TB the screen
-    * join's build side is 16 bytes/URL and the exchange keys are
-    * fixed-width (a false collision needs BOTH 64-bit lanes to agree;
-    * the lanes are two seedings of the same xxhash64 family —
-    * correlated, not independent, so the bound is weaker than the ideal
-    * 2⁻¹²⁸ but still far beyond practical concern — the
-    * [[Dedup.fingerprints]] construction). Each wave appends its own
+    * aborted run's rows). The store carries the canonical URL's two
+    * [[Dedup.fingerprintLanes]] as `(uh1, uh2)` — never the strings — so
+    * at 100 TB the screen join's build side is 16 bytes/URL and the
+    * exchange keys are fixed-width. Each wave appends its own
     * file set; a long-running loop runs [[compactFetched]] periodically
     * to keep the screen's file listing bounded.
     *
@@ -746,16 +717,17 @@ object Pipeline {
     // per-row chain (extraction, RFC-3986 resolution, canonicalization,
     // eTLD+1) on one core up to the distinct fold's exchange.
     val pagesIn = spread(pages)
+    // robots.txt, projected once; its directives (sitemap roots for F0,
+    // Crawl-delay for F7) parsed once
+    val robotsTxt = robots.select(col(robotsHostCol).as("host"), col(robotsTxtCol).as("txt"))
+    val directives = Robots.directives(robotsTxt, "host", "txt")
     val abs = TextAnalysis.extractLinksCarry(pagesIn, idCol, urlCol, htmlCol)
       .select(TextAnalysis.resolveUrl(col("_page_url"), col("href")).as("_abs"),
         lit("link").as("_src"), noPrio, refDom)
     val cand0 = sitemaps match {
       case None => abs
       case Some(sm) =>
-        val roots = Robots.directives(
-            robots.select(col(robotsHostCol).as("host"),
-              col(robotsTxtCol).as("txt")), "host", "txt")
-          .select(explode(col("sitemaps")).as("sitemap_url"))
+        val roots = directives.select(explode(col("sitemaps")).as("sitemap_url"))
         val walk = Robots.sitemapFrontier(
             sm.select(col(sitemapUrlCol).as("sitemap_url"),
               col(sitemapXmlCol).as("_xml")),
@@ -860,14 +832,11 @@ object Pipeline {
     var fetchedAppend: () => Unit = () => ()
     val screened = if (cfg.fetchedDir.isEmpty) pass else {
       val fetchedExists = StoreSwap.open(spark, cfg.fetchedDir)
-      val withH = pass
-        .withColumn("_uh1", xxhash64(col("url")))
-        .withColumn("_uh2", xxhash64(lit(0x9E3779B97F4A7C15L), col("url")))
+      val withH = pass.select(col("*") +: Dedup.fingerprintLanes(col("url"), "_uh1", "_uh2"): _*)
       val unseen =
         if (!fetchedExists) withH
-        else withH.join(spark.read.parquet(cfg.fetchedDir),
-          withH("_uh1") === col("uh1") && withH("_uh2") === col("uh2"),
-          "left_anti")
+        else Dedup.screenUnseen(withH, spark.read.parquet(cfg.fetchedDir)
+          .select(col("uh1").as("_uh1"), col("uh2").as("_uh2")), "_uh1", "_uh2")
       // audited: eager for the seen_store funnel row's wall time;
       // unaudited: lazy — the site_cap barrier's materialization is the
       // single consumer and runs strictly before the deferred append
@@ -875,8 +844,7 @@ object Pipeline {
         else st.barrier(unseen, eager = false)
       // reads the materialized wave-distinct's blocks — no pages replay
       fetchedAppend = () => fetchedDistinct
-        .select(xxhash64(col("url")).as("uh1"),
-          xxhash64(lit(0x9E3779B97F4A7C15L), col("url")).as("uh2"))
+        .select(Dedup.fingerprintLanes(col("url"), "uh1", "uh2"): _*)
         .write.mode("append").parquet(cfg.fetchedDir)
       fresh.drop("_uh1", "_uh2")
     }
@@ -936,8 +904,7 @@ object Pipeline {
     // robotsFilter's longest-match aggregation groups on whatever id
     // column it is handed, so the swap reaches inside the operator
     val idKey = if (cfg.hashKeys) "_uh" else "url"
-    val rules = Robots.parseRules(robots.select(
-      col(robotsHostCol).as("host"), col(robotsTxtCol).as("txt")), "host", "txt")
+    val rules = Robots.parseRules(robotsTxt, "host", "txt")
     val verdicts = Robots.robotsFilter(
       dist.select(col(idKey), col("host"), col("path")),
       idKey, "host", "path", rules, "host")
@@ -950,9 +917,7 @@ object Pipeline {
     // per-host Crawl-delay annotation and the source join-back (the
     // robots frame is per-host small — AQE broadcasts it; the provenance
     // join is one narrow equi-join on the ≤ maxPerSite×domains output)
-    val delays = Robots.directives(robots.select(
-        col(robotsHostCol).as("host"), col(robotsTxtCol).as("txt")),
-      "host", "txt").select(col("host"), col("crawl_delay"))
+    val delays = directives.select(col("host"), col("crawl_delay"))
     // the heap's ranking key: purely the url's hash by default; under
     // usePriority a composite that ranks by (priority DESC, hash) while
     // staying EXACT in doubles — priorities quantize to the protocol's

@@ -1,12 +1,12 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Row, SaveMode}
+import org.apache.spark.sql.{DataFrame, GraftColumnShim, Row, SaveMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 import graft.{Metric, QType, QuantParams}
 import graft.functions.{code_distance, id_set_member, quantize_codes}
-import graft.expressions.ShortlistIds
+import graft.expressions.{ShortlistIds, ToVector}
 import graft.catalog.VectorCatalog
 import graft.kernels.Quantize
 
@@ -105,19 +105,6 @@ object Quantizer {
                cfg: graft.VectorConfig, table: String, column: String): (QuantParams, Long) =
     quantize(df, idCol, vecCol, quantPath, cfg.qType, table, column, cfg.maxMemory, cfg.dim)
 
-  /** Decode a PACKED blob column of the given element type to the
-    * canonical `array<float>` — the same ToVector path as the scalar
-    * `vector_as_*` surface (dim-checked when dim > 0).
-    */
-  private def decodePacked(c: org.apache.spark.sql.Column, srcType: graft.ElemType,
-                           dim: Int): org.apache.spark.sql.Column = srcType match {
-    case graft.ElemType.F32 => graft.functions.vector_as_f32(c, dim)
-    case graft.ElemType.F16 => graft.functions.vector_as_f16(c, dim)
-    case graft.ElemType.BF16 => graft.functions.vector_as_bf16(c, dim)
-    case graft.ElemType.I8 => graft.functions.vector_as_i8(c, dim)
-    case graft.ElemType.U8 => graft.functions.vector_as_u8(c, dim)
-  }
-
   /** Q1 over a PACKED source column (f32/f16/bf16/i8/u8 blobs): the
     * reference's rebuild decodes EVERY stored element type before
     * re-quantizing (sqlite-vector.c:1199-1255); the Spark equivalent
@@ -130,10 +117,11 @@ object Quantizer {
                    srcType: graft.ElemType, quantPath: String,
                    qType: QType = QType.Auto, table: String = "", column: String = "",
                    maxMemory: Long = 30L * 1024 * 1024, dim: Int = -1): (QuantParams, Long) = {
-    // ToVector is null-safe: a NULL blob decodes to a NULL vector, which
-    // both passes already skip
-    val decoded = df.select(col(idCol),
-      decodePacked(col(vecCol), srcType, dim).as(vecCol))
+    // the `vector_as_*` decode (dim-checked when dim > 0); ToVector is
+    // null-safe: a NULL blob decodes to a NULL vector, which both passes
+    // already skip
+    val decoded = df.select(col(idCol), GraftColumnShim.column(
+      ToVector(GraftColumnShim.expression(col(vecCol)), srcType, dim)).as(vecCol))
     quantize(decoded, idCol, vecCol, quantPath, qType, table, column, maxMemory, dim)
   }
 
@@ -356,7 +344,7 @@ object Quantizer {
       .persist(StorageLevel.MEMORY_ONLY)
     val stats = src.sparkSession.sparkContext.runJob(blocks,
       (it: Iterator[CodeBlock]) => it.foldLeft((0L, 0L)) { case ((n, bytes), b) => (n + 1, bytes + b.bytes) })
-    org.apache.spark.sql.GraftColumnShim.rddFrame(src.sparkSession, src.schema,
+    GraftColumnShim.rddFrame(src.sparkSession, src.schema,
       new CodeBlockRows(blocks, idIsInt, stats.map(_._1).sum), stats.map(_._2).sum)
   }
 

@@ -558,10 +558,10 @@ object TextAnalysis {
     * documents, with doc- and occurrence-counts. Unlike
     * [[graft.ops.Dedup.repeatedSpans]] (within one document, zero
     * shuffle), this shuffles — but NEVER on the gram string: every
-    * exchange keys on the gram's 128-bit content fingerprint (two
-    * independently-seeded xxhash64 lanes, the [[graft.ops.Dedup]]
-    * convention), so a 100 TB corpus moves 16-byte keys where the naive
-    * plan moves full n-gram text (~n× heavier). Strings are recovered
+    * exchange keys on the gram's 128-bit content fingerprint
+    * ([[graft.ops.Dedup.fingerprintLanes]]), so a 100 TB corpus moves
+    * 16-byte keys where the naive plan moves full n-gram text (~n×
+    * heavier). Strings are recovered
     * for the SURVIVORS only, by one hash-keyed join back against a
     * second local gram pass — two corpus scans total, the classic
     * scan-vs-shuffle trade that wins whenever the exchange, not the
@@ -592,7 +592,7 @@ object TextAnalysis {
     // hash rollup counts docs and sums occurrences — both exchanges carry
     // 16-byte keys, the gram string is dropped before the first one
     val counts = grams
-      .select(col("doc_id"), gramHash1.as("h1"), gramHash2.as("h2"))
+      .select(col("doc_id") +: gramLanes: _*)
       .groupBy("h1", "h2", "doc_id").agg(count(lit(1)).as("_c"))
       .groupBy("h1", "h2")
       .agg(count(lit(1)).as("n_docs"), sum(col("_c")).as("n_occurrences"))
@@ -600,18 +600,17 @@ object TextAnalysis {
     // survivor string recovery: re-derive grams locally (second scan),
     // inner-join the output-sized survivor set (AQE broadcasts it when
     // small), and collapse each fingerprint's identical strings map-side
-    grams.select(gramHash1.as("h1"), gramHash2.as("h2"), col("gram"))
+    grams.select(gramLanes :+ col("gram"): _*)
       .join(counts, Seq("h1", "h2"))
       .groupBy("h1", "h2", "n_docs", "n_occurrences")
       .agg(min(col("gram")).as("gram"))
       .select(col("gram"), col("n_docs"), col("n_occurrences"))
   }
 
-  /** The 2-lane 128-bit gram fingerprint (seed convention shared with
-    * [[graft.ops.Dedup.fingerprints]]).
+  /** The gram's 128-bit fingerprint as `(h1, h2)`
+    * ([[graft.ops.Dedup.fingerprintLanes]]).
     */
-  private def gramHash1 = xxhash64(col("gram"))
-  private def gramHash2 = xxhash64(lit(0x9E3779B97F4A7C15L), col("gram"))
+  private def gramLanes = Dedup.fingerprintLanes(col("gram"), "h1", "h2")
 
   /** Corpus-novelty score: the fraction of a document's DISTINCT token
     * n-grams that appear in no other document — high novelty marks
@@ -639,7 +638,7 @@ object TextAnalysis {
         explode(when(cnt > 0,
             transform(sequence(lit(1), cnt), i => array_join(slice(toks, i, lit(n)), " ")))
           .otherwise(array().cast("array<string>"))).as("gram"))
-      .select(col(idCol), gramHash1.as("h1"), gramHash2.as("h2"))
+      .select(col(idCol) +: gramLanes: _*)
       .distinct()
     val dfreq = grams.groupBy("h1", "h2").agg(count(lit(1)).as("gdf"))
     grams.join(dfreq, Seq("h1", "h2"))

@@ -305,4 +305,22 @@ class KernelSpec extends AnyFunSuite {
         assert(ex.getMessage == s"$fn: NULL lane at index 1 (vectors must be dense)")
     }
   }
+
+  test("png_pixel_stats / png_dhash: a PNG cut to 24..28 bytes is NULL in eval and in generated code") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.types.BinaryType
+    import graft.expressions.{PngDhashExpr, PngPixelStatsExpr}
+    // signature + IHDR width/height is 24 bytes, which probePng admits; the
+    // bit depth, color type and interlace bytes sit at offsets 24, 25, 28
+    val png = graft.ops.MediaCodec.pngPixelFixture(9, 8, 5L, 0)
+    val in = BoundReference(0, BinaryType, nullable = true)
+    for (e <- Seq(PngPixelStatsExpr(in), PngDhashExpr(in)); n <- 24 to 28) {
+      val row = InternalRow(png.take(n))
+      assert(e.eval(row) == null, s"${e.prettyName} eval at $n bytes")
+      assert(GenerateUnsafeProjection.generate(Seq(e)).apply(row).isNullAt(0),
+        s"${e.prettyName} codegen at $n bytes")
+    }
+  }
 }

@@ -350,6 +350,54 @@ class PipelineSpec extends AnyFunSuite {
     assert(exact.nonEmpty) // 6 and 8 are fresh
   }
 
+  test("screen stores: hand-written (ck1, ck2) and (uh1, uh2) stores screen; waves append the same lanes") {
+    val base = java.nio.file.Files.createTempDirectory("graft_pfmt").toString
+    import spark.implicits._
+    // the on-disk lane formulas, restated here on purpose: a renamed lane
+    // or a flipped seed order orphans every store already written
+    def lanes(xs: Seq[String], n1: String, n2: String): DataFrame =
+      xs.toDF("x").select(xxhash64(col("x")).as(n1),
+        xxhash64(lit(0x9E3779B97F4A7C15L), col("x")).as(n2))
+    def content(dir: String): Seq[(Long, Long)] = spark.read.parquet(dir).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    def expected(xs: Seq[String]): Seq[(Long, Long)] = lanes(xs, "a", "b").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+
+    // curate: pre-seed the seen store with the screened texts of pages 1
+    // and 2 (crawl's body after C4 line rendering: one sentence a line)
+    def screened(n: Int) = s"the quick brown fox number $n jumps over one lazy dog.\n" +
+      s"it runs near marker m${n}a and m${n}b then m${n}c every single day with speed."
+    val robots = Seq(("site0.com", ""), ("site1.com", ""), ("site2.com", ""))
+      .toDF("host", "txt")
+    val bench = spark.range(1).select(lit("zzz never matches zzz").as("text"))
+    val seen = base + "/seen"
+    lanes(Seq(screened(1), screened(2)), "ck1", "ck2").write.parquet(seen)
+    // a recrawl of 1, 2 under fresh ids drops exactly them; 3 and 6 pass
+    val wave = Pipeline.curateCrawl(crawl(64).where(col("doc_id").isin(1L, 2L, 3L, 6L))
+        .withColumn("doc_id", col("doc_id") + lit(1000L)),
+      "doc_id", "warc", robots, "host", "txt", bench, "text", base + "/shards",
+      Pipeline.CurateConfig(seenDir = seen, qualityMinWords = 1, capPerDomain = 100,
+        packBudget = 256, nShards = 2, shardBuckets = 8))
+    assert(wave.select("doc_id").collect().map(_.getLong(0)).sorted.toSeq === Seq(1003L, 1006L))
+    // the append keeps the store's column names and lane values
+    assert(spark.read.parquet(seen).columns.toSeq === Seq("ck1", "ck2"))
+    assert(content(seen) === expected(Seq(1, 2, 3, 6).map(screened)))
+
+    // frontier: pre-seed the fetched store with two of wave {p3, p15}'s
+    // four candidates (p4, x3, p0, x15)
+    val hosts = Seq(("h0.com", "")).toDF("host", "txt")
+    val fetched = base + "/fetched"
+    lanes(Seq("https://h0.com/p4", "https://f.net/x15"), "uh1", "uh2").write.parquet(fetched)
+    val w = Pipeline.buildFrontier(frontierPagesFor(Seq(3L, 15L)), "doc_id",
+      "page_url", "html", hosts, "host", "txt",
+      Pipeline.FrontierConfig(maxPerSite = 10, fetchedDir = fetched))
+    assert(w.select("url").collect().map(_.getString(0)).toSet ===
+      Set("https://f.net/x3", "https://h0.com/p0"))
+    assert(spark.read.parquet(fetched).columns.toSeq === Seq("uh1", "uh2"))
+    assert(content(fetched) === expected(Seq("https://h0.com/p4", "https://f.net/x15",
+      "https://h0.com/p3", "https://h0.com/p15")))
+  }
+
   test("cappedCaptures: captures hitting warcMaxRecords are surfaced, never silent") {
     // four records per capture blob (crawl() emits one response record each)
     val four = crawl(8).select(col("doc_id"),

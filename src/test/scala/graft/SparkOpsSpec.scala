@@ -2199,6 +2199,14 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(kept == Set(3L, 7L))
   }
 
+  test("dedupAgainst / dedupAgainstBloom: a batch column named like a lane does not steer the screen") {
+    val seen = Seq((0L, "alpha")).toDF("doc_id", "text")
+    val batch = Seq((1L, "alpha", 7L, 8L), (3L, "gamma", 7L, 8L)).toDF("doc_id", "text", "ck1", "ck2")
+    for (kept <- Seq(graft.ops.Dedup.dedupAgainst(batch, seen, "text"),
+        graft.ops.Dedup.dedupAgainstBloom(batch, seen, "text", expectedItems = 3, numBits = 64)))
+      assert(kept.collect().map(_.getLong(0)).toSet == Set(3L))
+  }
+
   test("unigramLogProb matches a driver-side computation") {
     val d = Seq((1L, "a a b"), (2L, "b c")).toDF("doc_id", "text")
     // corpus: a×2, b×2, c×1, N=5; mirror the operator's arithmetic exactly:
