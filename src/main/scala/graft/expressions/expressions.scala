@@ -29,7 +29,10 @@ import graft.kernels.{Distances, Quantize, Sketches}
   * dot (:112-136), cosine zero-norm → 1.0 (:105-107) with clamp to [-1,1],
   * L2 = sqrt of squared sum (:39-68). Generated code and `eval` both copy
   * the two arrays out and call the one kernel, `Distances.doubleJ`
-  * ([[Distances.onDouble]]), so a SIMD kernel there serves both.
+  * ([[Distances.onDouble]]), so a SIMD kernel there serves both. A
+  * constant `right` — the probe literal of every scan — is copied out
+  * once: per instance in `eval`, and as a reference object in generated
+  * code, so a new probe still compiles no class.
   */
 case class VectorDistance(left: Expression, right: Expression, metric: Metric)
     extends BinaryExpression {
@@ -39,12 +42,25 @@ case class VectorDistance(left: Expression, right: Expression, metric: Metric)
 
   private val mId = Distances.metricId(metric)
 
-  override def nullSafeEval(a: Any, b: Any): Any =
-    Distances.doubleJ(a.asInstanceOf[ArrayData].toFloatArray(), b.asInstanceOf[ArrayData].toFloatArray(), mId)
+  // NULL when `right` is not constant, or is a NULL constant
+  @transient private lazy val constRight: Array[Float] =
+    if (!right.foldable) null
+    else right.eval() match {
+      case null => null
+      case v => v.asInstanceOf[ArrayData].toFloatArray()
+    }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+  override def nullSafeEval(a: Any, b: Any): Any = {
+    val y = if (constRight != null) constRight else b.asInstanceOf[ArrayData].toFloatArray()
+    Distances.doubleJ(a.asInstanceOf[ArrayData].toFloatArray(), y, mId)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val probe = Option(constRight).map(ctx.addReferenceObj("probe", _, "float[]"))
     nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.kernels.Distances.doubleJ($a.toFloatArray(), $b.toFloatArray(), $mId);")
+      s"${ev.value} = graft.kernels.Distances.doubleJ($a.toFloatArray(), " +
+        s"${probe.getOrElse(s"$b.toFloatArray()")}, $mId);")
+  }
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
@@ -172,13 +188,20 @@ case class CodeDistance(left: Expression, right: Expression, metric: Metric, sig
   * subquery's result, and never written into generated source. NULL, a
   * shortlist over its cap or none published yet, stands for every id.
   * Copies of an [[IdSetMember]] share this leaf, so a bound copy reads
-  * what the plan's own expression was given.
+  * what the plan's own expression was given. `slot` is the leaf's
+  * identity: a plan bound to a new probe swaps in a fresh slot, which
+  * must not compare equal to the one it replaces.
   */
-case class ShortlistIds() extends LeafExpression with Unevaluable {
+case class ShortlistIds(slot: Long) extends LeafExpression with Unevaluable {
   @volatile private[graft] var ids: Array[Long] = _
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = true
   override def prettyName: String = "shortlist"
+}
+
+object ShortlistIds {
+  private val slots = new java.util.concurrent.atomic.AtomicLong()
+  def fresh(): ShortlistIds = ShortlistIds(slots.incrementAndGet())
 }
 
 /** `left ∈ right` for the certificate's shortlist, an int or bigint id

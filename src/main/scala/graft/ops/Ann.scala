@@ -10,8 +10,8 @@ import graft.kernels.Sketches
   *
   * Each search here only picks its candidate rows — the probed LSH
   * buckets or IVF cells, plus an optional predicate — and ranks them with
-  * [[Knn.fullScan]]; the rank's shape and NULL rule are written once, in
-  * [[Knn]].
+  * [[Knn.exactRank]], planned per call since the candidates depend on the
+  * probe; the rank's shape and NULL rule are written once, in [[Knn]].
   *
   * Scale path: random-hyperplane LSH bucketing. Each vector gets an
   * `nBits`-bit signature (one codegen'd traversal — HyperplaneSignature);
@@ -38,7 +38,7 @@ object Ann {
 
   /** ANN top-k over an in-memory/bucketed DataFrame: the candidates are
     * the rows whose bucket is within hamming distance 1 of the probe's,
-    * ranked by [[Knn.fullScan]]. The bucket filter is a long IN-list →
+    * ranked by [[Knn.exactRank]]. The bucket filter is a long IN-list →
     * pushed to the scan (and to partition pruning when the source is
     * bucket-partitioned).
     */
@@ -46,7 +46,7 @@ object Ann {
               k: Int, metric: String, nBits: Int = 8, seed: Long = 42L): DataFrame = {
     val bucketed = if (df.columns.contains("bucket")) df
                    else withBuckets(df, vecCol, nBits, probe.length, seed)
-    Knn.fullScan(bucketed.where(col("bucket").isin(probeBuckets(probe, nBits, seed): _*)),
+    Knn.exactRank(bucketed.where(col("bucket").isin(probeBuckets(probe, nBits, seed): _*)),
       idCol, vecCol, probe, k, metric)
   }
 
@@ -117,7 +117,7 @@ object Ann {
                     probe: Array[Float], k: Int, metric: String,
                     nBits: Int = 8, seed: Long = 42L): DataFrame = {
     val buckets = probeBuckets(probe, nBits, seed)
-    Knn.fullScan(readProbedDirs(spark, path, "bucket", buckets).where(col("bucket").isin(buckets: _*)),
+    Knn.exactRank(readProbedDirs(spark, path, "bucket", buckets).where(col("bucket").isin(buckets: _*)),
       idCol, vecCol, probe, k, metric)
   }
 
@@ -311,7 +311,7 @@ object Ann {
       .zipWithIndex.sortBy { case (d, i) => (d, i) }.take(nprobe).map(_._2).toSeq
 
   /** IVF ANN top-k: scan only the `nprobe` nearest cells (partition-pruned
-    * like the LSH store) and rank their rows with [[Knn.fullScan]].
+    * like the LSH store) and rank their rows with [[Knn.exactRank]].
     */
   def ivfTopK(spark: SparkSession, path: String, idCol: String, vecCol: String,
               probe: Array[Float], k: Int, metric: String,
@@ -343,6 +343,6 @@ object Ann {
     val store = readProbedDirs(spark, path, "cluster", cells.map(_.toLong))
       .where(col("cluster").isin(cells: _*))
       .where(predicate)
-    Knn.fullScan(store, idCol, vecCol, probe, k, metric)
+    Knn.exactRank(store, idCol, vecCol, probe, k, metric)
   }
 }

@@ -1,8 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnShim}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
 
+import graft.Metric
 import graft.functions.{vectorLit, vector_distance}
 
 /** Exact brute-force k-NN and streaming distance annotation — the Spark
@@ -46,15 +48,53 @@ import graft.functions.{vectorLit, vector_distance}
   * The quantized scan ([[Quantizer.quantScan]]) and the certificate's
   * code pass have the same shape in their own operator, [[QuantTopK]],
   * which scans contiguous code blocks when the store is preloaded.
+  *
+  * '''Prepared plans.''' The three exact serving entry points — [[fullScan]],
+  * [[Quantizer.certifiedTopK]] (its fallbacks to [[fullScan]] included)
+  * and the SQL `vector_scan` / `vector_full_scan` — plan once per store
+  * and bind only the probe, as the reference plans in `xBestIndex` and
+  * binds the `?` in `xFilter` (sqlite-vector.c:1723-1826, 1850-1880):
+  *
+  *  - '''prepared''' once per key, by the first call: the whole physical
+  *    plan, through analysis, optimization, planning and Spark's
+  *    preparation rules, with its parquet scans' input RDDs and broadcast
+  *    Hadoop conf. The [[Prepared]] cache holds it as a [[Template]];
+  *  - '''bound''' per call: a copy of that plan with the call's f32 probe
+  *    literal and, for the certified plan, the probe's codes, its
+  *    [[Certificate]] and a fresh shortlist slot. The copy shares the
+  *    leaf scans and nothing else, so concurrent calls on one template
+  *    each get their own answer;
+  *  - the '''key''': the store frame's canonicalized analyzed plan with
+  *    the file listings it reads, the id and vector columns, k and the
+  *    metric, and for the certified plan also the code store's plan,
+  *    its `QuantParams` and the shortlist cap. A replaced view, a fresh
+  *    read of a rewritten path, new params or a re-preloaded code store
+  *    is a new key; [[Quantizer.cleanup]] drops the templates over the
+  *    blocks it releases.
+  *
+  * A plan with an exchange, a subquery or a cached-relation scan is
+  * planned per call, as are the paths whose candidates depend on the
+  * probe ([[exactRank]]: the IVF and LSH cells, the rerank's shortlist
+  * join, MRL). The first call per (store, k, metric) pays the planning.
   */
 object Knn {
 
   /** K1 `vector_full_scan`: exact k-NN over `df`, the rank by `metric`
-    * distance to the probe; k=0 → empty (:1796).
+    * distance to the probe; k=0 → empty (:1796). A prepared plan (see
+    * the object doc).
     */
   def fullScan(df: DataFrame, idCol: String, vecCol: String,
                probe: Array[Float], k: Int, metric: String): DataFrame =
-    rank(df, idCol, col(vecCol), k)(probeDistance(probe, metric))
+    Prepared.frame(Prepared.key(df, idCol, vecCol, k, Metric.parse(metric)), Binding(probeLiteral(probe), None)) {
+      (probeLit, _) => rank(df, idCol, col(vecCol), k)(probeDistance(probeLit, metric))
+    }
+
+  /** [[fullScan]] planned for this call alone, for candidates that depend
+    * on the probe.
+    */
+  private[ops] def exactRank(df: DataFrame, idCol: String, vecCol: String,
+                             probe: Array[Float], k: Int, metric: String): DataFrame =
+    rank(df, idCol, col(vecCol), k)(probeDistance(probeLiteral(probe), metric))
 
   /** K1 over the reference's native storage form: a packed BLOB column,
     * ranked by the (metric × element-type) kernel dispatch, distance
@@ -71,7 +111,7 @@ object Knn {
     */
   def distanceStream(df: DataFrame, idCol: String, vecCol: String,
                      probe: Array[Float], metric: String): DataFrame =
-    score(df, idCol, col(vecCol))(probeDistance(probe, metric))
+    score(df, idCol, col(vecCol))(probeDistance(probeLiteral(probe), metric))
 
   /** The documented join-back idiom (reference README.md:97-99): k-NN ids
     * joined to the base table. The k-row side is always broadcast — a
@@ -107,7 +147,7 @@ object Knn {
                   probe: Array[Float], coarseDim: Int, c: Int, k: Int, metric: String): DataFrame = {
     require(coarseDim > 0 && coarseDim <= probe.length,
       s"coarseDim $coarseDim out of range (dim ${probe.length})")
-    val shortlist = rank(df, idCol, prefix, c)(probeDistance(probe.take(coarseDim), metric))
+    val shortlist = rank(df, idCol, prefix, c)(probeDistance(probeLiteral(probe.take(coarseDim)), metric))
     rerank(df, shortlist, idCol, vecCol, probe, k, metric)
   }
 
@@ -124,8 +164,12 @@ object Knn {
   def topK(scored: DataFrame, dist: Column, id: Column, k: Int): DataFrame =
     KnnTopK.frame(scored, dist, id, k)
 
-  private def probeDistance(probe: Array[Float], metric: String)(v: Column): Column =
-    vector_distance(v, vectorLit(probe), metric)
+  /** The probe as the Catalyst literal a plan holds, which a binding swaps. */
+  private[ops] def probeLiteral(probe: Array[Float]): Literal =
+    GraftColumnShim.eagerExpression(vectorLit(probe)).asInstanceOf[Literal]
+
+  private[ops] def probeDistance(probe: Literal, metric: String)(v: Column): Column =
+    vector_distance(v, GraftColumnShim.column(probe), metric)
 
   /** `(id, <as>)` with `<as>` = `distance(value)`, for the rows of
     * `candidates` whose ranked `value` is not NULL.
@@ -140,9 +184,9 @@ object Knn {
     topK(score(candidates, idCol, value, as)(distance), col(as), col(idCol), k)
 
   /** The rerank: `shortlist`'s `idCol` ids broadcast into `full`, then
-    * [[fullScan]] of the joined rows.
+    * [[exactRank]] of the joined rows.
     */
   private[ops] def rerank(full: DataFrame, shortlist: DataFrame, idCol: String, vecCol: String,
                           probe: Array[Float], k: Int, metric: String): DataFrame =
-    fullScan(full.join(broadcast(shortlist.select(col(idCol))), idCol), idCol, vecCol, probe, k, metric)
+    exactRank(full.join(broadcast(shortlist.select(col(idCol))), idCol), idCol, vecCol, probe, k, metric)
 }

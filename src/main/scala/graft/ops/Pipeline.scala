@@ -347,11 +347,14 @@ object Pipeline {
     // pipeline_e2e / crawl_loop_e2e). Broadcast keeps extraction map-side
     // over the ingest barrier's width; past the guard the planner's
     // shuffle join returns, whose post-shuffle partitions are
-    // advisory-sized (parallel) at that scale.
-    val allowedIds = st.barrier(
-      verdicts.where(col("allowed")).select(idCol), audit)
-    val allowed = withHp.join(
-      guardedBroadcast(allowedIds, cfg.maxBroadcastRows), idCol)
+    // advisory-sized (parallel) at that scale. The guard's count is the
+    // first job to read a lazy ingest barrier, so the WARC parse runs in
+    // it: labelled ingest, or an already-persisted capture frame's parse
+    // is booked to no stage.
+    val allowed = st.timed("ingest") {
+      val allowedIds = st.barrier(verdicts.where(col("allowed")).select(idCol), audit)
+      withHp.join(guardedBroadcast(allowedIds, cfg.maxBroadcastRows), idCol)
+    }
 
     // S3+S4+S5: main-content extraction, mojibake repair, sentence-line
     // rendering + C4 line cleaning — one per-row column chain, ONE scan

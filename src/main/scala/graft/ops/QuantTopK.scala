@@ -338,10 +338,11 @@ object QuantTopK {
     GraftColumnShim.ofRows(spark, QuantTopK(codeSource(quantDF), probeCodes, k, metric, qType))
   }
 
-  /** Plans graft's three top-k nodes: [[KnnTopK]], [[QuantTopK]] and
-    * [[CertifiedTopK]]. A code pass scans the blocks when its source is a
-    * preloaded frame and the source's rows otherwise; a projection over a
-    * rank is applied to its k rows on the driver.
+  /** Plans graft's three top-k nodes, [[KnnTopK]], [[QuantTopK]] and
+    * [[CertifiedTopK]], and the [[PreparedScan]] of a prepared one. A code
+    * pass scans the blocks when its source is a preloaded frame and the
+    * source's rows otherwise; a projection over a rank is applied to its
+    * k rows on the driver.
     */
   object Strategy extends SparkStrategy {
     override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
@@ -350,11 +351,13 @@ object QuantTopK {
       case q: QuantTopK => QuantTopKExec(q.output, q.probeCodes, q.k, q.metric, q.qType, source(q.child)) :: Nil
       case c: CertifiedTopK => certified(c, c.rank) :: Nil
       case Project(list, c: CertifiedTopK) => certified(c, Project(list, c.rank)) :: Nil
+      case p: PreparedScan => PreparedScanExec(p.output, p.output, p.template.bind(p.binding)) :: Nil
+      case Project(list, p: PreparedScan) => PreparedScanExec(list, p.output, p.template.bind(p.binding)) :: Nil
       case _ => Nil
     }
 
     private def certified(c: CertifiedTopK, rank: LogicalPlan): SparkPlan =
-      CertifiedTopKExec(c.probeCodes.value.asInstanceOf[Array[Byte]], c.k, c.qType, c.certificate,
+      CertifiedTopKExec(c.probeCodes.value.asInstanceOf[Array[Byte]], c.k, c.qType, c.certificate, c.slot,
         source(c.codes), planLater(rank))
 
     private def source(codes: LogicalPlan): SparkPlan = codes match {

@@ -1,12 +1,13 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, GraftColumnShim, Row, SaveMode}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 import graft.{Metric, QType, QuantParams}
 import graft.functions.{code_distance, id_set_member, quantize_codes}
-import graft.expressions.{ShortlistIds, ToVector}
+import graft.expressions.ToVector
 import graft.catalog.VectorCatalog
 import graft.kernels.Quantize
 
@@ -293,6 +294,10 @@ object Quantizer {
     * probe is checked on the driver: a NaN or infinite lane would make
     * the bound NaN, so such a probe goes to [[Knn.fullScan]], as do k ≤ 0
     * and any metric but l2 / sq_l2 (the bound is an L2 triangle inequality).
+    *
+    * The plan is prepared once per key and each call binds its probe, its
+    * codes, its certificate and a fresh shortlist slot into a copy; the
+    * [[Knn]] scaladoc says what is prepared, what is bound and the key.
     */
   def certifiedTopK(base: DataFrame, idCol: String, vecCol: String,
                     quantDF: DataFrame, probe: Array[Float], p: QuantParams,
@@ -309,9 +314,13 @@ object Quantizer {
     }.sum)
     val bound = 0.5 * math.sqrt(probe.length.toDouble) + ep
     val cap = math.min(math.max(maxBroadcastCand, 0L), Int.MaxValue - 1L).toInt
-    val shortlist = ShortlistIds()
-    val rank = Knn.fullScan(base.where(id_set_member(col(idCol), shortlist)), idCol, vecCol, probe, k, metric)
-    CertifiedTopK.frame(quantDF, rank, qprobe, k, p.qType, Certificate(bound, cap))
+    val certificate = Certificate(bound, cap)
+    Prepared.frame(Prepared.key(base, idCol, vecCol, k, m, Some((quantDF, p, cap))),
+        Binding(Knn.probeLiteral(probe), Some((Literal(qprobe), certificate)))) { (probeLit, slot) =>
+      val rank = Knn.rank(base.where(id_set_member(col(idCol), slot)), idCol, col(vecCol), k)(
+        Knn.probeDistance(probeLit, metric))
+      CertifiedTopK.frame(quantDF, rank, qprobe, k, p.qType, certificate, slot)
+    }
   }
 
   /** K4 `vector_quantize_scan_stream`: code-space distances, no sort/limit.
@@ -354,7 +363,9 @@ object Quantizer {
     * (store + sidecar + catalog params) is the path-taking overload below.
     */
   def cleanup(quantDF: DataFrame): Unit = {
-    CodeBlocks.of(quantDF.queryExecution.analyzed).foreach(_.blocks.unpersist(blocking = false))
+    val blocks = CodeBlocks.of(quantDF.queryExecution.analyzed)
+    blocks.foreach(_.blocks.unpersist(blocking = false))
+    Prepared.release(blocks)
     quantDF.unpersist()
   }
 

@@ -86,13 +86,8 @@ case class KnnTopKExec(order: Seq[SortOrder], k: Int, projectList: Seq[NamedExpr
   override def executeCollect(): Array[InternalRow] = {
     if (k == 0) return Array.empty
     val ord = new LazilyGeneratedOrdering(order, child.output)
-    val top = sparkContext.runJob(child.execute(), new RankTask(ord, k)).flatten.sorted(ord).take(k)
-    if (projectList == child.output) top
-    else {
-      val proj = UnsafeProjection.create(projectList, child.output)
-      proj.initialize(0)
-      top.map(r => proj(r).copy())
-    }
+    KnnTopKExec.project(sparkContext.runJob(child.execute(), new RankTask(ord, k)).flatten.sorted(ord).take(k),
+      projectList, child.output)
   }
 
   override protected def doExecute(): RDD[InternalRow] = sparkContext.parallelize(executeCollect().toSeq, 1)
@@ -100,14 +95,27 @@ case class KnnTopKExec(order: Seq[SortOrder], k: Int, projectList: Seq[NamedExpr
   override protected def withNewChildInternal(newChild: SparkPlan): KnnTopKExec = copy(child = newChild)
 }
 
+object KnnTopKExec {
+
+  /** `rows` of `input` under `projectList`, on the driver. */
+  private[ops] def project(rows: Array[InternalRow], projectList: Seq[NamedExpression],
+                           input: Seq[Attribute]): Array[InternalRow] =
+    if (projectList == input) rows
+    else {
+      val proj = UnsafeProjection.create(projectList, input)
+      proj.initialize(0)
+      rows.map(r => proj(r).copy())
+    }
+}
+
 /** [[Quantizer.certifiedTopK]] as one node: a code pass over `codes` (an
   * `(id, code)` plan) under `certificate` yields the shortlist, and
   * `rank` — the exact rank of the full-precision rows whose id is in it,
-  * read through a [[ShortlistIds]] — gives the answer. `probeCodes` is a
-  * binary literal, so two plans for one probe are equal.
+  * read through `slot` — gives the answer. `probeCodes` is a binary
+  * literal, so two plans for one probe and one slot are equal.
   */
 case class CertifiedTopK(codes: LogicalPlan, rank: LogicalPlan, probeCodes: Literal, k: Int, qType: QType,
-                         certificate: Certificate) extends BinaryNode {
+                         certificate: Certificate, slot: ShortlistIds) extends BinaryNode {
   override def left: LogicalPlan = codes
   override def right: LogicalPlan = rank
   override def output: Seq[Attribute] = rank.output
@@ -126,25 +134,25 @@ case class CertifiedTopK(codes: LogicalPlan, rank: LogicalPlan, probeCodes: Lite
 object CertifiedTopK {
 
   /** The certified frame: `quantDF`'s codes shortlist the rows of `rank`,
-    * a rank whose filter reads a [[ShortlistIds]].
+    * a rank whose filter reads `slot`.
     */
   def frame(quantDF: DataFrame, rank: DataFrame, probeCodes: Array[Byte], k: Int, qType: QType,
-            certificate: Certificate): DataFrame = {
+            certificate: Certificate, slot: ShortlistIds): DataFrame = {
     QuantTopK.Strategy.install(quantDF.sparkSession)
     GraftColumnShim.ofRows(quantDF.sparkSession, CertifiedTopK(QuantTopK.codeSource(quantDF),
-      rank.queryExecution.analyzed, Literal(probeCodes), k, qType, certificate))
+      rank.queryExecution.analyzed, Literal(probeCodes), k, qType, certificate, slot))
   }
 }
 
 /** [[CertifiedTopK]] in two jobs. The code pass keeps, per partition,
   * the rows within thr of that partition's own k-th code distance; the
-  * driver merges them into the shortlist and publishes it to the rank's
-  * [[ShortlistIds]] before the rank runs. A shortlist over its cap
-  * publishes NULL, which admits every row: the rank is then an exact
-  * pass over every vector.
+  * driver merges them into the shortlist and publishes it to `slot`,
+  * which the rank's filter reads, before the rank runs. A shortlist over
+  * its cap publishes NULL, which admits every row: the rank is then an
+  * exact pass over every vector.
   */
 case class CertifiedTopKExec(probeCodes: Array[Byte], k: Int, qType: QType, certificate: Certificate,
-                             codes: SparkPlan, rank: SparkPlan) extends BinaryExecNode {
+                             slot: ShortlistIds, codes: SparkPlan, rank: SparkPlan) extends BinaryExecNode {
   override def left: SparkPlan = codes
   override def right: SparkPlan = rank
   override def output: Seq[Attribute] = rank.output
@@ -167,7 +175,7 @@ case class CertifiedTopKExec(probeCodes: Array[Byte], k: Int, qType: QType, cert
       longMetric("overflowed") -> (if (ids.isEmpty) 1L else 0L))
     // the rank's filter reads the ids when its stage is generated or its
     // tasks are serialized, both after this
-    rank.foreach(_.expressions.foreach(_.foreach { case s: ShortlistIds => s.ids = ids.orNull; case _ => }))
+    slot.ids = ids.orNull
     rank.executeCollect()
   }
 

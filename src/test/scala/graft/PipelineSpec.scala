@@ -103,6 +103,39 @@ class PipelineSpec extends AnyFunSuite {
     assert(sc.getLocalProperty("spark.job.description") === null)
   }
 
+  test("curateCrawl over a persisted capture frame: every curate label has a job") {
+    val out = java.nio.file.Files.createTempDirectory("graft_plabel_p").toString + "/shards"
+    val robots = spark.range(3).select(
+      concat(lit("site"), col("id").cast("string"), lit(".com")).as("host"),
+      lit("user-agent: *\ndisallow: /blocked/\n").as("txt"))
+    val bench = spark.range(1).select(lit("completely unrelated benchmark sentence").as("text"))
+    // persisted and counted first, as a serving loop holds its captures:
+    // no job before the stages reads the raw input
+    val captures = crawl(60).persist()
+    captures.count()
+    val sc = spark.sparkContext
+    val labels = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(js.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .foreach(labels.add)
+    }
+    org.apache.spark.sql.GraftColumnShim.drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    try Pipeline.curateCrawl(captures, "doc_id", "warc", robots, "host", "txt",
+      bench, "text", out, Pipeline.CurateConfig(capPerDomain = 12,
+        packBudget = 128, nShards = 2, shardBuckets = 8)).count()
+    finally {
+      org.apache.spark.sql.GraftColumnShim.drainListenerBus(sc)
+      sc.removeSparkListener(listener)
+      captures.unpersist()
+    }
+    import scala.jdk.CollectionConverters._
+    val jobs = labels.asScala.toSeq
+    for (l <- Seq("ingest", "lang", "near_dup", "decontam", "domain_cap", "written"))
+      assert(jobs.count(_ == s"curate: $l") >= 1, s"no job labelled curate: $l in $jobs")
+  }
+
   test("Stages.run: a throwing body frees every barrier and outside release, label cleared") {
     val sc = spark.sparkContext
     val persisted0 = sc.getPersistentRDDs.size
