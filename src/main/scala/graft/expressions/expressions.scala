@@ -190,9 +190,12 @@ case class CodeDistance(left: Expression, right: Expression, metric: Metric, sig
   * Copies of an [[IdSetMember]] share this leaf, so a bound copy reads
   * what the plan's own expression was given. `slot` is the leaf's
   * identity: a plan bound to a new probe swaps in a fresh slot, which
-  * must not compare equal to the one it replaces.
+  * must not compare equal to the one it replaces. The canonical form
+  * drops it: a slot holds what its own plan computes, so two plans that
+  * differ only in their slots compute the same rows.
   */
 case class ShortlistIds(slot: Long) extends LeafExpression with Unevaluable {
+  override lazy val canonicalized: Expression = ShortlistIds(0L)
   @volatile private[graft] var ids: Array[Long] = _
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = true

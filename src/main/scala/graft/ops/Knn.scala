@@ -55,27 +55,31 @@ import graft.functions.{vectorLit, vector_distance}
   * and bind only the probe, as the reference plans in `xBestIndex` and
   * binds the `?` in `xFilter` (sqlite-vector.c:1723-1826, 1850-1880):
   *
-  *  - '''prepared''' once per key, by the first call: the whole physical
-  *    plan, through analysis, optimization, planning and Spark's
+  *  - '''prepared''' once per key, by its second call: the whole
+  *    physical plan, through analysis, optimization, planning and Spark's
   *    preparation rules, with its parquet scans' input RDDs and broadcast
-  *    Hadoop conf. The [[Prepared]] cache holds it as a [[Template]];
+  *    Hadoop conf. The [[Prepared]] cache holds it as a [[Template]]. A
+  *    key's first call plans for itself alone, so a key that never
+  *    comes back (a fresh read per query) costs no more than the key;
   *  - '''bound''' per call: a copy of that plan with the call's f32 probe
   *    literal and, for the certified plan, the probe's codes, its
   *    [[Certificate]] and a fresh shortlist slot. The copy shares the
   *    leaf scans and nothing else, so concurrent calls on one template
   *    each get their own answer;
-  *  - the '''key''': the store frame's canonicalized analyzed plan with
-  *    the file listings it reads, the id and vector columns, k and the
-  *    metric, and for the certified plan also the code store's plan,
-  *    its `QuantParams` and the shortlist cap. A replaced view, a fresh
-  *    read of a rewritten path, new params or a re-preloaded code store
-  *    is a new key; [[Quantizer.cleanup]] drops the templates over the
-  *    blocks it releases.
+  *  - the '''key''': the session's SQL conf, the store frame's
+  *    canonicalized analyzed plan with the file listings it reads, the
+  *    id and vector columns, k and the metric, and for the certified
+  *    plan also the code store's plan, its `QuantParams` and the
+  *    shortlist cap. A replaced view, a fresh
+  *    read of a rewritten path, new params, a re-preloaded code store or
+  *    a changed conf setting is a new key; [[Quantizer.cleanup]] drops
+  *    the templates over the blocks it releases.
   *
   * A plan with an exchange, a subquery or a cached-relation scan is
   * planned per call, as are the paths whose candidates depend on the
   * probe ([[exactRank]]: the IVF and LSH cells, the rerank's shortlist
-  * join, MRL). The first call per (store, k, metric) pays the planning.
+  * join, MRL). The first two calls per (store, k, metric) pay the
+  * planning.
   */
 object Knn {
 

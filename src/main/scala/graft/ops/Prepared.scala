@@ -34,25 +34,27 @@ private[ops] final class Ref(val o: AnyRef) {
   */
 private[ops] final case class SourceKey(plan: LogicalPlan, files: Seq[Ref])
 
-/** What a prepared plan is built from: the store, the ranked columns, k
-  * and the metric and, for the certified plan, the code store, its
-  * params and the shortlist cap.
+/** What a prepared plan is built from: the session and the SQL conf it
+  * was planned under, the store, the ranked columns, k and the metric
+  * and, for the certified plan, the code store, its params and the
+  * shortlist cap.
   */
-private[ops] final case class PlanKey(session: Ref, store: SourceKey, idCol: String, vecCol: String, k: Int,
-                         metric: Metric, codes: Option[SourceKey], params: Option[QuantParams], cap: Int)
+private[ops] final case class PlanKey(session: Ref, conf: Map[String, String], store: SourceKey, idCol: String,
+                                      vecCol: String, k: Int, metric: Metric, codes: Option[SourceKey],
+                                      params: Option[QuantParams], cap: Int)
 
 /** The values one call binds into a prepared plan: the f32 probe and, for
   * the certified plan, the probe's codes and its [[Certificate]].
   * Literals compare by value, so two bindings of one probe are equal.
   */
-final case class Binding(probe: Literal, codes: Option[(Literal, Certificate)])
+private[graft] final case class Binding(probe: Literal, codes: Option[(Literal, Certificate)])
 
 /** A prepared physical plan and the two per-call values inside it: the
   * probe literal and the shortlist slot. [[bind]] copies it with a new
   * probe; the copy shares the plan's leaf scans, whose input RDDs and
   * broadcast Hadoop conf are built once, and nothing else.
   */
-final class Template private (val plan: SparkPlan, probe: Literal, slot: ShortlistIds) {
+private[graft] final class Template private (val plan: SparkPlan, probe: Literal, slot: ShortlistIds) {
 
   def output: Seq[Attribute] = plan.output
 
@@ -73,7 +75,7 @@ final class Template private (val plan: SparkPlan, probe: Literal, slot: Shortli
   }
 }
 
-object Template {
+private[graft] object Template {
 
   /** The template of a prepared plan built around `probe` and `slot`, if
     * it can be re-run with a new binding: no exchange, adaptive plan,
@@ -120,7 +122,7 @@ object Template {
   * [[PreparedScanExec]] over a fresh binding, shown with the template's
   * top node. Two frames of one template and one binding are equal.
   */
-case class PreparedScan(output: Seq[Attribute], template: Template, binding: Binding, k: Int)
+private[graft] case class PreparedScan(output: Seq[Attribute], template: Template, binding: Binding, k: Int)
     extends LeafNode with MultiInstanceRelation {
   override def maxRows: Option[Long] = Some(math.max(k, 0).toLong)
   override def computeStats(): Statistics = {
@@ -138,7 +140,7 @@ case class PreparedScan(output: Seq[Attribute], template: Template, binding: Bin
   * another, and cloning it would rebuild the shared scans, so the node
   * keeps its child through both.
   */
-case class PreparedScanExec(projectList: Seq[NamedExpression], input: Seq[Attribute], child: SparkPlan)
+private[graft] case class PreparedScanExec(projectList: Seq[NamedExpression], input: Seq[Attribute], child: SparkPlan)
     extends UnaryExecNode {
 
   override def output: Seq[Attribute] = projectList.map(_.toAttribute)
@@ -158,17 +160,34 @@ case class PreparedScanExec(projectList: Seq[NamedExpression], input: Seq[Attrib
 }
 
 /** The per-session cache of prepared exact plans behind [[Knn.fullScan]],
-  * [[Quantizer.certifiedTopK]] and the SQL scans: at most [[MaxTemplates]]
-  * templates, the least recently used dropped first. The key names its
+  * [[Quantizer.certifiedTopK]] and the SQL scans. The key names its
   * session, so no session reads another's plans.
+  *
+  * A key gets a template on its second call: a key that is never called
+  * again (a fresh `spark.read.parquet` per query, a SQL view over a path
+  * that re-lists its files on every analysis) pays only its key, and it
+  * pushes no template out.
   */
-object Prepared {
+private[graft] object Prepared {
 
+  /** At most this many templates, and this many keys without one, the least
+    * recently used dropped first. A key that comes back only after more
+    * other keys than this would have lost its template before its return,
+    * so it gets none. An exact serving round uses 2 keys (perfbench's
+    * `exact_serve_10k768`: `Knn.fullScan`, and `certifiedTopK` with the
+    * `vector_scan` over the same views); a template is one physical plan,
+    * and its scans hold their file listings.
+    */
   final val MaxTemplates = 16
 
-  private val templates = new java.util.LinkedHashMap[PlanKey, Template](MaxTemplates, 0.75f, true) {
-    override def removeEldestEntry(e: java.util.Map.Entry[PlanKey, Template]): Boolean = size > MaxTemplates
-  }
+  private def lru[V]: java.util.LinkedHashMap[PlanKey, V] =
+    new java.util.LinkedHashMap[PlanKey, V](MaxTemplates, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[PlanKey, V]): Boolean = size > MaxTemplates
+    }
+
+  private val templates = lru[Template]
+  /** Keys without a template: true once seen, false once their plan could not be kept. */
+  private val seen = lru[java.lang.Boolean]
 
   /** `df` as a key: a fresh read of a rewritten path lists new files and
     * so makes a new key, where its analyzed plan alone would compare equal.
@@ -182,28 +201,32 @@ object Prepared {
 
   private[ops] def key(store: DataFrame, idCol: String, vecCol: String, k: Int, metric: Metric,
                        codes: Option[(DataFrame, QuantParams, Int)] = None): PlanKey =
-    PlanKey(new Ref(store.sparkSession), source(store), idCol, vecCol, k, metric,
+    PlanKey(new Ref(store.sparkSession), store.sparkSession.conf.getAll, source(store), idCol, vecCol, k, metric,
       codes.map(c => source(c._1)), codes.map(_._2), codes.fold(0)(_._3))
 
   /** The frame for `key` bound to `b`. A miss builds the frame with
-    * `build` (given the probe literal and a shortlist slot), prepares it
-    * and keeps it as the key's template when it can be re-run; a frame
-    * that cannot is returned as built.
+    * `build` (given the probe literal and a shortlist slot) and returns
+    * it; on the key's second miss it also prepares the frame and keeps its
+    * plan as the key's template, when that plan can be re-run. A key whose
+    * plan cannot is not tried again while it is remembered.
     */
-  private[ops] def frame(key: PlanKey, b: Binding)(build: (Literal, ShortlistIds) => DataFrame): DataFrame = {
-    val spark = key.session.o.asInstanceOf[SparkSession]
-    templates.synchronized(Option(templates.get(key))).fold {
-      val slot = ShortlistIds.fresh()
-      val df = build(b.probe, slot)
-      Template.of(df.queryExecution.executedPlan, b.probe, slot, b).fold(df) { t =>
-        templates.synchronized(templates.put(key, t))
-        scan(spark, t, b, key.k)
-      }
-    }(scan(spark, _, b, key.k))
-  }
-
-  private def scan(spark: SparkSession, t: Template, b: Binding, k: Int): DataFrame =
-    GraftColumnShim.ofRows(spark, PreparedScan(t.output.map(_.newInstance()), t, b, k))
+  private[ops] def frame(key: PlanKey, b: Binding)(build: (Literal, ShortlistIds) => DataFrame): DataFrame =
+    templates.synchronized(Option(templates.get(key))) match {
+      case Some(t) =>
+        GraftColumnShim.ofRows(key.session.o.asInstanceOf[SparkSession],
+          PreparedScan(t.output.map(_.newInstance()), t, b, key.k))
+      case None =>
+        val slot = ShortlistIds.fresh()
+        val df = build(b.probe, slot)
+        if (java.lang.Boolean.TRUE.equals(seen.synchronized(seen.putIfAbsent(key, true))))
+          Template.of(df.queryExecution.executedPlan, b.probe, slot, b) match {
+            case Some(t) =>
+              templates.synchronized(templates.put(key, t))
+              seen.synchronized(seen.remove(key))
+            case None => seen.synchronized(seen.put(key, false))
+          }
+        df
+    }
 
   /** Drops every template that scans one of `blocks`, once they are released. */
   private[ops] def release(blocks: Seq[CodeBlockRows]): Unit = templates.synchronized {

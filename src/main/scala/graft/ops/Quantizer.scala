@@ -271,7 +271,8 @@ object Quantizer {
     * distance² ≤ (√T + 2B)².
     *
     * One declarative plan, [[CertifiedTopK]], run as two jobs; building
-    * it runs none. The first job is one code pass over `quantDF` (its
+    * it runs none (a key's second call also plans it then, see the
+    * [[Knn]] scaladoc). The first job is one code pass over `quantDF` (its
     * preloaded blocks, or the rows of any other `(id, code)` frame): each
     * task returns the rows within thr(T_p) = ⌈(√T_p + 2B)²·(1 + 1e-12)⌉ of
     * its partition's own k-th code distance T_p (all of its rows when it
@@ -279,8 +280,9 @@ object Quantizer {
     * the global T is at most any full partition's T_p. The driver takes
     * the global T from the merged candidates and keeps those within
     * thr(T) (float slack: the certificate can only widen). The second job
-    * is [[Knn.fullScan]] of the f32 rows whose id is in that shortlist —
-    * a filter, never a join, so the f32 side is never shuffled. The ids
+    * is the exact rank ([[Knn.rank]]) of the f32 rows whose id is in that
+    * shortlist — a filter, never a join, so the f32 side is never
+    * shuffled. The ids
     * reach generated code as a reference object, so a fresh probe
     * compiles no new class. The shortlist holds at most
     * `maxBroadcastCand` ids; a certificate that admits more (collapsed

@@ -29,8 +29,8 @@ import graft.ops.{Knn, Quantizer}
   * [[SqlRegistry]] holds every function's name and signature.
   *
   * `vector_full_scan` and `vector_scan` return the Scala API's prepared
-  * plans: the first call per (table, column, k, metric) plans, later calls
-  * bind the probe into a copy of that plan (see the [[graft.ops.Knn]]
+  * plans: the first two calls per (table, column, k, metric) plan, later
+  * calls bind the probe into a copy of that plan (see the [[graft.ops.Knn]]
   * scaladoc for the key and what is bound).
   */
 object GraftTableFunctions {

@@ -16,9 +16,11 @@ import graft.expressions.IdSetMember
 import graft.ops._
 
 /** The prepared exact serving plans ([[Prepared]]): bound copies of one
-  * template under two threads, each way a template goes stale, and the
-  * cache bound. Every answer is checked against `orderBy(distance,
-  * id).limit(k)` over [[Knn.distanceStream]].
+  * template under two threads, each way a template goes stale, the cache
+  * bound and a key seen once. Every answer is checked against
+  * `orderBy(distance, id).limit(k)` over [[Knn.distanceStream]]. A key's
+  * first call plans alone and its second keeps the template, so a spec
+  * calls twice before it looks for a bound copy.
   */
 class PreparedSpec extends AnyFunSuite {
 
@@ -49,6 +51,9 @@ class PreparedSpec extends AnyFunSuite {
 
   private def prepared(df: DataFrame): Boolean =
     df.queryExecution.analyzed.exists(_.isInstanceOf[PreparedScan])
+
+  private def scans(df: DataFrame): Seq[FileSourceScanExec] =
+    df.queryExecution.executedPlan.collect { case s: FileSourceScanExec => s }
 
   private def json(pr: Array[Float]): String = pr.mkString("[", ",", "]")
 
@@ -83,15 +88,16 @@ class PreparedSpec extends AnyFunSuite {
     val (base, _) = store(1, 300)
     register("prep_conc", base, quantize = true)
     val wants = (0 until 4).map(i => want(base, probe(i), 7))
-    // the first call of each builds its template; the threads bind it
+    // the second call of each keeps its plan as the template; the threads bind it
     val first = Knn.fullScan(base, "id", "vec", probe(9), 7, "l2")
-    assert(ids(first) == want(base, probe(9), 7))
-    assert(ids(scanSql("vector_scan", "prep_conc", probe(9), 7)) == want(base, probe(9), 7))
+    assert(ids(first) == want(base, probe(9), 7) && !prepared(first))
+    val second = Knn.fullScan(base, "id", "vec", probe(8), 7, "l2")
+    assert(ids(second) == want(base, probe(8), 7))
+    for (i <- Seq(9, 8)) assert(ids(scanSql("vector_scan", "prep_conc", probe(i), 7)) == want(base, probe(i), 7))
     val again = Knn.fullScan(base, "id", "vec", probe(0), 7, "l2")
     assert(prepared(again) && prepared(scanSql("vector_scan", "prep_conc", probe(0), 7)))
     // a bound copy reads through the template's own scan
-    def scans(df: DataFrame) = df.queryExecution.executedPlan.collect { case s: FileSourceScanExec => s }
-    assert(scans(first).size == 1 && scans(first).head.eq(scans(again).head))
+    assert(scans(second).size == 1 && scans(second).head.eq(scans(again).head))
     // and publishes its shortlist into a slot of its own, the one its rank's filter reads
     def slots(df: DataFrame) = {
       val plan = df.queryExecution.executedPlan
@@ -112,8 +118,8 @@ class PreparedSpec extends AnyFunSuite {
     val (b, _) = store(3, 140)
     for (fn <- Seq("vector_scan", "vector_full_scan")) {
       register("prep_view", a, quantize = fn == "vector_scan")
-      assert(ids(scanSql(fn, "prep_view", probe(1), 5)) == want(a, probe(1), 5), fn)
-      assert(prepared(scanSql(fn, "prep_view", probe(2), 5)), fn)
+      for (i <- 1 to 2) assert(ids(scanSql(fn, "prep_view", probe(i), 5)) == want(a, probe(i), 5), fn)
+      assert(prepared(scanSql(fn, "prep_view", probe(3), 5)), fn)
       register("prep_view", b, quantize = fn == "vector_scan")
       assert(ids(scanSql(fn, "prep_view", probe(1), 5)) == want(b, probe(1), 5), fn)
     }
@@ -123,6 +129,8 @@ class PreparedSpec extends AnyFunSuite {
     val (base, _) = store(4, 150)
     val p = register("prep_params", base, quantize = true).get
     def template(df: DataFrame) = df.queryExecution.analyzed.collectFirst { case s: PreparedScan => s.template }.get
+    def codes(df: DataFrame) = df.queryExecution.executedPlan.collect { case c: CertifiedTopKExec => c }.head.probeCodes
+    for (i <- Seq(4, 5)) assert(ids(scanSql("vector_scan", "prep_params", probe(i), 6)) == want(base, probe(i), 6))
     val before = scanSql("vector_scan", "prep_params", probe(3), 6)
     assert(ids(before) == want(base, probe(3), 6))
     assert(template(scanSql("vector_scan", "prep_params", probe(4), 6)) eq template(before))
@@ -130,11 +138,13 @@ class PreparedSpec extends AnyFunSuite {
     // codes stay valid, and the scan must still plan for the params it is given
     val p2 = p.copy(rows = p.rows + 1)
     VectorCatalog.putQuantParams("prep_params", "vec", p2)
-    val after = scanSql("vector_scan", "prep_params", probe(3), 6)
-    assert(ids(after) == want(base, probe(3), 6))
-    assert(!(template(after) eq template(before)))
-    val cert = after.queryExecution.executedPlan.collect { case c: CertifiedTopKExec => c }.head
-    assert(cert.probeCodes.sameElements(Quantizer.quantizeProbe(probe(3), p2)))
+    for (i <- Seq(3, 4, 5)) {
+      val after = scanSql("vector_scan", "prep_params", probe(i), 6)
+      assert(ids(after) == want(base, probe(i), 6))
+      assert(!prepared(after) || !(template(after) eq template(before)))
+      assert(codes(after).sameElements(Quantizer.quantizeProbe(probe(i), p2)))
+    }
+    assert(prepared(scanSql("vector_scan", "prep_params", probe(3), 6)))
   }
 
   test("Quantizer.cleanup, re-preload and a replaced shadow view: the new store is read, no template keeps the old blocks") {
@@ -143,7 +153,7 @@ class PreparedSpec extends AnyFunSuite {
     val codes = Quantizer.quantizeCodes(base, "id", "vec", p)
     val pinned = Quantizer.preload(codes)
     pinned.createOrReplaceTempView("vector0_prep_pre_vec")
-    assert(ids(scanSql("vector_scan", "prep_pre", probe(5), 5)) == want(base, probe(5), 5))
+    for (i <- Seq(5, 6)) assert(ids(scanSql("vector_scan", "prep_pre", probe(i), 5)) == want(base, probe(i), 5))
     val blocks = CodeBlocks.of(pinned.queryExecution.analyzed).head
     def holding(rows: CodeBlockRows) = Prepared.plans.exists(_.exists {
       case c: CodeBlocksExec => c.rows eq rows
@@ -167,6 +177,7 @@ class PreparedSpec extends AnyFunSuite {
     val (a, path) = store(6, 100)
     val old = want(a, probe(6), 5)
     assert(ids(Knn.fullScan(a, "id", "vec", probe(6), 5, "l2")) == old)
+    assert(ids(Knn.fullScan(a, "id", "vec", probe(8), 5, "l2")) == want(a, probe(8), 5))
     assert(prepared(Knn.fullScan(a, "id", "vec", probe(7), 5, "l2")))
     val (b, _) = store(7, 90, path)
     assert(ids(Knn.fullScan(b, "id", "vec", probe(6), 5, "l2")) == want(b, probe(6), 5))
@@ -175,12 +186,49 @@ class PreparedSpec extends AnyFunSuite {
 
   test("more keys than the cache holds: every answer exact, the cache at its bound") {
     val (base, _) = store(8, 80)
-    for (k <- 1 to Prepared.MaxTemplates + 4; metric <- Seq("l2", "cosine")) {
-      assert(ids(Knn.fullScan(base, "id", "vec", probe(k), k, metric)) == want(base, probe(k), k, metric), s"k=$k $metric")
+    for (k <- 1 to Prepared.MaxTemplates + 4; metric <- Seq("l2", "cosine"); i <- Seq(k, k + 1)) {
+      assert(ids(Knn.fullScan(base, "id", "vec", probe(i), k, metric)) == want(base, probe(i), k, metric),
+        s"k=$k $metric")
       assert(Prepared.plans.size <= Prepared.MaxTemplates)
     }
-    // the oldest keys were dropped and are built again, still exact
-    assert(ids(Knn.fullScan(base, "id", "vec", probe(0), 1, "l2")) == want(base, probe(0), 1))
     assert(Prepared.plans.size == Prepared.MaxTemplates)
+    // the oldest keys were dropped and are built again, still exact
+    for (i <- 0 to 2) assert(ids(Knn.fullScan(base, "id", "vec", probe(i), 1, "l2")) == want(base, probe(i), 1))
+    assert(Prepared.plans.size == Prepared.MaxTemplates)
+  }
+
+  test("a key seen once keeps no template: a fresh read per query plans alone and evicts nothing") {
+    val (base, path) = store(9, 90)
+    for (i <- 0 to 2) assert(ids(Knn.fullScan(base, "id", "vec", probe(i), 4, "l2")) == want(base, probe(i), 4))
+    val before = Prepared.plans
+    for (i <- 1 to Prepared.MaxTemplates + 4) {
+      val fresh = spark.read.parquet(path)
+      val df = Knn.fullScan(fresh, "id", "vec", probe(i), 4, "l2")
+      assert(!prepared(df) && ids(df) == want(base, probe(i), 4), s"read $i")
+    }
+    assert(Prepared.plans.size == before.size && Prepared.plans.forall(p => before.exists(_ eq p)))
+    assert(prepared(Knn.fullScan(base, "id", "vec", probe(3), 4, "l2")))
+  }
+
+  test("a changed SQL conf setting: the next plan follows it, and the old template serves the old setting") {
+    val (base, _) = store(10, 110)
+    val key = "spark.sql.parquet.enableVectorizedReader"
+    def call(i: Int): DataFrame = {
+      val df = Knn.fullScan(base, "id", "vec", probe(i), 6, "l2")
+      assert(ids(df) == want(base, probe(i), 6), s"probe $i ${spark.conf.get(key)}")
+      df
+    }
+    def columnar(df: DataFrame): Boolean = { val s = scans(df); assert(s.size == 1); s.head.supportsColumnar }
+    call(0); call(1)
+    assert(prepared(call(2)) && columnar(call(2)))
+    val was = spark.conf.getAll.get(key)
+    spark.conf.set(key, "false")
+    try {
+      val row = call(2)
+      assert(!prepared(row) && !columnar(row))
+      call(3)
+      assert(prepared(call(4)) && !columnar(call(4)))
+    } finally was.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assert(prepared(call(5)) && columnar(call(5)))
   }
 }
